@@ -12,9 +12,12 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's defaults to an existing builder. */
+  /** Apply graft's defaults to an existing builder, and make every
+    * gate op a SQL table function ([[SqlSurface.inject]]).
+    */
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.withExtensions(functions.VectorExpressions.register)
+      .withExtensions(SqlSurface.inject)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,41 +1,30 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's SQL front door.
   *
-  * Every operator in this library is a Scala function, but a real
-  * analytics user's first query is `spark.sql(...)` — so the
-  * warehouse tables and the named derived graphs register as temp
-  * views, and 82 of the gate operators — the whole relational and
-  * event families, every sampling op, the text/dedup representatives
-  * (tokens, quality, fingerprint, ngrams, vocab, repetition, PII
-  * scrub, chunking; exact, ngram-Jaccard, containment, substring-exact), the ANN
-  * scoring family (brute force, MIPS, range, hybrid pre-filter), and
-  * the fixed-iteration graph algorithms (PageRank, PPR, LPA, HITS,
-  * triangles, link prediction) as unrolled CTE chains — are expressed
-  * as plain Spark SQL over those views. Each SQL entry is
-  * contract-equal to its operator: SqlSurfaceSpec runs both and
-  * compares the full row set under the driver's column-sorted
-  * convention, so the SQL surface is gated by exactly the oracle
-  * answers the operators are. (The to-fixpoint graph traversals — BFS,
-  * CC, SCC, SSSP, Borůvka — stay Scala-API-only: Spark SQL has no
-  * recursive CTE, and a depth-unrolled transcription would misstate
-  * their convergence contract.)
+  * Every gate operator is a SQL table function of its data dir:
+  * `SELECT * FROM graph_bfs('/data/sf1')` returns exactly the rows of
+  * `SparkEntry.queries("graph_bfs")(spark, "/data/sf1")`, because the
+  * function's plan *is* the operator's analyzed plan — fixpoints,
+  * streams, layout ops and catalog-served models included. The
+  * functions compose like any relation: joins, filters and
+  * aggregates over them, and over the temp views [[register]] adds.
+  * [[GraftSession]] injects them beside the custom Catalyst
+  * expressions (`graft_dot`, `graft_norm`, ...).
   *
-  * The session's custom Catalyst expressions (`graft_dot`,
-  * `graft_norm`, `graft_isect`, `graft_argmin`, `graft_might_contain`
-  * — injected via `SparkSessionExtensions` in [[GraftSession]]) are
-  * first-class SQL functions here: the ANN entry scores with
-  * `graft_dot`/`graft_norm` inside whole-stage codegen, which is the
-  * reason the SQL path carries the same 100 TB story as the Scala
-  * path (same plans, same pushdown, same codegen — views add
-  * nothing at runtime).
-  *
-  * Scale note: view registration is lazy metadata (no materialization;
-  * the derived-graph views serve the session-cataloged frames, so a
-  * SQL user shares the load-once-query-many graph cache with the
-  * Scala API — reference load model: primary_server.c:153-176).
+  * Scale note: view registration is lazy metadata (no
+  * materialization; the derived-graph views serve the
+  * session-cataloged frames, so a SQL user shares the
+  * load-once-query-many graph cache with the Scala API — reference
+  * load model: primary_server.c:153-176).
   */
 object SqlSurface {
 
@@ -53,1435 +42,48 @@ object SqlSurface {
     graph.DerivedGraphs.hashEdges(spark, dir).createOrReplaceTempView("graph_hash")
     // Canonical event-time view: `events` + `ts_sec` (integer epoch
     // seconds, derived timezone-independently for whatever physical
-    // type `ts` carries — see [[operators.Events.tsSecOf]]). The event
-    // family's SQL runs on integer seconds like its operators, so a
-    // SQL user can never be bitten by session-timezone drift.
+    // type `ts` carries — see [[operators.Events.tsSecOf]]). A SQL
+    // user can never be bitten by session-timezone drift.
     operators.Events.eventsSec(spark, dir).createOrReplaceTempView("events_sec")
   }
 
-  /** Run one named surface query against `dir`. */
-  def run(spark: SparkSession, dir: String, name: String): DataFrame = {
-    register(spark, dir)
-    spark.sql(queries(name))
+  /** Register every `SparkEntry` op as a table function of one string
+    * literal, the data dir.
+    *
+    * Two steps, because Spark calls a table-function builder while
+    * holding the session catalog's lock: a streaming op drains in a
+    * thread whose session clone needs that lock, so running the op
+    * inside the builder deadlocks. The builder therefore only checks
+    * its arguments and returns an [[OpCall]]; the resolution rule
+    * runs the op outside the lock and splices in its analyzed plan.
+    */
+  def inject(ext: SparkSessionExtensions): Unit = {
+    SparkEntry.ops.foreach { op =>
+      ext.injectTableFunction((
+        FunctionIdentifier(op.name),
+        new ExpressionInfo(classOf[OpCall].getName, op.name),
+        (args: Seq[Expression]) => OpCall(op.name, dirArg(op.name, args))))
+    }
+    ext.injectResolutionRule(session => new Rule[LogicalPlan] {
+      private lazy val queries = SparkEntry.queries
+      def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+        case OpCall(name, dir) => queries(name)(session, dir).queryExecution.analyzed
+      }
+    })
   }
 
-  /** Why each non-exposed gate op has no SQL entry — a machine-readable
-    * `category: reason` line per op. Categories:
-    *  - `fixpoint`  — runs a data-dependent to-convergence loop; Spark
-    *    SQL has no recursive CTE, and a depth-unrolled transcription
-    *    would misstate the convergence contract.
-    *  - `streaming` — a Structured Streaming query (readStream /
-    *    watermark / stateful operator); not a batch view query.
-    *  - `layout`    — a write-path / data-definition op (ingest,
-    *    format conversion, compaction, bucketing, sort/z-order
-    *    layout); its contract is files on disk, not a result set.
-    *  - `kernel`    — the hot path is a JVM scan kernel (seeded RNG
-    *    signatures, binary codecs, sketch state, banded DP) running in
-    *    mapPartitions / custom expressions; a SQL string over views
-    *    cannot carry that state.
-    *  - `model`     — serves driver-held trained state from the
-    *    Materialized catalog (centroid matrices, BPE merges, n-gram
-    *    profiles); a view-level SQL query would silently retrain per
-    *    query, misstating the train-once contract.
-    *  - `driver-twin` — the contract itself is driver-sequential
-    *    (reference-parity DFS preorder); there is no distributed
-    *    (hence no SQL) formulation by design.
-    * SqlSurfaceSpec asserts `queries.keySet ∪ excluded.keySet =
-    * SparkEntry.queries.keySet` with no overlap, so every future op
-    * must choose a side explicitly.
-    */
-  val excluded: Map[String, String] = {
-    val fixpoint = Seq("graph_bfs", "graph_bfs_deep", "graph_cc", "graph_cc_large",
-      "graph_scc", "graph_sssp_weighted", "graph_msf", "graph_shortest_paths",
-      "graph_dfs_reach", "graph_dfs_leaves", "graph_k_core", "graph_coreness", "graph_densest_subgraph", "graph_k_truss", "graph_closeness",
-      "graph_eccentricity", "graph_harmonic", "graph_betweenness", "dedup_cluster")
-      .map(_ -> "fixpoint: data-dependent to-convergence loop; no recursive CTE in Spark SQL")
-    val streaming = Seq("stream_window_agg", "stream_window_append", "stream_sessionize",
-      "stream_dedup", "stream_dedup_watermark", "stream_join_recent", "stream_topk",
-      "stream_latest_state", "stream_funnel", "stream_anomaly", "stream_ewma")
-      .map(_ -> "streaming: Structured Streaming query (watermarks / stateful ops), not a batch view")
-    val layout = Seq(
-      "graph_load" -> "layout: graph ingestion (adjacency-matrix parse to edge store)",
-      "graph_load_text" -> "layout: byte-exact G*.txt round-trip (reference parity write path)",
-      "graph_modify" -> "layout: last-writer-wins snapshot replace (write path)",
-      "graph_from_tpch" -> "layout: derived-graph materialization into the session catalog",
-      "source_jsonl" -> "layout: format conversion (JSONL write+read round-trip)",
-      "source_csv" -> "layout: format conversion (CSV write+read round-trip)",
-      "source_orc" -> "layout: format conversion (ORC write+read round-trip)",
-      "source_partitioned" -> "layout: partitioned-layout write (partition pruning contract)",
-      "source_bucketed" -> "layout: bucketed-table write (exchange-free join contract)",
-      "source_sorted" -> "layout: sorted-file write (min/max skipping contract)",
-      "source_compact" -> "layout: small-file compaction (file-count contract)",
-      "source_zorder" -> "layout: z-order layout write (multi-column skipping contract)",
-      "source_stats" -> "layout: footer/statistics surface of written files")
-    val kernel = Seq(
-      "ann_lsh" -> "kernel: seeded Gaussian hyperplane signatures in a mapPartitions scan",
-      "ann_pq" -> "kernel: PQ encode + ADC tables in a mapPartitions scan",
-      "ann_opq" -> "kernel: OPQ learned rotation (butterfly Givens layers) + PQ encode/ADC in a mapPartitions scan",
-      "ann_sq" -> "kernel: SQ byte-encode + dequantized dot in a mapPartitions scan",
-      "ann_ivfpq" -> "kernel: IVF routing + PQ/ADC in a mapPartitions scan",
-      "ann_knn_join" -> "kernel: LSH-bucketed self-join over seeded signatures",
-      "ann_graph" -> "kernel: knn-graph build rides the bucketed self-join's seeded signatures (beam rounds themselves are plain joins)",
-      "ann_mmr" -> "kernel: per-query greedy MMR selection loop in flatMapGroups over the bounded candidate pool",
-      "dedup_minhash_lsh" -> "kernel: seeded minhash permutations in a scan kernel",
-      "dedup_simhash" -> "kernel: seeded simhash signatures + pigeonhole blocks",
-      "dedup_embedding" -> "kernel: seeded hyperplane LSH blocks over embeddings",
-      "dedup_edit_distance" -> "kernel: banded Levenshtein DP in a scan kernel",
-      "dedup_pipeline" -> "kernel: composes the seeded minhash kernel (transitively non-SQL)",
-      "graph_random_walk" -> "kernel: seeded per-step hash draws in an unrolled walk kernel",
-      "mm_decode_meta" -> "kernel: binary codec (stub) over binary columns",
-      "mm_aspect_bucket" -> "kernel: buckets the stub decode's dimensions (binary batch iterator upstream)",
-      "mm_dedup" -> "kernel: binary content hashing over binary columns",
-      "mm_features" -> "kernel: binary feature extraction over binary columns",
-      "mm_frame_sample" -> "kernel: binary frame sampling over binary columns",
-      "mm_phash" -> "kernel: perceptual-hash kernel + pigeonhole Hamming blocks",
-      "mm_resize" -> "kernel: binary resize (stub) over binary columns",
-      "q_approx_distinct" -> "kernel: HLL++ sketch internals (rows-only gate op)",
-      "text_compress_ratio" -> "kernel: zlib deflate internals (rows-only gate op)",
-      "text_winnow" -> "kernel: rolling-hash winnowing windows in a scan kernel",
-      "text_substr_dups" -> "kernel: rolling-hash substring windows in a scan kernel")
-    val model = Seq(
-      "ann_ivf" -> "model: trained coarse-quantizer centroids served from the catalog",
-      "ann_kmeans" -> "model: Lloyd-trained centroid matrix served from the catalog",
-      "dedup_semantic" -> "model: Lloyd-trained centroids (SemDeDup) served from the catalog",
-      "text_bpe_train" -> "model: trained BPE merge table served from the catalog",
-      "text_bpe_encode" -> "model: applies the catalog-held trained BPE segmentation",
-      "text_langid" -> "model: driver-collected n-gram profile literals folded into the plan")
-    val dt = Seq(
-      "graph_dfs_preorder" -> "driver-twin: driver-sequential DFS preorder (reference-parity contract)")
-    (fixpoint ++ streaming ++ layout ++ kernel ++ model ++ dt).toMap
+  /** An op's table-function call, before the op has run. */
+  private case class OpCall(name: String, dir: String) extends LeafNode {
+    override def output: Seq[Attribute] = Nil
+    override lazy val resolved: Boolean = false
   }
 
-  /** Spark SQL per gate-op name, output-identical to the operator
-    * (same columns, same values — including the decimal-snap
-    * aggregation pattern, so doubles are bit-equal).
-    */
-  val queries: Map[String, String] = Map(
-    "q1_agg" -> """
-      SELECT l_returnflag, l_linestatus,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        CAST(SUM(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        CAST(SUM(CAST(l_extendedprice*(1.0-l_discount)*(1.0+l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*) AS avg_qty,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*) AS avg_price,
-        CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*) AS avg_disc,
-        COUNT(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '2000-01-01 00:00:00'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-
-    "q3_join_topk" -> """
-      SELECT l_orderkey, o_orderdate, o_orderpriority,
-        CAST(SUM(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-      GROUP BY l_orderkey, o_orderdate, o_orderpriority
-      ORDER BY revenue DESC, l_orderkey
-      LIMIT 10""",
-
-    "q5_multijoin" -> """
-      SELECT n_name,
-        CAST(SUM(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      WHERE r_name = 'ASIA'
-        AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-      GROUP BY n_name
-      ORDER BY revenue DESC, n_name""",
-
-    "q17_small_qty" -> """
-      WITH avgq AS (
-        SELECT l_partkey,
-          CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*) AS avg_qty
-        FROM lineitem GROUP BY 1)
-      SELECT COALESCE(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 0.0)/7.0 AS avg_yearly,
-        COUNT(*) AS n_lines
-      FROM lineitem
-      JOIN part ON p_partkey = l_partkey
-      JOIN avgq USING (l_partkey)
-      WHERE p_brand = 'Brand#1' AND p_type = 'ECONOMY'
-        AND l_quantity < 0.2 * avg_qty""",
-
-    "q_semi_anti" -> """
-      SELECT * FROM (
-        SELECT 'big_order_cust' AS kind, c_custkey AS key FROM customer
-        WHERE EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
-        UNION ALL
-        SELECT 'never_shipped_part' AS kind, p_partkey AS key FROM part
-        WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-      ) ORDER BY kind, key""",
-
-    "q_window" -> """
-      SELECT o_custkey, o_orderkey,
-        CAST(ROW_NUMBER() OVER
-          (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS rn,
-        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER
-          (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_total
-      FROM orders
-      ORDER BY o_custkey, rn""",
-
-    "q_topk_pergroup" -> """
-      SELECT p_brand, p_partkey, p_retailprice, rn FROM (
-        SELECT p_brand, p_partkey, p_retailprice,
-          CAST(ROW_NUMBER() OVER (PARTITION BY p_brand
-                                  ORDER BY p_retailprice DESC, p_partkey) AS BIGINT) AS rn
-        FROM part)
-      WHERE rn <= 3
-      ORDER BY p_brand, rn""",
-
-    "q_rollup" -> """
-      SELECT COALESCE(r_name, 'ALL') AS region_name,
-             COALESCE(n_name, 'ALL') AS nation_name,
-             CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal,
-             COUNT(*) AS n_customers
-      FROM customer
-      JOIN nation ON c_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      GROUP BY ROLLUP(r_name, n_name)
-      ORDER BY region_name, nation_name""",
-
-    "q_interval_join" -> """
-      WITH o AS (SELECT o_orderkey,
-                   CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') AS BIGINT) AS od
-                 FROM orders),
-      iv AS (SELECT l_orderkey, l_linenumber, o.od AS lo,
-               CAST(datediff(CAST(l_shipdate AS DATE), DATE '1970-01-01') AS BIGINT) AS hi
-             FROM lineitem JOIN o ON l_orderkey = o_orderkey
-             WHERE CAST(datediff(CAST(l_shipdate AS DATE), DATE '1970-01-01') AS BIGINT) >= o.od),
-      periods AS (SELECT wk * 7 - 3 AS plo, wk * 7 + 9 AS phi FROM (
-                   SELECT CAST(FLOOR(od / 7) AS BIGINT) AS wk, COUNT(*) AS n
-                   FROM o GROUP BY 1 ORDER BY n DESC, wk LIMIT 4)),
-      ivb AS (SELECT l_orderkey, l_linenumber, lo, hi, b FROM iv
-              LATERAL VIEW explode(sequence(CAST(FLOOR(lo / 7) AS BIGINT),
-                                            CAST(FLOOR(hi / 7) AS BIGINT))) t AS b),
-      pb AS (SELECT plo, phi, b FROM periods
-             LATERAL VIEW explode(sequence(CAST(FLOOR(plo / 7) AS BIGINT),
-                                           CAST(FLOOR(phi / 7) AS BIGINT))) t AS b)
-      SELECT /*+ BROADCAST(pb) */ plo AS period_start, COUNT(*) AS n_overlap,
-        ROUND(CAST(SUM(hi - lo) AS DOUBLE) / COUNT(*), 6) AS avg_transit_days
-      FROM ivb JOIN pb USING (b)
-      WHERE lo <= phi AND hi >= plo
-        AND b = CAST(FLOOR(GREATEST(lo, plo) / 7) AS BIGINT)
-      GROUP BY plo ORDER BY period_start""",
-
-    "graph_degrees" -> """
-      SELECT vertex, CAST(SUM(o) AS BIGINT) AS out_deg,
-             CAST(SUM(i) AS BIGINT) AS in_deg,
-             CAST(SUM(o) + SUM(i) AS BIGINT) AS total_deg
-      FROM (SELECT src AS vertex, 1 AS o, 0 AS i FROM graph_supply
-            UNION ALL SELECT dst, 0, 1 FROM graph_supply)
-      GROUP BY vertex ORDER BY vertex""",
-
-    "dedup_exact" -> """
-      SELECT MIN(doc_id) AS doc_id, CAST(COUNT(*) AS BIGINT) AS group_size
-      FROM documents GROUP BY md5(text)
-      ORDER BY doc_id""",
-
-    "ann_topk_bruteforce" -> s"""
-      WITH n AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v,
-                        graft_norm(embedding) AS nrm
-                 FROM embeddings),
-      q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n
-            WHERE vec_id < ${similarity.Ann.NumQueries}),
-      s AS (SELECT q.qid, n.vec_id,
-              ROUND(CASE WHEN qn * nrm = 0.0 THEN CAST('NaN' AS DOUBLE)
-                    ELSE graft_dot(qv, v) / (qn * nrm) END, 6) + 0.0 AS score
-            FROM q JOIN n ON n.vec_id != q.qid),
-      r AS (SELECT qid, vec_id, score,
-              ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rank
-            FROM s)
-      SELECT qid, CAST(rank AS BIGINT) AS rank, vec_id, score
-      FROM r WHERE rank <= ${similarity.Ann.K} ORDER BY qid, rank""",
-
-    "text_chunk_overlap" -> s"""
-      SELECT doc_id, CAST(pos AS BIGINT) AS chunk_id, s AS start_tok,
-        LEAST(${text.TextAnalysis.ChunkLen}L, n - s) AS n_tokens,
-        concat_ws(' ', slice(ws, s + 1, ${text.TextAnalysis.ChunkLen})) AS chunk_text
-      FROM (SELECT CAST(doc_id AS BIGINT) AS doc_id, split(text, ' ') AS ws,
-              CAST(size(split(text, ' ')) AS BIGINT) AS n
-            FROM documents)
-      LATERAL VIEW posexplode(
-        filter(sequence(0L, n - 1L, ${text.TextAnalysis.ChunkStride}L),
-          x -> x = 0 OR x + ${text.TextAnalysis.ChunkLen - text.TextAnalysis.ChunkStride} < n)) AS pos, s
-      ORDER BY doc_id, chunk_id""",
-
-    "mm_shard_manifest" -> s"""
-      SELECT doc_id, source,
-        concat(source, '-', lpad(CAST(shard_id AS STRING), 5, '0')) AS shard,
-        shard_id, start_byte - shard_id * ${multimodal.Multimodal.ShardBytes}L AS offset,
-        n_bytes
-      FROM (SELECT doc_id, source, n_bytes, start_byte,
-              start_byte div ${multimodal.Multimodal.ShardBytes}L AS shard_id
-            FROM (SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-                    CAST(octet_length(text) AS BIGINT) AS n_bytes,
-                    CAST(COALESCE(SUM(octet_length(text)) OVER (
-                      PARTITION BY source ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                      AS start_byte
-                  FROM documents))
-      ORDER BY source, doc_id""",
-
-    // ---- relational family (r13 widening) --------------------------------
-
-    "q_cube" -> """
-      SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-             COALESCE(o_orderpriority, 'ALL') AS priority,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-             COUNT(*) AS n_orders
-      FROM orders
-      GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""",
-
-    "q_grouping_sets" -> """
-      SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-             COALESCE(o_orderpriority, 'ALL') AS priority,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-             COUNT(*) AS n_orders
-      FROM orders
-      GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-      ORDER BY status, priority""",
-
-    "q_pivot" -> {
-      val cols = operators.Relational.PivotPriorities.map(p =>
-        s"COUNT(*) FILTER (WHERE o_orderpriority = '$p') AS p${p.head}")
-        .mkString(",\n        ")
-      s"""
-      SELECT o_orderstatus,
-        $cols
-      FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""
-    },
-
-    "q_intersect_except" -> """
-      WITH c95 AS (SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1995),
-      c96 AS (SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
-      SELECT o_custkey, 'both_95_96' AS tag FROM
-        (SELECT o_custkey FROM c95 INTERSECT SELECT o_custkey FROM c96)
-      UNION ALL
-      SELECT o_custkey, 'only_95' AS tag FROM
-        (SELECT o_custkey FROM c95 EXCEPT SELECT o_custkey FROM c96)
-      ORDER BY tag, o_custkey""",
-
-    "q_skew_agg" -> """
-      SELECT l_suppkey,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        COUNT(*) AS n_items
-      FROM lineitem GROUP BY l_suppkey ORDER BY l_suppkey""",
-
-    "q_percentiles" -> """
-      SELECT l_returnflag,
-        ROUND(ps[0], 4) AS p25, ROUND(ps[1], 4) AS p50,
-        ROUND(ps[2], 4) AS p90, ROUND(ps[3], 4) AS p99
-      FROM (SELECT l_returnflag,
-              percentile(CAST(l_extendedprice AS DOUBLE),
-                array(0.25D, 0.5D, 0.9D, 0.99D)) AS ps
-            FROM lineitem GROUP BY l_returnflag)
-      ORDER BY l_returnflag""",
-
-    "q_incremental" -> """
-      SELECT o_orderstatus AS status,
-        date_trunc('month', o_orderdate) AS mon,
-        COUNT(*) AS n_orders,
-        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM orders GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q_bloom_semijoin" -> """
-      SELECT o_orderstatus AS status,
-        COUNT(*) AS n_items,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE o_orderpriority = '1-URGENT'
-      GROUP BY 1 ORDER BY 1""",
-
-    "q_histogram" -> s"""
-      SELECT width_bucket(o_totalprice, ${operators.Funcs.HistLo}D,
-               ${operators.Funcs.HistHi}D, ${operators.Funcs.HistN}) AS bucket,
-        COUNT(*) AS n_orders,
-        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-      FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "q_corr_stats" -> """
-      WITH ex AS (
-        SELECT event_type, value AS v,
-          CAST(get_json_object(props, '$.k') AS DOUBLE) AS k
-        FROM events)
-      SELECT event_type, COUNT(*) AS n,
-        CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
-        ROUND(corr(v, k), 4) AS corr_vk,
-        ROUND(covar_samp(v, k), 4) AS covar_vk,
-        ROUND(stddev_samp(v), 4) AS stddev_v,
-        ROUND(var_samp(v), 4) AS var_v,
-        ROUND(regr_slope(v, k), 4) AS slope_vk,
-        ROUND(regr_intercept(v, k), 4) AS icept_vk
-      FROM ex GROUP BY event_type ORDER BY event_type""",
-
-    "q_string_funcs" -> """
-      SELECT c_custkey,
-        upper(c_name) AS up,
-        lower(c_mktsegment) AS lo,
-        length(c_name) AS len,
-        substring(c_name, 10, 5) AS sub,
-        concat_ws('|', c_mktsegment, c_name) AS cat,
-        lpad(CAST(c_custkey AS STRING), 10, '0') AS pad,
-        reverse(c_name) AS rev,
-        regexp_replace(c_name, '^Customer#0*', 'C') AS rep,
-        instr(c_name, '#') AS pos,
-        regexp_extract(c_name, '([0-9]+)', 1) AS num,
-        repeat(substring(c_mktsegment, 1, 1), 3) AS rpt
-      FROM customer WHERE c_custkey % 50 = 0 ORDER BY c_custkey""",
-
-    "q_date_funcs" -> """
-      SELECT o_orderkey,
-        date_format(o_orderdate, 'yyyy-MM-dd') AS ymd,
-        year(o_orderdate) AS y, month(o_orderdate) AS m,
-        dayofmonth(o_orderdate) AS dom,
-        quarter(o_orderdate) AS q,
-        weekday(o_orderdate) AS wd,
-        dayofyear(o_orderdate) AS doy,
-        date_format(date_trunc('month', o_orderdate), 'yyyy-MM-dd') AS trunc_m,
-        date_format(last_day(o_orderdate), 'yyyy-MM-dd') AS last_d,
-        datediff(o_orderdate, CAST('1995-01-01' AS DATE)) AS days_since,
-        date_format(add_months(o_orderdate, 3), 'yyyy-MM-dd') AS plus_3m
-      FROM orders WHERE o_orderkey % 100 = 0 ORDER BY o_orderkey""",
-
-    "q_unnest_tokens" -> """
-      SELECT doc_id, tok, COUNT(*) AS n,
-        CAST(MIN(pos) AS BIGINT) AS first_pos,
-        CAST(MAX(pos) AS BIGINT) AS last_pos
-      FROM documents
-      LATERAL VIEW posexplode(split(text, ' ')) t AS pos, tok
-      GROUP BY doc_id, tok HAVING COUNT(*) >= 3
-      ORDER BY doc_id, tok""",
-  ) ++ eventQueries ++ samplingQueries ++ textDedupQueries ++ graphQueries
-
-  /** Event-log family over the `events_sec` view (canonical integer
-    * epoch seconds — see [[register]]).
-    */
-  private lazy val eventQueries: Map[String, String] = Map(
-    "q_events_sessionize" -> s"""
-      WITH tagged AS (
-        SELECT user_id, event_id, ts_sec, value,
-          CASE WHEN ts_sec - LAG(ts_sec) OVER
-                 (PARTITION BY user_id ORDER BY ts_sec, event_id)
-               > ${operators.Events.GapSec} THEN 1L ELSE 0L END AS new_sess
-        FROM events_sec),
-      sess AS (
-        SELECT user_id, ts_sec, value,
-          1L + SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        FROM tagged)
-      SELECT user_id, session_id,
-        MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
-        COUNT(*) AS n_events,
-        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-      FROM sess GROUP BY user_id, session_id
-      ORDER BY user_id, session_id""",
-
-    "q_events_window" -> s"""
-      SELECT (ts_sec div ${operators.Events.WindowSec}) * ${operators.Events.WindowSec}
-          AS window_start,
-        event_type, COUNT(*) AS n_events,
-        COUNT(DISTINCT user_id) AS n_users,
-        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-      FROM events_sec GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q_asof_join" -> """
-      WITH tagged AS (
-        SELECT event_id, user_id, event_type, ts_sec,
-          MAX(CASE WHEN event_type = 'click' THEN ts_sec END) OVER
-            (PARTITION BY user_id ORDER BY ts_sec, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts
-        FROM events_sec WHERE event_type IN ('click', 'purchase'))
-      SELECT event_id, user_id, ts_sec AS purchase_ts, last_click_ts,
-        ts_sec - last_click_ts AS gap_sec
-      FROM tagged WHERE event_type = 'purchase'
-      ORDER BY event_id""",
-
-    "q_events_funnel" -> """
-      WITH u1 AS (SELECT user_id, MIN(ts_sec) AS v FROM events_sec
-                  WHERE event_type = 'view' GROUP BY 1),
-      u2 AS (SELECT e.user_id, MIN(e.ts_sec) AS c
-             FROM events_sec e JOIN u1 USING (user_id)
-             WHERE e.event_type = 'click' AND e.ts_sec > u1.v GROUP BY 1),
-      u3 AS (SELECT e.user_id, MIN(e.ts_sec) AS p
-             FROM events_sec e JOIN u2 USING (user_id)
-             WHERE e.event_type = 'purchase' AND e.ts_sec > u2.c GROUP BY 1)
-      SELECT stage, n_users FROM (
-        SELECT '1_view' AS stage, COUNT(*) AS n_users FROM u1
-        UNION ALL
-        SELECT '2_view_click' AS stage, COUNT(*) AS n_users FROM u2
-        UNION ALL
-        SELECT '3_view_click_purchase' AS stage, COUNT(*) AS n_users FROM u3)
-      ORDER BY stage""",
-
-    "q_events_json" -> """
-      WITH ex AS (
-        SELECT event_type, user_id,
-          CAST(get_json_object(props, '$.k') AS BIGINT) AS k,
-          CAST(value AS DECIMAL(18,2)) AS v
-        FROM events)
-      SELECT CAST(floor(k / 10) AS BIGINT) AS k_band, event_type,
-        COUNT(*) AS n_events,
-        COUNT(DISTINCT user_id) AS n_users,
-        MIN(k) AS min_k, MAX(k) AS max_k,
-        CAST(SUM(v) AS DOUBLE) AS total_value
-      FROM ex GROUP BY 1, 2 ORDER BY k_band ASC NULLS FIRST, event_type""",
-
-    "q_window_range" -> s"""
-      SELECT event_id, user_id, ts_sec,
-        COUNT(*) OVER w AS n_1h,
-        CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
-      FROM events_sec
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
-                   RANGE BETWEEN ${operators.Events.WindowSec} PRECEDING AND CURRENT ROW)
-      ORDER BY event_id""",
-
-    "q_scd2" -> """
-      WITH tagged AS (
-        SELECT user_id, event_id, event_type, ts_sec,
-          CASE WHEN LAG(event_type) OVER w IS NULL
-                    OR LAG(event_type) OVER w <> event_type
-               THEN 1L ELSE 0L END AS chg
-        FROM events_sec
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)),
-      runs AS (
-        SELECT user_id, event_type, ts_sec,
-          SUM(chg) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-        FROM tagged),
-      hist AS (
-        SELECT user_id, run_id, event_type,
-          MIN(ts_sec) AS valid_from, COUNT(*) AS n_events
-        FROM runs GROUP BY 1, 2, 3)
-      SELECT user_id, event_type, valid_from,
-        LEAD(valid_from) OVER h AS valid_to,
-        CAST(LEAD(valid_from) OVER h IS NULL AS INT) AS is_current,
-        n_events
-      FROM hist
-      WINDOW h AS (PARTITION BY user_id ORDER BY run_id)
-      ORDER BY user_id, valid_from, event_type""",
-
-    "q_events_retention" -> """
-      WITH ev AS (
-        SELECT user_id, ((ts_sec div 86400) + 3) div 7 AS wk FROM events_sec),
-      f AS (SELECT user_id, MIN(wk) AS cwk FROM ev GROUP BY user_id)
-      SELECT date_add(CAST('1970-01-01' AS DATE), CAST(cwk * 7 - 3 AS INT)) AS cohort_week,
-        wk - cwk AS week_offset,
-        COUNT(DISTINCT ev.user_id) AS n_users
-      FROM ev JOIN f ON ev.user_id = f.user_id
-      WHERE wk - cwk <= 8
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q_merge_upsert" -> """
-      WITH es AS (
-        SELECT user_id, event_id, event_type, value, ts_sec,
-          ((ts_sec div 86400) + 3) div 7 AS wk
-        FROM events_sec),
-      mx AS (SELECT MAX(wk) AS maxwk FROM es),
-      tgt AS (
-        SELECT user_id, event_type, value, ts_sec FROM (
-          SELECT e.*, ROW_NUMBER() OVER (PARTITION BY user_id
-            ORDER BY ts_sec DESC, event_id DESC) AS rn
-          FROM es e CROSS JOIN mx WHERE e.wk < mx.maxwk) WHERE rn = 1),
-      dlt AS (
-        SELECT user_id, event_type, value, ts_sec FROM (
-          SELECT e.*, ROW_NUMBER() OVER (PARTITION BY user_id
-            ORDER BY ts_sec DESC, event_id DESC) AS rn
-          FROM es e CROSS JOIN mx WHERE e.wk = mx.maxwk) WHERE rn = 1)
-      SELECT COALESCE(d.user_id, t.user_id) AS user_id,
-        COALESCE(d.event_type, t.event_type) AS event_type,
-        COALESCE(d.value, t.value) AS value,
-        COALESCE(d.ts_sec, t.ts_sec) AS ts_sec,
-        CASE WHEN d.user_id IS NULL THEN 'keep'
-             WHEN t.user_id IS NULL THEN 'insert'
-             ELSE 'update' END AS action
-      FROM dlt d FULL OUTER JOIN tgt t ON d.user_id = t.user_id
-      ORDER BY user_id""",
-
-    "q_kmv_sketch" -> s"""
-      WITH hs AS (SELECT DISTINCT event_type,
-          (((1103515245L * (user_id % 2147483647L)) % 2147483647L) + 12345L)
-          % 2147483647L AS h
-        FROM events),
-      sk AS (SELECT event_type, h FROM (
-          SELECT event_type, h,
-            ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rk
-          FROM hs) WHERE rk <= ${operators.Events.KmvK}),
-      pt AS (SELECT event_type, COUNT(*) AS retained, MAX(h) AS kth
-             FROM sk GROUP BY 1),
-      t_rows AS (SELECT event_type AS set_name, retained,
-          ROUND(CASE WHEN retained < ${operators.Events.KmvK}
-                     THEN CAST(retained AS DOUBLE)
-                     ELSE ${operators.Events.KmvK - 1}.0D * 2147483647L / kth END, 3)
-            AS est_distinct
-        FROM pt),
-      u AS (SELECT slice(sort_array(collect_set(h)), 1, ${operators.Events.KmvK}) AS hs
-            FROM sk),
-      u_row AS (SELECT 'union_all' AS set_name,
-          CAST(size(hs) AS BIGINT) AS retained,
-          ROUND(CASE WHEN size(hs) < ${operators.Events.KmvK}
-                     THEN CAST(size(hs) AS DOUBLE)
-                     ELSE ${operators.Events.KmvK - 1}.0D * 2147483647L
-                          / element_at(hs, ${operators.Events.KmvK}) END, 3)
-            AS est_distinct
-        FROM u),
-      th AS (SELECT MIN(CASE WHEN retained < ${operators.Events.KmvK}
-                             THEN 2147483647L ELSE kth END) AS theta
-             FROM pt WHERE event_type IN ('click', 'purchase')),
-      icnt AS (SELECT COUNT(*) AS retained
-               FROM (SELECT h FROM sk WHERE event_type = 'click') a
-               JOIN (SELECT h AS hb FROM sk WHERE event_type = 'purchase') b
-                 ON a.h = b.hb
-               CROSS JOIN th WHERE a.h < th.theta),
-      i_row AS (SELECT 'click_x_purchase' AS set_name, retained,
-          ROUND(retained * 2147483647.0D / theta, 3) AS est_distinct
-        FROM icnt CROSS JOIN th)
-      SELECT * FROM t_rows UNION ALL SELECT * FROM u_row
-      UNION ALL SELECT * FROM i_row ORDER BY set_name""",
-  )
-
-  /** Deterministic sampling family (hash-keyed — reproducible from the
-    * SQL text alone, no rand()).
-    */
-  private lazy val samplingQueries: Map[String, String] = {
-    def saltMd5(salt: String) =
-      s"md5(CAST(concat('$salt:', CAST(doc_id AS STRING)) AS BINARY))"
-    Map(
-      "q_train_split" -> s"""
-        WITH assigned AS (
-          SELECT doc_id, lang, n_chars,
-            CASE WHEN substring(${saltMd5("split")}, 1, 2) < '${operators.Sampling.TrainUpper}' THEN 'train'
-                 WHEN substring(${saltMd5("split")}, 1, 2) < '${operators.Sampling.ValUpper}' THEN 'val'
-                 ELSE 'test' END AS split
-          FROM documents)
-        SELECT split, lang, COUNT(*) AS n_docs,
-          SUM(n_chars) AS total_chars,
-          MIN(doc_id) AS min_doc_id
-        FROM assigned GROUP BY split, lang ORDER BY split, lang""",
-
-      "q_sample_stratified" -> s"""
-        WITH k AS (SELECT MIN(n) AS k FROM
-                     (SELECT COUNT(*) AS n FROM documents GROUP BY lang)),
-        ranked AS (
-          SELECT doc_id, lang, n_chars,
-            CAST(ROW_NUMBER() OVER (PARTITION BY lang
-              ORDER BY ${saltMd5("sample")}, doc_id) AS BIGINT) AS rn
-          FROM documents)
-        SELECT doc_id, lang, rn, n_chars
-        FROM ranked WHERE rn <= (SELECT k FROM k) ORDER BY doc_id""",
-
-      "q_sample_weighted" -> s"""
-        WITH keyed AS (
-          SELECT doc_id, lang, n_chars,
-            ln((CAST(conv(substring(${saltMd5("wsample")}, 1, 13), 16, 10) AS DOUBLE)
-                + 1.0D) / 4503599627370496.0D)
-              / (CAST(COALESCE(n_chars, 0L) AS DOUBLE) + 1.0D) AS k
-          FROM documents)
-        SELECT doc_id, lang, n_chars FROM (
-          SELECT doc_id, lang, n_chars FROM keyed
-          ORDER BY k DESC, doc_id LIMIT ${operators.Sampling.WeightedK})
-        ORDER BY doc_id""",
-
-      "q_sample_balanced" -> s"""
-        WITH ranked AS (
-          SELECT doc_id, source, lang, n_chars,
-            CAST(ROW_NUMBER() OVER (PARTITION BY source
-              ORDER BY ${saltMd5("balance")}, doc_id) AS BIGINT) AS rn
-          FROM documents)
-        SELECT doc_id, source, lang, rn, n_chars
-        FROM ranked WHERE rn <= ${operators.Sampling.SourceCap} ORDER BY doc_id""",
-
-      "q_sample_temperature" -> s"""
-        WITH counts AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
-        wts AS (SELECT source, n,
-                  CAST(ROUND(sqrt(CAST(n AS DOUBLE)), 9) AS DECIMAL(28,9)) AS wt
-                FROM counts),
-        tot AS (SELECT SUM(wt) AS sw FROM wts),
-        quotas AS (SELECT source,
-                     GREATEST(1L, CAST(FLOOR(${operators.Sampling.TempK}D * CAST(wt AS DOUBLE)
-                       / CAST(sw AS DOUBLE)) AS BIGINT)) AS quota
-                   FROM wts CROSS JOIN tot),
-        ranked AS (
-          SELECT doc_id, source, n_chars,
-            CAST(ROW_NUMBER() OVER (PARTITION BY source
-              ORDER BY ${saltMd5("temp")}, doc_id) AS BIGINT) AS rn
-          FROM documents)
-        SELECT r.doc_id, r.source, r.rn, r.n_chars
-        FROM ranked r JOIN quotas q ON q.source = r.source
-        WHERE r.rn <= q.quota ORDER BY doc_id""",
-
-      "q_shuffle_shard" -> s"""
-        WITH sharded AS (
-          SELECT doc_id, n_chars, h,
-            CAST(CAST(conv(substring(h, 1, 4), 16, 10) AS BIGINT)
-                 % ${operators.Sampling.Shards} AS INT) AS shard
-          FROM (SELECT doc_id, n_chars, ${saltMd5("shuf")} AS h FROM documents))
-        SELECT doc_id, shard,
-          CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h, doc_id) AS BIGINT) AS pos,
-          n_chars
-        FROM sharded ORDER BY shard, pos""",
-    )
-  }
-
-  /** Text-analysis + dedup entries (the LLM-pipeline families). */
-  private lazy val textDedupQueries: Map[String, String] = {
-    val stopList = text.TextAnalysis.Stopwords.map(s => s"'$s'").mkString(", ")
-    // Spark SQL string literals interpret backslash escapes (unlike
-    // DuckDB's), so regex patterns double them.
-    def rx(p: String) = p.replace("\\", "\\\\")
-    Map(
-      "text_pack_sequences" -> s"""
-        WITH t AS (SELECT doc_id, lang,
-                     CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens
-                   FROM documents),
-        c AS (SELECT doc_id, lang, n_tokens,
-                COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  CAST(0 AS BIGINT)) AS start_tok
-              FROM t)
-        SELECT doc_id, lang, n_tokens, start_tok,
-          start_tok div ${text.TextAnalysis.PackSeqLen} AS seq_first,
-          (start_tok + n_tokens - 1) div ${text.TextAnalysis.PackSeqLen} AS seq_last,
-          (start_tok + n_tokens - 1) div ${text.TextAnalysis.PackSeqLen}
-            - start_tok div ${text.TextAnalysis.PackSeqLen} + 1 AS n_seqs
-        FROM c ORDER BY lang, doc_id""",
-
-      "text_perplexity" -> """
-        WITH sp AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                      split(text, ' ') AS w FROM documents),
-        bg AS (SELECT doc_id, w[i] AS a, w[i+1] AS b
-               FROM sp LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + 1 < size(w)),
-        cab AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
-        ca AS (SELECT a, COUNT(*) AS ca FROM bg GROUP BY a),
-        vv AS (SELECT CAST(COUNT(DISTINCT b) AS DOUBLE) AS v FROM bg)
-        SELECT doc_id, COUNT(*) AS n_bigrams,
-          ROUND(-SUM(LN((cab + 1.0D) / (ca + (SELECT v FROM vv)))) / COUNT(*), 6) AS nll
-        FROM bg JOIN cab USING (a, b) JOIN ca USING (a)
-        GROUP BY doc_id ORDER BY doc_id""",
-
-      "text_tfidf" -> s"""
-        WITH sp AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-                      split(text, ' ') AS w FROM documents),
-        gr AS (SELECT doc_id, lang, concat_ws(' ', w[i], w[i+1], w[i+2]) AS g
-               FROM sp LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + 2 < size(w)),
-        df AS (SELECT g, COUNT(*) AS df
-               FROM (SELECT DISTINCT doc_id, g FROM gr) GROUP BY g),
-        tf AS (SELECT lang, g, COUNT(*) AS tf FROM gr GROUP BY lang, g),
-        sc AS (SELECT lang, g,
-                 ROUND(tf * LN(CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) / df), 6) AS tfidf
-               FROM tf JOIN df USING (g)),
-        r AS (SELECT lang, g, tfidf,
-                CAST(ROW_NUMBER() OVER (PARTITION BY lang
-                  ORDER BY tfidf DESC, g) AS BIGINT) AS rn
-              FROM sc)
-        SELECT lang, rn, g AS term, tfidf
-        FROM r WHERE rn <= ${text.TextAnalysis.TfidfTopK} ORDER BY lang, rn""",
-
-      "text_decontaminate" -> {
-        val gram = (0 until text.TextAnalysis.DecontamN).map(j => s"w[i+$j]").mkString(", ")
-        val last = text.TextAnalysis.DecontamN - 1
-        val (bm, br) = (text.TextAnalysis.BenchMod, text.TextAnalysis.BenchRes)
-        s"""
-        WITH sp AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                      split(text, ' ') AS w FROM documents),
-        gr AS (SELECT doc_id, concat_ws(' ', $gram) AS g
-               FROM sp LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + $last < size(w)),
-        bench AS (SELECT DISTINCT doc_id AS bench_id, g FROM gr
-                  WHERE doc_id % $bm = $br),
-        hits AS (SELECT doc_id, COUNT(DISTINCT g) AS n_hit_grams,
-                   COUNT(DISTINCT bench_id) AS n_bench_docs
-                 FROM gr JOIN bench USING (g)
-                 WHERE doc_id % $bm != $br GROUP BY doc_id)
-        SELECT d.doc_id,
-          COALESCE(n_hit_grams, CAST(0 AS BIGINT)) AS n_hit_grams,
-          COALESCE(n_bench_docs, CAST(0 AS BIGINT)) AS n_bench_docs,
-          CAST(COALESCE(n_hit_grams, CAST(0 AS BIGINT)) > 0 AS INT) AS contaminated
-        FROM (SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents
-              WHERE doc_id % $bm != $br) d
-        LEFT JOIN hits USING (doc_id)
-        ORDER BY doc_id"""
-      },
-
-      "text_ngrams" -> s"""
-        WITH sp AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-                      split(text, ' ') AS w FROM documents),
-        bg AS (SELECT lang, doc_id, concat_ws(' ', w[i], w[i+1]) AS g
-               FROM sp LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + 1 < size(w)),
-        cnt AS (SELECT lang, g, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS n_docs
-                FROM bg GROUP BY lang, g),
-        r AS (SELECT lang, g, n, n_docs,
-                CAST(ROW_NUMBER() OVER (PARTITION BY lang
-                  ORDER BY n DESC, g) AS BIGINT) AS rn
-              FROM cnt)
-        SELECT lang, rn, g AS bigram, n, n_docs
-        FROM r WHERE rn <= ${text.TextAnalysis.NgramTopK} ORDER BY lang, rn""",
-
-      "text_vocab" -> s"""
-        WITH words AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, w FROM documents
-                       LATERAL VIEW explode(split(text, ' ')) t AS w),
-        cnt AS (SELECT w, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS n_docs
-                FROM words GROUP BY w),
-        top AS (SELECT w, n, n_docs FROM cnt
-                ORDER BY n DESC, w LIMIT ${text.TextAnalysis.VocabTopK})
-        SELECT
-          CAST(ROW_NUMBER() OVER (PARTITION BY pmod(n, 1)
-            ORDER BY n DESC, w) AS BIGINT) AS rn,
-          w AS word, n, n_docs,
-          ROUND(CAST(n AS DOUBLE) /
-            (SELECT CAST(SUM(n) AS DOUBLE) FROM cnt), 6) AS frac
-        FROM top ORDER BY rn""",
-
-      "text_repetition" -> """
-        WITH words AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, w FROM documents
-                       LATERAL VIEW explode(split(text, ' ')) t AS w),
-        wc AS (SELECT doc_id, w, COUNT(*) AS n FROM words GROUP BY doc_id, w),
-        ws AS (SELECT doc_id, SUM(n) AS n_words, COUNT(*) AS n_distinct_words,
-                 MAX(n) AS top_word_n
-               FROM wc GROUP BY doc_id),
-        sp AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, split(text, ' ') AS w
-               FROM documents),
-        bg AS (SELECT doc_id, concat_ws(' ', w[i], w[i+1]) AS g
-               FROM sp LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + 1 < size(w)),
-        bc AS (SELECT doc_id, g, COUNT(*) AS n FROM bg GROUP BY doc_id, g),
-        bs AS (SELECT doc_id, SUM(n) AS n_bigrams,
-                 COUNT(*) AS n_distinct_bigrams
-               FROM bc GROUP BY doc_id)
-        SELECT ws.doc_id, n_words, n_distinct_words, top_word_n,
-          ROUND(CAST(top_word_n AS DOUBLE) / n_words, 6) AS top_word_frac,
-          COALESCE(ROUND(CAST(n_bigrams - n_distinct_bigrams AS DOUBLE) /
-            n_bigrams, 6), 0.0D) AS dup_bigram_frac
-        FROM ws LEFT JOIN bs ON ws.doc_id = bs.doc_id
-        ORDER BY ws.doc_id""",
-
-      "text_pii_scrub" -> s"""
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          CAST(regexp_count(text, '${rx(text.TextAnalysis.PiiEmail)}') AS BIGINT) AS n_email,
-          CAST(regexp_count(text, '${rx(text.TextAnalysis.PiiIp)}') AS BIGINT) AS n_ip,
-          CAST(regexp_count(text, '${rx(text.TextAnalysis.PiiPhone)}') AS BIGINT) AS n_phone,
-          CAST(regexp_count(text, '${rx(text.TextAnalysis.PiiLongNum)}') AS BIGINT) AS n_longnum,
-          md5(CAST(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-            text, '${rx(text.TextAnalysis.PiiEmail)}', '<EMAIL>'),
-            '${rx(text.TextAnalysis.PiiIp)}', '<IP>'),
-            '${rx(text.TextAnalysis.PiiPhone)}', '<PHONE>'),
-            '${rx(text.TextAnalysis.PiiLongNum)}', '<NUM>') AS BINARY)) AS scrubbed_fp
-        FROM documents ORDER BY doc_id""",
-
-      "dedup_containment" -> s"""
-        WITH w AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, split(text, ' ') AS w
-                   FROM documents),
-        sh AS (SELECT DISTINCT doc_id,
-                 concat_ws(' ', w[i], w[i+1], w[i+2]) AS s
-               FROM w LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + 2 < size(w)),
-        cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-                  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id != b.doc_id
-                  GROUP BY a.doc_id, b.doc_id)
-        SELECT doc_a, doc_b, ROUND(ninter / ca.n_sh, 6) AS containment
-        FROM inter JOIN cnt ca ON ca.doc_id = doc_a
-        WHERE ROUND(ninter / ca.n_sh, 6) >= ${dedup.Dedup.ContainTau}
-        ORDER BY doc_a, doc_b""",
-
-      "ann_mips" -> s"""
-        WITH n AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
-                   FROM embeddings),
-        q AS (SELECT vec_id AS qid, v AS qv FROM n
-              WHERE vec_id < ${similarity.Ann.NumQueries}),
-        s AS (SELECT q.qid, n.vec_id,
-                ROUND(graft_dot(qv, v), 6) + 0.0D AS score
-              FROM q JOIN n ON n.vec_id != q.qid),
-        r AS (SELECT qid, vec_id, score,
-                ROW_NUMBER() OVER (PARTITION BY qid
-                  ORDER BY score DESC, vec_id) AS rank
-              FROM s)
-        SELECT qid, CAST(rank AS BIGINT) AS rank, vec_id, score
-        FROM r WHERE rank <= ${similarity.Ann.K} ORDER BY qid, rank""",
-
-      "ann_range" -> s"""
-        WITH n AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v,
-                          graft_norm(embedding) AS nrm
-                   FROM embeddings),
-        q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n
-              WHERE vec_id < ${similarity.Ann.NumQueries}),
-        s AS (SELECT q.qid, n.vec_id,
-                ROUND(graft_dot(qv, v) / (qn * nrm), 6) + 0.0D AS score
-              FROM q JOIN n ON n.vec_id != q.qid)
-        SELECT qid, vec_id, score FROM s
-        WHERE score >= ${similarity.Ann.RangeTau}
-        ORDER BY qid, vec_id""",
-
-      "ann_hybrid" -> s"""
-        WITH n AS (SELECT vec_id, label, CAST(embedding AS ARRAY<DOUBLE>) AS v,
-                          graft_norm(embedding) AS nrm
-                   FROM embeddings),
-        q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n
-              WHERE vec_id < ${similarity.Ann.NumQueries}),
-        c AS (SELECT vec_id, v, nrm FROM n
-              WHERE label IN (${similarity.Ann.HybridLabels.mkString(", ")})),
-        s AS (SELECT q.qid, c.vec_id,
-                ROUND(CASE WHEN qn * nrm = 0.0D THEN CAST('NaN' AS DOUBLE)
-                      ELSE graft_dot(qv, v) / (qn * nrm) END, 6) + 0.0D AS score
-              FROM q JOIN c ON c.vec_id != q.qid),
-        r AS (SELECT qid, vec_id, score,
-                ROW_NUMBER() OVER (PARTITION BY qid
-                  ORDER BY score DESC, vec_id) AS rank
-              FROM s)
-        SELECT qid, CAST(rank AS BIGINT) AS rank, vec_id, score
-        FROM r WHERE rank <= ${similarity.Ann.K} ORDER BY qid, rank""",
-      "text_tokens" -> s"""
-        SELECT doc_id,
-          CAST(size(split(text, ' ')) AS BIGINT) AS ws_tokens,
-          CAST(regexp_count(text, '${text.TextAnalysis.TokenPattern}') AS BIGINT) AS bpe_tokens,
-          CAST(length(text) AS BIGINT) AS char_len
-        FROM documents ORDER BY doc_id""",
-
-      "text_quality" -> s"""
-        WITH f AS (
-          SELECT doc_id,
-            CAST(length(text) AS BIGINT) AS char_len,
-            CAST(size(split(text, ' ')) AS BIGINT) AS ws_tokens,
-            CAST(size(filter(split(text, ' '), t -> t IN ($stopList))) AS BIGINT) AS stop_tokens,
-            CAST(regexp_count(text, '[^a-z0-9 ]') AS BIGINT) AS punct_marks
-          FROM documents)
-        SELECT doc_id, char_len, ws_tokens,
-          ROUND(stop_tokens / ws_tokens, 6) AS stop_ratio,
-          ROUND(punct_marks / char_len, 6) AS punct_ratio,
-          ROUND((char_len - (ws_tokens - 1)) / ws_tokens, 6) AS mean_word_len,
-          ROUND(LEAST(ws_tokens / 50.0D, 1.0D) * 0.4D
-            + (1.0D - punct_marks / char_len) * 0.3D
-            + LEAST(stop_tokens / ws_tokens * 5.0D, 1.0D) * 0.3D, 6) AS quality_score
-        FROM f ORDER BY doc_id""",
-
-      "text_fingerprint" -> """
-        SELECT doc_id, md5(CAST(text AS BINARY)) AS fp,
-          CAST(length(text) div 100 AS BIGINT) AS len_band
-        FROM documents ORDER BY doc_id""",
-
-      "dedup_substring_exact" -> s"""
-        WITH w AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, split(text, ' ') AS w
-                   FROM documents
-                   WHERE size(split(text, ' ')) >= ${dedup.Dedup.SpanK}),
-        sh AS (SELECT doc_id, CAST(i + 1 AS BIGINT) AS pos,
-                 array_join(slice(w, i + 1, ${dedup.Dedup.SpanK}), ' ') AS g
-               FROM w
-               LATERAL VIEW explode(sequence(0, size(w) - ${dedup.Dedup.SpanK})) t AS i),
-        dup AS (SELECT g FROM sh GROUP BY g HAVING COUNT(*) >= 2),
-        dp AS (SELECT sh.doc_id, sh.pos FROM sh JOIN dup ON dup.g = sh.g),
-        isl AS (SELECT doc_id, pos,
-                  pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-                FROM dp)
-        SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-          CAST(MAX(pos) + ${dedup.Dedup.SpanK - 1} AS BIGINT) AS span_end,
-          CAST(MAX(pos) - MIN(pos) + ${dedup.Dedup.SpanK} AS BIGINT) AS n_tokens
-        FROM isl GROUP BY doc_id, grp ORDER BY doc_id, span_start""",
-
-      "dedup_ngram_jaccard" -> s"""
-        WITH w AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, split(text, ' ') AS w
-                   FROM documents),
-        sh AS (SELECT DISTINCT doc_id,
-                 concat_ws(' ', w[i], w[i+1], w[i+2]) AS s
-               FROM w
-               LATERAL VIEW explode(sequence(0, size(w) - 1)) t AS i
-               WHERE i + 2 < size(w)),
-        cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ninter
-                  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-          ROUND(ninter / (ca.n_sh + cb.n_sh - ninter), 6) AS jaccard
-        FROM inter
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-        WHERE ROUND(ninter / (ca.n_sh + cb.n_sh - ninter), 6) >= ${dedup.Dedup.JaccardTau}
-        ORDER BY doc_a, doc_b""",
-    )
-  }
-
-  /** Graph algorithms from SQL: the fixed-iteration family unrolls the
-    * same CTE chains the DuckDB oracles pin (Spark has no recursive
-    * CTE; the to-fixpoint traversals stay Scala-API-only).
-    */
-  private lazy val graphQueries: Map[String, String] = {
-    val prIter = (prev: String, cur: String) =>
-      s"""$cur AS (
-        SELECT verts.v, (1.0D - 0.85D)/(SELECT n FROM nn)
-               + 0.85D * COALESCE(SUM($prev.r / od.od), 0.0D) AS r
-        FROM verts
-        LEFT JOIN graph_hash he ON he.dst = verts.v
-        LEFT JOIN od ON od.src = he.src
-        LEFT JOIN $prev ON $prev.v = he.src
-        GROUP BY verts.v)"""
-    val pprIter = (prev: String, cur: String) =>
-      s"""$cur AS (
-        SELECT rv.v, (1.0D - 0.85D) * rv.s
-               + 0.85D * COALESCE(SUM($prev.r / od.od), 0.0D) AS r
-        FROM rv
-        LEFT JOIN graph_hash he ON he.dst = rv.v
-        LEFT JOIN od ON od.src = he.src
-        LEFT JOIN $prev ON $prev.v = he.src
-        GROUP BY rv.v, rv.s)"""
-    val lpaRound = (i: Int) =>
-      s"""c$i AS (SELECT u.a AS v, l.lab, COUNT(*) AS c
-        FROM und u JOIN l${i - 1} l ON l.v = u.b GROUP BY u.a, l.lab),
-      l$i AS (SELECT v, lab FROM (
-        SELECT v, lab, ROW_NUMBER() OVER (PARTITION BY v ORDER BY c DESC, lab) AS rn
-        FROM c$i) WHERE rn = 1)"""
-    val hitsHalf = (prev: String, cur: String, inC: String, outC: String) =>
-      s"""${cur}r AS (
-        SELECT verts.v, COALESCE(SUM($prev.s), 0.0D) AS x
-        FROM verts LEFT JOIN graph_nation ne ON ne.$outC = verts.v
-        LEFT JOIN $prev ON $prev.v = ne.$inC
-        GROUP BY verts.v),
-      $cur AS (SELECT v, x / (SELECT SUM(x) FROM ${cur}r) AS s FROM ${cur}r)"""
-    val hitsRounds = (1 to graph.GraphQueries.HitsIters).map { i =>
-      val prevH = if (i == 1) "h0" else s"h${i - 1}"
-      hitsHalf(prevH, s"a$i", "src", "dst") + ",\n      " +
-        hitsHalf(s"a$i", s"h$i", "dst", "src")
-    }.mkString(",\n      ")
-    Map(
-      "graph_triangles" -> """
-        WITH u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-                   FROM graph_nation WHERE src != dst),
-        tri AS (SELECT x.a AS a, x.b AS b, y.b AS c
-                FROM u x JOIN u y ON y.a = x.b
-                JOIN u z ON z.a = x.a AND z.b = y.b)
-        SELECT vertex, COUNT(*) AS n_tri
-        FROM (SELECT a AS vertex FROM tri
-              UNION ALL SELECT b FROM tri
-              UNION ALL SELECT c FROM tri)
-        GROUP BY vertex ORDER BY vertex""",
-
-      "graph_link_predict" -> """
-        WITH und AS (SELECT DISTINCT a, b FROM (
-          SELECT src AS a, dst AS b FROM graph_nation
-          UNION SELECT dst, src FROM graph_nation)
-          WHERE a != b),
-        deg AS (SELECT a AS v, COUNT(*) AS d FROM und GROUP BY 1),
-        wedge AS (
-          SELECT x.a AS a, y.a AS b, COUNT(*) AS cn, SUM(1.0D / LN(deg.d)) AS aa
-          FROM und x JOIN und y ON y.b = x.b AND x.a < y.a
-          JOIN deg ON deg.v = x.b
-          GROUP BY x.a, y.a),
-        nonadj AS (
-          SELECT w.* FROM wedge w LEFT JOIN und u ON u.a = w.a AND u.b = w.b
-          WHERE u.a IS NULL)
-        SELECT n.a, n.b, n.cn,
-          ROUND(n.cn / (da.d + db.d - n.cn), 6) AS jaccard,
-          ROUND(n.aa, 6) AS adamic_adar
-        FROM nonadj n JOIN deg da ON da.v = n.a JOIN deg db ON db.v = n.b
-        ORDER BY a, b""",
-
-      "graph_pagerank" -> s"""
-        WITH verts AS (SELECT src AS v FROM graph_hash UNION SELECT dst FROM graph_hash),
-        nn AS (SELECT COUNT(*) AS n FROM verts),
-        od AS (SELECT src, COUNT(*) AS od FROM graph_hash GROUP BY src),
-        p0 AS (SELECT v, 1.0D/(SELECT n FROM nn) AS r FROM verts),
-        ${prIter("p0", "p1")},
-        ${prIter("p1", "p2")},
-        ${prIter("p2", "p3")}
-        SELECT v AS vertex, ROUND(r, 6) AS rank FROM p3 ORDER BY vertex""",
-
-      "graph_ppr" -> s"""
-        WITH verts AS (SELECT src AS v FROM graph_hash UNION SELECT dst FROM graph_hash),
-        seeds AS (SELECT v FROM verts ORDER BY v LIMIT ${graph.GraphQueries.PprSeeds}),
-        ns AS (SELECT COUNT(*) AS n FROM seeds),
-        rv AS (SELECT verts.v,
-                 CASE WHEN seeds.v IS NOT NULL
-                      THEN 1.0D/(SELECT n FROM ns) ELSE 0.0D END AS s
-               FROM verts LEFT JOIN seeds ON seeds.v = verts.v),
-        od AS (SELECT src, COUNT(*) AS od FROM graph_hash GROUP BY src),
-        p0 AS (SELECT v, s AS r FROM rv),
-        ${pprIter("p0", "p1")},
-        ${pprIter("p1", "p2")},
-        ${pprIter("p2", "p3")}
-        SELECT v AS vertex, ROUND(r, 6) AS rank FROM p3 ORDER BY vertex""",
-
-      "graph_lpa" -> s"""
-        WITH und AS (SELECT DISTINCT a, b FROM (
-          SELECT src AS a, dst AS b FROM graph_nation
-          UNION SELECT dst, src FROM graph_nation)
-          WHERE a != b),
-        l0 AS (SELECT DISTINCT a AS v, a AS lab FROM und),
-        ${(1 to graph.GraphQueries.LpaIters).map(lpaRound).mkString(",\n      ")}
-        SELECT v AS vertex, lab AS community
-        FROM l${graph.GraphQueries.LpaIters} ORDER BY vertex""",
-
-      "graph_clustering" -> """
-        WITH u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-                   FROM graph_nation WHERE src != dst),
-        deg AS (SELECT vertex, COUNT(*) AS deg FROM (
-                 SELECT a AS vertex FROM u UNION ALL SELECT b FROM u) GROUP BY vertex),
-        tri AS (SELECT x.a AS a, x.b AS b, y.b AS c
-                FROM u x JOIN u y ON y.a = x.b
-                JOIN u z ON z.a = x.a AND z.b = y.b),
-        tc AS (SELECT vertex, COUNT(*) AS n_tri
-               FROM (SELECT a AS vertex FROM tri
-                     UNION ALL SELECT b FROM tri
-                     UNION ALL SELECT c FROM tri) GROUP BY vertex)
-        SELECT deg.vertex, deg.deg,
-          COALESCE(tc.n_tri, 0L) AS n_tri,
-          ROUND(CASE WHEN deg.deg >= 2
-            THEN (2.0D * COALESCE(tc.n_tri, 0L)) / (deg.deg * (deg.deg - 1))
-            ELSE 0.0D END, 6) AS clustering
-        FROM deg LEFT JOIN tc ON tc.vertex = deg.vertex
-        ORDER BY vertex""",
-
-      "graph_assortativity" -> """
-        WITH deg AS (SELECT src AS v, COUNT(*) AS d FROM graph_supply_und GROUP BY src),
-        xy AS (SELECT dx.d AS x, dy.d AS y FROM graph_supply_und su
-               JOIN deg dx ON dx.v = su.src JOIN deg dy ON dy.v = su.dst),
-        mo AS (SELECT COUNT(*) AS m,
-                 CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-                 CAST(SUM(x * y) AS DOUBLE) AS sxy,
-                 CAST(SUM(x * x) AS DOUBLE) AS sxx,
-                 CAST(SUM(y * y) AS DOUBLE) AS syy
-               FROM xy)
-        SELECT m AS n_edges,
-          ROUND(CASE WHEN SQRT(sxx * m - sx * sx) * SQRT(syy * m - sy * sy) = 0.0D
-            THEN NULL
-            ELSE (sxy * m - sx * sy)
-              / (SQRT(sxx * m - sx * sx) * SQRT(syy * m - sy * sy)) END, 6)
-            AS assortativity
-        FROM mo""",
-
-      "graph_modularity" -> s"""
-        WITH und AS (SELECT DISTINCT a, b FROM (
-          SELECT src AS a, dst AS b FROM graph_nation
-          UNION SELECT dst, src FROM graph_nation)
-          WHERE a != b),
-        l0 AS (SELECT DISTINCT a AS v, a AS lab FROM und),
-        ${(1 to graph.GraphQueries.LpaIters).map(lpaRound).mkString(",\n      ")},
-        u AS (SELECT a, b FROM und WHERE a < b),
-        mm AS (SELECT COUNT(*) AS m FROM u),
-        deg AS (SELECT a AS v, COUNT(*) AS deg FROM und GROUP BY a),
-        cs AS (SELECT l.lab AS community, COUNT(*) AS n_vertices,
-                 SUM(deg.deg) AS degree_sum
-               FROM deg JOIN l${graph.GraphQueries.LpaIters} l ON l.v = deg.v
-               GROUP BY l.lab),
-        ie AS (SELECT la.lab AS community, COUNT(*) AS internal_edges
-               FROM u JOIN l${graph.GraphQueries.LpaIters} la ON la.v = u.a
-               JOIN l${graph.GraphQueries.LpaIters} lb ON lb.v = u.b AND lb.lab = la.lab
-               GROUP BY la.lab)
-        SELECT cs.community, cs.n_vertices,
-          COALESCE(ie.internal_edges, 0L) AS internal_edges,
-          cs.degree_sum,
-          ROUND(CAST(COALESCE(ie.internal_edges, 0L) AS DOUBLE) / mm.m
-            - (CAST(cs.degree_sum AS DOUBLE) / (2.0D * mm.m))
-              * (CAST(cs.degree_sum AS DOUBLE) / (2.0D * mm.m)), 6) AS q_term
-        FROM cs LEFT JOIN ie ON ie.community = cs.community CROSS JOIN mm
-        ORDER BY community""",
-
-      "q_basket" -> s"""
-        WITH ob AS (
-          SELECT DISTINCT l_orderkey AS o, p_brand AS b
-          FROM lineitem JOIN part ON p_partkey = l_partkey),
-        nb AS (SELECT b, COUNT(*) AS nb FROM ob GROUP BY b),
-        no AS (SELECT COUNT(DISTINCT o) AS n FROM ob),
-        pr AS (
-          SELECT a.b AS b1, c.b AS b2, COUNT(*) AS n_both
-          FROM ob a JOIN ob c ON a.o = c.o AND a.b < c.b
-          GROUP BY 1, 2),
-        st AS (
-          SELECT b1, b2, n_both, n1.nb AS n1, n2.nb AS n2, no.n AS n
-          FROM pr JOIN nb n1 ON n1.b = pr.b1 JOIN nb n2 ON n2.b = pr.b2, no
-          WHERE n_both >= ${operators.Relational.BasketMinSupport})
-        SELECT b1, b2, n_both,
-          ROUND(n_both / CAST(n AS DOUBLE), 6) AS support,
-          ROUND(n_both / CAST(n1 AS DOUBLE), 6) AS confidence,
-          ROUND(n_both * CAST(n AS DOUBLE) / (CAST(n1 AS DOUBLE) * n2), 6) AS lift
-        FROM st ORDER BY b1, b2""",
-
-      "q_gini" -> """
-        WITH sp AS (
-          SELECT CAST(c.c_nationkey AS BIGINT) AS nk, c.c_custkey AS ck,
-            SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS spend
-          FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-          GROUP BY 1, 2),
-        rk AS (
-          SELECT nk, ck, spend,
-            ROW_NUMBER() OVER (PARTITION BY nk ORDER BY spend, ck) AS r,
-            COUNT(*) OVER (PARTITION BY nk) AS n
-          FROM sp),
-        ag AS (
-          SELECT nk, MAX(n) AS n,
-            CAST(SUM(spend) AS DOUBLE) AS total,
-            CAST(SUM(r * spend) AS DOUBLE) AS rs,
-            CAST(SUM(CASE WHEN r > n - CAST(FLOOR(n / 5) AS BIGINT) THEN spend END) AS DOUBLE) AS top_spend,
-            CAST(FLOOR(n / 5) AS BIGINT) AS top_k
-          FROM rk GROUP BY nk, CAST(FLOOR(n / 5) AS BIGINT))
-        SELECT nk AS nationkey, n AS n_customers,
-          ROUND(total, 2) AS total_spend,
-          ROUND(2 * rs / (n * total) - (n + 1.0D) / n, 6) AS gini,
-          top_k, ROUND(COALESCE(top_spend, 0.0D) / total, 6) AS top20_share
-        FROM ag ORDER BY nationkey""",
-
-      "q_abtest" -> """
-        WITH m AS (
-          SELECT event_type,
-            CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-            CAST(SUM(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-            CAST(SUM(CASE WHEN user_id % 2 = 0 THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS s1a,
-            CAST(SUM(CASE WHEN user_id % 2 = 0 THEN CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS s2a,
-            CAST(SUM(CASE WHEN user_id % 2 <> 0 THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS s1b,
-            CAST(SUM(CASE WHEN user_id % 2 <> 0 THEN CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS s2b
-          FROM events GROUP BY event_type),
-        w AS (
-          SELECT event_type, n_a, n_b,
-            s1a / n_a AS mean_a, s1b / n_b AS mean_b,
-            (s2a - s1a * s1a / n_a) / (n_a - 1) AS var_a,
-            (s2b - s1b * s1b / n_b) / (n_b - 1) AS var_b
-          FROM m),
-        se AS (
-          SELECT event_type, n_a, n_b, mean_a, mean_b,
-            var_a / n_a AS se_a, var_b / n_b AS se_b,
-            var_a / n_a + var_b / n_b AS se2
-          FROM w)
-        SELECT event_type, n_a, n_b,
-          ROUND(mean_a, 4) AS mean_a,
-          ROUND(mean_b, 4) AS mean_b,
-          ROUND(mean_b - mean_a, 4) AS lift_abs,
-          ROUND((mean_b - mean_a) / mean_a, 4) AS lift_rel,
-          ROUND((mean_b - mean_a) / SQRT(se2), 4) AS t_welch,
-          ROUND(se2 * se2 / (se_a * se_a / (n_a - 1) + se_b * se_b / (n_b - 1)), 4) AS df_welch
-        FROM se ORDER BY event_type""",
-
-      "q_entropy" -> """
-        WITH c AS (
-          SELECT user_id, event_type, COUNT(*) AS c
-          FROM events GROUP BY user_id, event_type),
-        u AS (
-          SELECT user_id, SUM(c) AS n_events, COUNT(*) AS n_types,
-            CAST(SUM(CAST(ROUND(c * LN(c), 9) AS DECIMAL(28,9))) AS DOUBLE) AS s
-          FROM c GROUP BY user_id)
-        SELECT user_id, n_events, n_types,
-          ROUND(LN(n_events) - s / n_events, 6) AS entropy
-        FROM u WHERE n_events >= 20 ORDER BY user_id""",
-
-      "q_markov" -> """
-        WITH tr AS (
-          SELECT event_type AS src_type,
-            LEAD(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id) AS dst_type
-          FROM events_sec),
-        cnt AS (
-          SELECT src_type, dst_type, COUNT(*) AS n FROM tr
-          WHERE dst_type IS NOT NULL GROUP BY src_type, dst_type),
-        tot AS (SELECT src_type, SUM(n) AS n_src FROM cnt GROUP BY src_type)
-        SELECT c.src_type, c.dst_type, c.n,
-          ROUND(c.n / CAST(t.n_src AS DOUBLE), 6) AS p
-        FROM cnt c JOIN tot t ON t.src_type = c.src_type
-        ORDER BY src_type, dst_type""",
-
-      "q_ewma" -> """
-        WITH daily AS (
-          SELECT event_type, ts_sec DIV 86400 AS day,
-            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS x
-          FROM events_sec GROUP BY event_type, ts_sec DIV 86400),
-        series AS (
-          SELECT event_type, sort_array(collect_list(struct(day, x))) AS xs
-          FROM daily GROUP BY event_type),
-        ew AS (
-          SELECT event_type, xs,
-            aggregate(xs, CAST(array() AS ARRAY<DOUBLE>),
-              (acc, e) -> concat(acc, array(CASE WHEN size(acc) = 0 THEN e.x
-                ELSE 0.3D * e.x + 0.7D * element_at(acc, -1) END))) AS ewarr
-          FROM series)
-        SELECT event_type, z.xs.day AS day, ROUND(z.xs.x, 2) AS daily_value,
-          ROUND(z.ewarr, 6) AS ewma
-        FROM ew LATERAL VIEW explode(arrays_zip(xs, ewarr)) t AS z
-        ORDER BY event_type, day""",
-
-      "q_seasonality" -> """
-        WITH daily AS (
-          SELECT event_type, ts_sec DIV 86400 AS day,
-            SUM(CAST(value AS DECIMAL(18,2))) AS x
-          FROM events_sec GROUP BY event_type, ts_sec DIV 86400),
-        d AS (SELECT event_type, (day + 4) % 7 AS dow, x FROM daily),
-        byd AS (
-          SELECT event_type, dow, COUNT(*) AS n_days, SUM(x) AS total
-          FROM d GROUP BY event_type, dow),
-        oa AS (
-          SELECT event_type, COUNT(*) AS n_all, SUM(x) AS tot_all
-          FROM d GROUP BY event_type)
-        SELECT b.event_type, b.dow, b.n_days,
-          ROUND(CAST(b.total AS DOUBLE) / b.n_days, 4) AS dow_avg,
-          ROUND((CAST(b.total AS DOUBLE) / b.n_days)
-            / (CAST(o.tot_all AS DOUBLE) / o.n_all), 6) AS seasonality
-        FROM byd b JOIN oa o ON o.event_type = b.event_type
-        ORDER BY b.event_type, b.dow""",
-
-      "text_zipf" -> s"""
-        WITH uni AS (
-          SELECT lang, tok, COUNT(*) AS c
-          FROM (SELECT lang, explode(split(text, ' ')) AS tok FROM documents)
-          GROUP BY lang, tok),
-        top AS (
-          SELECT lang, c, r FROM (
-            SELECT lang, c,
-              ROW_NUMBER() OVER (PARTITION BY lang ORDER BY c DESC, tok) AS r
-            FROM uni) WHERE r <= ${text.TextAnalysis.ZipfTopN}),
-        terms AS (
-          SELECT lang,
-            CAST(ROUND(LN(r), 9) AS DECIMAL(28,9)) AS x,
-            CAST(ROUND(LN(c), 9) AS DECIMAL(28,9)) AS y,
-            CAST(ROUND(LN(r) * LN(c), 9) AS DECIMAL(28,9)) AS xy,
-            CAST(ROUND(LN(r) * LN(r), 9) AS DECIMAL(28,9)) AS xx
-          FROM top),
-        ag AS (
-          SELECT lang, COUNT(*) AS n_tokens,
-            CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-            CAST(SUM(xy) AS DOUBLE) AS sxy, CAST(SUM(xx) AS DOUBLE) AS sxx
-          FROM terms GROUP BY lang)
-        SELECT lang, n_tokens,
-          ROUND((n_tokens * sxy - sx * sy) / (n_tokens * sxx - sx * sx), 6) AS zipf_slope,
-          ROUND((sy - (n_tokens * sxy - sx * sy) / (n_tokens * sxx - sx * sx) * sx)
-            / n_tokens, 6) AS intercept
-        FROM ag ORDER BY lang""",
-
-      "text_collocations" -> s"""
-        WITH tk AS (SELECT split(text, ' ') AS w FROM documents),
-        uni AS (
-          SELECT tok, COUNT(*) AS c
-          FROM (SELECT explode(w) AS tok FROM tk) GROUP BY tok),
-        ntok AS (SELECT SUM(c) AS n_tok FROM uni),
-        nbi AS (SELECT SUM(size(w) - 1) AS n_bi FROM tk WHERE size(w) >= 2),
-        bi AS (
-          SELECT b.w1, b.w2, COUNT(*) AS n_pair
-          FROM (SELECT explode(zip_with(slice(w, 1, size(w) - 1), slice(w, 2, size(w) - 1),
-                  (a, b) -> named_struct('w1', a, 'w2', b))) AS b
-                FROM tk WHERE size(w) >= 2)
-          GROUP BY b.w1, b.w2 HAVING COUNT(*) >= ${text.TextAnalysis.CollocMinCount})
-        SELECT bi.w1, bi.w2, bi.n_pair, u1.c AS c1, u2.c AS c2,
-          ROUND(LN((bi.n_pair * CAST(ntok.n_tok AS DOUBLE) * ntok.n_tok)
-            / (CAST(nbi.n_bi AS DOUBLE) * u1.c * u2.c)), 6) AS pmi
-        FROM bi JOIN uni u1 ON u1.tok = bi.w1 JOIN uni u2 ON u2.tok = bi.w2,
-          ntok, nbi
-        ORDER BY w1, w2""",
-
-      "graph_reciprocity" -> """
-        WITH rd AS (
-          SELECT a.src AS v, COUNT(*) AS recip_deg
-          FROM graph_nation a JOIN graph_nation b
-            ON b.src = a.dst AND b.dst = a.src
-          GROUP BY a.src),
-        od AS (SELECT src AS v, COUNT(*) AS out_deg FROM graph_nation GROUP BY src),
-        id AS (SELECT dst AS v, COUNT(*) AS in_deg FROM graph_nation GROUP BY dst),
-        verts AS (SELECT v FROM od UNION SELECT v FROM id)
-        SELECT verts.v AS vertex,
-          COALESCE(od.out_deg, 0L) AS out_deg,
-          COALESCE(id.in_deg, 0L) AS in_deg,
-          COALESCE(rd.recip_deg, 0L) AS recip_deg,
-          CASE WHEN COALESCE(od.out_deg, 0L) > 0
-               THEN ROUND(COALESCE(rd.recip_deg, 0L) / od.out_deg, 6)
-               ELSE 0.0D END AS reciprocity
-        FROM verts LEFT JOIN od ON od.v = verts.v
-        LEFT JOIN id ON id.v = verts.v
-        LEFT JOIN rd ON rd.v = verts.v
-        ORDER BY vertex""",
-
-      "text_readability" -> """
-        WITH f AS (
-          SELECT doc_id,
-            GREATEST(CAST(size(split(text, ' ')) AS BIGINT), 1L) AS n_words,
-            CAST(regexp_count(text, '[aeiouy]+') AS BIGINT) AS n_syll,
-            GREATEST(CAST(regexp_count(text, '[.!?]+') AS BIGINT), 1L) AS n_sent
-          FROM documents),
-        s AS (
-          SELECT doc_id, n_words, n_syll, n_sent,
-            206.835D - 1.015D * (n_words / n_sent) - 84.6D * (n_syll / n_words) AS flesch
-          FROM f)
-        SELECT doc_id, n_words, n_syll, n_sent,
-          ROUND(flesch, 4) AS flesch,
-          CASE WHEN flesch >= 70.0D THEN 'easy'
-               WHEN flesch >= 50.0D THEN 'medium'
-               ELSE 'hard' END AS band
-        FROM s ORDER BY doc_id""",
-
-      "q_events_anomaly" -> """
-        WITH st AS (
-          SELECT user_id, COUNT(*) AS n,
-            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM events GROUP BY user_id HAVING COUNT(*) >= 10),
-        ms AS (
-          SELECT user_id, s1 / n AS mean,
-            (s2 - s1 * s1 / n) / (n - 1) AS variance
-          FROM st),
-        fl AS (
-          SELECT e.event_id, e.user_id, e.event_type, e.value, ms.mean,
-            (e.value - ms.mean) / SQRT(ms.variance) AS z
-          FROM events e JOIN ms ON ms.user_id = e.user_id
-          WHERE ms.variance > 0.0D)
-        SELECT event_id, user_id, event_type, value,
-          ROUND(mean, 4) AS user_mean, ROUND(z, 4) AS z
-        FROM fl WHERE ABS(z) > 2.0D ORDER BY event_id""",
-
-      "q_rfm" -> """
-        WITH p AS (
-          SELECT user_id, ts_sec, CAST(value AS DECIMAL(18,2)) AS v2
-          FROM events_sec WHERE event_type = 'purchase'),
-        mx AS (SELECT MAX(ts_sec) AS mt FROM p),
-        per AS (
-          SELECT user_id, (mx.mt - MAX(ts_sec)) div 86400 AS recency_days,
-            COUNT(*) AS frequency, CAST(SUM(v2) AS DOUBLE) AS monetary
-          FROM p CROSS JOIN mx GROUP BY user_id, mx.mt),
-        cut AS (SELECT
-          ROUND(percentile(recency_days, 0.25D), 4) AS r1,
-          ROUND(percentile(recency_days, 0.5D), 4) AS r2,
-          ROUND(percentile(recency_days, 0.75D), 4) AS r3,
-          ROUND(percentile(frequency, 0.25D), 4) AS f1,
-          ROUND(percentile(frequency, 0.5D), 4) AS f2,
-          ROUND(percentile(frequency, 0.75D), 4) AS f3,
-          ROUND(percentile(monetary, 0.25D), 4) AS m1,
-          ROUND(percentile(monetary, 0.5D), 4) AS m2,
-          ROUND(percentile(monetary, 0.75D), 4) AS m3
-          FROM per),
-        sc AS (
-          SELECT user_id, recency_days, frequency, monetary,
-            5L - (1L + CAST(recency_days > cut.r1 AS BIGINT)
-                     + CAST(recency_days > cut.r2 AS BIGINT)
-                     + CAST(recency_days > cut.r3 AS BIGINT)) AS r_score,
-            1L + CAST(frequency > cut.f1 AS BIGINT)
-               + CAST(frequency > cut.f2 AS BIGINT)
-               + CAST(frequency > cut.f3 AS BIGINT) AS f_score,
-            1L + CAST(monetary > cut.m1 AS BIGINT)
-               + CAST(monetary > cut.m2 AS BIGINT)
-               + CAST(monetary > cut.m3 AS BIGINT) AS m_score
-          FROM per CROSS JOIN cut)
-        SELECT user_id, recency_days, frequency, monetary,
-          r_score, f_score, m_score,
-          r_score * 100L + f_score * 10L + m_score AS rfm
-        FROM sc ORDER BY user_id""",
-
-      "graph_hits" -> s"""
-        WITH verts AS (SELECT src AS v FROM graph_nation UNION SELECT dst FROM graph_nation),
-        h0 AS (SELECT v, 1.0D AS s FROM verts),
-        $hitsRounds
-        SELECT verts.v AS vertex,
-          ROUND(a${graph.GraphQueries.HitsIters}.s, 6) AS authority,
-          ROUND(h${graph.GraphQueries.HitsIters}.s, 6) AS hub
-        FROM verts
-        JOIN a${graph.GraphQueries.HitsIters}
-          ON a${graph.GraphQueries.HitsIters}.v = verts.v
-        JOIN h${graph.GraphQueries.HitsIters}
-          ON h${graph.GraphQueries.HitsIters}.v = verts.v
-        ORDER BY vertex""",
-    )
+  private def dirArg(name: String, args: Seq[Expression]): String = args match {
+    case Seq(Literal(dir: UTF8String, _: StringType)) => dir.toString
+    case _ =>
+      throw new AnalysisException("INVALID_PARAMETER_VALUE.STRING", Map(
+        "parameter" -> "`dir` (the data dir, its one argument)",
+        "functionName" -> s"`$name`",
+        "invalidValue" -> (if (args.isEmpty) "no argument" else args.map(_.sql).mkString(", "))))
   }
 }

@@ -430,6 +430,28 @@ class GraphSpec extends SparkSpec {
     assert(GraphStore.load(spark, dir, "g").count() === 3L) // no dup rows
   }
 
+  test("GraphStore: concurrent upserts on one graph lose no edges and leave no staging dir") {
+    val dir = Files.createTempDirectory("graft-store").toString
+    GraphStore.save(spark, dir, "g", edgeDf((1L, 2L)))
+    val rounds = 4
+    val increments = Seq(100L, 200L).map(base => (0 until rounds).map(i => (base + i, 1L)))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writers = increments.map { edges =>
+      new Thread(() =>
+        try edges.foreach(e => GraphStore.upsert(spark, dir, "g", edgeDf(e)))
+        catch { case t: Throwable => errors.add(t) })
+    }
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    assert(errors.isEmpty, s"upsert failed: ${errors.peek()}")
+    val stored = GraphStore.load(spark, dir, "g").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(stored === Set((1L, 2L)) ++ increments.flatten)
+    val leftovers = (new java.io.File(dir).listFiles() ++ new java.io.File(dir, "g").listFiles())
+      .map(_.getName).filter(_.contains(".staging-"))
+    assert(leftovers.isEmpty, s"staging dirs left: ${leftovers.mkString(", ")}")
+  }
+
   test("ppr: mass concentrates at seeds, fades with distance; paths agree") {
     val s = spark
     import s.implicits._
