@@ -13,18 +13,24 @@ import org.apache.spark.storage.StorageLevel
   *
   * Traversals are level-synchronous: the reference's thread-per-vertex
   * BFS with a pthread_join barrier per level (dfs_bfs.h:111-172)
-  * becomes a frontier-join per level with a Spark stage boundary as
-  * the barrier. Scale notes:
-  *  - the frontier is broadcast while small (the common case), so the
-  *    per-level join is shuffle-free against a cached edge table;
-  *  - `localCheckpoint` after each level truncates lineage — iterative
-  *    plans otherwise grow unboundedly and overwhelm the optimizer;
-  *  - `visited` stays distributed; nothing is collected to the driver.
+  * becomes one Spark job per level, the job boundary as the barrier
+  * ([[Supersteps]]: RDD supersteps, no per-level query planning).
+  * Scale notes:
+  *  - the frontier is broadcast while small (the common case), so a
+  *    level shuffles only its candidates, never the edges;
+  *  - a larger frontier exchanges the edges by source once, and later
+  *    levels expand co-partitioned with the frontier;
+  *  - each level's frontier is lineage-cut as its job materializes it;
+  *  - `visited` stays distributed; only frontiers under the broadcast
+  *    bound are collected to the driver;
+  *  - the per-partition edge blocks and visited sets are heap objects
+  *    that do not spill: a task must hold its partition's share of the
+  *    reachable (tag, vertex) pairs (see [[Supersteps]]).
   */
 object GraphOps {
 
-  /** Frontiers below this row count are broadcast to the edge join.
-    * Overridable (system property) so specs can force the
+  /** Frontiers below this row count are broadcast to the edges (bfs's
+    * expansion, the Brandes and sssp joins). Overridable (system property) so specs can force the
     * shuffled-join path on small graphs; production default 4M rows.
     */
   private def broadcastFrontier: Long =
@@ -146,7 +152,7 @@ object GraphOps {
     * more in per-level scheduler latency than the whole traversal does
     * locally, and the reference itself materializes the full adjacency
     * matrix per query (secondary_server.c:126-137). Above the threshold
-    * the level-synchronous frontier-join loop — the only shape that
+    * the level-synchronous frontier loop — the only shape that
     * works at 100 TB — is used unconditionally; specs pin both paths
     * to identical output by forcing maxLocalEdges = 0. Measured at the
     * sf1-equivalent supply graph (5.87M edges): collecting a 4M-row
@@ -163,8 +169,19 @@ object GraphOps {
     * O(min(task endpoints, |V|)) entries (16 B each), so 16M
     * edges/task bounds a task's map near 512 MB — safe at local[32]
     * heaps and a deliberate executor-memory-shaped knob at scale.
+    * The BFS supersteps size their partition count by it too, so an
+    * exchanged edge block stays under ≈ 256 MB.
     */
   val ContractTaskEdgeBound: Long = 16000000L
+
+  /** splitmix64-style finalizer — cheap and well-spread for
+    * sequential/offset-striped vertex ids. [[LongLongOpenMap]]'s slot
+    * hash and the BFS supersteps' vertex → partition map.
+    */
+  @inline private[graph] def mix64(k: Long): Long = {
+    val x = k * -7046029254386353131L
+    x ^ (x >>> 32)
+  }
 
   /** Open-addressing Long→Long map (linear probing, power-of-2
     * capacity, 16 B/entry flat arrays) for the union-find hot loops —
@@ -183,13 +200,7 @@ object GraphOps {
     private var n = 0
     private var hasMin = false
     private var minVal = 0L
-    @inline private def slot(k: Long): Int = {
-      // splitmix64-style finalizer — cheap and well-spread for
-      // sequential/offset-striped vertex ids
-      var x = k * -7046029254386353131L
-      x ^= (x >>> 32)
-      (x & mask).toInt
-    }
+    @inline private def slot(k: Long): Int = (mix64(k) & mask).toInt
     def getOrDefault(k: Long, dflt: Long): Long = {
       if (k == Long.MinValue) return if (hasMin) minVal else dflt
       var i = slot(k)
@@ -267,105 +278,7 @@ object GraphOps {
       e.unpersist()
       return out
     }
-    var frontier = tagged.distinct().localCheckpoint()
-    var frontierRows = frontier.count()
-    // One eagerly-checkpointed job per level is the whole cost model:
-    // `visited` is the *lazy* union of checkpointed frames, compacted
-    // into a single checkpoint every CompactEvery levels so the plan
-    // the anti-join compiles stays bounded (an ever-growing union
-    // forces a fresh whole-stage-codegen compile per level — O(L²)
-    // compile work). The `level` column is attached *after* the
-    // checkpoint, so the per-level job's generated code is
-    // level-independent. The post-checkpoint count() is a cached scan.
-    val CompactEvery = 8
-    val frames = scala.collection.mutable.ArrayBuffer((0, frontier))
-    var visitedBase = frontier
-    val recent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var level = 0
-    // Super-broadcast frontiers take a shuffled join. The persisted
-    // edge frame has no partitioner, so every such level would
-    // re-exchange the FULL edge set — O(levels × edges) network, the
-    // scale-killer on a web graph where the frontier exceeds the
-    // broadcast bound within 2-3 hops. On the first such level the
-    // edge frame is re-persisted under HashPartitioning(src) (one
-    // edges-sized exchange, paid once) and [[hubSplit]] peels
-    // power-law hubs into a RoundRobin frame (auto threshold: a no-op
-    // on hub-free graphs); the cached tail partitioning then
-    // satisfies the join's required distribution on every later level
-    // and only the frontier side shuffles — O(levels × frontier) —
-    // while hub out-edges are probed by broadcast of the ≤|hubs|×tags
-    // frontier slice instead of straggling one task per level.
-    // Broadcast-only traversals never pay the repartition.
-    var eSplit: HubSplit = null
-    def partitionedSplit(): HubSplit = {
-      if (eSplit == null) {
-        val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-        eBySrc.count()
-        val od = eBySrc.groupBy("src").agg(count(lit(1)).as("od"))
-        eSplit = hubSplit(eBySrc, eCount, od, hubOutDegree,
-          releaseOnError = Seq(e))
-        // The unpartitioned copy is now redundant: a later
-        // broadcast-sized level joins the split frames just as well
-        // (broadcast joins ignore the probe side's partitioning), and
-        // holding both would double cached edge storage for the rest
-        // of the traversal — at web-graph scale that's the difference
-        // between fitting in storage memory and spilling.
-        e.unpersist()
-      }
-      eSplit
-    }
-    // frontier×edges rows for one level over whichever layout exists
-    def expand(f: DataFrame, broadcastSide: Boolean): DataFrame = {
-      if (eSplit == null && broadcastSide)
-        return e.join(broadcast(f), e("src") === f("vertex"))
-          .select(col("tag"), col("dst").as("vertex"))
-      val hs = partitionedSplit()
-      val fb = if (broadcastSide) broadcast(f) else f
-      val tailRows = hs.tail.join(fb, hs.tail("src") === fb("vertex"))
-        .select(col("tag"), col("dst").as("vertex"))
-      hs.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubF = broadcast(f.join(
-            broadcast(hs.hubDeg.get.select(col("src").as("vertex"))),
-            Seq("vertex"), "left_semi"))
-          tailRows.unionAll(
-            hubE.join(hubF, hubE("src") === hubF("vertex"))
-              .select(col("tag"), col("dst").as("vertex")))
-      }
-    }
-    while (frontierRows > 0 && level < maxDepth) {
-      level += 1
-      val visited = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
-      val small = frontierRows <= broadcastFrontier
-      val nextRaw = expand(frontier, small)
-        .distinct()
-        .join(visited, Seq("tag", "vertex"), "left_anti")
-      // Small frontiers collapse to one partition so the checkpointed
-      // frames stay single-task (the visited union then scans L tasks,
-      // not L × shuffle-partitions).
-      val t0 = System.nanoTime()
-      val next = (if (frontierRows <= 1000000) nextRaw.coalesce(1) else nextRaw)
-        .localCheckpoint()
-      frontierRows = next.count()
-      if (sys.env.contains("GRAFT_GRAPH_TRACE"))
-        System.err.println(f"GRAFT_BFS level=$level frontier=$frontierRows " +
-          f"sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      if (frontierRows > 0) {
-        frames += ((level, next))
-        recent += next
-        if (recent.size >= CompactEvery) {
-          visitedBase = (visitedBase +: recent.toSeq).reduce(_ unionAll _)
-            .coalesce(math.max(1, e.rdd.getNumPartitions / 4)).localCheckpoint()
-          recent.clear()
-        }
-      }
-      frontier = next
-    }
-    e.unpersist()
-    if (eSplit != null) eSplit.unpersistAll()
-    frames.map { case (lvl, df) => df.withColumn("level", lit(lvl)) }
-      .reduce(_ unionAll _)
+    Supersteps.bfs(e, eCount, tagged, maxDepth, hubOutDegree, broadcastFrontier)
   }
 
   /** Driver-side twin of the frontier loop for sub-threshold graphs:
@@ -430,7 +343,7 @@ object GraphOps {
     * order is thread-race dependent; the reachable SET is not).
     */
   def reach(edges: DataFrame, source: DataFrame): DataFrame =
-    bfs(edges, source, maxDepth = 100000).select("vertex")
+    bfs(edges, source).select("vertex")
 
   /** Deterministic lexicographic DFS preorder: (pos, vertex).
     *
@@ -794,27 +707,35 @@ object GraphOps {
     def unpersistAll(): Unit = { tail.unpersist(); hub.foreach(_.unpersist()) }
   }
 
+  /** The out-degree above which a source is a hub. */
+  private[graph] def hubThreshold(eCount: Long, parts: Int, hubOutDegree: Long): Long =
+    if (hubOutDegree > 0) hubOutDegree else math.max(HubMinOutDegree, eCount / parts)
+
+  /** The most hubs a split broadcasts. */
+  private[graph] val MaxHubs: Int = 1 << 20
+
+  private[graph] def tooManyHubs(nHubs: Long, key: String, threshold: Long) =
+    new IllegalArgumentException(
+      s"hubSplit: $nHubs sources above $key-degree $threshold — hub catalog " +
+        "too large to broadcast; raise the threshold")
+
   private[graft] def hubSplit(e: DataFrame, eCount: Long, deg: DataFrame,
       hubOutDegree: Long, key: String = "src",
       tailLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       releaseOnError: Seq[DataFrame] = Nil): HubSplit = {
     val spark = e.sparkSession
     val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val threshold =
-      if (hubOutDegree > 0) hubOutDegree
-      else math.max(HubMinOutDegree, eCount / parts)
+    val threshold = hubThreshold(eCount, parts, hubOutDegree)
     val hubDeg = deg.where(col("od") > threshold).localCheckpoint()
     val nHubs = hubDeg.count()
     // Validate BEFORE building tail/hub frames, and release the caller's
     // persisted edge frame on the error path — a user-supplied small
     // hubOutDegree on a large graph must not leak cached edge-sized
     // blocks (the success paths hand ownership of `e` to the HubSplit).
-    if (nHubs > (1L << 20)) {
+    if (nHubs > MaxHubs) {
       e.unpersist()
       releaseOnError.foreach(_.unpersist())
-      throw new IllegalArgumentException(
-        s"hubSplit: $nHubs sources above $key-degree $threshold — hub catalog " +
-          "too large to broadcast; raise the threshold")
+      throw tooManyHubs(nHubs, key, threshold)
     }
     if (nHubs == 0) HubSplit(e, deg, None, None, threshold)
     else {

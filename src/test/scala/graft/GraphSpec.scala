@@ -63,6 +63,16 @@ class GraphSpec extends SparkSpec {
     assert(levels === Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2))
   }
 
+  test("reach is unbounded: a 100 050-vertex chain reaches every vertex") {
+    val s = spark
+    import s.implicits._
+    val n = 100050L
+    val e = spark.range(0L, n - 1).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val reached = GraphOps.reach(e, Seq(0L).toDF("vertex"))
+    assert(reached.count() === n)
+    assert(reached.agg(max("vertex")).head().getLong(0) === n - 1)
+  }
+
   test("connectedComponents labels by component minimum") {
     val e = edgeDf((1L, 2L), (2L, 3L), (10L, 11L))
     val cc = GraphOps.connectedComponents(e)
