@@ -41,8 +41,7 @@ import java.nio.file.{Files, Paths}
   *  - gini: q_gini under random customer-subset modulus × FORCED rank
   *    path (exact window / bucketed CASE / bucketed param-join) against
   *    the path-blind oracle — the bucketed machinery stays
-  *    data-exercised at varying group sizes every fuzz run, not just
-  *    once per round via the GiniStress corpus (r17)
+  *    data-exercised at varying group sizes every fuzz run (r17)
   *
   * Usage: runMain graft.Fuzz <sfDir> <outDir> <seed> <nDraws>
   */
@@ -312,8 +311,8 @@ object Fuzz {
     * window, bucketed with the nested-CASE bucket id, or bucketed with
     * the broadcast param-join shape. The oracle is path-blind (always
     * the exact rank identity), so each draw proves the bucketed
-    * machinery bit-identical on a fresh group-size profile — the
-    * GiniStress crossover exercised per fuzz run, not once per round.
+    * machinery bit-identical on a fresh group-size profile, every fuzz
+    * run.
     */
   private def giniDraw(spark: SparkSession, dir: String, i: Int,
       rng: scala.util.Random): Draw = {

@@ -242,6 +242,33 @@ object GraphOps {
     }
   }
 
+  /** Path-compressing union-find over a [[LongLongOpenMap]] of parent
+    * links (absent ⇒ self-parent). `union` hangs the larger root under
+    * the smaller, so every set's root is its minimum vertex — the
+    * min-id component label [[connectedComponents]] returns.
+    */
+  private[graph] final class UnionFind(initialCapacity: Int = 1 << 16) {
+    private val parent = new LongLongOpenMap(initialCapacity)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = x
+      while (parent.getOrDefault(c, c) != c) {
+        val n = parent.getOrDefault(c, c); parent.put(c, r); c = n
+      }
+      r
+    }
+    /** Merge the sets of `a` and `b`; false when they were one set. */
+    def union(a: Long, b: Long): Boolean = {
+      val ra = find(a); val rb = find(b)
+      if (ra == rb) false
+      else { parent.put(math.max(ra, rb), math.min(ra, rb)); true }
+    }
+    /** Every vertex ever hung under another, with its root. */
+    def foreachNonRoot(f: (Long, Long) => Unit): Unit =
+      parent.foreachKey { v => val r = find(v); if (r != v) f(r, v) }
+  }
+
   private def canonEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
 
@@ -432,13 +459,6 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val trace = sys.env.contains("GRAFT_GRAPH_TRACE")
-    var tLast = System.nanoTime()
-    def tmark(label: String): Unit = if (trace) {
-      val now = System.nanoTime()
-      System.err.println(f"GRAFT_CC $label: ${(now - tLast) / 1e9}%.2f s")
-      tLast = now
-    }
     // One checkpoint of the raw edge list: the self-loop vertex scan
     // and (on the local path) the collect both read it — without this
     // each consumer re-runs the caller's derivation pipeline. SKIPPED
@@ -451,7 +471,6 @@ object GraphOps {
     val ceOwned = RoundCheckpoints.ownRddId(edges).isEmpty
     val ce =
       if (ceOwned) canonEdges(edges).localCheckpoint() else canonEdges(edges)
-    tmark(s"canon-ckpt owned=$ceOwned")
     val spark = edges.sparkSession
     import spark.implicits._
     // NO .distinct() here (r21): every consumer below is a union-find
@@ -464,7 +483,6 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
     val n0 = e1.count()
-    tmark(s"canon-edges n=$n0")
     if (n0 <= maxLocalEdges) return localCc(spark, e1, ce)
     // Iterated local contraction (the two-phase optimization of
     // Kiveris et al. §6, applied to a fixpoint): each partition
@@ -486,28 +504,15 @@ object GraphOps {
     // the star loop below.
     def contract(in: DataFrame): DataFrame = in.select("u", "v")
       .as[(Long, Long)].mapPartitions { it =>
-        val parent = new LongLongOpenMap(1 << 16)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = x
-          while (parent.getOrDefault(c, c) != c) {
-            val n = parent.getOrDefault(c, c); parent.put(c, r); c = n
-          }
-          r
-        }
-        it.foreach { case (a, b) =>
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-        }
+        val uf = new UnionFind()
+        it.foreach { case (a, b) => uf.union(a, b) }
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        parent.foreachKey { v => val r = find(v); if (r != v) out += ((r, v)) }
+        uf.foreachNonRoot((r, v) => out += ((r, v)))
         out.iterator
       }.toDF("u", "v")
     var e = contract(e1).localCheckpoint()
     var n = e.count()
     var parts = e.rdd.getNumPartitions
-    tmark(s"contract pass=1 parts=$parts edges=$n")
     var prevCkpt = e
     var pass = 1
     // keep quartering while it still shrinks ≥ 20% per pass — a stall
@@ -526,7 +531,6 @@ object GraphOps {
       n = next.count()
       releaseCheckpoint(prevCkpt)
       e = next; prevCkpt = next
-      tmark(s"contract pass=$pass parts=$parts edges=$n")
     }
     if (n <= maxLocalEdges) {
       val out = localCc(spark, e, ce)
@@ -546,7 +550,6 @@ object GraphOps {
       .unionAll(e.select(col("v").as("vertex")))
       .unionAll(ce.where(col("src") === col("dst")).select(col("src").as("vertex")))
       .distinct().localCheckpoint()
-    tmark(s"allverts-ckpt")
     val eContracted = e // pre-loop contraction checkpoint, released at drain
     var converged = false
     var rounds = 0
@@ -594,7 +597,6 @@ object GraphOps {
         .select(col("m").as("u"), col("x").as("v"))
         .distinct())
       val nsig = checksum(ss)
-      tmark(s"round=$rounds edges=${nsig._1}")
       converged = nsig == sig
       sig = nsig
       e = ss
@@ -636,45 +638,18 @@ object GraphOps {
   private def localCc(spark: SparkSession, undirected: DataFrame,
       allEdges: DataFrame): DataFrame = {
     import spark.implicits._
-    val trace = sys.env.contains("GRAFT_GRAPH_TRACE")
-    var tL = System.nanoTime()
-    def tm(label: String): Unit = if (trace) {
-      val now = System.nanoTime()
-      System.err.println(f"GRAFT_CC local $label: ${(now - tL) / 1e9}%.2f s")
-      tL = now
-    }
     val es = collectPairs(undirected)
-    tm(s"collect-pairs n=${es.length}")
     val uc = undirected.columns
     val verts = undirected.select(col(uc(0)).as("vertex"))
       .unionAll(undirected.select(col(uc(1)).as("vertex")))
       .unionAll(allEdges.where(col("src") === col("dst"))
         .select(col("src").as("vertex")))
       .distinct().collect().map(_.getLong(0))
-    tm(s"collect-verts n=${verts.length}")
-    val parent = new LongLongOpenMap(1 << 16)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-      var c = x
-      while (parent.getOrDefault(c, c) != c) {
-        val n = parent.getOrDefault(c, c); parent.put(c, r); c = n
-      }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-    }
-    val out = verts.map(v => (v, find(v))).toSeq.toDF("vertex", "component")
-    tm("union-find")
-    out
+    val uf = new UnionFind()
+    es.foreach { case (a, b) => uf.union(a, b) }
+    verts.map(v => (v, uf.find(v))).toSeq.toDF("vertex", "component")
   }
 
-  /** Damped PageRank, fixed iteration count. Dangling-vertex mass is
-    * dropped (both the engine and the oracle use the same convention).
-    * All vertices (src ∪ dst) receive the (1-d)/N base term.
-    */
   /** Hub floor for the push-loop two-frame split: a source only counts
     * as a hub when its out-edge list both exceeds an ideal partition's
     * share (edges / shuffle partitions) AND this absolute floor —
@@ -773,8 +748,37 @@ object GraphOps {
     }
   }
 
+  /** Damped PageRank, fixed iteration count. Dangling-vertex mass is
+    * dropped (both the engine and the oracle use the same convention).
+    * All vertices (src ∪ dst) receive the (1-d)/N base term.
+    */
   def pagerank(edges: DataFrame, iters: Int, d: Double = 0.85,
+      maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame =
+    rankPush(edges, None, iters, d, maxLocalEdges, hubOutDegree)
+
+  /** Personalized PageRank (random walk with restart to a seed set):
+    * the reset mass (1−d) returns to the seeds instead of spreading
+    * uniformly, so rank measures proximity *to the seeds* — the
+    * "find more like these" primitive under seed-expansion sampling
+    * of a web/citation graph. Same fixed-iteration push loop as
+    * [[pagerank]] (one join + one aggregation per round, shuffled on
+    * the vertex id; dangling mass dropped by the same convention on
+    * both engines); the seed set rides along as a broadcast literal
+    * — it is user-input-sized, not graph-sized.
+    */
+  def ppr(edges: DataFrame, seeds: Seq[Long], iters: Int, d: Double = 0.85,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
+    require(seeds.nonEmpty, "PPR needs a non-empty seed set")
+    rankPush(edges, Some(seeds), iters, d, maxLocalEdges, hubOutDegree)
+  }
+
+  /** The push loop behind [[pagerank]] (`seeds` None: uniform reset,
+    * base (1−d)/N, start 1/N) and [[ppr]] (reset share s = 1/|seeds|
+    * on each seed, base (1−d)·s, start s): each round
+    * r ← base + d·Σ(in-neighbor r / outdeg).
+    */
+  private def rankPush(edges: DataFrame, seeds: Option[Seq[Long]], iters: Int,
+      d: Double, maxLocalEdges: Long, hubOutDegree: Long): DataFrame = {
     // repartition(src) BEFORE distinct: HashPartitioning(src) satisfies
     // the dedup aggregation's ClusteredDistribution(src, dst), so the
     // cached frame is born hash-partitioned by src for ONE exchange —
@@ -803,128 +807,73 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eCount = e.count()
     if (eCount <= maxLocalEdges) {
-      val out = localPagerank(edges.sparkSession, e, iters, d)
+      val out = localRankPush(edges.sparkSession, e, seeds, iters, d)
       e.unpersist()
       return out
     }
     val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
       .distinct().localCheckpoint()
-    val n = verts.count()
+    // (frame each round joins into, its base term, the start ranks):
+    // uniform PageRank needs only the vertex set; PPR carries the
+    // per-vertex reset share `s` in a checkpointed reset frame
+    val (frame, base, start) = seeds match {
+      case None =>
+        val n = verts.count()
+        (verts, lit((1.0 - d) / n), verts.withColumn("r", lit(1.0 / n)))
+      case Some(ss) =>
+        val reset = verts.withColumn("s",
+          when(col("v").isInCollection(ss), lit(1.0 / ss.size)).otherwise(lit(0.0)))
+          .localCheckpoint()
+        (reset, lit(1.0 - d) * col("s"), reset.select(col("v"), col("s").as("r")))
+    }
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val hs = hubSplit(e, eCount, outdeg, hubOutDegree)
-    var ranks = verts.withColumn("r", lit(1.0 / n))
+    var ranks = start
     for (_ <- 1 to iters) {
       val contribs = pushContribs(hs, ranks)
-      ranks = verts.join(contribs.groupBy("v").agg(sum("c").as("s")), Seq("v"), "left")
-        .select(col("v"),
-          (lit((1.0 - d) / n) + lit(d) * coalesce(col("s"), lit(0.0))).as("r"))
+      ranks = frame.join(contribs.groupBy("v").agg(sum("c").as("in")), Seq("v"), "left")
+        .select(col("v"), (base + lit(d) * coalesce(col("in"), lit(0.0))).as("r"))
         .localCheckpoint()
     }
     hs.unpersistAll(); outdeg.unpersist()
     ranks.select(col("v").as("vertex"), col("r").as("rank"))
   }
 
-  /** Driver-side PageRank twin for sub-threshold graphs. Contribution
-    * sums accumulate in a different order than the distributed
-    * aggregation, but callers round ranks (6 dp) ~10 orders of
-    * magnitude above double-summation reorder noise.
+  /** Driver-side twin of [[rankPush]] for sub-threshold graphs, same
+    * base and start terms. Contribution sums accumulate in a different
+    * order than the distributed aggregation, but callers round ranks
+    * (6 dp) ~10 orders of magnitude above double-summation reorder
+    * noise.
     */
-  private def localPagerank(spark: SparkSession, e: DataFrame,
-      iters: Int, d: Double): DataFrame = {
+  private def localRankPush(spark: SparkSession, e: DataFrame,
+      seeds: Option[Seq[Long]], iters: Int, d: Double): DataFrame = {
     import spark.implicits._
     val es = collectPairs(e)
     val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val n = verts.length
+    val (base, start): (Long => Double, Long => Double) = seeds match {
+      case None =>
+        val n = verts.length
+        (_ => (1.0 - d) / n, _ => 1.0 / n)
+      case Some(ss) =>
+        val seedSet = ss.toSet
+        val reset = (v: Long) => if (seedSet(v)) 1.0 / ss.size else 0.0
+        (v => (1.0 - d) * reset(v), reset)
+    }
     val outdeg = new java.util.HashMap[Long, Long]()
     es.foreach { case (s, _) => outdeg.merge(s, 1L, _ + _) }
     var rank = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => rank.put(v, 1.0 / n))
+    verts.foreach(v => rank.put(v, start(v)))
     for (_ <- 1 to iters) {
       val acc = new java.util.HashMap[Long, Double]()
       es.foreach { case (s, t) =>
         acc.merge(t, rank.get(s) / outdeg.get(s), _ + _)
       }
       val next = new java.util.HashMap[Long, Double]()
-      verts.foreach { v =>
-        next.put(v, (1.0 - d) / n + d * acc.getOrDefault(v, 0.0))
-      }
+      verts.foreach(v => next.put(v, base(v) + d * acc.getOrDefault(v, 0.0)))
       rank = next
     }
     verts.map(v => (v, rank.get(v))).toSeq.toDF("vertex", "rank")
-  }
-
-  private def localPpr(spark: SparkSession, e: DataFrame, seeds: Seq[Long],
-      iters: Int, d: Double): DataFrame = {
-    import spark.implicits._
-    val es = collectPairs(e)
-    val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val seedSet = seeds.toSet
-    val reset = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => reset.put(v, if (seedSet(v)) 1.0 / seeds.size else 0.0))
-    val outdeg = new java.util.HashMap[Long, Long]()
-    es.foreach { case (s, _) => outdeg.merge(s, 1L, _ + _) }
-    var rank = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => rank.put(v, reset.get(v)))
-    for (_ <- 1 to iters) {
-      val acc = new java.util.HashMap[Long, Double]()
-      es.foreach { case (s, t) =>
-        acc.merge(t, rank.get(s) / outdeg.get(s), _ + _)
-      }
-      val next = new java.util.HashMap[Long, Double]()
-      verts.foreach { v =>
-        next.put(v, (1.0 - d) * reset.get(v) + d * acc.getOrDefault(v, 0.0))
-      }
-      rank = next
-    }
-    verts.map(v => (v, rank.get(v))).toSeq.toDF("vertex", "rank")
-  }
-
-  /** Personalized PageRank (random walk with restart to a seed set):
-    * the reset mass (1−d) returns to the seeds instead of spreading
-    * uniformly, so rank measures proximity *to the seeds* — the
-    * "find more like these" primitive under seed-expansion sampling
-    * of a web/citation graph. Same fixed-iteration push loop as
-    * [[pagerank]] (one join + one aggregation per round, shuffled on
-    * the vertex id; dangling mass dropped by the same convention on
-    * both engines); the seed set rides along as a broadcast literal
-    * — it is user-input-sized, not graph-sized.
-    */
-  def ppr(edges: DataFrame, seeds: Seq[Long], iters: Int, d: Double = 0.85,
-      maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    require(seeds.nonEmpty, "PPR needs a non-empty seed set")
-    // Same born-partitioned edge cache as [[pagerank]]: one exchange,
-    // then the per-iteration push join is exchange-free on the edge
-    // side — with the same [[hubSplit]] two-frame layout against
-    // power-law hub stragglers.
-    val e = canonEdges(edges).repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localPpr(edges.sparkSession, e, seeds, iters, d)
-      e.unpersist()
-      return out
-    }
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    val seedCol = col("v").isInCollection(seeds)
-    val reset = verts.withColumn("s",
-      when(seedCol, lit(1.0 / seeds.size)).otherwise(lit(0.0)))
-      .localCheckpoint()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hubSplit(e, eCount, outdeg, hubOutDegree)
-    var ranks = reset.select(col("v"), col("s").as("r"))
-    for (_ <- 1 to iters) {
-      val contribs = pushContribs(hs, ranks)
-      ranks = reset.join(contribs.groupBy("v").agg(sum("c").as("s2")), Seq("v"), "left")
-        .select(col("v"), col("s"),
-          (lit(1.0 - d) * col("s") + lit(d) * coalesce(col("s2"), lit(0.0))).as("r"))
-        .localCheckpoint()
-        .select(col("v"), col("r"))
-    }
-    hs.unpersistAll(); outdeg.unpersist()
-    ranks.select(col("v").as("vertex"), col("r").as("rank"))
   }
 
   /** k-core decomposition membership: iteratively strip vertices of
@@ -962,6 +911,13 @@ object GraphOps {
       .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
   }
 
+  /** Round count of the last DISTRIBUTED [[coreness]] run on this
+    * driver (h-index fixpoint rounds should track influence-chain
+    * depth, far below the bucket-peel's degeneracy-bound round count;
+    * GraphSpec bounds it on a hub-skewed graph).
+    */
+  @volatile private[graft] var lastCorenessRounds: Int = 0
+
   /** Full core decomposition (coreness per vertex — Batagelj &
     * Zaveršnik 2003): coreness(v) = max k such that v survives the
     * k-core prune. Distributed shape is the vertex-local H-INDEX
@@ -983,18 +939,11 @@ object GraphOps {
     * h-index, one merge join; all hash-partitioned on vertex id, no
     * growing re-union, lineage cut per round. The bucket-peel is kept
     * as [[corenessPeel]] — a second, independently-shaped
-    * implementation the spec and the scale probe cross-check the
-    * fixpoint against. Every vertex incident to an edge is emitted
-    * (coreness ≥ 1); driver twin under the edge threshold (spec pins
-    * all three paths identical on planted graphs).
+    * implementation the spec cross-checks the fixpoint against. Every
+    * vertex incident to an edge is emitted (coreness ≥ 1); driver twin
+    * under the edge threshold (spec pins all three paths identical on
+    * planted graphs).
     */
-  /** Round count of the last DISTRIBUTED [[coreness]] run on this
-    * driver (diagnostic for the scale probes — h-index fixpoint
-    * rounds should track influence-chain depth, far below the
-    * bucket-peel's degeneracy-bound round count).
-    */
-  @volatile private[graft] var lastCorenessRounds: Int = 0
-
   def coreness(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     val spark = edges.sparkSession
@@ -2557,8 +2506,6 @@ object GraphOps {
       frontier = merged.where(col("improved")).select("vertex", "dist")
       frontierRows = frontier.count()
       dist = merged.select("vertex", "dist")
-      if (sys.env.contains("GRAFT_GRAPH_TRACE"))
-        System.err.println(s"GRAFT_SSSP round=$round improved=$frontierRows")
     }
     e.unpersist()
     if (eSplit != null) eSplit.unpersistAll()
@@ -2661,8 +2608,6 @@ object GraphOps {
             coalesce(col("newComp"), col("comp")).as("comp"))
           .repartition(col("vertex")).localCheckpoint()
         live = e2.select("a", "b", "w")
-        if (sys.env.contains("GRAFT_GRAPH_TRACE"))
-          System.err.println(s"GRAFT_MSF round=$round cross=$liveRows")
       }
     }
     ue.unpersist()
@@ -2686,19 +2631,9 @@ object GraphOps {
     import spark.implicits._
     val es = ue.collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1)))
       .sortBy(identity)
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-      var c = x
-      while (parent.getOrDefault(c, c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
-    }
+    val uf = new UnionFind()
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    es.foreach { case (w, a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { parent.put(math.max(ra, rb), math.min(ra, rb)); out += ((a, b, w)) }
-    }
+    es.foreach { case (w, a, b) => if (uf.union(a, b)) out += ((a, b, w)) }
     out.toSeq.toDF("src", "dst", "w")
   }
 

@@ -268,11 +268,6 @@ object Multimodal {
       .where(length(col("payload")) >= 64)
       .select(col("doc_id"), call_function("graft_phash", col("payload")).as("ph"))
 
-  /** Plan-evidence accessor ([[graft.tools.PlanDump]]'s `mm_phash.sigs`
-    * pseudo-query): the un-checkpointed signature pass.
-    */
-  private[graft] def phashSigsForPlan(docs: DataFrame): DataFrame = phashSigs(docs)
-
   /** Gate view of the perceptual hash: one row per (≥64-byte) payload
     * with its 64-bit signature and the count of Hamming-≤3 neighbors
     * — per-doc rather than pairs-only so the gate entry is

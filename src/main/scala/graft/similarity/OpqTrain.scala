@@ -87,17 +87,6 @@ object OpqTrain {
     */
   final case class OpqModel(transform: OpqTransform, codebook: Option[Codebook])
 
-  /** Probe hook (tools/OpqTiming): phase-wall callback, unset in
-    * production.
-    */
-  @volatile private[graft] var phaseTimer: Option[(String, Double) => Unit] = None
-  private def timed[A](tag: String)(f: => A): A = phaseTimer match {
-    case None => f
-    case Some(cb) =>
-      val t0 = System.nanoTime(); val r = f
-      cb(tag, (System.nanoTime() - t0) / 1e9); r
-  }
-
   // ---- exact-decimal helpers (the oracle's arithmetic, verbatim) ----
 
   /** `CAST(ROUND(x, s) AS DECIMAL(·, s))`: both engines recover the
@@ -367,7 +356,7 @@ object OpqTrain {
   /** Joint PQ distortion Σ‖rep − decode(rep)‖² under the rep's OWN
     * trained codebook (`iters` Lloyd rounds; 0 = seed) — the objective
     * Ge's alternation minimizes jointly over rotation and codebook
-    * (probe/spec surface).
+    * (spec surface).
     */
   private[graft] def jointDistortion(ids: Array[Long], rep: Array[Array[Double]],
       iters: Int): Double = {
@@ -557,14 +546,14 @@ object OpqTrain {
     val dim = vecs(0).length
     require(dim % PqSubspaces == 0, s"dim $dim not divisible by $PqSubspaces")
     val idPerm = (0 until dim).toArray
-    val ranked = timed("rank0")(rankedDims(varianceKey(vecs)))
-    val (layersA, rotA) = timed("butterflyA")(
-      trainButterfly(vecs, Ann.opqStridesConc(dim), balance = false))
-    val permA = rrPerm(timed("rankA")(rankedDims(varianceKey(rotA))), dim)
-    val (layersB, _) = timed("butterflyB")(
-      trainButterfly(vecs, Ann.opqStridesBal(dim), balance = true))
-    val layersAltA = timed("altA")(trainAlternating(ids, vecs, layersA, permA))
-    val layersAltB = timed("altB")(trainAlternating(ids, vecs, layersB, idPerm))
+    val ranked = rankedDims(varianceKey(vecs))
+    val (layersA, rotA) =
+      trainButterfly(vecs, Ann.opqStridesConc(dim), balance = false)
+    val permA = rrPerm(rankedDims(varianceKey(rotA)), dim)
+    val (layersB, _) =
+      trainButterfly(vecs, Ann.opqStridesBal(dim), balance = true)
+    val layersAltA = trainAlternating(ids, vecs, layersA, permA)
+    val layersAltB = trainAlternating(ids, vecs, layersB, idPerm)
     Seq(
       (OpqTransform(Nil, idPerm), false),            // 0: plain PQ floor
       (OpqTransform(Nil, idPerm), true),             // 1: trained codebook
@@ -576,16 +565,14 @@ object OpqTrain {
       (OpqTransform(layersAltB, idPerm), true))      // 7: alternation on 5
   }
 
-  /** Per-candidate tournament hit counts (probe/spec surface). */
+  /** Per-candidate tournament hit counts. */
   private[graft] def tournamentHits(ids: Array[Long], vecs: Array[Array[Double]],
       cs: Seq[(OpqTransform, Boolean)]): Seq[Long] = {
-    val truth = timed("truth")(bruteTruth(ids, vecs))
-    cs.zipWithIndex.map { case ((t, lloyd), i) =>
-      timed(s"recall_$i") {
-        val rep = applyTransform(vecs, t)
-        val cb = subspaceLloyd(ids, rep, if (lloyd) LloydIters else 0)
-        recallHits(ids, vecs, rep, cb, truth)
-      }
+    val truth = bruteTruth(ids, vecs)
+    cs.map { case (t, lloyd) =>
+      val rep = applyTransform(vecs, t)
+      val cb = subspaceLloyd(ids, rep, if (lloyd) LloydIters else 0)
+      recallHits(ids, vecs, rep, cb, truth)
     }
   }
 
@@ -593,7 +580,7 @@ object OpqTrain {
     * model (argmax hits, tie → lower index) with its served codebook.
     */
   def train(emb: DataFrame, sampleN: Int = TrainSample): OpqModel = {
-    val (ids, vecs) = timed("sample")(collectSample(emb, sampleN))
+    val (ids, vecs) = collectSample(emb, sampleN)
     val cs = candidates(ids, vecs)
     val hits = tournamentHits(ids, vecs, cs)
     val (t, lloyd) = cs(hits.zipWithIndex.maxBy { case (h, i) => (h, -i) }._2)

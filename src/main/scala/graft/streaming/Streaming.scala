@@ -68,12 +68,11 @@ object Streaming {
     * floored at 4 (the gate's few-thousand-key drains) and capped at
     * the session's core count (more state-store tasks than cores only
     * adds per-microbatch scheduling; the cap beats the floor on
-    * sub-4-core sessions). `spark.graft.stateShards` /
-    * `GRAFT_STATE_SHARDS` still overrides both ways.
+    * sub-4-core sessions). The session conf `spark.graft.stateShards`
+    * overrides both ways.
     */
   private def stateShards(spark: SparkSession, dir: String): Int =
-    spark.conf.getOption("spark.graft.stateShards")
-      .orElse(sys.env.get("GRAFT_STATE_SHARDS")).map(_.toInt)
+    spark.conf.getOption("spark.graft.stateShards").map(_.toInt)
       .getOrElse {
         val s = shardSizing(spark, dir)
         lastShardSizing = Some(s)
@@ -126,29 +125,13 @@ object Streaming {
     else 0L
   }
 
-  /** processAllAvailable + (env-gated) per-query state metrics — rows
-    * and bytes per stateful operator from the last progress, the
-    * numbers that size executor memory / RocksDB disk at scale.
-    */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.processAllAvailable()
-    if (sys.env.contains("GRAFT_STREAM_TRACE")) {
-      val p = q.lastProgress
-      if (p != null) p.stateOperators.foreach { so =>
-        System.err.println(s"GRAFT_STREAM ${q.name} op=${so.operatorName} " +
-          s"stateRows=${so.numRowsTotal} stateBytes=${so.memoryUsedBytes}")
-      }
-    }
-  }
-
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** State-store selection for every streaming op: Spark's default
-    * HDFS-backed in-memory provider, or RocksDB when
-    * `spark.graft.stateStore=rocksdb` (session conf) or
-    * `GRAFT_STATE_STORE=rocksdb` (env) says so — explicit settings
-    * win over the per-op `defaultChoice`. The default store holds all
+    * HDFS-backed in-memory provider, or RocksDB when the session conf
+    * `spark.graft.stateStore=rocksdb` says so — an explicit setting
+    * wins over the per-op `defaultChoice`. The default store holds all
     * state on-heap — right for bounded-state drains; RocksDB spills
     * to local disk with incremental checkpointing and is the
     * production answer once per-shard key spaces outgrow executor
@@ -160,8 +143,7 @@ object Streaming {
     */
   private def withStateStore[A](spark: SparkSession,
       defaultChoice: String = "default")(f: => A): A = {
-    val choice = spark.conf.getOption("spark.graft.stateStore")
-      .orElse(sys.env.get("GRAFT_STATE_STORE")).getOrElse(defaultChoice)
+    val choice = spark.conf.getOption("spark.graft.stateStore").getOrElse(defaultChoice)
     if (choice.equalsIgnoreCase("rocksdb")) {
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(key)
@@ -214,10 +196,10 @@ object Streaming {
     * the sessionize/funnel/latest ops additionally preserve their
     * bulk-drain output contract across mid-stream timeouts (tombstone
     * numbering / kept fold state / last-emission argmax — see each
-    * op). `spark.graft.streamMaxFiles` (session conf, spec hook) or
-    * SPARK_GRAFT_STREAM_MAXFILES (env) overrides; 0 forces the bulk
-    * batch. Gate-scale corpora stage ≤ 16 parts and stay bulk, so the
-    * split path engages exactly where it pays (the ×30/×100 rungs).
+    * op). The session conf `spark.graft.streamMaxFiles` overrides; 0
+    * forces the bulk batch. Gate-scale corpora stage ≤ 16 parts and
+    * stay bulk, so the split path engages exactly where it pays (the
+    * ×30/×100 rungs).
     */
   private def eventStream(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType, inDir: String,
@@ -227,8 +209,7 @@ object Streaming {
       try s.filter(p => p.getFileName.toString.startsWith("batch0")).count()
       finally s.close()
     }
-    val maxFiles = spark.conf.getOption("spark.graft.streamMaxFiles")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_MAXFILES")).map(_.toInt)
+    val maxFiles = spark.conf.getOption("spark.graft.streamMaxFiles").map(_.toInt)
       .getOrElse(
         if (autoSplit && staged > 16) math.max(16, ((staged + 3) / 4).toInt)
         else 0)
@@ -414,7 +395,7 @@ object Streaming {
       stageFile(sentinelPart(spark, schema, ns, i),
         Paths.get(s"$inDir/sentinel$i.parquet"))
     }
-    drain(q)
+    q.processAllAvailable()
   }
 
   /** Drain a bounded APPEND-mode streaming frame through a PARQUET
@@ -469,7 +450,7 @@ object Streaming {
     val name = "graft_stream_window_agg"
     val q = agg.writeStream.format("memory").queryName(name)
       .outputMode("complete").start()
-    try drain(q) finally q.stop()
+    try q.processAllAvailable() finally q.stop()
     spark.table(name).orderBy("window_start", "event_type")
   }
 
@@ -622,7 +603,7 @@ object Streaming {
       .select(col("p_id").as("purchase_id"), col("c_id").as("click_id"),
         col("p_user").as("user_id"), col("p_ts").as("purchase_ts"),
         col("c_ts").as("click_ts"))
-    drainToParquet(spark, joined, "graft-stream-join")(drain)
+    drainToParquet(spark, joined, "graft-stream-join")(_.processAllAvailable())
       .orderBy("purchase_id", "click_id")
   }
 
@@ -651,7 +632,7 @@ object Streaming {
     val name = "graft_stream_dedup"
     val q = src.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    try drain(q) finally q.stop()
+    try q.processAllAvailable() finally q.stop()
     spark.table(name).orderBy("user_id", "event_type")
   }
 
@@ -677,7 +658,7 @@ object Streaming {
       .select(col("user_id"), col("event_type"), col("ts_ev"))
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    drainToParquet(spark, src, "graft-stream-dedupwm")(drain)
+    drainToParquet(spark, src, "graft-stream-dedupwm")(_.processAllAvailable())
       .orderBy("user_id", "event_type")
   }
 
@@ -979,7 +960,7 @@ object Streaming {
     val name = "graft_stream_anomaly"
     val q = flags.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    try drain(q) finally q.stop()
+    try q.processAllAvailable() finally q.stop()
     spark.table(name).orderBy("event_id")
   }
 
@@ -1054,7 +1035,7 @@ object Streaming {
           state.update(st)
           buf.iterator
       }
-    drainToParquet(spark, out.toDF(), "graft-stream-ewma")(drain)
+    drainToParquet(spark, out.toDF(), "graft-stream-ewma")(_.processAllAvailable())
       .orderBy("event_id")
   }
 

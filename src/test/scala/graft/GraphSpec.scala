@@ -485,6 +485,21 @@ class GraphSpec extends SparkSpec {
       pr.view.mapValues(v => math.rint(v * 1e6)).toMap)
   }
 
+  test("pagerank is ppr seeded with every vertex, on both paths") {
+    val e = DerivedGraphs.hashEdges(spark, sfDir, 512).localCheckpoint()
+    val every = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
+      .distinct().collect().map(_.getLong(0)).toSeq
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vertex"), round(col("rank"), 6).as("rank"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+      val pr = ranks(GraphOps.pagerank(e, iters = 4, maxLocalEdges = maxLocal))
+      val pp = ranks(GraphOps.ppr(e, seeds = every, iters = 4, maxLocalEdges = maxLocal))
+      assert(pr.size === every.size, s"maxLocalEdges=$maxLocal")
+      assert(pr === pp, s"maxLocalEdges=$maxLocal")
+    }
+  }
+
   test("betweenness: diamond values exact; local/distributed/sampled paths agree") {
     // diamond 1→{2,3}→4→5 plus an unreachable component 8→9.
     // Exact directed bc: 2 and 3 each carry half of (1,4) and (1,5)
