@@ -22,7 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    re-derived instead of served stale — superseded entries are
   *    bounded (a few per regeneration) and dropped with the session;
   *  - entries are evicted when the owning session's application ends,
-  *    so stopped sessions don't pin frames for the JVM's lifetime.
+  *    so stopped sessions don't pin frames for the JVM's lifetime;
+  *  - the session's scratch root ([[scratchRoot]]), which holds every
+  *    transient file graft writes, is deleted at the same moment.
   */
 object Materialized {
 
@@ -85,15 +87,7 @@ object Materialized {
     val key = (spark, dir, version, name)
     val hit = catalog.get(key)
     if (hit != null) return hit.asInstanceOf[A]
-    if (evictionHooked.add(spark)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          catalog.keySet.removeIf(_._1 eq spark)
-          evictionHooked.remove(spark)
-        }
-      })
-    }
+    hookRelease(spark)
     val t0 = System.nanoTime()
     val built = build
     deriveLog.merge(name, (System.nanoTime() - t0) / 1e9,
@@ -101,6 +95,53 @@ object Materialized {
     val prior = catalog.putIfAbsent(key, built)
     if (prior != null) prior.asInstanceOf[A] else built
   }
+
+  private def hookRelease(spark: SparkSession): Unit =
+    if (evictionHooked.add(spark)) {
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = release(spark)
+      })
+    }
+
+  /** Drop everything `spark` owns — its catalog entries and its
+    * scratch root with every file under it. Runs from the
+    * `onApplicationEnd` hook, so a stopped session pins neither frames
+    * nor disk.
+    */
+  private[graft] def release(spark: SparkSession): Unit = {
+    catalog.keySet.removeIf(_._1 eq spark)
+    Option(scratchRoots.remove(spark)).foreach(deleteTree)
+    evictionHooked.remove(spark)
+  }
+
+  // ---------------------------------------------------------------------
+  // Session scratch: every transient file graft writes (stream staging,
+  // sinks and checkpoints, the time-sorted events parts, graph-store
+  // work dirs, Sources' round-trip outputs) lives under ONE root per
+  // session, with the session's lifetime. Entries that name a path
+  // there (the sorted-events parts) are catalog entries of the same
+  // session, so the catalog can never serve a path whose files are
+  // gone.
+  // ---------------------------------------------------------------------
+
+  private val scratchRoots =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.nio.file.Path]()
+
+  /** The session's scratch root under java.io.tmpdir, made on first use
+    * by `createTempDirectory` (owner-only on POSIX, unpredictable name —
+    * nothing another user planted is ever read) and deleted by
+    * [[release]] when the session's application ends.
+    */
+  private[graft] def scratchRoot(spark: SparkSession): java.nio.file.Path = {
+    hookRelease(spark)
+    scratchRoots.computeIfAbsent(spark,
+      _ => java.nio.file.Files.createTempDirectory("graft-session-"))
+  }
+
+  /** A fresh directory under the session's scratch root. */
+  private[graft] def scratchDir(spark: SparkSession, prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot(spark), prefix).toString
 
   /** Per-entry derive-seconds log (r19, verdict #7): every catalog
     * build records its wall against its entry name, summed across
@@ -295,7 +336,8 @@ object Materialized {
       root.resolve(f"$safe-$version%016x-$codeVersion%016x-${dirDigest(dir)}$ext")
     }
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
+  /** Best-effort recursive delete (children first). */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
     try {
       if (java.nio.file.Files.exists(p)) {
         val s = java.nio.file.Files.walk(p)

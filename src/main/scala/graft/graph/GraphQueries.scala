@@ -1,18 +1,14 @@
 package graft.graph
 
-import graft.Op
+import graft.{Materialized, Op}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Driver-contract entries for the graph database surface (reference
   * ops 1-4 re-expressed + the standard analytics suite). Every oracle
   * mirrors the exact derived-graph definition from DerivedGraphs.
   */
 object GraphQueries {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-graphstore").toString
 
   private def affine(spark: SparkSession, dir: String, m: Long, mult: Long, add: Long): DataFrame = {
     val base = graft.Tables.orders(spark, dir).select((col("o_orderkey") % m).as("v")).distinct()
@@ -22,7 +18,7 @@ object GraphQueries {
 
   /** Reference op 1: create a named graph, read it back. */
   def graphLoad(spark: SparkSession, dir: String): DataFrame = {
-    val work = tmpDir()
+    val work = Materialized.scratchDir(spark, "graphstore")
     GraphStore.save(spark, work, "supply", DerivedGraphs.supplyEdges(spark, dir))
     GraphStore.load(spark, work, "supply").orderBy("src", "dst")
   }
@@ -33,7 +29,7 @@ object GraphQueries {
 
   /** Reference op 2: modify a named graph (upsert merge), read back. */
   def graphModify(spark: SparkSession, dir: String): DataFrame = {
-    val work = tmpDir()
+    val work = Materialized.scratchDir(spark, "graphstore")
     GraphStore.save(spark, work, "hash", affine(spark, dir, 2048, 31, 7))
     GraphStore.upsert(spark, work, "hash", affine(spark, dir, 2048, 17, 3))
     GraphStore.load(spark, work, "hash").orderBy("src", "dst")
@@ -52,7 +48,7 @@ object GraphQueries {
   def graphLoadText(spark: SparkSession, dir: String): DataFrame = {
     val m = 256
     val e = DerivedGraphs.hashEdges(spark, dir, m)
-    val file = s"${tmpDir()}/G.txt"
+    val file = s"${Materialized.scratchDir(spark, "graphstore")}/G.txt"
     GraphStore.toAdjacencyText(
       e.select((col("src") + 1).as("src"), (col("dst") + 1).as("dst")), file, m)
     GraphStore.fromAdjacencyText(spark, file)

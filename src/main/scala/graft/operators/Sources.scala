@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Op, Tables}
+import graft.{Materialized, Op, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,12 +22,13 @@ import org.apache.spark.sql.types._
   */
 object Sources {
 
-  /** Fixed per-op scratch path (overwritten each invocation) — a
-    * fresh createTempDirectory per call would leak a full corpus copy
-    * under /tmp on every bench/gate iteration.
+  /** Fixed per-op path under the session's scratch root, overwritten
+    * each invocation: repeats of an op reuse one corpus copy instead
+    * of writing a fresh one per call, and the root (with every copy) is
+    * deleted when the session ends.
     */
-  private def scratch(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/$name"
+  private[graft] def scratch(spark: SparkSession, name: String): String =
+    Materialized.scratchRoot(spark).resolve(name).toString
 
   val DocSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -51,7 +52,7 @@ object Sources {
 
   /** documents → JSONL sink → JSONL source (explicit schema) → agg. */
   def sourceJsonl(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${scratch("jsonl")}/docs"
+    val out = s"${scratch(spark, "jsonl")}/docs"
     Tables.documents(spark, dir).write.mode("overwrite").json(out)
     summarize(spark.read.schema(DocSchema).json(out))
   }
@@ -87,7 +88,7 @@ object Sources {
       .csv(path)
 
   def sourceCsv(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${scratch("csv")}/docs"
+    val out = s"${scratch(spark, "csv")}/docs"
     writeCsv(Tables.documents(spark, dir), out)
     summarize(readCsv(spark, out))
   }
@@ -102,7 +103,7 @@ object Sources {
     * skips the footer-merge inference pass over every file.
     */
   def sourceOrc(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${scratch("orc")}/docs"
+    val out = s"${scratch(spark, "orc")}/docs"
     Tables.documents(spark, dir).write.mode("overwrite").orc(out)
     summarize(spark.read.schema(DocSchema).orc(out))
   }
@@ -119,7 +120,7 @@ object Sources {
     * the zero-shuffle property) is stable across stats changes.
     */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch("bucketed")
+    val out = scratch(spark, "bucketed")
     spark.sql("DROP TABLE IF EXISTS graft_orders_b")
     spark.sql("DROP TABLE IF EXISTS graft_lineitem_b")
     Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
@@ -161,7 +162,7 @@ object Sources {
   val PartYear = 1997
 
   def partitionedScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${scratch("partitioned")}/orders"
+    val out = s"${scratch(spark, "partitioned")}/orders"
     Tables.orders(spark, dir)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(out)
@@ -231,7 +232,7 @@ object Sources {
     math.max(8, spark.sessionState.conf.numShufflePartitions)
 
   def sortedScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${scratch("sorted")}/lineitem"
+    val out = s"${scratch(spark, "sorted")}/lineitem"
     writeSorted(Tables.lineitem(spark, dir)
       .select("l_returnflag", "l_quantity", "l_extendedprice",
         "l_discount", "l_shipdate"), out, parts = layoutParts(spark))
@@ -282,8 +283,8 @@ object Sources {
   }
 
   def sourceCompact(spark: SparkSession, dir: String): DataFrame = {
-    val frag = s"${scratch("compact")}/fragmented"
-    val out = s"${scratch("compact")}/compacted"
+    val frag = s"${scratch(spark, "compact")}/fragmented"
+    val out = s"${scratch(spark, "compact")}/compacted"
     Tables.documents(spark, dir).repartition(64)
       .write.mode("overwrite").parquet(frag)
     compactDir(spark, frag, out)
@@ -346,7 +347,7 @@ object Sources {
   }
 
   def sourceZorder(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${scratch("zorder")}/lineitem"
+    val out = s"${scratch(spark, "zorder")}/lineitem"
     val li = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_suppkey", "l_returnflag", "l_quantity")
     val (pmin, pspan, smin, sspan) = zorderBounds(li)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Op, Tables}
+import graft.{Materialized, Op, Tables}
 import graft.operators.Events
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,9 +40,6 @@ object Streaming {
     Array(1900000000000000000L, 1901000000000000000L)
   private val SentinelUser = -1L
 
-  private def stagingDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   /** Run `f` with a reduced shuffle-partition count. Streaming state is
     * sharded by the shuffle-partition setting at query start and AQE
     * never coalesces it, so a bounded drain at 32 shards schedules 32
@@ -50,11 +47,11 @@ object Streaming {
     * deployment sizes this to key cardinality / executor count; these
     * gate streams are small.
     */
-  private def withStatePartitions[A](spark: SparkSession, n: Int,
+  private def withStatePartitions[A](spark: SparkSession, dir: String,
       store: String = "default")(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, shardSizing(spark, dir).granted.toString)
     try withStateStore(spark, store)(f) finally spark.conf.set(key, prev)
   }
 
@@ -68,35 +65,13 @@ object Streaming {
     * floored at 4 (the gate's few-thousand-key drains) and capped at
     * the session's core count (more state-store tasks than cores only
     * adds per-microbatch scheduling; the cap beats the floor on
-    * sub-4-core sessions). The session conf `spark.graft.stateShards`
-    * overrides both ways.
-    */
-  private def stateShards(spark: SparkSession, dir: String): Int =
-    spark.conf.getOption("spark.graft.stateShards").map(_.toInt)
-      .getOrElse {
-        val s = shardSizing(spark, dir)
-        lastShardSizing = Some(s)
-        if (s.requested > s.granted) System.err.println(
-          s"GRAFT_SHARDS requested=${s.requested} granted=${s.granted} " +
-            s"cores=${s.cores} bytes=${s.bytes} (parallelism-capped: on a " +
-            "cluster the cap is total executor cores, not 32)")
-        s.granted
-      }
-
-  /** The auto-sizing decision, surfaced: `requested` is what the data
-    * volume wants (ceil(bytes / 2 MB), floored at 4), `granted` is
-    * after the session-parallelism cap. requested > granted means the
-    * corpus has outgrown this session's cores — correct on local[32]
-    * (more state tasks than cores only adds scheduling overhead), and
-    * self-resolving on a real cluster, where defaultParallelism is
-    * total executor cores and the same corpus gets its full request.
-    * StreamingShardSpec pins the policy; the bench reads
-    * [[lastShardSizing]] to report cap binding honestly (BASELINE.md's
-    * sf10 "wants 107, gets 32" paragraph).
+    * sub-4-core sessions). `requested` is what the data volume wants,
+    * `granted` is after the cap: requested > granted means the corpus
+    * has outgrown this session's cores, which self-resolves on a real
+    * cluster, where defaultParallelism is total executor cores.
+    * StreamingShardSpec pins the policy.
     */
   final case class ShardSizing(requested: Int, granted: Int, cores: Int, bytes: Long)
-
-  @volatile var lastShardSizing: Option[ShardSizing] = None
 
   def shardSizing(spark: SparkSession, dir: String): ShardSizing =
     shardPolicy(tableBytes(s"$dir/events.parquet"),
@@ -225,105 +200,72 @@ object Streaming {
     */
   private val SortedMtimeBase = 1000000000000L
 
-  private val sortedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+  /** Part-size cap of the sorted staging parts (see [[sortedEventsParts]]). */
+  private val StagingPartBytes = 32L << 20
 
   /** Once-per-corpus TIME-SORTED staging parts (r19): the events table
-    * range-partitioned by (ts, event_id) into ~2 MB part files whose
-    * name and mtime order is the time order. This is what makes
-    * multi-batch drains exact: with time-ordered files, the watermark
-    * after batch i can never orphan a batch i+1 row (no late drops),
-    * per-event folds (anomaly/ewma) see the oracle's (ts, event_id)
-    * order across batches, and dropDuplicatesWithinWatermark's
-    * horizon is evaluated exactly in event time. One sort job per
-    * (corpus bytes+mtime) per machine, cached under tmpdir and shared
-    * by all 11 streaming ops × bench repeats; per-op staging stays
-    * O(files) hard links. On a real cluster this corresponds to the
-    * source actually being a stream — arrival roughly tracks event
-    * time — so the sorted cache is the harness's stand-in for arrival
+    * range-partitioned by (ts, event_id) into part files whose name and
+    * mtime order is the time order. This is what makes multi-batch
+    * drains exact: with time-ordered files, the watermark after batch i
+    * can never orphan a batch i+1 row (no late drops), per-event folds
+    * (anomaly/ewma) see the oracle's (ts, event_id) order across
+    * batches, and dropDuplicatesWithinWatermark's horizon is evaluated
+    * exactly in event time. One sort job per (session, corpus version):
+    * a catalog entry whose parts live in the session's scratch root,
+    * shared by all 11 streaming ops × bench repeats; per-op staging
+    * stays O(files) hard links. On a real cluster this corresponds to
+    * the source actually being a stream — arrival roughly tracks event
+    * time — so the sorted parts are the harness's stand-in for arrival
     * order, not an extra production cost.
+    *
+    * Part sizing targets a ~16-part COUNT: 2 MB parts until 16 files,
+    * then parts grow toward the [[StagingPartBytes]] cap. The r20
+    * 2/8/32 MB sweep at sf10 read the 128×2MB listing/scheduling
+    * overhead as the bulk drains' cost, but a fixed 32 MB collapses
+    * mid-size corpora to the 4-part floor and starves the drain (sf3
+    * streaming mins +20-35% measured); the count target keeps small
+    * corpora's few files and mid corpora's scan parallelism, and the
+    * cap bounds per-batch bytes at true scale.
     */
-  private def sortedEventsParts(spark: SparkSession, dir: String): java.nio.file.Path = {
-    val srcPath = s"$dir/events.parquet"
-    val p0 = Paths.get(srcPath)
-    val mtime =
-      if (Files.exists(p0)) Files.getLastModifiedTime(p0).toMillis else 0L
-    // part-size CAP, default 32 MB (spark.graft.stagingPartMB; folded
-    // into the cache key so a sweep inside one JVM re-sorts per size).
-    // The r20 2/8/32 MB sweep at sf10 read the 128×2MB listing/
-    // scheduling overhead as the bulk drains' cost (sessionize
-    // 30.98→27.79, ewma 30.97→22.71 at their mins, monotone in part
-    // size) — but a fixed 32 MB collapses mid-size corpora to the
-    // 4-part floor and STARVES the drain (sf3 streaming mins +20-35%
-    // measured). So the sizing below targets a ~16-part COUNT: 2 MB
-    // parts until 16 files, then parts grow toward the cap — small
-    // corpora keep their few files, mid corpora keep enough scan
-    // parallelism, and at true scale the cap bounds per-batch bytes.
-    val partMB = spark.conf.getOption("spark.graft.stagingPartMB")
-      .map(_.toInt).getOrElse(32).max(1)
-    val key = s"$srcPath#${tableBytes(srcPath)}#$mtime#$partMB"
-    sortedCache.computeIfAbsent(key, { _ =>
-      val hash = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(key))
-      val base = Paths.get(sys.props("java.io.tmpdir"), s"graft-events-sorted-$hash")
-      if (Files.isDirectory(base)) base
-      else {
-        val bytes = tableBytes(srcPath)
-        val nParts = math.max(
-          math.min(16, math.max(4, math.ceil(bytes / (2 << 20).toDouble).toInt)),
-          math.ceil(bytes / (partMB.toLong << 20).toDouble).toInt)
-        val tmp = Files.createTempDirectory("graft-events-sorted-build")
-        // range keys at SECOND granularity (the ops' event-time column)
-        // + event_id: batch boundaries then respect exactly the
-        // (ts_sec, event_id) order the per-event folds and the oracle
-        // use — a sub-second tie can never straddle a boundary with
-        // its event_id order inverted
-        val ev = Tables.events(spark, dir)
-        ev.repartitionByRange(nParts,
-            graft.operators.Events.tsSecOf(ev.schema("ts").dataType),
-            col("event_id"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        val listing = Files.list(tmp)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.toString.endsWith(".parquet")).toSeq
-            .sortBy(_.getFileName.toString)
-          finally listing.close()
-        require(parts.nonEmpty, s"sortedEventsParts: empty sort output for $srcPath")
-        parts.zipWithIndex.foreach { case (p, i) =>
-          Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(SortedMtimeBase + i))
-        }
-        try Files.move(tmp, base, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case e: java.io.IOException =>
-            // lost a cross-JVM race: the winner's tree serves. Drop OUR
-            // tmp tree recursively — Spark also writes _SUCCESS/.crc
-            // siblings, so deleting only *.parquet left the dir
-            // non-empty and the cleanup meant to make the race benign
-            // threw DirectoryNotEmptyException. And if base still isn't
-            // there, the move failed for a non-race reason — rethrow
-            // the original instead of returning a path that later fails
-            // with a confusing 'no sorted parts'.
-            val walk = Files.walk(tmp)
-            try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(p => try Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
-            finally walk.close()
-            if (!Files.isDirectory(base)) throw e
-        }
-        base
+  private def sortedEventsParts(spark: SparkSession, dir: String): java.nio.file.Path =
+    Materialized.of(spark, dir, "stream_events_sorted") {
+      val bytes = tableBytes(s"$dir/events.parquet")
+      val nParts = math.max(
+        math.min(16, math.max(4, math.ceil(bytes / (2 << 20).toDouble).toInt)),
+        math.ceil(bytes / StagingPartBytes.toDouble).toInt)
+      val out = Paths.get(Materialized.scratchDir(spark, "events-sorted"))
+      // range keys at SECOND granularity (the ops' event-time column)
+      // + event_id: batch boundaries then respect exactly the
+      // (ts_sec, event_id) order the per-event folds and the oracle
+      // use — a sub-second tie can never straddle a boundary with
+      // its event_id order inverted
+      val ev = Tables.events(spark, dir)
+      ev.repartitionByRange(nParts,
+          graft.operators.Events.tsSecOf(ev.schema("ts").dataType),
+          col("event_id"))
+        .write.mode("overwrite").parquet(out.toString)
+      val parts = parquetParts(out)
+      require(parts.nonEmpty, s"sortedEventsParts: empty sort output for $dir/events.parquet")
+      parts.zipWithIndex.foreach { case (p, i) =>
+        Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(SortedMtimeBase + i))
       }
-    })
+      out
+    }
+
+  /** The `*.parquet` files directly under `dir`, in name order. */
+  private def parquetParts(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+      .sortBy(_.getFileName.toString)
+    finally listing.close()
   }
 
   private def stageEvents(spark: SparkSession, dir: String, prefix: String): String = {
-    val inDir = stagingDir(prefix)
+    val inDir = Materialized.scratchDir(spark, prefix)
     val sorted = sortedEventsParts(spark, dir)
-    val listing = Files.list(sorted)
-    val parts =
-      try listing.iterator().asScala
-        .filter(_.toString.endsWith(".parquet")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally listing.close()
+    val parts = parquetParts(sorted)
     require(parts.nonEmpty, s"stageEvents: no sorted parts under $sorted")
     // keep the zero-padded part names: path order (the mtime
     // tie-break) stays the time order, and links share the sorted
@@ -333,21 +275,19 @@ object Streaming {
     inDir
   }
 
-  /** One-row sentinel part files, cached per (events schema, sentinel
-    * index) for the JVM's lifetime: the sentinel row is a pure
-    * function of those two, so every streaming op and every bench
-    * repeat hard-links the same written-once parquet instead of
-    * running a fresh one-row Spark write job — two saved jobs per op
-    * per run, a measurable slice of the per-op drain floor.
+  /** One-row sentinel part files, one catalog entry per (session,
+    * corpus version, sentinel index): the sentinel row is a function of
+    * the events schema, which the session reads from the corpus, so
+    * every streaming op and every bench repeat hard-links the same
+    * written-once parquet instead of running a fresh one-row Spark
+    * write job — two saved jobs per op per run, a measurable slice of
+    * the per-op drain floor.
     */
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def sentinelPart(spark: SparkSession,
+  private def sentinelPart(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
       ns: Long, i: Int): java.nio.file.Path =
-    sentinelCache.computeIfAbsent(s"${schema.json}#$i", { _ =>
-      val scratch = stagingDir(s"graft-sentinel$i")
+    Materialized.of(spark, dir, s"stream_sentinel$i") {
+      val scratch = Materialized.scratchDir(spark, s"sentinel$i")
       // Sentinel values keyed by field name, ordered by the actual source
       // schema: a column reorder/addition in the events parquet fails
       // loudly here instead of silently misaligning fields.
@@ -369,10 +309,8 @@ object Streaming {
         byName.getOrElse(f, sys.error(s"driveSentinels: unknown events column '$f'"))): _*)
       spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](row), schema)
         .coalesce(1).write.mode("overwrite").parquet(scratch)
-      val scratchListing = Files.list(Paths.get(scratch))
-      try scratchListing.filter(_.toString.endsWith(".parquet")).findFirst.get
-      finally scratchListing.close()
-    })
+      parquetParts(Paths.get(scratch)).head
+    }
 
   /** Stage BOTH sentinel part-files, then drain once: the file source
     * folds them into a single microbatch whose max event time is the
@@ -387,12 +325,12 @@ object Streaming {
     * flat.
     */
   private def driveSentinels(
-      spark: SparkSession,
+      spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
       inDir: String,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     SentinelNs.zipWithIndex.foreach { case (ns, i) =>
-      stageFile(sentinelPart(spark, schema, ns, i),
+      stageFile(sentinelPart(spark, dir, schema, ns, i),
         Paths.get(s"$inDir/sentinel$i.parquet"))
     }
     q.processAllAvailable()
@@ -423,8 +361,8 @@ object Streaming {
     */
   private def drainToParquet(spark: SparkSession, frame: DataFrame,
       prefix: String)(drive: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    val outDir = stagingDir(s"$prefix-out")
-    val chk = stagingDir(s"$prefix-chk")
+    val outDir = Materialized.scratchDir(spark, s"$prefix-out")
+    val chk = Materialized.scratchDir(spark, s"$prefix-chk")
     val q = frame.writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", chk)
@@ -437,7 +375,7 @@ object Streaming {
     * result as the batch `q_events_window`, minus the distinct-user
     * count (DISTINCT aggregates are unsupported in streaming aggs).
     */
-  def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-win")
     val src = eventStream(spark, schema, inDir)
@@ -467,7 +405,7 @@ object Streaming {
     * integer cents so state-order summation matches the decimal
     * oracle bit-for-bit.
     */
-  def streamSessionize(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamSessionize(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     import spark.implicits._
     val gap = Events.GapSec
     val schema = Tables.events(spark, dir).schema
@@ -529,7 +467,7 @@ object Streaming {
 
     drainToParquet(spark, sessions.toDF(), "graft-stream-sess") { q =>
       q.processAllAvailable()
-      driveSentinels(spark, schema, inDir, q)
+      driveSentinels(spark, dir, schema, inDir, q)
     }
       .where(col("user_id") =!= SentinelUser)
       .orderBy("user_id", "session_id")
@@ -543,7 +481,7 @@ object Streaming {
     * watermark operator so they advance event time without
     * contributing to any real window.
     */
-  def streamWindowAppend(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamWindowAppend(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-append")
     val agg = eventStream(spark, schema, inDir)
@@ -565,7 +503,7 @@ object Streaming {
       .outputMode("append").start()
     try {
       q.processAllAvailable()
-      driveSentinels(spark, schema, inDir, q)
+      driveSentinels(spark, dir, schema, inDir, q)
     } finally q.stop()
     spark.table(name)
       .where(col("event_type") =!= "sentinel")
@@ -584,7 +522,7 @@ object Streaming {
     * drain needs no sentinel flush.
     */
   def streamJoinRecent(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark, stateShards(spark, dir), store = "rocksdb") {
+    withStatePartitions(spark, dir, store = "rocksdb") {
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-join")
     def side(tpe: String, prefix: String) =
@@ -623,7 +561,7 @@ object Streaming {
     * unbounded-key production stream would use
     * `dropDuplicatesWithinWatermark` to cap state.
     */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-dedup")
     val src = eventStream(spark, schema, inDir)
@@ -648,7 +586,7 @@ object Streaming {
     * exactly like the global DISTINCT oracle.
     */
   def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame =
-    withStatePartitions(spark, stateShards(spark, dir), store = "rocksdb") {
+    withStatePartitions(spark, dir, store = "rocksdb") {
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-dedupwm")
     val src = eventStream(spark, schema, inDir)
@@ -678,7 +616,7 @@ object Streaming {
     * aggregation beyond sessionization: the state is a conditional
     * fold, not a gap partition.
     */
-  def streamFunnel(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamFunnel(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     import spark.implicits._
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-funnel")
@@ -730,7 +668,7 @@ object Streaming {
       .outputMode("append").start()
     try {
       q.processAllAvailable()
-      driveSentinels(spark, schema, inDir, q)
+      driveSentinels(spark, dir, schema, inDir, q)
     } finally q.stop()
     // per-user max first: under a multi-batch drain a user may emit
     // one snapshot per quiet period; the flags are monotone, so max =
@@ -767,7 +705,7 @@ object Streaming {
     * "last write wins". The value rides through untouched (no
     * arithmetic), so it is bit-identical to the batch argmax oracle.
     */
-  def streamLatestState(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamLatestState(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     import spark.implicits._
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-latest")
@@ -802,7 +740,7 @@ object Streaming {
       }
     val finalized = drainToParquet(spark, latest.toDF(), "graft-stream-latest") { q =>
       q.processAllAvailable()
-      driveSentinels(spark, schema, inDir, q)
+      driveSentinels(spark, dir, schema, inDir, q)
     }
     // last emission per user wins: under a multi-batch drain a key can
     // emit once per quiet period, and each later period's argmax is
@@ -842,7 +780,7 @@ object Streaming {
     * the decimal snap so ties (and the tie-break by user_id) are
     * engine-exact.
     */
-  def streamTopk(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamTopk(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-topk")
     // autoSplit: the per-(window, user) agg is the one stateful shape
@@ -862,7 +800,7 @@ object Streaming {
         col("user_id"), col("n_events"), col("total_value"))
     val finalized = drainToParquet(spark, agg, "graft-stream-topk") { q =>
       q.processAllAvailable()
-      driveSentinels(spark, schema, inDir, q)
+      driveSentinels(spark, dir, schema, inDir, q)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("window_start")
@@ -911,7 +849,7 @@ object Streaming {
     * corpus (and the production caveat: out-of-order arrival scores
     * against the state as-of arrival — the online contract).
     */
-  def streamAnomaly(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamAnomaly(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     import spark.implicits._
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-anom")
@@ -1004,7 +942,7 @@ object Streaming {
     * bytes, no window, no rescan — the canonical online-smoothing
     * shape.
     */
-  def streamEwma(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, stateShards(spark, dir)) {
+  def streamEwma(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, dir) {
     import spark.implicits._
     val schema = Tables.events(spark, dir).schema
     val inDir = stageEvents(spark, dir, "graft-stream-ewma")

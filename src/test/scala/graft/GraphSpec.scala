@@ -18,7 +18,7 @@ class GraphSpec extends SparkSpec {
   test("fromAdjacencyText parses the reference G*.txt format 1-based") {
     // Reference format (utilities.h + G1..G6.txt): first line n, then
     // n rows of n 0/1 cells; vertex ids are 1-based (client.c).
-    val f = Files.createTempFile("graft-g1", ".txt")
+    val f = tempDir("graft-g1").resolve("G1.txt")
     Files.writeString(f,
       """4
         |0 1 0 0
@@ -424,7 +424,7 @@ class GraphSpec extends SparkSpec {
     // Reference contract (primary_server.c:62-107): writers are
     // sequenced (writers-preference); re-expressed as snapshot-replace
     // where each upsert merges the LATEST committed snapshot.
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = tempDir("graft-store").toString
     GraphStore.save(spark, dir, "g", edgeDf((1L, 2L)))
     GraphStore.upsert(spark, dir, "g", edgeDf((3L, 4L)))
     // a reader between the two commits sees the full first merge
@@ -441,7 +441,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("GraphStore: concurrent upserts on one graph lose no edges and leave no staging dir") {
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = tempDir("graft-store").toString
     GraphStore.save(spark, dir, "g", edgeDf((1L, 2L)))
     val rounds = 4
     val increments = Seq(100L, 200L).map(base => (0 until rounds).map(i => (base + i, 1L)))

@@ -11,26 +11,11 @@ import java.nio.file.attribute.FileTime
   */
 class MaterializedSpec extends SparkSpec {
 
-  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
-
   private def corpus(): (Path, Path) = {
-    val dir = Files.createTempDirectory("mat_spec")
-    tempDirs += dir
+    val dir = tempDir("mat_spec")
     val table = Files.createDirectory(dir.resolve("t.parquet"))
     val part = Files.write(table.resolve("part-00000"), Array.fill[Byte](64)(1))
     (dir, part)
-  }
-
-  override def afterAll(): Unit = {
-    // Deepest-first delete so dirs empty before removal; bench/gate
-    // iterations must not accumulate mat_spec* trees under /tmp.
-    tempDirs.foreach { d =>
-      val s = Files.walk(d)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
-    super.afterAll()
   }
 
   test("hits are served without rebuilding; evict forces a re-derive") {

@@ -224,44 +224,36 @@ class RelationalSpec extends SparkSpec {
     */
   test("q_percentiles hard-bounds driver collects on an adversarial single-bucket distribution") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pct_adv").toString
-    try {
-      val vals = (0 until 10000).map(i => 1.0 + i * 1e-7) :+ 1000.0
-      vals.map(("A", _)).toDF("l_returnflag", "l_extendedprice")
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      val tapped = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
-      operators.Relational.percentileAudit.set(tapped)
-      val out =
-        try operators.Relational.qPercentiles(spark, dir).collect()
-        finally operators.Relational.percentileAudit.remove()
-      // every slice-shaped collect (carries a cum column) is cap-bounded
-      val sliceTaps = tapped.filter(_.columns.contains("cum"))
-      assert(sliceTaps.nonEmpty)
-      sliceTaps.foreach(df => assert(df.count() <= operators.Relational.SliceCap))
-      // and a refinement level actually ran
-      assert(tapped.exists(_.columns.contains("sb")), "hot bucket must re-histogram, not collect")
-      // exact quantile_cont reference (the operator's own arithmetic)
-      val sorted = vals.sorted
-      def q(p: Double): Double = {
-        val idx = p * (sorted.length - 1)
-        val lo = math.floor(idx).toInt
-        val frac = idx - lo
-        val v =
-          if (lo + 1 < sorted.length) sorted(lo) + frac * (sorted(lo + 1) - sorted(lo))
-          else sorted(lo)
-        BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-      assert(out.length === 1)
-      val r = out.head
-      assert((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)) ===
-        ((q(0.25), q(0.5), q(0.9), q(0.99))))
-    } finally {
-      val p = java.nio.file.Paths.get(dir)
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally s.close()
+    val dir = tempDir("pct_adv").toString
+    val vals = (0 until 10000).map(i => 1.0 + i * 1e-7) :+ 1000.0
+    vals.map(("A", _)).toDF("l_returnflag", "l_extendedprice")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val tapped = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+    operators.Relational.percentileAudit.set(tapped)
+    val out =
+      try operators.Relational.qPercentiles(spark, dir).collect()
+      finally operators.Relational.percentileAudit.remove()
+    // every slice-shaped collect (carries a cum column) is cap-bounded
+    val sliceTaps = tapped.filter(_.columns.contains("cum"))
+    assert(sliceTaps.nonEmpty)
+    sliceTaps.foreach(df => assert(df.count() <= operators.Relational.SliceCap))
+    // and a refinement level actually ran
+    assert(tapped.exists(_.columns.contains("sb")), "hot bucket must re-histogram, not collect")
+    // exact quantile_cont reference (the operator's own arithmetic)
+    val sorted = vals.sorted
+    def q(p: Double): Double = {
+      val idx = p * (sorted.length - 1)
+      val lo = math.floor(idx).toInt
+      val frac = idx - lo
+      val v =
+        if (lo + 1 < sorted.length) sorted(lo) + frac * (sorted(lo + 1) - sorted(lo))
+        else sorted(lo)
+      BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
+    assert(out.length === 1)
+    val r = out.head
+    assert((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)) ===
+      ((q(0.25), q(0.5), q(0.9), q(0.99))))
   }
 
   test("q_abtest: Welch statistics agree with Spark's built-in moment aggregates") {
@@ -495,7 +487,7 @@ class RelationalSpec extends SparkSpec {
     // their shared bucket) next to a 3-customer nation, so the
     // bucketed path sees both a populated histogram and a degenerate
     // one in the same run
-    val dir = java.nio.file.Files.createTempDirectory("gini_skew").toString
+    val dir = tempDir("gini_skew").toString
     import spark.implicits._
     ((1 to 500).map(i => (i.toLong, 0L)) ++ Seq((501L, 1L), (502L, 1L), (503L, 1L)))
       .toDF("c_custkey", "c_nationkey")

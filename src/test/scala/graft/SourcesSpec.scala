@@ -40,7 +40,7 @@ class SourcesSpec extends SparkSpec {
       (6L, "trailing space ", "fr", "web", 15L),
       (7L, "comma,sep;and\ttab", "fr", "book", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/csv-spec"
+    val out = tempDir("csv-spec").toString
     Sources.writeCsv(nasty, out)
     val back = Sources.readCsv(spark, out)
       .orderBy("doc_id").collect()
@@ -104,7 +104,7 @@ class SourcesSpec extends SparkSpec {
       .select("l_returnflag", "l_quantity", "l_extendedprice", "l_discount", "l_shipdate")
     val day = li.withColumn("l_shipday", to_date(col("l_shipdate"))).drop("l_shipdate")
     val total = li.count()
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/sorted-spec"
+    val base = tempDir("sorted-spec").toString
     day.repartitionByRange(4, col("l_shipday")).sortWithinPartitions("l_shipday")
       .write.mode("overwrite").parquet(s"$base/sorted")
     // same rows, order destroyed: every file's min/max spans the full
@@ -168,7 +168,7 @@ class SourcesSpec extends SparkSpec {
       .select("l_partkey", "l_suppkey", "l_returnflag", "l_quantity")
     val total = li.count()
     val (pmin, pspan, smin, sspan) = Sources.zorderBounds(li)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/zorder-spec"
+    val base = tempDir("zorder-spec").toString
     // 16 files: range-partitioner boundaries are row quantiles, not
     // value-space eighths, so finer files keep the straddle slop small
     Sources.writeZorder(li, s"$base/zorder", 16, pmin, pspan, smin, sspan)
@@ -208,7 +208,7 @@ class SourcesSpec extends SparkSpec {
       try s.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
       finally s.close()
     }
-    val scratch = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/compact"
+    val scratch = Sources.scratch(spark, "compact")
     val before = parquetFiles(s"$scratch/fragmented")
     val after = parquetFiles(s"$scratch/compacted")
     assert(before === 64)

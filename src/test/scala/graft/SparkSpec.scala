@@ -26,4 +26,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  private var tempRoot: Option[java.nio.file.Path] = None
+
+  /** A fresh directory under this suite's temp root; the root, with
+    * everything under it, is deleted in afterAll.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory("graft-spec-")
+      tempRoot = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try synchronized(tempRoot).foreach(Materialized.deleteTree)
+    finally super.afterAll()
 }

@@ -142,7 +142,7 @@ class TextSpec extends SparkSpec {
   /** Writes `docs` as a documents table in a temp sf dir and runs `f`. */
   private def withFakeTable(docs: org.apache.spark.sql.DataFrame)(
       f: String => org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    val dir = tempDir("graft-docs").toString
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     f(dir).collect()
   }
