@@ -11,21 +11,11 @@ import org.apache.spark.storage.StorageLevel
   * distributed edge list `(src BIGINT, dst BIGINT)` — the only
   * representation that survives 100 TB (an n×n matrix is O(n²)).
   *
-  * Traversals are level-synchronous: the reference's thread-per-vertex
-  * BFS with a pthread_join barrier per level (dfs_bfs.h:111-172)
-  * becomes one Spark job per level, the job boundary as the barrier
-  * ([[Supersteps]]: RDD supersteps, no per-level query planning).
-  * Scale notes:
-  *  - the frontier is broadcast while small (the common case), so a
-  *    level shuffles only its candidates, never the edges;
-  *  - a larger frontier exchanges the edges by source once, and later
-  *    levels expand co-partitioned with the frontier;
-  *  - each level's frontier is lineage-cut as its job materializes it;
-  *  - `visited` stays distributed; only frontiers under the broadcast
-  *    bound are collected to the driver;
-  *  - the per-partition edge blocks and visited sets are heap objects
-  *    that do not spill: a task must hold its partition's share of the
-  *    reachable (tag, vertex) pairs (see [[Supersteps]]).
+  * Traversals and push algorithms are level-synchronous: the
+  * reference's thread-per-vertex BFS with a pthread_join barrier per
+  * level (dfs_bfs.h:111-172) becomes one Spark job per level, the job
+  * boundary as the barrier ([[Supersteps]]: RDD supersteps, no
+  * per-level query planning; its header has the scale geometry).
   */
 object GraphOps {
 
@@ -45,7 +35,7 @@ object GraphOps {
   private[graft] val cacheAudit =
     new ThreadLocal[scala.collection.mutable.Buffer[String]]
 
-  private def audit(ev: String): Unit = {
+  private[graph] def audit(ev: String): Unit = {
     val b = cacheAudit.get()
     if (b != null) b += ev
   }
@@ -650,25 +640,27 @@ object GraphOps {
     verts.map(v => (v, uf.find(v))).toSeq.toDF("vertex", "component")
   }
 
-  /** Hub floor for the push-loop two-frame split: a source only counts
-    * as a hub when its out-edge list both exceeds an ideal partition's
-    * share (edges / shuffle partitions) AND this absolute floor —
-    * below it the "straggler" fits any executor and the split's extra
-    * frames would cost more than they save.
+  /** Hub floor for the two-frame split: a source only counts as a hub
+    * when its out-edge list both exceeds an ideal partition's share
+    * (edges / shuffle partitions) AND this absolute floor — below it
+    * the "straggler" fits any executor and the split's extra frames
+    * would cost more than they save.
     */
   val HubMinOutDegree: Long = 1L << 16
 
-  /** Two-frame hub split of a src-partitioned push-loop edge cache
-    * (the r12-documented answer to power-law hub skew — salting the
-    * shared frame is NOT it, because the per-iteration join requires
-    * ClusteredDistribution(src) and a (src, salt) partitioning would
-    * re-exchange the full edge set every round):
+  /** Two-frame hub split of a src-partitioned edge cache for the sssp
+    * relaxation loop and the Brandes sweeps (the BFS and push
+    * supersteps split their RDD layouts in [[Supersteps.bySource]]).
+    * It is the r12-documented answer to power-law hub skew — salting
+    * the shared frame is NOT it, because the per-iteration join
+    * requires ClusteredDistribution(src) and a (src, salt)
+    * partitioning would re-exchange the full edge set every round:
     *  - `tail` keeps HashPartitioning(src) (the broadcast anti-join
     *    preserves the cached partitioning, so the loop's exchange-free
     *    edge side survives), with every hub source's edges REMOVED —
     *    its max partition is bounded by the tail degree distribution;
     *  - `hub` holds the hub sources' edges spread round-robin across
-    *    all partitions (no per-src clustering to preserve — hub ranks
+    *    all partitions (no per-src clustering to preserve — hub values
     *    ride in by broadcast, so any layout joins without a shuffle);
     *  - `hubDeg` is the (src, od) hub catalog — by construction at
     *    most edges/threshold rows (auto threshold ⇒ ≤ #partitions),
@@ -677,8 +669,8 @@ object GraphOps {
     * on every shipped graph that yields zero hubs and the layout (and
     * plan) is bit-identical to the pre-split code.
     */
-  private[graft] final case class HubSplit(tail: DataFrame, tailDeg: DataFrame,
-      hub: Option[DataFrame], hubDeg: Option[DataFrame], threshold: Long) {
+  private[graft] final case class HubSplit(tail: DataFrame, hub: Option[DataFrame],
+      hubDeg: Option[DataFrame]) {
     def unpersistAll(): Unit = { tail.unpersist(); hub.foreach(_.unpersist()) }
   }
 
@@ -712,7 +704,7 @@ object GraphOps {
       releaseOnError.foreach(_.unpersist())
       throw tooManyHubs(nHubs, key, threshold)
     }
-    if (nHubs == 0) HubSplit(e, deg, None, None, threshold)
+    if (nHubs == 0) HubSplit(e, None, None)
     else {
       val hubKeys = broadcast(hubDeg.select(key))
       val tail = e.join(hubKeys, Seq(key), "left_anti").persist(tailLevel)
@@ -720,31 +712,7 @@ object GraphOps {
         .repartition(parts).persist(tailLevel)
       tail.count(); hub.count()
       e.unpersist()
-      HubSplit(tail, deg.join(hubKeys, Seq(key), "left_anti"),
-        Some(hub), Some(hubDeg), threshold)
-    }
-  }
-
-  /** One push-loop iteration's (dst, rank/outdeg) contributions over a
-    * [[HubSplit]] layout: the tail side is the classic exchange-free
-    * join (only `ranks` shuffles to src); the hub side joins the
-    * round-robin hub frame against the BROADCAST hub-rank slice, so a
-    * hub's edges are processed by every partition in parallel instead
-    * of one straggler task.
-    */
-  private def pushContribs(hs: HubSplit, ranks: DataFrame): DataFrame = {
-    val tailC = hs.tail.join(hs.tailDeg, "src")
-      .join(ranks.withColumnRenamed("v", "src"), "src")
-      .select(col("dst").as("v"), (col("r") / col("od")).as("c"))
-    hs.hub match {
-      case None => tailC
-      case Some(h) =>
-        val hubRanks = ranks
-          .join(broadcast(hs.hubDeg.get.withColumnRenamed("src", "v")), "v")
-          .select(col("v").as("src"), col("r"), col("od"))
-        tailC.unionAll(
-          h.join(broadcast(hubRanks), "src")
-            .select(col("dst").as("v"), (col("r") / col("od")).as("c")))
+      HubSplit(tail, Some(hub), Some(hubDeg))
     }
   }
 
@@ -760,11 +728,10 @@ object GraphOps {
     * the reset mass (1−d) returns to the seeds instead of spreading
     * uniformly, so rank measures proximity *to the seeds* — the
     * "find more like these" primitive under seed-expansion sampling
-    * of a web/citation graph. Same fixed-iteration push loop as
-    * [[pagerank]] (one join + one aggregation per round, shuffled on
-    * the vertex id; dangling mass dropped by the same convention on
-    * both engines); the seed set rides along as a broadcast literal
-    * — it is user-input-sized, not graph-sized.
+    * of a web/citation graph. Same fixed-iteration push rounds as
+    * [[pagerank]], dangling mass dropped by the same convention; a
+    * repeated seed counts once, and a seed outside the graph keeps its
+    * share of the reset mass out of it.
     */
   def ppr(edges: DataFrame, seeds: Seq[Long], iters: Int, d: Double = 0.85,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
@@ -772,108 +739,33 @@ object GraphOps {
     rankPush(edges, Some(seeds), iters, d, maxLocalEdges, hubOutDegree)
   }
 
-  /** The push loop behind [[pagerank]] (`seeds` None: uniform reset,
-    * base (1−d)/N, start 1/N) and [[ppr]] (reset share s = 1/|seeds|
-    * on each seed, base (1−d)·s, start s): each round
-    * r ← base + d·Σ(in-neighbor r / outdeg).
+  /** The push program behind [[pagerank]] (`seeds` None: uniform reset,
+    * base (1−d)/N, start 1/N) and [[ppr]] (reset share s = 1/|distinct
+    * seeds| on each seed, base (1−d)·s, start s): each round
+    * r ← base + d·Σ(in-neighbor r / outdeg), one [[Supersteps.push]]
+    * round each.
     */
   private def rankPush(edges: DataFrame, seeds: Option[Seq[Long]], iters: Int,
       d: Double, maxLocalEdges: Long, hubOutDegree: Long): DataFrame = {
-    // repartition(src) BEFORE distinct: HashPartitioning(src) satisfies
-    // the dedup aggregation's ClusteredDistribution(src, dst), so the
-    // cached frame is born hash-partitioned by src for ONE exchange —
-    // and every iteration's edge⋈outdeg⋈ranks join then plans
-    // exchange-free on the edge side (only the vertex-sized rank frame
-    // shuffles per round). Without it the loop re-exchanges the full
-    // edge set each iteration — O(iters × edges) network, the same
-    // scale-killer the BFS frontier loop fixed in r11.
-    //
-    // Hub skew: HashPartitioning(src) places EVERY out-edge of a
-    // vertex in one partition, and once the frame is persisted AQE can
-    // no longer split it, so on a power-law graph a 100M-out-degree
-    // hub makes one straggler task per iteration. Salting the source
-    // key is NOT an answer: the per-iteration join requires
-    // ClusteredDistribution(src), which a (src, salt) partitioning
-    // does not satisfy — a salted frame would re-exchange the full
-    // edge set every iteration, re-creating the exact O(iters × edges)
-    // cost this layout exists to avoid. The answer is [[hubSplit]]'s
-    // two-frame layout (r13): sources whose out-degree exceeds an
-    // ideal partition's share move to a RoundRobin-spread frame joined
-    // via broadcast hub ranks, the long tail keeps this layout — max
-    // cached partition bounded, per-iteration plan otherwise
-    // unchanged, and on hub-free graphs (every shipped one) the split
-    // is a no-op with the identical pre-r13 plan.
-    val e = canonEdges(edges).repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localRankPush(edges.sparkSession, e, seeds, iters, d)
-      e.unpersist()
-      return out
-    }
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    // (frame each round joins into, its base term, the start ranks):
-    // uniform PageRank needs only the vertex set; PPR carries the
-    // per-vertex reset share `s` in a checkpointed reset frame
-    val (frame, base, start) = seeds match {
-      case None =>
-        val n = verts.count()
-        (verts, lit((1.0 - d) / n), verts.withColumn("r", lit(1.0 / n)))
-      case Some(ss) =>
-        val reset = verts.withColumn("s",
-          when(col("v").isInCollection(ss), lit(1.0 / ss.size)).otherwise(lit(0.0)))
-          .localCheckpoint()
-        (reset, lit(1.0 - d) * col("s"), reset.select(col("v"), col("s").as("r")))
-    }
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hubSplit(e, eCount, outdeg, hubOutDegree)
-    var ranks = start
-    for (_ <- 1 to iters) {
-      val contribs = pushContribs(hs, ranks)
-      ranks = frame.join(contribs.groupBy("v").agg(sum("c").as("in")), Seq("v"), "left")
-        .select(col("v"), (base + lit(d) * coalesce(col("in"), lit(0.0))).as("r"))
-        .localCheckpoint()
-    }
-    hs.unpersistAll(); outdeg.unpersist()
-    ranks.select(col("v").as("vertex"), col("r").as("rank"))
-  }
-
-  /** Driver-side twin of [[rankPush]] for sub-threshold graphs, same
-    * base and start terms. Contribution sums accumulate in a different
-    * order than the distributed aggregation, but callers round ranks
-    * (6 dp) ~10 orders of magnitude above double-summation reorder
-    * noise.
-    */
-  private def localRankPush(spark: SparkSession, e: DataFrame,
-      seeds: Option[Seq[Long]], iters: Int, d: Double): DataFrame = {
-    import spark.implicits._
-    val es = collectPairs(e)
-    val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val (base, start): (Long => Double, Long => Double) = seeds match {
-      case None =>
-        val n = verts.length
-        (_ => (1.0 - d) / n, _ => 1.0 / n)
-      case Some(ss) =>
-        val seedSet = ss.toSet
-        val reset = (v: Long) => if (seedSet(v)) 1.0 / ss.size else 0.0
-        (v => (1.0 - d) * reset(v), reset)
-    }
-    val outdeg = new java.util.HashMap[Long, Long]()
-    es.foreach { case (s, _) => outdeg.merge(s, 1L, _ + _) }
-    var rank = new java.util.HashMap[Long, Double]()
-    verts.foreach(v => rank.put(v, start(v)))
-    for (_ <- 1 to iters) {
-      val acc = new java.util.HashMap[Long, Double]()
-      es.foreach { case (s, t) =>
-        acc.merge(t, rank.get(s) / outdeg.get(s), _ + _)
+    Supersteps.push(canonEdges(edges), maxLocalEdges, "rank", reverse = false, hubOutDegree) { g =>
+      val (base, start): (Long => Double, Long => Double) = seeds match {
+        case None =>
+          val (b, s) = ((1.0 - d) / g.vertices, 1.0 / g.vertices)
+          (_ => b, _ => s)
+        case Some(ss) =>
+          val seedSet = ss.distinct.sorted.toArray
+          val share = 1.0 / seedSet.length
+          val reset = (v: Long) => if (java.util.Arrays.binarySearch(seedSet, v) >= 0) share else 0.0
+          (v => (1.0 - d) * reset(v), reset)
       }
-      val next = new java.util.HashMap[Long, Double]()
-      verts.foreach(v => next.put(v, base(v) + d * acc.getOrDefault(v, 0.0)))
-      rank = next
+      val step = new Supersteps.Push {
+        def send(x: Double, deg: Int): Double = x / deg
+        def update(v: Long, in: Double): Double = base(v) + d * in
+      }
+      var r = g.start(start)
+      for (_ <- 1 to iters) r = g.round(step, forward = true, r)
+      g.result(("rank", r, 1.0))
     }
-    verts.map(v => (v, rank.get(v))).toSeq.toDF("vertex", "rank")
   }
 
   /** k-core decomposition membership: iteratively strip vertices of
@@ -1930,103 +1822,27 @@ object GraphOps {
     * each round computes a(v) = Σ_{u→v} h(u) (then a ← a/Σa) and
     * h(v) = Σ_{v→u} a(u) (then h ← h/Σh). Sum-normalization keeps the
     * oracle a plain unrolled CTE chain (no sqrt). Each half-step is one
-    * join + one aggregation shuffled on the vertex id; the L1 total is
-    * a scalar aggregate (at 100 TB: a tree-reduce, not a collect of
-    * vectors). Callers round (6 dp) — normalization noise is ~1e-15.
+    * [[Supersteps.push]] round, along the edges then against them; its
+    * job returns the L1 total, and the next half-step sends its scores
+    * divided by it. Callers round (6 dp) — normalization noise is ~1e-15.
     */
   def hits(edges: DataFrame, iters: Int,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    // Born hash-partitioned by src (one exchange, see [[pagerank]]).
-    val e = canonEdges(edges).repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localHits(edges.sparkSession, e, iters)
-      e.unpersist()
-      return out
-    }
-    // The hub half-step joins on dst, so a by-dst copy makes BOTH
-    // half-steps exchange-free on the edge side — the star-rounds
-    // pattern: 2× edge cache buys away 2×iters full-edge exchanges,
-    // leaving only the vertex-sized score frames shuffling per step.
-    // The copy is DISK_ONLY (r13): each half-step reads it exactly
-    // once sequentially, so disk residency costs one scan — never an
-    // exchange — and the loop family's MEMORY cache footprint stays
-    // one edges-sized frame instead of pressure-evicting neighbors on
-    // tight executors. Both caches release before the final joins.
-    val eByDst = e.repartition(col("dst")).persist(StorageLevel.DISK_ONLY)
-    eByDst.count()
-    audit("hits:eByDst:DISK_ONLY")
-    val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint()
-    // Power-law skew splits BOTH directions (same [[hubSplit]] layout
-    // as pagerank): out-degree hubs straggle the authority step's
-    // by-src partition, IN-degree hubs the hub step's by-dst
-    // partition. Auto threshold ⇒ no-op on every shipped graph.
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val srcSplit = hubSplit(e, eCount, outdeg, hubOutDegree)
-    val indeg = eByDst.groupBy("dst").agg(count(lit(1)).as("od"))
-    val dstSplit = hubSplit(eByDst, eCount, indeg, hubOutDegree,
-      key = "dst", tailLevel = StorageLevel.DISK_ONLY)
-    var h = verts.withColumn("s", lit(1.0))
-    var a = h
-    def halfStep(scores: DataFrame, inCol: String, outCol: String): DataFrame = {
-      val split = if (inCol == "src") srcSplit else dstSplit
-      val tailRows = split.tail.join(scores.withColumnRenamed("v", inCol), inCol)
-        .select(col(outCol).as("v"), col("s"))
-      val rows = split.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubScores = scores
-            .join(broadcast(split.hubDeg.get
-              .withColumnRenamed(inCol, "v").select("v")), "v")
-            .withColumnRenamed("v", inCol)
-          tailRows.unionAll(
-            hubE.join(broadcast(hubScores), inCol)
-              .select(col(outCol).as("v"), col("s")))
+    Supersteps.push(canonEdges(edges), maxLocalEdges, "hits", reverse = true, hubOutDegree) { g =>
+      def half(forward: Boolean, s: Supersteps.Pushed, norm: Double) = g.round(new Supersteps.Push {
+        def send(x: Double, deg: Int): Double = x / norm
+        def update(v: Long, in: Double): Double = in
+      }, forward, s)
+      var h = g.start(_ => 1.0)
+      var a = h
+      var hNorm = 1.0 // h = 1 starts unnormalized
+      var aNorm = 1.0
+      for (_ <- 1 to iters) {
+        a = half(forward = true, h, hNorm); aNorm = a.total  // authority ← in-edge hub mass
+        h = half(forward = false, a, aNorm); hNorm = h.total // hub ← out-edge authority mass
       }
-      val pushed = rows.groupBy("v").agg(sum(col("s")).as("x"))
-      val raw = verts.join(pushed, Seq("v"), "left")
-        .select(col("v"), coalesce(col("x"), lit(0.0)).as("x"))
-        .localCheckpoint()
-      val tot = raw.agg(sum(col("x"))).head().getDouble(0)
-      raw.select(col("v"), (col("x") / tot).as("s"))
+      g.result(("authority", a, aNorm), ("hub", h, hNorm))
     }
-    for (_ <- 1 to iters) {
-      a = halfStep(h, "src", "dst") // authority ← in-edge hub mass
-      h = halfStep(a, "dst", "src") // hub ← out-edge authority mass
-    }
-    // halfStep localCheckpoints each score frame, so the edge caches
-    // are no longer needed for the final join — release them here (the
-    // local path above unpersists too; leaving them cached leaks
-    // blocks across bench iterations).
-    srcSplit.unpersistAll(); dstSplit.unpersistAll()
-    verts.join(a.withColumnRenamed("s", "authority"), "v")
-      .join(h.withColumnRenamed("s", "hub"), "v")
-      .select(col("v").as("vertex"), col("authority"), col("hub"))
-  }
-
-  /** Driver-side HITS twin for sub-threshold graphs: identical
-    * half-step/normalize schedule.
-    */
-  private def localHits(spark: SparkSession, e: DataFrame, iters: Int): DataFrame = {
-    import spark.implicits._
-    val es = collectPairs(e)
-    val verts = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    var h = verts.map(_ -> 1.0).toMap
-    var a = h
-    def halfStep(scores: Map[Long, Double], pairs: Array[(Long, Long)]): Map[Long, Double] = {
-      val acc = new java.util.HashMap[Long, Double]()
-      pairs.foreach { case (from, to) => acc.merge(to, scores(from), _ + _) }
-      val raw = verts.map(v => v -> acc.getOrDefault(v, 0.0)).toMap
-      val tot = verts.iterator.map(raw).sum
-      raw.map { case (v, x) => v -> x / tot }
-    }
-    for (_ <- 1 to iters) {
-      a = halfStep(h, es)          // along src→dst
-      h = halfStep(a, es.map(_.swap)) // along dst→src
-    }
-    verts.map(v => (v, a(v), h(v))).toSeq.toDF("vertex", "authority", "hub")
   }
 
   /** Link prediction over the undirected simple graph: for every

@@ -7,38 +7,41 @@ import scala.collection.mutable
 import org.apache.spark.Partitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-/** The distributed BFS frontier loop behind [[GraphOps.bfs]], run as
-  * RDD supersteps over primitive per-partition blocks, the way GraphX
-  * runs Pregel (PAPERS.md: GraphX, OSDI'14).
+/** Graft's level-synchronous graph loops as RDD supersteps over
+  * primitive per-partition blocks, the way GraphX runs Pregel
+  * (PAPERS.md: GraphX, OSDI'14): the BFS frontier loop behind
+  * [[GraphOps.bfs]] and the sum-push rounds behind PageRank, PPR and
+  * HITS. Each level or round is ONE Spark job and no Catalyst planning.
   *
-  * Each level is ONE Spark job and no Catalyst planning: expand the
-  * frontier over the edge blocks, shuffle the candidate (tag, vertex)
-  * pairs by vertex, and drop the visited ones in a co-partitioned
-  * `zipPartitions` against `visited`. The job materializes the next
-  * frontier (lineage cut by `localCheckpoint`) and returns its size —
-  * plus, while it is under the broadcast bound, its rows, which the
-  * driver broadcasts to the next level's expansion.
+  * A BFS level expands the frontier over the edge blocks, shuffles the
+  * candidate (tag, vertex) pairs by vertex, and drops the visited ones
+  * in a co-partitioned `zipPartitions` against `visited`. A push round
+  * ([[push]]) sends each vertex's message along its out-edges, sums
+  * them per destination inside the map task, and updates each vertex
+  * from its sums in the reduce task that owns it. The job materializes
+  * the next frontier or state (lineage cut by `localCheckpoint`) and
+  * returns its size — plus the BFS frontier's rows while it is under the
+  * broadcast bound, or the push state's total.
   *
   * Scale geometry:
-  *  - edges are CSR blocks (distinct sorted sources, offsets,
-  *    destinations; ≈ 16 B per edge), built once per call;
-  *  - the loop's partition count is the session's shuffle partitions,
+  *  - edges are CSR blocks (distinct sorted keys, offsets, values;
+  *    ≈ 16 B per edge), built once per call;
+  *  - a loop's partition count is the session's shuffle partitions,
   *    raised so an exchanged edge partition holds at most
   *    [[GraphOps.ContractTaskEdgeBound]] edges;
-  *  - while the frontier is under `graft.bfs.broadcastFrontier` it is
-  *    broadcast and the edge blocks keep their input layout: no edge
-  *    exchange;
-  *  - the first larger frontier exchanges the edges once by source
-  *    vertex, into the partitioning the frontier and `visited` already
-  *    have, so every later level expands its frontier partition against
-  *    the co-located edge partition and only candidates shuffle;
+  *  - while a BFS frontier is under `graft.bfs.broadcastFrontier` it is
+  *    broadcast and the edge blocks keep their input layout;
+  *  - the first larger frontier, and each push direction, exchanges
+  *    the edges once by source ([[bySource]]) into the partitioning of
+  *    the frontier, `visited` or the vertex state, so only candidates
+  *    or per-destination sums shuffle;
   *  - sources above the hub out-degree ([[GraphOps.hubThreshold]]) move
-  *    to round-robin hub blocks, probed by broadcast of the frontier's
-  *    hub slice, so no task expands a whole hub alone;
+  *    to round-robin hub blocks, fed by broadcast of the frontier's hub
+  *    slice or the hubs' messages, so no task holds a whole hub alone;
   *  - `visited` is the union of the last compaction and the frontiers
   *    since; every [[CompactEvery]] levels it is merged into one set per
   *    partition, materialized in that level's job;
@@ -47,19 +50,22 @@ import org.apache.spark.storage.StorageLevel
   *    the bound, and when the whole frontier fits the bound the
   *    partitions that held theirs back are fetched by a second job
   *    over the cached frontier;
-  *  - every block this loop built — the edge layouts, superseded
-  *    compactions, the empty last frontier — is released before return;
-  *    only the returned level frontiers stay persisted.
+  *  - every block a call built is released before return; only the
+  *    returned level frontiers or result states stay persisted.
+  * At or below `maxLocalEdges` the push rounds run the same block
+  * functions on the driver, over one block of the collected edges.
   *
   * Memory: every per-partition structure is a heap object that cannot
   * spill — an edge block (≈ 16 B per edge; at most
   * ContractTaskEdgeBound edges once exchanged, ≈ 256 MB), a visited set
   * and a map task's deduplicated candidates (16 B per slot, 23-46 B per
-  * (tag, vertex) pair). A task's heap must hold its partition's share
-  * of the reachable (tag, vertex) pairs; a set past 2^30 slots
-  * (≈ 750M pairs) fails rather than grow. Unlike a DataFrame
-  * anti-join, nothing here spills to disk, and AQE does not coalesce
-  * or split these RDD shuffles.
+  * (tag, vertex) pair), a push state or a map task's sums (16 B per
+  * vertex; a round holds its input and output state). A task's heap
+  * must hold its partition's share of the reachable (tag, vertex) pairs
+  * or of the vertices; a set past 2^30 slots (≈ 750M pairs) fails
+  * rather than grow. Unlike a DataFrame anti-join or aggregation,
+  * nothing here spills to disk, and AQE does not coalesce or split
+  * these RDD shuffles.
   */
 private[graft] object Supersteps {
 
@@ -182,9 +188,23 @@ private[graft] object Supersteps {
     }
   }
 
+  /** The distinct values of `xs`, sorted. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    val sorted = Arrays.copyOf(xs, xs.length)
+    Arrays.sort(sorted)
+    var d = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (i == 0 || sorted(i) != sorted(d - 1)) { sorted(d) = sorted(i); d += 1 }
+      i += 1
+    }
+    Arrays.copyOf(sorted, d)
+  }
+
   /** Compressed adjacency: distinct sorted `keys`; the values of
     * `keys(i)` are `vals(offs(i) until offs(i + 1))`, in input order.
-    * An edge block maps src → dst; a frontier index maps vertex → tag.
+    * An edge block maps src → dst; a frontier index maps vertex → tag;
+    * a push block maps dst → sender.
     */
   final class Csr(val keys: Array[Long], val offs: Array[Int], val vals: Array[Long])
       extends Serializable {
@@ -211,18 +231,11 @@ private[graft] object Supersteps {
   object Csr {
     def apply(ks: Array[Long], vs: Array[Long]): Csr = {
       val n = ks.length
-      val sorted = Arrays.copyOf(ks, n)
-      Arrays.sort(sorted)
-      var d = 0
-      var i = 0
-      while (i < n) {
-        if (i == 0 || sorted(i) != sorted(d - 1)) { sorted(d) = sorted(i); d += 1 }
-        i += 1
-      }
-      val keys = Arrays.copyOf(sorted, d)
+      val keys = sortedDistinct(ks)
+      val d = keys.length
       val at = new Array[Int](n)
       val offs = new Array[Int](d + 1)
-      i = 0
+      var i = 0
       while (i < n) { at(i) = Arrays.binarySearch(keys, ks(i)); offs(at(i) + 1) += 1; i += 1 }
       i = 0
       while (i < d) { offs(i + 1) += offs(i); i += 1 }
@@ -243,10 +256,95 @@ private[graft] object Supersteps {
   }
 
   /** The partition that owns vertex `v`: its frontier and visited
-    * pairs, and — once exchanged — its out-edges.
+    * pairs or its push state, and — once exchanged — its out-edges.
     */
   def partOf(v: Long, parts: Int): Int =
     java.lang.Math.floorMod(GraphOps.mix64(v), parts.toLong).toInt
+
+  /** A loop's partitioning: the session's shuffle partitions, raised so
+    * an exchanged edge partition holds at most
+    * [[GraphOps.ContractTaskEdgeBound]] edges.
+    */
+  private def partitioner(spark: SparkSession, eCount: Long): BlockPartitioner =
+    BlockPartitioner(math.max(spark.sessionState.conf.numShufflePartitions,
+      ((eCount + GraphOps.ContractTaskEdgeBound - 1) / GraphOps.ContractTaskEdgeBound).toInt))
+
+  /** Each partition of `e`'s (src, dst) rows as one [[Pairs]]; a row
+    * with a null endpoint is dropped.
+    */
+  private def edgePairs(e: DataFrame): RDD[Pairs] =
+    e.select("src", "dst").queryExecution.toRdd.mapPartitions { rows =>
+      val ss = new mutable.ArrayBuilder.ofLong
+      val ds = new mutable.ArrayBuilder.ofLong
+      rows.foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1)) { ss.addOne(r.getLong(0)); ds.addOne(r.getLong(1)) })
+      Iterator(Pairs(ss.result(), ds.result()))
+    }
+
+  /** Routed records gathered into one [[Pairs]] per target partition. */
+  private def exchange(recs: RDD[(Int, Pairs)], part: BlockPartitioner): RDD[Pairs] =
+    new ShuffledRDD[Int, Pairs, Pairs](recs, part)
+      .mapPartitions(in => Iterator(concat(in.map(_._2))), preservesPartitioning = true)
+
+  /** Edges exchanged by source: `tail` holds each partition's own
+    * sources' edges; the sources above the hub out-degree
+    * ([[GraphOps.hubThreshold]]) are `hubs` (sorted; null when there
+    * are none), with out-degrees `hubDeg`, and their edges are `hub`,
+    * dealt round-robin over all partitions.
+    */
+  final case class SourceLayout(tail: RDD[Csr], hub: RDD[Csr], hubs: Broadcast[Array[Long]],
+      hubDeg: Array[Int])
+
+  /** Exchanges `edges` by source into `part`'s partitioning, once, and
+    * splits off the hubs: the BFS loop's exchanged layout and both push
+    * directions are built here. `edges` is unpersisted once exchanged.
+    * Every RDD it leaves persisted (at `level`) is registered through
+    * `own`; the caller destroys `hubs`.
+    */
+  def bySource(edges: RDD[Csr], eCount: Long, part: BlockPartitioner, hubOutDegree: Long,
+      level: StorageLevel, name: String, own: (RDD[Csr], String) => RDD[Csr]): SourceLayout = {
+    val sc = edges.sparkContext
+    val parts = part.numPartitions
+    val bySrc = own(exchange(edges.mapPartitions { it =>
+      val c = it.next()
+      val ss = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+      val ds = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+      c.foreachEdge { (s, d) => val p = partOf(s, parts); ss(p).addOne(s); ds(p).addOne(d) }
+      (0 until parts).iterator.map(p => (p, Pairs(ss(p).result(), ds(p).result())))
+        .filter(_._2.size > 0)
+    }, part).map(p => Csr(p.xs, p.ys)).persist(level), s"$name edges by src")
+    val threshold = GraphOps.hubThreshold(eCount, parts, hubOutDegree)
+    val found = sc.runJob(bySrc, (it: Iterator[Csr]) => {
+      val c = it.next()
+      val hs = c.keys.indices.filter(c.degree(_) > threshold)
+      (hs.length, if (hs.length <= GraphOps.MaxHubs) hs.map(i => (c.keys(i), c.degree(i))).toArray else null)
+    })
+    edges.unpersist(blocking = true)
+    val nHubs = found.map(_._1.toLong).sum
+    if (nHubs > GraphOps.MaxHubs) throw GraphOps.tooManyHubs(nHubs, "src", threshold)
+    if (nHubs == 0) return SourceLayout(bySrc, null, null, Array.empty)
+    val (keys, degs) = found.flatMap(_._2).sortBy(_._1).unzip
+    val hubs = sc.broadcast(keys)
+    val tail = own(bySrc.mapPartitions(it => Iterator(it.next().without(hubs.value)),
+      preservesPartitioning = true).persist(level), s"$name tail edges")
+    // The hub sources' edges, dealt round-robin over all partitions.
+    val hub = own(exchange(bySrc.mapPartitions { it =>
+      val c = it.next()
+      val ss = new mutable.ArrayBuilder.ofLong
+      val ds = new mutable.ArrayBuilder.ofLong
+      hubs.value.foreach { k =>
+        val i = Arrays.binarySearch(c.keys, k)
+        if (i >= 0) (c.offs(i) until c.offs(i + 1)).foreach { j => ss.addOne(k); ds.addOne(c.vals(j)) }
+      }
+      val (s, d) = (ss.result(), ds.result())
+      (0 until parts).iterator.map { p =>
+        val (lo, hi) = (s.length.toLong * p / parts, s.length.toLong * (p + 1) / parts)
+        (p, Pairs(s.slice(lo.toInt, hi.toInt), d.slice(lo.toInt, hi.toInt)))
+      }.filter(_._2.size > 0)
+    }, part).map(p => Csr(p.xs, p.ys)).persist(level), s"$name hub edges")
+    sc.runJob(tail.zipPartitions(hub)((a, b) => Iterator(a.size + b.size)), (it: Iterator[Int]) => it.size)
+    bySrc.unpersist(blocking = true)
+    SourceLayout(tail, hub, hubs, degs)
+  }
 
   /** Candidate pairs routed to their vertex's partition, deduplicated
     * map-side.
@@ -356,9 +454,8 @@ private[graft] object Supersteps {
       hubOutDegree: Long, bound: Long): DataFrame = {
     val spark = e.sparkSession
     val sc = spark.sparkContext
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions,
-      ((eCount + GraphOps.ContractTaskEdgeBound - 1) / GraphOps.ContractTaskEdgeBound).toInt)
-    val part = BlockPartitioner(parts)
+    val part = partitioner(spark, eCount)
+    val parts = part.numPartitions
     val owned = mutable.ArrayBuffer.empty[RDD[_]]
     val levels = mutable.ArrayBuffer.empty[RDD[PairSet]]
     // this level's broadcast frontier slices, destroyed after its job
@@ -366,9 +463,6 @@ private[graft] object Supersteps {
     def own[T](r: RDD[T], name: String): RDD[T] = { owned += r; r.setName(name) }
     def release(r: RDD[_]): Unit = r.unpersist(blocking = true)
     def share(v: Csr): Broadcast[Csr] = { val b = sc.broadcast(v); shared += b; b }
-    def exchange(recs: RDD[(Int, Pairs)]): RDD[Pairs] =
-      new ShuffledRDD[Int, Pairs, Pairs](recs, part)
-        .mapPartitions(in => Iterator(concat(in.map(_._2))), preservesPartitioning = true)
 
     /** The next frontier: candidates minus `visited`, lineage cut. */
     def step(cands: RDD[(Int, Pairs)], visited: Seq[RDD[PairSet]], level: Int): RDD[PairSet] = {
@@ -385,12 +479,8 @@ private[graft] object Supersteps {
     var hubs: Broadcast[Array[Long]] = null
 
     try {
-      val blocks = own(e.select("src", "dst").queryExecution.toRdd.mapPartitions { rows =>
-        val ss = new mutable.ArrayBuilder.ofLong
-        val ds = new mutable.ArrayBuilder.ofLong
-        rows.foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1)) { ss.addOne(r.getLong(0)); ds.addOne(r.getLong(1)) })
-        Iterator(Csr(ss.result(), ds.result()))
-      }.persist(StorageLevel.MEMORY_AND_DISK), "bfs edge layout")
+      val blocks = own(edgePairs(e).map(p => Csr(p.xs, p.ys))
+        .persist(StorageLevel.MEMORY_AND_DISK), "bfs edge layout")
       var tail: RDD[Csr] = null
       var hub: RDD[Csr] = null
 
@@ -410,49 +500,12 @@ private[graft] object Supersteps {
         if (tail == null && rows == null) {
           // First frontier over the bound: exchange the edges by source
           // into the frontier's partitioning, once, and split off hubs.
-          val bySrc = own(exchange(blocks.mapPartitions { it =>
-            val c = it.next()
-            val ss = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
-            val ds = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
-            c.foreachEdge { (s, d) => val p = partOf(s, parts); ss(p).addOne(s); ds(p).addOne(d) }
-            (0 until parts).iterator.map(p => (p, Pairs(ss(p).result(), ds(p).result())))
-              .filter(_._2.size > 0)
-          }).map(p => Csr(p.xs, p.ys)).persist(StorageLevel.MEMORY_AND_DISK), "bfs edge layout by src")
-          val threshold = GraphOps.hubThreshold(eCount, parts, hubOutDegree)
-          val found = sc.runJob(bySrc.zipPartitions(front)((b, f) => Iterator((b.next(), f.next()))),
-            (it: Iterator[(Csr, PairSet)]) => {
-              val (c, f) = it.next()
-              val keys = c.keys.indices.filter(c.degree(_) > threshold).map(c.keys).toArray
-              (keys.length, if (keys.length <= GraphOps.MaxHubs) keys else null,
-                f.pairs(v => Arrays.binarySearch(keys, v) >= 0))
-            })
-          release(blocks)
-          val nHubs = found.map(_._1.toLong).sum
-          if (nHubs > GraphOps.MaxHubs) throw GraphOps.tooManyHubs(nHubs, "src", threshold)
-          if (nHubs == 0) tail = bySrc
-          else {
-            hubs = sc.broadcast(found.flatMap(_._2).sorted)
+          val l = bySource(blocks, eCount, part, hubOutDegree, StorageLevel.MEMORY_AND_DISK, "bfs", own)
+          tail = l.tail; hub = l.hub; hubs = l.hubs
+          if (hubs != null) {
             val hk = hubs
-            tail = own(bySrc.mapPartitions(it => Iterator(it.next().without(hk.value)),
-              preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK), "bfs tail edges")
-            // The hub sources' edges, dealt round-robin over all partitions.
-            hub = own(exchange(bySrc.mapPartitions { it =>
-              val c = it.next()
-              val ss = new mutable.ArrayBuilder.ofLong
-              val ds = new mutable.ArrayBuilder.ofLong
-              hk.value.foreach { k =>
-                val i = Arrays.binarySearch(c.keys, k)
-                if (i >= 0) (c.offs(i) until c.offs(i + 1)).foreach { j => ss.addOne(k); ds.addOne(c.vals(j)) }
-              }
-              val (s, d) = (ss.result(), ds.result())
-              (0 until parts).iterator.map { p =>
-                val (lo, hi) = (s.length.toLong * p / parts, s.length.toLong * (p + 1) / parts)
-                (p, Pairs(s.slice(lo.toInt, hi.toInt), d.slice(lo.toInt, hi.toInt)))
-              }.filter(_._2.size > 0)
-            }).map(p => Csr(p.xs, p.ys)).persist(StorageLevel.MEMORY_AND_DISK), "bfs hub edges")
-            sc.runJob(tail.zipPartitions(hub)((a, b) => Iterator(a.size + b.size)), (it: Iterator[Int]) => it.size)
-            release(bySrc)
-            hubRows = concat(found.iterator.map(_._3))
+            hubRows = concat(sc.runJob(front, (it: Iterator[PairSet]) =>
+              it.next().pairs(v => Arrays.binarySearch(hk.value, v) >= 0)).iterator)
           }
         }
         val cands =
@@ -509,6 +562,227 @@ private[graft] object Supersteps {
       shared.foreach(_.destroy())
       if (hubs != null) hubs.destroy()
       owned.foreach(release)
+      e.unpersist(blocking = true)
+    }
+  }
+
+  /** A sum-push vertex program: each round, a vertex with state `x` and
+    * out-degree `deg` sends `send(x, deg)` along each out-edge, and `v`
+    * takes `update(v, in)`, `in` being the sum of what it received.
+    */
+  trait Push extends Serializable {
+    def send(x: Double, deg: Int): Double
+    def update(v: Long, in: Double): Double
+  }
+
+  /** Per-vertex values, `xs(i)` of `ids(i)`: a partition's push state,
+    * or a map task's sums on their way to one.
+    */
+  private final class State(val ids: Array[Long], val xs: Array[Double]) extends Serializable
+
+  /** A partition of one push direction: its vertices `ids` (sorted),
+    * their out-degrees `deg` over its own edges, and its in-edges `in`,
+    * dst → sender: `ids(s)` for s ≥ 0, else hub −1 − s, whose edges were
+    * dealt here round-robin.
+    */
+  private final class PushBlock(val ids: Array[Long], val deg: Array[Int], val in: Csr) extends Serializable
+
+  /** The block of `ids` over their out-edges `tail` and a share `hub`
+    * (or null) of the sorted `hubKeys`' edges.
+    */
+  private def pushBlock(ids: Array[Long], tail: Csr, hub: Csr, hubKeys: Array[Long]): PushBlock = {
+    val deg = new Array[Int](ids.length)
+    val ds = new mutable.ArrayBuilder.ofLong
+    val from = new mutable.ArrayBuilder.ofLong
+    tail.foreachEdge { (s, d) => val at = Arrays.binarySearch(ids, s); deg(at) += 1; ds.addOne(d); from.addOne(at) }
+    if (hub != null) hub.foreachEdge { (h, d) => ds.addOne(d); from.addOne(-1L - Arrays.binarySearch(hubKeys, h)) }
+    new PushBlock(ids, deg, Csr(ds.result(), from.result()))
+  }
+
+  /** A block's round from its vertices' states `xs` and the hubs'
+    * messages `hubMsg`: one sum per destination, keyed by its partition.
+    */
+  private def sums(b: PushBlock, xs: Array[Double], hubMsg: Array[Double], p: Push, parts: Int): Iterator[(Int, State)] = {
+    val msg = Array.tabulate(b.ids.length)(i => if (b.deg(i) > 0) p.send(xs(i), b.deg(i)) else 0.0)
+    val ks = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+    val vs = Array.fill(parts)(new mutable.ArrayBuilder.ofDouble)
+    val c = b.in
+    var k = 0
+    while (k < c.keys.length) {
+      var s = 0.0
+      var j = c.offs(k)
+      while (j < c.offs(k + 1)) {
+        val from = c.vals(j)
+        s += (if (from >= 0) msg(from.toInt) else hubMsg((-1L - from).toInt))
+        j += 1
+      }
+      val q = partOf(c.keys(k), parts)
+      ks(q).addOne(c.keys(k)); vs(q).addOne(s)
+      k += 1
+    }
+    (0 until parts).iterator.map(q => (q, new State(ks(q).result(), vs(q).result()))).filter(_._2.ids.nonEmpty)
+  }
+
+  /** The next state of `ids` from the sums routed to them. */
+  private def gather(ids: Array[Long], in: Iterator[State], p: Push): State = {
+    val acc = new Array[Double](ids.length)
+    in.foreach(s => s.ids.indices.foreach(j => acc(Arrays.binarySearch(ids, s.ids(j))) += s.xs(j)))
+    new State(ids, Array.tabulate(ids.length)(i => p.update(ids(i), acc(i))))
+  }
+
+  /** A state after a round, with its total: on the driver, `state`;
+    * distributed, its materialized `blocks` and the hubs' entries.
+    */
+  final class Pushed private[Supersteps] (val total: Double, private[Supersteps] val state: State,
+      private[Supersteps] val blocks: RDD[State], private[Supersteps] val hubs: Map[Long, Double])
+
+  /** A graph laid out for sum-push rounds along its edges and, if asked,
+    * against them: [[start]] gives every vertex `v` the state `f(v)`,
+    * [[round]] runs `p` from `s`, and [[result]], the last step, gives
+    * (vertex, one column per state divided by its norm) rows.
+    */
+  sealed abstract class PushGraph {
+    def vertices: Long
+    def start(f: Long => Double): Pushed
+    def round(p: Push, forward: Boolean, s: Pushed): Pushed
+    def result(cols: (String, Pushed, Double)*): DataFrame
+  }
+
+  private def resultSchema(cols: Seq[(String, Pushed, Double)]): StructType =
+    StructType(StructField("vertex", LongType, nullable = false) +:
+      cols.map(c => StructField(c._1, DoubleType, nullable = false)))
+
+  private def resultRows(ss: Seq[State], norms: Seq[Double]): Iterator[Row] =
+    ss.head.ids.indices.iterator.map(i => Row.fromSeq(ss.head.ids(i) +: ss.indices.map(c => ss(c).xs(i) / norms(c))))
+
+  /** Runs `body` over the distinct (src, dst) `edges` with no null
+    * endpoint: on the driver if there are at most `maxLocalEdges`, else
+    * as RDD supersteps, which lay out the reverse direction if `reverse`.
+    */
+  def push(edges: DataFrame, maxLocalEdges: Long, name: String, reverse: Boolean,
+      hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame = {
+    val e = edges.na.drop().distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val eCount = e.count()
+    if (eCount <= maxLocalEdges) try body(new LocalPush(e)) finally e.unpersist()
+    else {
+      val g = new RddPush(e, eCount, name, reverse, hubOutDegree)
+      try { g.build(); body(g) } finally g.close()
+    }
+  }
+
+  /** The driver executor: one block of the collected edges, no hubs, no
+    * job per round.
+    */
+  private final class LocalPush(e: DataFrame) extends PushGraph {
+    private val es = concat(edgePairs(e).collect().iterator)
+    private val ids = sortedDistinct(es.xs ++ es.ys)
+    private val fwd = pushBlock(ids, Csr(es.xs, es.ys), null, null)
+    private lazy val rev = pushBlock(ids, Csr(es.ys, es.xs), null, null)
+    private def pushed(s: State) = new Pushed(s.xs.sum, s, null, null)
+
+    def vertices: Long = ids.length
+    def start(f: Long => Double): Pushed = pushed(new State(ids, ids.map(f)))
+    def round(p: Push, forward: Boolean, s: Pushed): Pushed =
+      pushed(gather(ids, sums(if (forward) fwd else rev, s.state.xs, null, p, 1).map(_._2), p))
+    def result(cols: (String, Pushed, Double)*): DataFrame = e.sparkSession.createDataFrame(
+      java.util.Arrays.asList(resultRows(cols.map(_._2.state), cols.map(_._3)).toSeq: _*), resultSchema(cols))
+  }
+
+  /** The RDD-superstep executor. Vertex state is co-partitioned with each
+    * direction's blocks by [[partOf]]; a round is one job, which
+    * materializes the next state and returns its total and hub entries.
+    */
+  private final class RddPush(e: DataFrame, eCount: Long, name: String, reverse: Boolean,
+      hubOutDegree: Long) extends PushGraph {
+    private val sc = e.sparkSession.sparkContext
+    private val part = partitioner(e.sparkSession, eCount)
+    private val owned = mutable.ArrayBuffer.empty[RDD[_]]
+    private val hubCasts = mutable.ArrayBuffer.empty[Broadcast[Array[Long]]]
+    // states not yet released; a round reads only the one it is given
+    private val live = mutable.ArrayBuffer.empty[RDD[State]]
+    private var kept = Seq.empty[RDD[State]]
+    // per direction: its blocks, hub keys (sorted) and hub out-degrees
+    private var dirs = Seq.empty[(RDD[PushBlock], Array[Long], Array[Int])]
+    private var hubKeys: Broadcast[Array[Long]] = null
+    private var rounds = 0
+    var vertices = 0L
+
+    private def own[T](r: RDD[T], name: String): RDD[T] = { owned += r; r.setName(name) }
+
+    def build(): Unit = {
+      val parts = part.numPartitions
+      val pairs = edgePairs(e)
+      // the vertices, sorted, in their owners' partitions
+      val ids = exchange(pairs.mapPartitions { it =>
+        val (ps, r) = (it.next(), new Router(parts))
+        ps.xs.indices.foreach { i => r.add(0L, ps.xs(i)); r.add(0L, ps.ys(i)) }
+        r.records
+      }, part).map(p => sortedDistinct(p.ys))
+      // the reverse direction is read once a round: on disk, one scan
+      val levels = Seq("forward" -> StorageLevel.MEMORY_AND_DISK, "reverse" -> StorageLevel.DISK_ONLY)
+      dirs = levels.take(if (reverse) 2 else 1).map { case (dir, level) =>
+        val l = bySource(pairs.map(p => if (dir == "forward") Csr(p.xs, p.ys) else Csr(p.ys, p.xs)),
+          eCount, part, hubOutDegree, level, s"$name $dir", own[Csr])
+        val hk = l.hubs
+        if (hk != null) hubCasts += hk
+        val blocks = own((
+          if (hk == null) ids.zipPartitions(l.tail)((i, t) => Iterator(pushBlock(i.next(), t.next(), null, null)))
+          else ids.zipPartitions(l.tail, l.hub)((i, t, h) => Iterator(pushBlock(i.next(), t.next(), h.next(), hk.value)))
+        ).persist(level), s"$name $dir blocks")
+        if (level == StorageLevel.DISK_ONLY) GraphOps.audit(s"$name:eByDst:DISK_ONLY")
+        vertices = sc.runJob(blocks, (it: Iterator[PushBlock]) => it.next().ids.length.toLong).sum
+        (Seq(l.tail) ++ Option(l.hub)).foreach(_.unpersist(blocking = true))
+        (blocks, if (hk == null) Array.empty[Long] else hk.value, l.hubDeg)
+      }
+      val keys = dirs.flatMap(_._2).distinct.sorted.toArray
+      if (keys.nonEmpty) { hubKeys = sc.broadcast(keys); hubCasts += hubKeys }
+      e.unpersist(blocking = true)
+    }
+
+    def start(f: Long => Double): Pushed = materialize(dirs.head._1.map(b => new State(b.ids, b.ids.map(f))))
+
+    def round(p: Push, forward: Boolean, s: Pushed): Pushed = {
+      val (blocks, keys, degs) = dirs(if (forward) 0 else 1)
+      val hubMsg = if (keys.isEmpty) null else sc.broadcast(keys.indices.map(j => p.send(s.hubs(keys(j)), degs(j))).toArray)
+      val parts = part.numPartitions
+      val sent = blocks.zipPartitions(s.blocks) { (bs, ss) =>
+        sums(bs.next(), ss.next().xs, if (hubMsg == null) null else hubMsg.value, p, parts)
+      }
+      val next = try materialize(new ShuffledRDD[Int, State, State](sent, part)
+        .zipPartitions(s.blocks, preservesPartitioning = true)((in, ss) => Iterator(gather(ss.next().ids, in.map(_._2), p))))
+        finally if (hubMsg != null) hubMsg.destroy()
+      val old = live.filter(r => (r ne s.blocks) && (r ne next.blocks))
+      old.foreach(_.unpersist(blocking = true)); live --= old
+      next
+    }
+
+    /** Lineage-cuts `states` in a job returning their total and hub entries. */
+    private def materialize(states: RDD[State]): Pushed = {
+      val next = states.setName(s"$name state $rounds").localCheckpoint()
+      rounds += 1
+      live += next
+      val hk = hubKeys
+      val got = sc.runJob(next, (it: Iterator[State]) => {
+        val s = it.next()
+        val at = if (hk == null) Array.empty[Int] else hk.value.map(Arrays.binarySearch(s.ids, _)).filter(_ >= 0)
+        (s.xs.sum, at.map(i => s.ids(i) -> s.xs(i)))
+      })
+      new Pushed(got.map(_._1).sum, null, next, got.flatMap(_._2).toMap)
+    }
+
+    def result(cols: (String, Pushed, Double)*): DataFrame = {
+      kept = cols.map(_._2.blocks)
+      val norms = cols.map(_._3)
+      val zipped = kept.tail.foldLeft(kept.head.map(Vector(_))) { (acc, r) =>
+        acc.zipPartitions(r)((a, b) => Iterator(a.next() :+ b.next()))
+      }
+      e.sparkSession.createDataFrame(zipped.flatMap(resultRows(_, norms)), resultSchema(cols))
+    }
+
+    /** Releases every block the call built but the result's states. */
+    def close(): Unit = {
+      hubCasts.foreach(_.destroy())
+      (owned ++ live.filterNot(r => kept.exists(_ eq r))).foreach(_.unpersist(blocking = true))
       e.unpersist(blocking = true)
     }
   }
