@@ -835,12 +835,8 @@ object Dedup {
     */
   private[graft] def clusterFromPairsBaseline(docPairs: DataFrame,
       members: DataFrame): DataFrame = {
-    // checkpointed: connectedComponents consumes the pair frame twice
-    // (the adaptive size probe, then the traversal itself) — without
-    // this the whole near-dup join pipeline re-executes per consumer
     val pairs = docPairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .localCheckpoint()
     val cc = graft.graph.GraphOps.connectedComponents(pairs)
       .select(col("vertex").as("doc_id"), col("component").as("cluster"))
     members.select(col("doc_id"))
@@ -879,7 +875,6 @@ object Dedup {
       docArr: DataFrame): DataFrame = {
     val pairs = repPairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .localCheckpoint() // connectedComponents consumes it twice
     val cc = graft.graph.GraphOps.connectedComponents(pairs)
       .select(col("vertex").as("rep_id"), col("component"))
     val shingled = docArr.where(size(col("sh")) > 0)

@@ -1,8 +1,14 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import graft.graph.Supersteps.Pairs
 
 /** Distributed graph algorithms over edge-list DataFrames.
   *
@@ -99,18 +105,6 @@ object GraphOps {
     }
   }
 
-  /** Blocking release of a localCheckpoint'd frame's blocks once its
-    * last consumer has materialized — `df.unpersist` would only touch
-    * the CacheManager layer, not the checkpoint RDD, so untracked
-    * checkpoints otherwise wait for GC + the async ContextCleaner
-    * (whose reclamation wave pollutes co-scheduled ops at sf10).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    RoundCheckpoints.ownRddId(df).foreach { id =>
-      df.sparkSession.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = true))
-    }
-
   /** Spec tap for [[RoundCheckpoints.ownRddId]] — pins the exact-id
     * capture path (the concurrency guard) against Spark shape drift.
     */
@@ -149,16 +143,19 @@ object GraphOps {
     * frame costs MORE than one distributed star round over it, so
     * raising this buys nothing even where driver heap would allow it —
     * the crossover is row-collect-bound, not memory-bound.
+    * [[connectedComponents]] collects nothing: for it this is the
+    * forest size at or below which it finishes in one task.
     */
   val LocalEdgeThreshold: Long = 4000000L
 
   /** Per-task edge-share cap for the iterated contraction passes in
-    * [[connectedComponents]]: a coalesced pass whose tasks would each
-    * union-find more edges than this stops coalescing and hands the
-    * graph to the star rounds. The per-task open-addressing map is
+    * [[connectedComponents]]: a pass whose coalesced tasks would each
+    * union-find more edges than this is not run, and the forest goes to
+    * the star rounds. The per-task open-addressing map is
     * O(min(task endpoints, |V|)) entries (16 B each), so 16M
     * edges/task bounds a task's map near 512 MB — safe at local[32]
-    * heaps and a deliberate executor-memory-shaped knob at scale.
+    * heaps and a deliberate executor-memory-shaped knob at scale. (The
+    * one-task finish below `maxLocalEdges` is bounded by that instead.)
     * The BFS supersteps size their partition count by it too, so an
     * exchanged edge block stays under ≈ 256 MB.
     */
@@ -257,6 +254,43 @@ object GraphOps {
     /** Every vertex ever hung under another, with its root. */
     def foreachNonRoot(f: (Long, Long) => Unit): Unit =
       parent.foreachKey { v => val r = find(v); if (r != v) f(r, v) }
+  }
+
+  /** A contraction task's output: `pairs` and its forest's `edges`
+    * (see [[contractTask]]), and the non-loop edges it `seen`.
+    */
+  private final case class Forest(pairs: Pairs, edges: Int, seen: Long)
+
+  /** One [[connectedComponents]] contraction task over its edges `in`:
+    * the union-find of the non-loop edges as one (root, v) edge per
+    * non-root vertex (roots are the task's minima, so root < v), plus a
+    * (v, v) marker per self-loop vertex. If `last`, the task has seen
+    * every edge and `pairs` are instead the (vertex, component) rows of
+    * every vertex it saw.
+    */
+  private def contractTask(in: Iterator[Pairs], last: Boolean): Forest = {
+    val uf = new UnionFind()
+    val loops = new mutable.ArrayBuilder.ofLong
+    var seen = 0L
+    in.foreach { p =>
+      var i = 0
+      while (i < p.size) {
+        if (p.xs(i) == p.ys(i)) loops.addOne(p.xs(i)) else { uf.union(p.xs(i), p.ys(i)); seen += 1 }
+        i += 1
+      }
+    }
+    val marks = Supersteps.sortedDistinct(loops.result())
+    val rs = new mutable.ArrayBuilder.ofLong
+    val vs = new mutable.ArrayBuilder.ofLong
+    uf.foreachNonRoot { (r, v) => rs.addOne(r); vs.addOne(v) }
+    val (roots, leaves) = (rs.result(), vs.result())
+    val out =
+      if (!last) Pairs(roots ++ marks, leaves ++ marks)
+      else {
+        val all = Supersteps.sortedDistinct(roots ++ leaves ++ marks)
+        Pairs(all, all.map(uf.find))
+      }
+    Forest(out, roots.length, seen)
   }
 
   private def canonEdges(edges: DataFrame): DataFrame =
@@ -440,107 +474,74 @@ object GraphOps {
         (sum("o") + sum("i")).as("total_deg"))
   }
 
-  /** Undirected connected components via the alternating
-    * large-star/small-star algorithm (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014): O(log n) rounds,
-    * pure shuffle ops, no driver state — unlike label propagation,
-    * which needs O(diameter) rounds. Returns (vertex, component) with
-    * component = min vertex id of the component.
+  /** Undirected connected components: (vertex, component) rows with
+    * component = the component's minimum vertex id. The vertices are
+    * the endpoints of the non-loop edges plus the self-loop vertices; an
+    * edge with a null endpoint is dropped.
+    *
+    * Iterated local contraction (the two-phase optimization of Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC 2014,
+    * §6, applied to a fixpoint) as RDD passes of one Spark job each: a
+    * task union-finds its own edges ([[contractTask]]) — a narrow pass,
+    * no shuffle — and keeps one (root, v) forest edge per non-root
+    * vertex it saw, self-loop vertices riding along as (v, v) markers.
+    * Forest union ≡ same components, and a pass keeps the vertex set, so
+    * its output is bounded by Σ per-task distinct vertices. One pass at
+    * the natural partitioning barely shrinks a graph whose vertex set
+    * every partition sees (×100 supply graph: 58.7M → 36M edges, 32
+    * partitions each seeing ~1.4M of the 1.6M vertices); coalescing 4×
+    * down between passes (narrow) makes that bound drop geometrically
+    * to the forest floor of ~|V| edges.
+    *
+    * A pass that runs in ONE task has seen every edge, so its union-find
+    * is the min-id labelling and it emits the labels: the passes end
+    * there. A forest of at most `maxLocalEdges` edges is finished in one
+    * task at once. Coalescing continues while a pass shrinks the forest
+    * by ≥ 20 % and the next pass's per-task share stays under
+    * [[ContractTaskEdgeBound]] (a task's union-find map is
+    * O(min(task endpoints, |V|))); a stall on several tasks above
+    * `maxLocalEdges` hands the forest to the alternating
+    * large-star/small-star rounds ([[starRound]], Kiveris et al. §3:
+    * O(log n) rounds of pure shuffle ops), which finish in one task
+    * once their edge set is at most `maxLocalEdges`.
     */
   def connectedComponents(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    // One checkpoint of the raw edge list: the self-loop vertex scan
-    // and (on the local path) the collect both read it — without this
-    // each consumer re-runs the caller's derivation pipeline. SKIPPED
-    // when the caller's frame already IS a checkpoint (single
-    // LogicalRDD leaf — the catalog's derived graphs and the dedup
-    // callers' pair frames): re-materializing 58.7M cached rows into a
-    // second checkpoint cost 8 s at the ×100 rung and bought nothing,
-    // the casts are narrow over the cached blocks. `ceOwned` guards
-    // the release so a caller's catalog frame is never unpersisted.
-    val ceOwned = RoundCheckpoints.ownRddId(edges).isEmpty
-    val ce =
-      if (ceOwned) canonEdges(edges).localCheckpoint() else canonEdges(edges)
     val spark = edges.sparkSession
-    import spark.implicits._
-    // NO .distinct() here (r21): every consumer below is a union-find
-    // pass (duplicate edges are free re-unions) or a bounded driver
-    // collect, so the full-width dedup exchange the old path paid on
-    // the raw edge list (29 s on the ×100 supply graph) bought
-    // nothing. Canonical u < v is kept — it is narrow — so the star
-    // fallback's invariant still holds.
-    val e1 = ce
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-    val n0 = e1.count()
-    if (n0 <= maxLocalEdges) return localCc(spark, e1, ce)
-    // Iterated local contraction (the two-phase optimization of
-    // Kiveris et al. §6, applied to a fixpoint): each partition
-    // union-finds its OWN edges — a narrow pass, zero shuffle — and
-    // emits one (root, v) spanning-forest edge per non-root vertex it
-    // saw. Forest union ≡ same components, and a forest pass PRESERVES
-    // the vertex set (every input vertex reappears as a root or a
-    // leaf), so output is bounded by Σ per-partition distinct
-    // vertices. One pass at the natural partitioning barely shrinks a
-    // graph whose vertex set is visible from every partition (×100
-    // supply graph: 58.7M → 36M with 32 partitions each seeing ~1.4M
-    // of the 1.6M vertices); COALESCING 4× down between passes (narrow
-    // — no exchange) makes the bound drop geometrically until the
-    // forest reaches its floor of ~|V| edges, which either fits the
-    // driver threshold or has genuinely large |V| — then the star
-    // rounds take over. Per-task state is O(min(task endpoints, |V|))
-    // — the same bound the single pass already accepted. Roots are
-    // per-partition minima, so u < v canonical form is preserved for
-    // the star loop below.
-    def contract(in: DataFrame): DataFrame = in.select("u", "v")
-      .as[(Long, Long)].mapPartitions { it =>
-        val uf = new UnionFind()
-        it.foreach { case (a, b) => uf.union(a, b) }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        uf.foreachNonRoot((r, v) => out += ((r, v)))
-        out.iterator
-      }.toDF("u", "v")
-    var e = contract(e1).localCheckpoint()
-    var n = e.count()
-    var parts = e.rdd.getNumPartitions
-    var prevCkpt = e
-    var pass = 1
-    // keep quartering while it still shrinks ≥ 20% per pass — a stall
-    // means the forest floor (~|V| edges) is above the local threshold
-    // and the star rounds are the right tool — and while the next
-    // pass's per-task edge share stays under ContractTaskEdgeBound
-    // (the union-find map is O(min(task endpoints, |V|)); unbounded
-    // coalescing would hand a web-scale graph to one task)
-    var prevN = n0
-    while (n > maxLocalEdges && parts > 1 && n <= (prevN * 4) / 5 &&
-        n / math.max(1, parts / 4) <= ContractTaskEdgeBound && pass < 16) {
-      pass += 1
-      parts = math.max(1, parts / 4)
-      prevN = n
-      val next = contract(e.coalesce(parts)).localCheckpoint()
-      n = next.count()
-      releaseCheckpoint(prevCkpt)
-      e = next; prevCkpt = next
+    val sc = spark.sparkContext
+    var passes = 0
+    // One pass, materialized in its job, which returns the forest's
+    // edges and the non-loop edges the pass read.
+    def pass(in: RDD[Pairs], last: Boolean): (RDD[Forest], Long, Long) = {
+      passes += 1
+      audit(s"cc:pass parts=${in.getNumPartitions}")
+      val f = in.mapPartitions(it => Iterator(contractTask(it, last)))
+        .setName(if (last) "cc labels" else s"cc pass $passes").persist(StorageLevel.MEMORY_AND_DISK)
+      val sizes = sc.runJob(f, (it: Iterator[Forest]) => { val x = it.next(); (x.edges.toLong, x.seen) })
+      (f, sizes.map(_._1).sum, sizes.map(_._2).sum)
     }
-    if (n <= maxLocalEdges) {
-      val out = localCc(spark, e, ce)
-      // blocking release: the local result is driver-built, so the
-      // contraction checkpoints and the raw-edge frame free inside
-      // this op's own wall (r19 verdict #2 discipline)
-      releaseCheckpoint(e)
-      if (ceOwned) releaseCheckpoint(ce)
-      return out
+    def frame(f: RDD[Forest], a: String, b: String): DataFrame = spark.createDataFrame(
+      f.flatMap { x => val p = x.pairs; p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))) },
+      StructType(Seq(StructField(a, LongType, nullable = false), StructField(b, LongType, nullable = false))))
+    def labels(f: RDD[Forest]): DataFrame = frame(f, "vertex", "component")
+    def release(r: RDD[_]): Unit = r.unpersist(blocking = true)
+
+    val input = Supersteps.edgePairs(canonEdges(edges))
+    var parts = input.getNumPartitions
+    var (forest, n, prevN) = pass(input, last = parts <= 1)
+    while (parts > 1 && (n <= maxLocalEdges ||
+        n <= (prevN * 4) / 5 && n / math.max(1, parts / 4) <= ContractTaskEdgeBound && passes < 16)) {
+      parts = if (n <= maxLocalEdges) 1 else math.max(1, parts / 4)
+      val (next, m, _) = pass(forest.map(_.pairs).coalesce(parts), last = parts == 1)
+      release(forest)
+      forest = next; prevN = n; n = m
     }
-    // allVerts only exists on the star-rounds path, and derives from
-    // the CONTRACTED forest (≈ |V| rows) plus ce's self-loop-only
-    // vertices — not from the full raw edge list (2·|E| rows through
-    // a dedup exchange, 57 s at ×100 — wasted whenever the loop
-    // drops to local).
-    val allVerts = e.select(col("u").as("vertex"))
-      .unionAll(e.select(col("v").as("vertex")))
-      .unionAll(ce.where(col("src") === col("dst")).select(col("src").as("vertex")))
-      .distinct().localCheckpoint()
-    val eContracted = e // pre-loop contraction checkpoint, released at drain
+    if (parts <= 1) return labels(forest)
+
+    // The star rounds: their edge set keeps the forest's non-loop
+    // vertices and components; the self-loop markers wait in `forest`.
+    val fd = frame(forest, "u", "v")
+    var e = fd.where(col("u") =!= col("v"))
     var converged = false
     var rounds = 0
     def checksum(df: DataFrame): (Long, Long) = {
@@ -551,93 +552,88 @@ object GraphOps {
     // inline hygiene: the star rounds are LINEAR (round N reads only
     // round N-1's frames), so the previous round's three checkpoints
     // free as soon as this round's materialize
-    val hy = new RoundCheckpoints(spark.sparkContext)
+    val hy = new RoundCheckpoints(sc)
     while (!converged && rounds < 64) {
       rounds += 1
-      // Each star half consumes its bidirected edge frame TWICE on the
-      // same key (the per-s min aggregate, then the equi-join back) —
-      // unpartitioned, that is two edge-sized exchanges per half per
-      // round. Hash-partitioning the frame by s once (checkpointed —
-      // the checkpoint scan keeps the partitioning, so both consumers
-      // and the join's min side plan exchange-free) makes the star
-      // rounds' network cost one edge exchange per half, the geometry
-      // that survives a web-scale edge set.
-      // large-star: every neighbor larger than u links to u's min
-      val bi = hy.ckpt(e.select(col("u").as("s"), col("v").as("d"))
-        .unionAll(e.select(col("v").as("s"), col("u").as("d")))
-        .repartition(col("s")))
-      val mins = bi.groupBy("s").agg(min("d").as("mn"))
-        .select(col("s"), least(col("s"), col("mn")).as("m"))
-      // filter before the join (mins still sees every neighbor); keep
-      // the distinct — on dense graphs many (d, m) candidates repeat,
-      // and deduping here halves what small-star has to shuffle
-      val ls = bi.where(col("d") > col("s")).join(mins, "s")
-        .select(least(col("d"), col("m")).as("u"), greatest(col("d"), col("m")).as("v"))
-        .where(col("u") =!= col("v")).distinct()
-      // small-star: every neighbor ≤ s (and s itself) links to the min
-      val bi2 = ls.select(col("u").as("s"), col("v").as("d"))
-        .unionAll(ls.select(col("v").as("s"), col("u").as("d")))
-      val low = hy.ckpt(bi2.where(col("d") <= col("s"))
-        .repartition(col("s")))
-      val mins2 = low.groupBy("s").agg(min("d").as("mn"))
-        .select(col("s"), least(col("s"), col("mn")).as("m"))
-      val ss = hy.ckpt(low.join(mins2, "s").select(col("d").as("x"), col("m"))
-        .unionAll(mins2.select(col("s").as("x"), col("m")))
-        .where(col("x") =!= col("m"))
-        .select(col("m").as("u"), col("x").as("v"))
-        .distinct())
+      audit(s"cc:star round $rounds")
+      val ss = starRound(e, hy.ckpt)
       val nsig = checksum(ss)
       converged = nsig == sig
       sig = nsig
       e = ss
       hy.endRound()
-      // adaptive drop-to-local: every star round preserves the
-      // component partition (Kiveris et al. §3), so once the
-      // SHRINKING edge set fits the driver threshold, a union-find
-      // finish is exact and skips the remaining O(log n) distributed
-      // rounds — on the sf1 supply graph round 1 shrinks 5.9M → 4.0M
-      // edges and this cuts the loop from 4 rounds to 1. At true
-      // scale the set stays above threshold and the loop runs on.
-      if (!converged && nsig._1 <= maxLocalEdges)
-        return localCc(edges.sparkSession, e, ce)
+      // every star round preserves the component partition (Kiveris et
+      // al. §3), so once the SHRINKING edge set fits `maxLocalEdges`, a
+      // one-task finish over it and the markers is exact and skips the
+      // remaining O(log n) rounds — on the sf1 supply graph round 1
+      // shrinks 5.9M → 4.0M edges and this cuts the loop from 4 rounds
+      // to 1. At true scale the set stays above it and the loop runs on.
+      if (!converged && nsig._1 <= maxLocalEdges) {
+        val rest = e.unionAll(fd.where(col("u") === col("v")))
+        val (out, _, _) = pass(Supersteps.edgePairs(rest.select(col("u").as("src"), col("v").as("dst")))
+          .coalesce(1), last = true)
+        hy.drain()
+        release(forest)
+        return labels(out)
+      }
     }
-    val labels = e.select(col("v").as("vertex"), col("u").as("component"))
+    val allVerts = fd.select(col("u").as("vertex")).unionAll(fd.select(col("v").as("vertex")))
+      .distinct().localCheckpoint()
+    val comps = e.select(col("v").as("vertex"), col("u").as("component"))
       .unionAll(e.select(col("u").as("vertex"), col("u").as("component")))
       .distinct()
     // end-of-loop hygiene: the result reads only the FINAL round's ss
     // (`e`) and allVerts — every other tracked checkpoint (the 2×|E|
-    // bidirected frames of the last round, all superseded rounds, the
-    // raw-edge and contraction inputs) releases BLOCKING here, inside
-    // this op's own wall, instead of as an async cleaner wave on the
-    // next co-scheduled op (r19 verdict #2)
+    // bidirected frames of the last round, all superseded rounds) and
+    // the forest release BLOCKING here, inside this op's own wall,
+    // instead of as an async cleaner wave on the next co-scheduled op
+    // (r19 verdict #2)
     hy.drain(keep = Seq(e))
-    if (ceOwned) releaseCheckpoint(ce)
-    releaseCheckpoint(eContracted)
-    allVerts.join(labels, Seq("vertex"), "left")
+    release(forest)
+    allVerts.join(comps, Seq("vertex"), "left")
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("component"))
   }
 
-  /** Driver-side union-find twin for sub-threshold graphs (see
-    * [[LocalEdgeThreshold]]): identical (vertex, min-id component)
-    * labels. The vertex set is the undirected frame's endpoints plus
-    * `allEdges`' SELF-LOOP vertices (the only vertices the u ≠ v
-    * filter dropped — contraction passes preserve every other vertex,
-    * so this avoids the 2·|E|-row dedup exchange over the raw edge
-    * list the old path paid, 49 s at ×100).
+  /** One alternating round over canonical (u < v) edges `e`, as (u, v)
+    * edges again: large-star links every neighbor larger than u to u's
+    * minimum neighbor, then small-star links every neighbor ≤ s, and s
+    * itself, to the minimum (Kiveris et al. §3). A round keeps the
+    * vertex set and the partition into components. `ckpt` cuts the
+    * lineage of its three edge-sized frames.
     */
-  private def localCc(spark: SparkSession, undirected: DataFrame,
-      allEdges: DataFrame): DataFrame = {
-    import spark.implicits._
-    val es = collectPairs(undirected)
-    val uc = undirected.columns
-    val verts = undirected.select(col(uc(0)).as("vertex"))
-      .unionAll(undirected.select(col(uc(1)).as("vertex")))
-      .unionAll(allEdges.where(col("src") === col("dst"))
-        .select(col("src").as("vertex")))
-      .distinct().collect().map(_.getLong(0))
-    val uf = new UnionFind()
-    es.foreach { case (a, b) => uf.union(a, b) }
-    verts.map(v => (v, uf.find(v))).toSeq.toDF("vertex", "component")
+  private[graft] def starRound(e: DataFrame, ckpt: DataFrame => DataFrame): DataFrame = {
+    // Each star half consumes its bidirected edge frame TWICE on the
+    // same key (the per-s min aggregate, then the equi-join back) —
+    // unpartitioned, that is two edge-sized exchanges per half per
+    // round. Hash-partitioning the frame by s once (checkpointed — the
+    // checkpoint scan keeps the partitioning, so both consumers and the
+    // join's min side plan exchange-free) makes the star rounds' network
+    // cost one edge exchange per half, the geometry that survives a
+    // web-scale edge set.
+    // large-star: every neighbor larger than u links to u's min
+    val bi = ckpt(e.select(col("u").as("s"), col("v").as("d"))
+      .unionAll(e.select(col("v").as("s"), col("u").as("d")))
+      .repartition(col("s")))
+    val mins = bi.groupBy("s").agg(min("d").as("mn"))
+      .select(col("s"), least(col("s"), col("mn")).as("m"))
+    // filter before the join (mins still sees every neighbor); keep
+    // the distinct — on dense graphs many (d, m) candidates repeat,
+    // and deduping here halves what small-star has to shuffle
+    val ls = bi.where(col("d") > col("s")).join(mins, "s")
+      .select(least(col("d"), col("m")).as("u"), greatest(col("d"), col("m")).as("v"))
+      .where(col("u") =!= col("v")).distinct()
+    // small-star: every neighbor ≤ s (and s itself) links to the min
+    val bi2 = ls.select(col("u").as("s"), col("v").as("d"))
+      .unionAll(ls.select(col("v").as("s"), col("u").as("d")))
+    val low = ckpt(bi2.where(col("d") <= col("s"))
+      .repartition(col("s")))
+    val mins2 = low.groupBy("s").agg(min("d").as("mn"))
+      .select(col("s"), least(col("s"), col("mn")).as("m"))
+    ckpt(low.join(mins2, "s").select(col("d").as("x"), col("m"))
+      .unionAll(mins2.select(col("s").as("x"), col("m")))
+      .where(col("x") =!= col("m"))
+      .select(col("m").as("u"), col("x").as("v"))
+      .distinct())
   }
 
   /** Hub floor for the two-frame split: a source only counts as a hub

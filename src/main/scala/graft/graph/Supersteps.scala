@@ -189,7 +189,7 @@ private[graft] object Supersteps {
   }
 
   /** The distinct values of `xs`, sorted. */
-  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+  private[graph] def sortedDistinct(xs: Array[Long]): Array[Long] = {
     val sorted = Arrays.copyOf(xs, xs.length)
     Arrays.sort(sorted)
     var d = 0
@@ -272,7 +272,7 @@ private[graft] object Supersteps {
   /** Each partition of `e`'s (src, dst) rows as one [[Pairs]]; a row
     * with a null endpoint is dropped.
     */
-  private def edgePairs(e: DataFrame): RDD[Pairs] =
+  private[graph] def edgePairs(e: DataFrame): RDD[Pairs] =
     e.select("src", "dst").queryExecution.toRdd.mapPartitions { rows =>
       val ss = new mutable.ArrayBuilder.ofLong
       val ds = new mutable.ArrayBuilder.ofLong
