@@ -103,6 +103,27 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("labelling a union-find map one key short of its growth point visits every vertex once") {
+    // a task's 65 536-slot map grows to store its 45 876th key; with
+    // 45 875 leaves stored, the path compressions while labelling
+    // overwrite links and must not grow the map under the iteration
+    // (with these even ids a growth there would visit a leaf twice)
+    val leaves = (1L to 45875L).map(2 * _)
+    val uf = new GraphOps.UnionFind()
+    leaves.foreach(v => uf.union(0L, v))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    uf.foreachNonRoot { (r, v) => assert(r === 0L); seen += v }
+    val once = seen.size == leaves.size && seen.toSet == leaves.toSet
+    assert(once, s"${seen.size} visits, ${seen.distinct.size} distinct, of ${leaves.size} leaves")
+    val e = spark.range(2L, 2 * leaves.size + 1, 2L, 1).select(lit(0L).as("src"), col("id").as("dst"))
+    val es = leaves.map(v => (0L, v))
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+      val (got, marks) = audited(labels(GraphOps.connectedComponents(e, maxLocalEdges = maxLocal)))
+      assert(marks === Seq("cc:pass parts=1"), s"maxLocalEdges=$maxLocal")
+      assert(got === reference(es), s"maxLocalEdges=$maxLocal")
+    }
+  }
+
   test("a forest the first pass cannot shrink takes the star rounds; below maxLocalEdges they finish in one task") {
     for (((e, es), maxLocal, finish) <- Seq((chain, 0L, false), (trees, 0L, false), (trees, 100L, true))) {
       val (got, marks) = audited(labels(GraphOps.connectedComponents(e, maxLocalEdges = maxLocal)))
@@ -194,6 +215,23 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(labels(cc) === reference(es))
   }
 
+  test("msf's Borůvka rounds release each round's components once relabelled") {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(17)
+    val e = Seq.fill(300)((rng.nextInt(100).toLong, rng.nextInt(100).toLong, rng.nextInt(50).toLong))
+      .toDF("src", "dst", "w")
+    val sc = spark.sparkContext
+    val kruskal = GraphOps.msf(e).collect().toSet
+    val before = sc.getPersistentRDDs.keySet
+    val (boruvka, marks) = audited(GraphOps.msf(e, maxLocalEdges = 0L).collect().toSet)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
+      .map(r => Option(r.name).getOrElse(r.toString)).toSeq
+    assert(boruvka === kruskal)
+    assert(marks.count(_ == "cc:pass parts=1") > 1, marks)
+    assert(!left.contains("cc labels"), left)
+  }
+
   test("collected calls leave only what their results read persisted") {
     val sc = spark.sparkContext
     val e = randomCase(3)._1.repartition(4).localCheckpoint()
@@ -204,8 +242,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     outs.foreach(_.collect())
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
       .map(r => Option(r.name).getOrElse(r.toString)).toSeq
-    // the star rounds' converged result reads their last edge set and
-    // its vertex set, both checkpoints
-    assert(left.count(_ == "cc labels") === 4 && left.size === 6, left)
+    // a star-round result reads the last round's edge set, a
+    // checkpoint: the one-task finish through the labels, the converged
+    // result directly and with the vertex set, a checkpoint too
+    assert(left.count(_ == "cc labels") === 4 && left.size === 7, left)
   }
 }
