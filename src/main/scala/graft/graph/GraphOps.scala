@@ -56,9 +56,9 @@ object GraphOps {
     * was measured landing on whatever ops run next — the r18
     * dfs-family attribution, PROBES_r18.json). Only safe where no
     * frame from two rounds back is ever read again: connected
-    * components' star rounds, the h-index estimate chain, rank
-    * iterations — NOT the peel loops that union their per-round
-    * emissions at the end. New persistent RDD ids are discovered by
+    * components' star rounds, the k-core prune chain, the h-index
+    * estimate chain, msf's Borůvka cross edges and labels — NOT the
+    * peel loops that union their per-round emissions at the end. New persistent RDD ids are discovered by
     * diffing getPersistentRDDs around the eager checkpoint; the loops
     * are single-threaded per op, so the diff is exactly the
     * checkpoint's blocks.
@@ -148,17 +148,21 @@ object GraphOps {
   /** Edge count below which iterative traversals run on the driver —
     * the same adaptive call AQE makes when it converts a shuffle join
     * to a local broadcast: 4M edge pairs ≈ 64 MB, matching the
-    * session's autoBroadcastJoinThreshold. A graph this small costs
-    * more in per-level scheduler latency than the whole traversal does
-    * locally, and the reference itself materializes the full adjacency
-    * matrix per query (secondary_server.c:126-137). Above the threshold
-    * the level-synchronous frontier loop — the only shape that
-    * works at 100 TB — is used unconditionally; specs pin both paths
-    * to identical output by forcing maxLocalEdges = 0. Measured at the
-    * sf1-equivalent supply graph (5.87M edges): collecting a 4M-row
-    * frame costs MORE than one distributed star round over it, so
-    * raising this buys nothing even where driver heap would allow it —
-    * the crossover is row-collect-bound, not memory-bound.
+    * session's autoBroadcastJoinThreshold. [[bfs]] and the push ops
+    * receive those edges from their [[Supersteps.intake]] job as
+    * primitive (src, dst) arrays, ≈ 16 B per edge, not as Rows. A graph
+    * this small costs more in per-level scheduler latency than the
+    * whole traversal does locally, and the reference itself
+    * materializes the full adjacency matrix per query
+    * (secondary_server.c:126-137). Above the threshold the
+    * level-synchronous frontier loop — the only shape that works at
+    * 100 TB — is used unconditionally; specs pin both paths to
+    * identical output by forcing maxLocalEdges = 0. Measured at the
+    * sf1-equivalent supply graph (5.87M edges), when the twins still
+    * collected Rows: collecting a 4M-row frame cost MORE than one
+    * distributed star round over it, so raising this bought nothing
+    * even where driver heap would allow it — the crossover was
+    * row-collect-bound, not memory-bound.
     * [[connectedComponents]] collects nothing: for it this is the
     * forest size at or below which it finishes in one task, and so
     * that task's memory bound. Measured on 4 cores: faster than the
@@ -341,70 +345,46 @@ object GraphOps {
     * the tag's source set. Untagged callers get a constant tag they
     * can drop. This is the deterministic contract of the reference's
     * BFS (dfs_bfs.h:111-172): levels are well-defined, intra-level
-    * order is not.
+    * order is not. An edge or source row with a null is dropped.
+    *
+    * The edges are read once, by one [[Supersteps.intake]] job. If
+    * there are at most `maxLocalEdges`, the driver twin runs over the
+    * pairs it returns and that job is the call's only one; else the
+    * [[Supersteps.bfs]] frontier loop runs over the persisted intake.
     */
   def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int = Int.MaxValue,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    val e = canonEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val tagged =
       if (sources.columns.contains("tag")) sources.select(col("tag").cast("long"), col("vertex").cast("long"))
       else sources.select(lit(0L).as("tag"), col("vertex").cast("long"))
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localBfs(e, tagged, maxDepth)
-      e.unpersist()
-      return out
-    }
-    Supersteps.bfs(e, eCount, tagged, maxDepth, hubOutDegree, broadcastFrontier)
+    val in = Supersteps.intake(canonEdges(edges), maxLocalEdges, "bfs")
+    if (in.local != null) localBfs(in.local, tagged, maxDepth)
+    else Supersteps.bfs(in.pairs, in.count, tagged, maxDepth, hubOutDegree, broadcastFrontier)
   }
 
-  /** Driver-side twin of the frontier loop for sub-threshold graphs:
-    * same (tag, vertex, level) min-hop contract, identical output.
+  /** Driver-side twin of the frontier loop for sub-threshold graphs,
+    * over the intake's pairs `es`: same (tag, vertex, level) min-hop
+    * contract, identical output.
     */
-  private def localBfs(e: DataFrame, tagged: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = e.sparkSession
+  private def localBfs(es: Pairs, tagged: DataFrame, maxDepth: Int): DataFrame = {
+    val spark = tagged.sparkSession
     import spark.implicits._
-    // Flat adjacency map (vertex → growable neighbor array): O(E) build
-    // with primitive arrays — a Scala groupBy here costs more than the
-    // traversal itself at millions of edges.
-    val adj = new java.util.HashMap[Long, Array[Long]]()
-    val fill = new java.util.HashMap[Long, Int]()
-    e.collect().foreach { r =>
-      val s = r.getLong(0); val d = r.getLong(1)
-      val cur = adj.get(s)
-      if (cur == null) { adj.put(s, Array(d, 0L, 0L, 0L)); fill.put(s, 1) }
-      else {
-        val used = fill.get(s)
-        val arr = if (used == cur.length) {
-          val g = java.util.Arrays.copyOf(cur, cur.length * 2); adj.put(s, g); g
-        } else cur
-        arr(used) = d
-        fill.put(s, used + 1)
-      }
-    }
-    val srcs = collectPairs(tagged).distinct
+    val adj = Supersteps.Csr(es.xs, es.ys)
+    val srcs = tagged.collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(r => (r.getLong(0), r.getLong(1)))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    srcs.groupBy(_._1).foreach { case (tag, seeds) =>
+    srcs.distinct.groupBy(_._1).foreach { case (tag, seeds) =>
       val level = new java.util.HashMap[Long, Int]()
-      var frontier = seeds.map(_._2).distinct.toArray
+      var frontier = seeds.map(_._2).distinct
       frontier.foreach(v => level.put(v, 0))
       var lvl = 0
       while (frontier.nonEmpty && lvl < maxDepth) {
         lvl += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-        frontier.foreach { v =>
-          val ns = adj.get(v)
-          if (ns != null) {
-            val used = fill.get(v)
-            var i = 0
-            while (i < used) {
-              val w = ns(i)
-              if (!level.containsKey(w)) { level.put(w, lvl); next += w }
-              i += 1
-            }
-          }
-        }
-        frontier = next.toArray
+        val next = new mutable.ArrayBuilder.ofLong
+        frontier.foreach(v => adj.slots(v).foreach { j =>
+          val w = adj.vals(j)
+          if (!level.containsKey(w)) { level.put(w, lvl); next.addOne(w) }
+        })
+        frontier = next.result()
       }
       level.forEach((v, l) => out += ((tag, v, l)))
     }
@@ -426,18 +406,20 @@ object GraphOps {
     *
     * DFS is inherently sequential (each step depends on the full
     * visited state); the reference likewise materializes the whole
-    * adjacency matrix per query (secondary_server.c:126-137). We
-    * collect the edge list to the driver — guarded — and recurse with
-    * neighbors in ascending order. For scale-path traversal use
-    * `bfs`/`reach`; this op exists for reference parity.
+    * adjacency matrix per query (secondary_server.c:126-137). The
+    * distinct edges come to the driver in one [[Supersteps.intake]]
+    * job — guarded: more than `maxEdges` fail — and the walk visits
+    * neighbors in ascending order. An edge with a null endpoint is
+    * dropped. For scale-path traversal use `bfs`/`reach`; this op
+    * exists for reference parity.
     */
   def dfsPreorder(edges: DataFrame, source: Long, maxEdges: Long = 5000000L): DataFrame = {
     val spark = edges.sparkSession
-    val es = canonEdges(edges).distinct()
-    val cnt = es.count()
-    require(cnt <= maxEdges, s"dfsPreorder is a driver-side op; $cnt edges > $maxEdges")
-    val adj = es.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sorted }
+    val in = Supersteps.intake(canonEdges(edges).distinct(), maxEdges, "dfsPreorder")
+    if (in.local == null) in.pairs.unpersist(blocking = true)
+    require(in.local != null, s"dfsPreorder is a driver-side op; ${in.count} edges > $maxEdges")
+    val adj = Supersteps.Csr(in.local.xs, in.local.ys)
+    adj.keys.indices.foreach(i => java.util.Arrays.sort(adj.vals, adj.offs(i), adj.offs(i + 1)))
     val seen = scala.collection.mutable.HashSet[Long]()
     val order = scala.collection.mutable.ArrayBuffer[Long]()
     // explicit stack (no JVM recursion limit); push children reversed
@@ -448,9 +430,7 @@ object GraphOps {
       if (!seen(v)) {
         seen += v
         order += v
-        adj.getOrElse(v, Array.empty[Long]).reverseIterator.foreach { w =>
-          if (!seen(w)) stack.push(w)
-        }
+        adj.slots(v).reverseIterator.foreach(j => if (!seen(adj.vals(j))) stack.push(adj.vals(j)))
       }
     }
     import spark.implicits._
@@ -2405,11 +2385,15 @@ object GraphOps {
       ue.unpersist()
       return out
     }
+    // A round reads only the previous round's cross edges and labels,
+    // so those are round checkpoints; the nominations stay, because
+    // the returned forest reads them.
+    val hy = new RoundCheckpoints(spark.sparkContext)
     // comp: (vertex, comp) — every vertex starts as its own component.
-    var comp = ue.select(col("a").as("vertex"))
+    var comp = hy.ckpt(ue.select(col("a").as("vertex"))
       .unionAll(ue.select(col("b").as("vertex"))).distinct()
       .select(col("vertex"), col("vertex").as("comp"))
-      .repartition(col("vertex")).localCheckpoint()
+      .repartition(col("vertex")))
     var live = ue
     val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
@@ -2419,9 +2403,8 @@ object GraphOps {
       // relabel both endpoints, keep cross-component edges only
       val ca = comp.select(col("vertex").as("a"), col("comp").as("cu"))
       val cb = comp.select(col("vertex").as("b"), col("comp").as("cv"))
-      val e2 = live.join(ca, "a").join(cb, "b")
-        .where(col("cu") =!= col("cv"))
-        .localCheckpoint()
+      val e2 = hy.ckpt(live.join(ca, "a").join(cb, "b")
+        .where(col("cu") =!= col("cv")))
       liveRows = e2.count()
       if (liveRows > 0) {
         // each component nominates its (w, a, b)-minimum incident edge
@@ -2443,14 +2426,16 @@ object GraphOps {
           maxLocalEdges = maxLocalEdges)
         val relabel = cc.select(col("vertex").as("comp"),
           col("component").as("newComp"))
-        comp = comp.join(relabel, Seq("comp"), "left")
+        comp = hy.ckpt(comp.join(relabel, Seq("comp"), "left")
           .select(col("vertex"),
             coalesce(col("newComp"), col("comp")).as("comp"))
-          .repartition(col("vertex")).localCheckpoint()
+          .repartition(col("vertex")))
         releaseReads(cc)
         live = e2.select("a", "b", "w")
       }
+      hy.endRound()
     }
+    hy.drain()
     ue.unpersist()
     // Component halving bounds convergence at log₂(V) ≤ 64 for any
     // real V, so live cross edges here can only mean a contraction bug

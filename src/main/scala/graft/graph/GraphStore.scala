@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Named-graph persistence: the Spark re-expression of the reference's
   * write path (primary_server.c:27-190 writes adjacency-matrix text
@@ -20,6 +21,14 @@ import org.apache.spark.sql.functions._
   * itself, as `perfbench`'s graphdb_mixed does with a per-graph
   * read-write lock. Edges are repartitioned by `src` before write so
   * downstream traversal joins co-locate by source vertex at scale.
+  *
+  * [[load]] declares the schema every snapshot is written with,
+  * `src BIGINT, dst BIGINT`, so it starts no schema-inference job, and
+  * it caches nothing. The reads of the paper's traffic (`bfs` and the
+  * ops on it, `dfsPreorder`) read the edges in their own job
+  * ([[Supersteps.intake]]) and cache no frame either, so concurrent
+  * readers of one graph share no cached edge plan that one of them
+  * could drop under another.
   */
 object GraphStore {
 
@@ -70,8 +79,12 @@ object GraphStore {
     }
   }
 
+  /** The schema [[save]] and [[upsert]] write. */
+  private val EdgeSchema = StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))
+
+  /** A named graph's edges; a graph that does not exist fails here. */
   def load(spark: SparkSession, workDir: String, name: String): DataFrame =
-    spark.read.parquet(path(workDir, name))
+    spark.read.schema(EdgeSchema).parquet(path(workDir, name))
 
   /** Write a graph in the reference's adjacency-matrix text format
     * (G*.txt: first line n, then n rows of n space-separated 0/1 —

@@ -17,6 +17,13 @@ import org.apache.spark.storage.StorageLevel
   * [[GraphOps.bfs]] and the sum-push rounds behind PageRank, PPR and
   * HITS. Each level or round is ONE Spark job and no Catalyst planning.
   *
+  * A call reads its edges exactly once, in one [[intake]] job: the
+  * (src, dst) pairs persisted as primitive arrays, their count, and —
+  * at or below the call's driver bound — every pair, on which the
+  * driver twin runs with no further job. Above the bound the loop builds
+  * its blocks from the persisted intake, so the input is never counted
+  * or cached apart from it, and no frame enters Spark's `CacheManager`.
+  *
   * A BFS level expands the frontier over the edge blocks, shuffles the
   * candidate (tag, vertex) pairs by vertex, and drops the visited ones
   * in a co-partitioned `zipPartitions` against `visited`. A push round
@@ -29,7 +36,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale geometry:
   *  - edges are CSR blocks (distinct sorted keys, offsets, values;
-  *    ≈ 16 B per edge), built once per call;
+  *    ≈ 16 B per edge), built once per call from the intake;
   *  - a loop's partition count is the session's shuffle partitions,
   *    raised so an exchanged edge partition holds at most
   *    [[GraphOps.ContractTaskEdgeBound]] edges;
@@ -45,15 +52,15 @@ import org.apache.spark.storage.StorageLevel
   *  - `visited` is the union of the last compaction and the frontiers
   *    since; every [[CompactEvery]] levels it is merged into one set per
   *    partition, materialized in that level's job;
-  *  - a level's job sends back at most `bound` frontier rows in all:
-  *    a partition ships its rows only within its 1/partitions share of
-  *    the bound, and when the whole frontier fits the bound the
-  *    partitions that held theirs back are fetched by a second job
-  *    over the cached frontier;
+  *  - a job that sends rows back (the intake's pairs, a level's
+  *    frontier) sends at most `bound` in all: a partition ships its
+  *    rows only within its 1/partitions share of the bound, and when
+  *    the whole fits the bound the partitions that held theirs back are
+  *    fetched by a second job over the cached RDD ([[collectBounded]]);
   *  - every block a call built is released before return; only the
   *    returned level frontiers or result states stay persisted.
   * At or below `maxLocalEdges` the push rounds run the same block
-  * functions on the driver, over one block of the collected edges.
+  * functions on the driver, over one block of the intake's pairs.
   *
   * Memory: every per-partition structure is a heap object that cannot
   * spill — an edge block (≈ 16 B per edge; at most
@@ -209,6 +216,12 @@ private[graft] object Supersteps {
   final class Csr(val keys: Array[Long], val offs: Array[Int], val vals: Array[Long])
       extends Serializable {
     def degree(i: Int): Int = offs(i + 1) - offs(i)
+
+    /** The slots in `vals` of key `k`'s values; empty if `k` is absent. */
+    def slots(k: Long): Range = {
+      val i = Arrays.binarySearch(keys, k)
+      if (i < 0) Range(0, 0) else Range(offs(i), offs(i + 1))
+    }
 
     /** This block minus the sources in sorted `drop`. */
     def without(drop: Array[Long]): Csr = {
@@ -406,53 +419,76 @@ private[graft] object Supersteps {
     out
   }
 
-  /** What a level's job returns per partition: the frontier size; its
-    * rows if they fit the partition's share of the broadcast bound
-    * (else null); its hub slice once hub blocks exist (else null).
+  /** Runs `job` (an RDD of one `T` per partition, over the materialized
+    * `cached`: `cached` itself or a zip with it) and returns the sum of
+    * `size`, every partition's `rows` if `ship` and that sum is at most
+    * `bound` (else null), and every partition's `side` slice (null if
+    * `side` is). The job sends back at most `bound` rows: a partition
+    * ships its rows only within its 1/partitions share of the bound, and
+    * the partitions that held theirs back are fetched from `cached` by a
+    * second job only when the whole fits the bound.
     */
-  final case class Summary(count: Long, rows: Pairs, hubRows: Pairs)
-
-  /** One partition's [[Summary]]: rows only if at most `share` (a
-    * negative share ships none), hub slice only given `hubKeys`.
-    */
-  def summary(s: PairSet, share: Long, hubKeys: Array[Long]): Summary =
-    Summary(s.size,
-      if (s.size <= share) s.pairs() else null,
-      if (hubKeys == null) null else s.pairs(v => Arrays.binarySearch(hubKeys, v) >= 0))
+  private def collectBounded[T](job: RDD[T], cached: RDD[T], bound: Long, ship: Boolean,
+      size: T => Long, rows: T => Pairs, side: T => Pairs): (Long, Pairs, Pairs) = {
+    val share = if (ship) bound / math.max(1, job.partitions.length) else -1L
+    val sums = job.sparkContext.runJob(job, (it: Iterator[T]) => {
+      val t = it.next()
+      val n = size(t)
+      (n, if (n <= share) rows(t) else null, if (side == null) null else side(t))
+    })
+    val count = sums.map(_._1).sum
+    val all =
+      if (!ship || count > bound) null
+      else {
+        val held = sums.indices.filter(sums(_)._2 == null)
+        val byPart =
+          if (held.isEmpty) Map.empty[Int, Pairs]
+          else held.zip(cached.sparkContext.runJob(cached, (it: Iterator[T]) => rows(it.next()), held)).toMap
+        concat(sums.indices.iterator.map(p => byPart.getOrElse(p, sums(p)._2)))
+      }
+    (count, all, if (side == null) null else concat(sums.iterator.map(_._3)))
+  }
 
   /** Runs `job` (an RDD over the materialized frontier `front`: `front`
     * itself or a zip with it) and returns `front`'s size, its rows if
     * `shipRows` and the size is at most `bound` (else null), and its
-    * hub slice if `hubs` is set (else null). The job sends back at most
-    * `bound` rows; partitions over their share are fetched from the
-    * cached `front` only when the whole frontier fits the bound.
+    * hub slice if `hubs` is set (else null), by [[collectBounded]]'s rule.
     */
   def summarize(job: RDD[PairSet], front: RDD[PairSet], bound: Long, shipRows: Boolean,
-      hubs: Broadcast[Array[Long]]): (Long, Pairs, Pairs) = {
-    val share = if (shipRows) bound / job.partitions.length else -1L
-    val sums = job.sparkContext.runJob(job,
-      (it: Iterator[PairSet]) => summary(it.next(), share, if (hubs == null) null else hubs.value))
-    val count = sums.map(_.count).sum
-    val rows =
-      if (!shipRows || count > bound) null
-      else {
-        val held = sums.indices.filter(sums(_).rows == null)
-        val byPart =
-          if (held.isEmpty) Map.empty[Int, Pairs]
-          else held.zip(front.sparkContext.runJob(front, (it: Iterator[PairSet]) => it.next().pairs(), held)).toMap
-        concat(sums.indices.iterator.map(p => byPart.getOrElse(p, sums(p).rows)))
-      }
-    val hubRows = if (hubs == null) null else concat(sums.iterator.map(_.hubRows))
-    (count, rows, hubRows)
+      hubs: Broadcast[Array[Long]]): (Long, Pairs, Pairs) =
+    collectBounded[PairSet](job, front, bound, shipRows, _.size.toLong, _.pairs(),
+      if (hubs == null) null else { s => val hk = hubs.value; s.pairs(v => Arrays.binarySearch(hk, v) >= 0) })
+
+  /** A call's edges as [[intake]] read them: their `count`; at or below
+    * the intake's bound every pair in `local` (`pairs` null, released);
+    * above it `local` null and the persisted `pairs`, which the caller
+    * releases.
+    */
+  final case class Intake(count: Long, local: Pairs, pairs: RDD[Pairs])
+
+  /** Reads `e`'s (src, dst) edges exactly once: ONE job over
+    * [[edgePairs]] (a row with a null endpoint is dropped), persisted
+    * MEMORY_AND_DISK, returns their count and, when it is at most
+    * `bound`, every pair by [[collectBounded]]'s rule — a held-back
+    * partition comes from the cache, not from `e`. The driver receives
+    * ≈ 16 B per edge.
+    */
+  def intake(e: DataFrame, bound: Long, name: String): Intake = {
+    val pairs = edgePairs(e).setName(s"$name edges").persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (count, local, _) = collectBounded[Pairs](pairs, pairs, bound, ship = true, _.size.toLong, p => p, null)
+      if (local == null) Intake(count, null, pairs)
+      else { pairs.unpersist(blocking = true); Intake(count, local, null) }
+    } catch { case t: Throwable => pairs.unpersist(blocking = true); throw t }
   }
 
-  /** (tag, vertex, level) min-hop rows of a tagged BFS over `e`, a
-    * persisted (src, dst) frame of `eCount` rows that this call
-    * unpersists. `bound` is the broadcast-frontier row bound.
+  /** (tag, vertex, level) min-hop rows of a tagged BFS over `edges`,
+    * the persisted pairs of an [[intake]] of `eCount` edges, which this
+    * call releases. `bound` is the broadcast-frontier row bound.
     */
-  def bfs(e: DataFrame, eCount: Long, tagged: DataFrame, maxDepth: Int,
+  def bfs(edges: RDD[Pairs], eCount: Long, tagged: DataFrame, maxDepth: Int,
       hubOutDegree: Long, bound: Long): DataFrame = {
-    val spark = e.sparkSession
+    val spark = tagged.sparkSession
     val sc = spark.sparkContext
     val part = partitioner(spark, eCount)
     val parts = part.numPartitions
@@ -479,7 +515,7 @@ private[graft] object Supersteps {
     var hubs: Broadcast[Array[Long]] = null
 
     try {
-      val blocks = own(edgePairs(e).map(p => Csr(p.xs, p.ys))
+      val blocks = own(edges.map(p => Csr(p.xs, p.ys))
         .persist(StorageLevel.MEMORY_AND_DISK), "bfs edge layout")
       var tail: RDD[Csr] = null
       var hub: RDD[Csr] = null
@@ -540,7 +576,7 @@ private[graft] object Supersteps {
         val (c, rs, hrs) = summarize(job, next, bound, shipRows = tail == null, hubs)
         count = c; rows = rs; hubRows = hrs
         shared.foreach(_.destroy()); shared.clear()
-        if (level == 1) e.unpersist(blocking = true)
+        if (level == 1) edges.unpersist(blocking = true)
         if (compacting && (superseded ne levels.head)) { release(superseded); owned -= superseded }
         if (count == 0) release(next)
         else { levels += next; recent += next; front = next }
@@ -562,7 +598,7 @@ private[graft] object Supersteps {
       shared.foreach(_.destroy())
       if (hubs != null) hubs.destroy()
       owned.foreach(release)
-      e.unpersist(blocking = true)
+      edges.unpersist(blocking = true)
     }
   }
 
@@ -656,25 +692,25 @@ private[graft] object Supersteps {
     ss.head.ids.indices.iterator.map(i => Row.fromSeq(ss.head.ids(i) +: ss.indices.map(c => ss(c).xs(i) / norms(c))))
 
   /** Runs `body` over the distinct (src, dst) `edges` with no null
-    * endpoint: on the driver if there are at most `maxLocalEdges`, else
-    * as RDD supersteps, which lay out the reverse direction if `reverse`.
+    * endpoint, read by one [[intake]]: on the driver over its pairs if
+    * there are at most `maxLocalEdges`, else as RDD supersteps over the
+    * persisted intake, which lay out the reverse direction if `reverse`.
     */
   def push(edges: DataFrame, maxLocalEdges: Long, name: String, reverse: Boolean,
       hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame = {
-    val e = edges.na.drop().distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) try body(new LocalPush(e)) finally e.unpersist()
+    val spark = edges.sparkSession
+    val in = intake(edges.na.drop().distinct(), maxLocalEdges, name)
+    if (in.local != null) body(new LocalPush(spark, in.local))
     else {
-      val g = new RddPush(e, eCount, name, reverse, hubOutDegree)
+      val g = new RddPush(spark, in.pairs, in.count, name, reverse, hubOutDegree)
       try { g.build(); body(g) } finally g.close()
     }
   }
 
-  /** The driver executor: one block of the collected edges, no hubs, no
-    * job per round.
+  /** The driver executor: one block of the intake's pairs `es`, no
+    * hubs, no job per round.
     */
-  private final class LocalPush(e: DataFrame) extends PushGraph {
-    private val es = concat(edgePairs(e).collect().iterator)
+  private final class LocalPush(spark: SparkSession, es: Pairs) extends PushGraph {
     private val ids = sortedDistinct(es.xs ++ es.ys)
     private val fwd = pushBlock(ids, Csr(es.xs, es.ys), null, null)
     private lazy val rev = pushBlock(ids, Csr(es.ys, es.xs), null, null)
@@ -684,7 +720,7 @@ private[graft] object Supersteps {
     def start(f: Long => Double): Pushed = pushed(new State(ids, ids.map(f)))
     def round(p: Push, forward: Boolean, s: Pushed): Pushed =
       pushed(gather(ids, sums(if (forward) fwd else rev, s.state.xs, null, p, 1).map(_._2), p))
-    def result(cols: (String, Pushed, Double)*): DataFrame = e.sparkSession.createDataFrame(
+    def result(cols: (String, Pushed, Double)*): DataFrame = spark.createDataFrame(
       java.util.Arrays.asList(resultRows(cols.map(_._2.state), cols.map(_._3)).toSeq: _*), resultSchema(cols))
   }
 
@@ -692,10 +728,10 @@ private[graft] object Supersteps {
     * direction's blocks by [[partOf]]; a round is one job, which
     * materializes the next state and returns its total and hub entries.
     */
-  private final class RddPush(e: DataFrame, eCount: Long, name: String, reverse: Boolean,
-      hubOutDegree: Long) extends PushGraph {
-    private val sc = e.sparkSession.sparkContext
-    private val part = partitioner(e.sparkSession, eCount)
+  private final class RddPush(spark: SparkSession, pairs: RDD[Pairs], eCount: Long, name: String,
+      reverse: Boolean, hubOutDegree: Long) extends PushGraph {
+    private val sc = spark.sparkContext
+    private val part = partitioner(spark, eCount)
     private val owned = mutable.ArrayBuffer.empty[RDD[_]]
     private val hubCasts = mutable.ArrayBuffer.empty[Broadcast[Array[Long]]]
     // states not yet released; a round reads only the one it is given
@@ -711,7 +747,6 @@ private[graft] object Supersteps {
 
     def build(): Unit = {
       val parts = part.numPartitions
-      val pairs = edgePairs(e)
       // the vertices, sorted, in their owners' partitions
       val ids = exchange(pairs.mapPartitions { it =>
         val (ps, r) = (it.next(), new Router(parts))
@@ -736,7 +771,7 @@ private[graft] object Supersteps {
       }
       val keys = dirs.flatMap(_._2).distinct.sorted.toArray
       if (keys.nonEmpty) { hubKeys = sc.broadcast(keys); hubCasts += hubKeys }
-      e.unpersist(blocking = true)
+      pairs.unpersist(blocking = true)
     }
 
     def start(f: Long => Double): Pushed = materialize(dirs.head._1.map(b => new State(b.ids, b.ids.map(f))))
@@ -776,14 +811,14 @@ private[graft] object Supersteps {
       val zipped = kept.tail.foldLeft(kept.head.map(Vector(_))) { (acc, r) =>
         acc.zipPartitions(r)((a, b) => Iterator(a.next() :+ b.next()))
       }
-      e.sparkSession.createDataFrame(zipped.flatMap(resultRows(_, norms)), resultSchema(cols))
+      spark.createDataFrame(zipped.flatMap(resultRows(_, norms)), resultSchema(cols))
     }
 
     /** Releases every block the call built but the result's states. */
     def close(): Unit = {
       hubCasts.foreach(_.destroy())
       (owned ++ live.filterNot(r => kept.exists(_ eq r))).foreach(_.unpersist(blocking = true))
-      e.unpersist(blocking = true)
+      pairs.unpersist(blocking = true)
     }
   }
 }

@@ -224,12 +224,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     val sc = spark.sparkContext
     val kruskal = GraphOps.msf(e).collect().toSet
     val before = sc.getPersistentRDDs.keySet
-    val (boruvka, marks) = audited(GraphOps.msf(e, maxLocalEdges = 0L).collect().toSet)
+    val (forest, marks) = audited(GraphOps.msf(e, maxLocalEdges = 0L))
+    val boruvka = forest.collect().toSet
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
       .map(r => Option(r.name).getOrElse(r.toString)).toSeq
     assert(boruvka === kruskal)
     assert(marks.count(_ == "cc:pass parts=1") > 1, marks)
     assert(!left.contains("cc labels"), left)
+    // the rounds' cross edges and labels go too: only the nominations
+    // the forest reads stay
+    val reads = forest.queryExecution.analyzed.collectLeaves()
+      .collect { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id }.toSet
+    assert(reads.nonEmpty && sc.getPersistentRDDs.keySet -- before === reads, left)
   }
 
   test("collected calls leave only what their results read persisted") {

@@ -216,7 +216,9 @@ class GraphSpec extends SparkSpec {
     assert(local.size.toLong === nVerts - nComps)
   }
 
-  test("connectedComponents local union-find and star loop agree") {
+  test("connectedComponents: hash graph labels alike at the default and maxLocalEdges 0") {
+    // the sf0.001 hash graph arrives in one partition, so at either
+    // maxLocalEdges its first contraction pass is the final one-task pass
     val e = DerivedGraphs.hashEdges(spark, sfDir, 512).localCheckpoint()
     val local = GraphOps.connectedComponents(e).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -255,8 +257,9 @@ class GraphSpec extends SparkSpec {
     // component each, every edge duplicated 5× in both orientations,
     // plus self-loops on members (7) and on an otherwise-ISOLATED
     // vertex (999 — must label 999), at a forced tiny threshold so
-    // the r21 iterated-contraction path runs (raw 810 edges > 100,
-    // forest floor 79 edges ≤ 100) and drops to local mid-sequence.
+    // the iterated contraction runs (raw 810 edges > 100, forest floor
+    // 79 edges ≤ 100) and drops to one task mid-sequence; at 0 the 8
+    // partitions contract in three passes (8, 2, then 1 task).
     val base = (1L to 39L).map(i => (i, i + 1)) ++
       (100L to 139L).map(i => (i, i + 1))
     val dup = (1 to 5).flatMap(_ => base ++ base.map { case (a, b) => (b, a) }) ++
@@ -266,10 +269,10 @@ class GraphSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaContract = GraphOps.connectedComponents(e, maxLocalEdges = 100L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaStars = GraphOps.connectedComponents(e, maxLocalEdges = 0L)
+    val viaPasses = GraphOps.connectedComponents(e, maxLocalEdges = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(local === viaContract)
-    assert(local === viaStars)
+    assert(local === viaPasses)
     assert(local.contains((999L, 999L)) && local.contains((40L, 1L)) &&
       local.contains((140L, 100L)))
   }
