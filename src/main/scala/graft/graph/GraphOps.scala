@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.Supersteps.Pairs
+import graft.graph.Supersteps.{Csr, Pairs}
 
 /** Distributed graph algorithms over edge-list DataFrames.
   *
@@ -326,6 +326,10 @@ object GraphOps {
   private def canonEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
 
+  /** A schema of non-null BIGINT columns `names`. */
+  private def longCols(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
   /** Collect a 2-long-column frame as pairs (the local twins' input). */
   private def collectPairs(df: DataFrame): Array[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -354,24 +358,26 @@ object GraphOps {
     */
   def bfs(edges: DataFrame, sources: DataFrame, maxDepth: Int = Int.MaxValue,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    val tagged =
-      if (sources.columns.contains("tag")) sources.select(col("tag").cast("long"), col("vertex").cast("long"))
-      else sources.select(lit(0L).as("tag"), col("vertex").cast("long"))
+    val tagged = tagOf(sources)
     val in = Supersteps.intake(canonEdges(edges), maxLocalEdges, "bfs")
-    if (in.local != null) localBfs(in.local, tagged, maxDepth)
+    if (in.local != null) localBfs(Csr(in.local.xs, in.local.ys), tagged, maxDepth, _ => true)
     else Supersteps.bfs(in.pairs, in.count, tagged, maxDepth, hubOutDegree, broadcastFrontier)
   }
 
+  /** `sources`' (vertex[, tag]) rows as (tag, vertex) longs, tag 0 if absent. */
+  private def tagOf(sources: DataFrame): DataFrame =
+    if (sources.columns.contains("tag")) sources.select(col("tag").cast("long"), col("vertex").cast("long"))
+    else sources.select(lit(0L).as("tag"), col("vertex").cast("long"))
+
   /** Driver-side twin of the frontier loop for sub-threshold graphs,
-    * over the intake's pairs `es`: same (tag, vertex, level) min-hop
-    * contract, identical output.
+    * over the intake's adjacency `adj`: same (tag, vertex, level)
+    * min-hop contract, identical output, less the vertices `keep`
+    * rejects.
     */
-  private def localBfs(es: Pairs, tagged: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = tagged.sparkSession
-    import spark.implicits._
-    val adj = Supersteps.Csr(es.xs, es.ys)
+  private def localBfs(adj: Csr, tagged: DataFrame, maxDepth: Int,
+      keep: Long => Boolean): DataFrame = {
     val srcs = tagged.collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(r => (r.getLong(0), r.getLong(1)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+    val out = new java.util.ArrayList[Row]()
     srcs.distinct.groupBy(_._1).foreach { case (tag, seeds) =>
       val level = new java.util.HashMap[Long, Int]()
       var frontier = seeds.map(_._2).distinct
@@ -386,9 +392,9 @@ object GraphOps {
         })
         frontier = next.result()
       }
-      level.forEach((v, l) => out += ((tag, v, l)))
+      level.forEach((v, l) => if (keep(v)) out.add(Row(tag, v, l)))
     }
-    out.toSeq.toDF("tag", "vertex", "level")
+    tagged.sparkSession.createDataFrame(out, Supersteps.BfsSchema)
   }
 
   /** Single-source BFS: (vertex, level). */
@@ -406,22 +412,21 @@ object GraphOps {
     *
     * DFS is inherently sequential (each step depends on the full
     * visited state); the reference likewise materializes the whole
-    * adjacency matrix per query (secondary_server.c:126-137). The
-    * distinct edges come to the driver in one [[Supersteps.intake]]
-    * job — guarded: more than `maxEdges` fail — and the walk visits
-    * neighbors in ascending order. An edge with a null endpoint is
-    * dropped. For scale-path traversal use `bfs`/`reach`; this op
-    * exists for reference parity.
+    * adjacency matrix per query (secondary_server.c:126-137). The edges
+    * come to the driver as read, repeats included, in one
+    * [[Supersteps.intake]] job — guarded: more than `maxEdges` rows
+    * fail — and the walk visits each vertex's distinct neighbors in
+    * ascending order ([[Csr.deduped]]). An edge with a null
+    * endpoint is dropped. For scale-path traversal use `bfs`/`reach`;
+    * this op exists for reference parity.
     */
   def dfsPreorder(edges: DataFrame, source: Long, maxEdges: Long = 5000000L): DataFrame = {
-    val spark = edges.sparkSession
-    val in = Supersteps.intake(canonEdges(edges).distinct(), maxEdges, "dfsPreorder")
+    val in = Supersteps.intake(canonEdges(edges), maxEdges, "dfsPreorder")
     if (in.local == null) in.pairs.unpersist(blocking = true)
     require(in.local != null, s"dfsPreorder is a driver-side op; ${in.count} edges > $maxEdges")
-    val adj = Supersteps.Csr(in.local.xs, in.local.ys)
-    adj.keys.indices.foreach(i => java.util.Arrays.sort(adj.vals, adj.offs(i), adj.offs(i + 1)))
+    val adj = Csr(in.local.xs, in.local.ys).deduped
     val seen = scala.collection.mutable.HashSet[Long]()
-    val order = scala.collection.mutable.ArrayBuffer[Long]()
+    val order = new java.util.ArrayList[Row]()
     // explicit stack (no JVM recursion limit); push children reversed
     // so the smallest neighbor is explored first
     val stack = scala.collection.mutable.Stack[Long](source)
@@ -429,12 +434,11 @@ object GraphOps {
       val v = stack.pop()
       if (!seen(v)) {
         seen += v
-        order += v
+        order.add(Row(order.size.toLong, v))
         adj.slots(v).reverseIterator.foreach(j => if (!seen(adj.vals(j))) stack.push(adj.vals(j)))
       }
     }
-    import spark.implicits._
-    order.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("pos", "vertex")
+    edges.sparkSession.createDataFrame(order, longCols("pos", "vertex"))
   }
 
   /** Terminal ("leaf") vertices of a traversal from `source` — the
@@ -443,26 +447,32 @@ object GraphOps {
     * child threads, i.e. the last vertex on each thread's path; WHICH
     * already-visited-neighbor vertices qualify is thread-race
     * dependent, but a reachable vertex with no out-neighbors always
-    * does). Deterministic contract: reachable ∧ out-degree 0. One
-    * frontier reach + one anti-join against the distinct src set.
+    * does). Deterministic contract: the rows of `reach(edges, source)`
+    * less every vertex with an out-edge; an edge with a null endpoint
+    * is dropped, so `(v, null)` gives `v` no out-edge.
+    *
+    * The edges are read once, by one [[Supersteps.intake]] job. With at
+    * most `maxLocalEdges` of them the leaves are the reached vertices
+    * that are not keys of the intake's adjacency, and that job is the
+    * call's only one. Above it, one job over the checkpointed intake
+    * keeps each partition's distinct sources (the out-degree > 0
+    * probe) before the [[Supersteps.bfs]] loop releases the intake, and
+    * the reached vertices are anti-joined against them.
     */
-  def dfsLeaves(edges: DataFrame, source: DataFrame,
-      srcVertices: Option[DataFrame] = None): DataFrame = {
-    // No edge-list checkpoint here: duplicates cannot change the answer
-    // (reach dedups its frontiers; the anti-join's probe set is
-    // distinct), the reach traversal persists its own layout inside
-    // [[bfs]], and the gate path hands in a catalog-checkpointed frame
-    // anyway — a copy here was a full redundant edge materialization
-    // (59M rows at sf10) for nothing.
-    // `srcVertices`: callers holding a degree frame (the catalog-served
-    // gate path) pass the out_deg > 0 vertex set directly — the
-    // anti-join probe then reads a vertex-sized frame instead of
-    // re-distincting the full edge list (59M rows at sf10 for a 1.5M
-    // vertex probe).
-    val e = canonEdges(edges)
-    val probe = srcVertices.getOrElse(
-      e.select(col("src").as("vertex")).distinct())
-    reach(e, source).join(probe, Seq("vertex"), "left_anti")
+  def dfsLeaves(edges: DataFrame, source: DataFrame, maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
+    val tagged = tagOf(source)
+    val in = Supersteps.intake(canonEdges(edges), maxLocalEdges, "dfsLeaves")
+    if (in.local != null) {
+      val adj = Csr(in.local.xs, in.local.ys)
+      localBfs(adj, tagged, Int.MaxValue, v => adj.slots(v).isEmpty).select("vertex")
+    } else {
+      val srcs = in.pairs.map(p => Supersteps.sortedDistinct(p.xs)).setName("dfsLeaves sources").localCheckpoint()
+      try srcs.count()
+      catch { case t: Throwable => in.pairs.unpersist(blocking = true); throw t }
+      val probe = edges.sparkSession.createDataFrame(srcs.flatMap(_.iterator.map(Row(_))), longCols("vertex"))
+      Supersteps.bfs(in.pairs, in.count, tagged, Int.MaxValue, hubOutDegree = 0L, broadcastFrontier)
+        .select("vertex").join(probe, Seq("vertex"), "left_anti")
+    }
   }
 
   /** Per-vertex in/out/total degree — one shuffle via tagged union.
@@ -527,8 +537,7 @@ object GraphOps {
       (f, sizes.map(_._1).sum, sizes.map(_._2).sum)
     }
     def frame(f: RDD[Forest], a: String, b: String): DataFrame = spark.createDataFrame(
-      f.flatMap { x => val p = x.pairs; p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))) },
-      StructType(Seq(StructField(a, LongType, nullable = false), StructField(b, LongType, nullable = false))))
+      f.flatMap { x => val p = x.pairs; p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))) }, longCols(a, b))
     def labels(f: RDD[Forest]): DataFrame = frame(f, "vertex", "component")
     def release(r: RDD[_]): Unit = r.unpersist(blocking = true)
 

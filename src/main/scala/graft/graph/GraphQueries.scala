@@ -133,11 +133,7 @@ object GraphQueries {
     // sf10 (measured: the op's dominant cost was exactly these copies)
     val e = DerivedGraphs.supplyEdges(spark, dir)
     val src = e.agg(min(col("src")).as("vertex"))
-    // anti-join probe from the shared degree catalog entry: out_deg > 0
-    // IS the distinct-src set, without re-distincting the edge list
-    val srcs = DerivedGraphs.supplyDegrees(spark, dir)
-      .where(col("out_deg") > 0).select("vertex")
-    GraphOps.dfsLeaves(e, src, srcVertices = Some(srcs)).orderBy("vertex")
+    GraphOps.dfsLeaves(e, src).orderBy("vertex")
   }
 
   val graphDfsLeavesSql: String =

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[load]] declares the schema every snapshot is written with,
   * `src BIGINT, dst BIGINT`, so it starts no schema-inference job, and
   * it caches nothing. The reads of the paper's traffic (`bfs` and the
-  * ops on it, `dfsPreorder`) read the edges in their own job
-  * ([[Supersteps.intake]]) and cache no frame either, so concurrent
+  * ops on it, `dfsLeaves`, `dfsPreorder`) read the edges in one job
+  * each ([[Supersteps.intake]]) and cache no frame either, so concurrent
   * readers of one graph share no cached edge plan that one of them
   * could drop under another.
   */

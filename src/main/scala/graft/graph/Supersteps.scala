@@ -18,11 +18,15 @@ import org.apache.spark.storage.StorageLevel
   * HITS. Each level or round is ONE Spark job and no Catalyst planning.
   *
   * A call reads its edges exactly once, in one [[intake]] job: the
-  * (src, dst) pairs persisted as primitive arrays, their count, and —
-  * at or below the call's driver bound — every pair, on which the
-  * driver twin runs with no further job. Above the bound the loop builds
-  * its blocks from the persisted intake, so the input is never counted
-  * or cached apart from it, and no frame enters Spark's `CacheManager`.
+  * (src, dst) pairs local-checkpointed as primitive arrays, their
+  * count, and — at or below the call's driver bound — every pair, on
+  * which the driver twin runs with no further job. Above the bound the
+  * loop builds its blocks from the checkpointed intake, so no later job
+  * reads, counts or caches the input, and no frame enters Spark's
+  * `CacheManager`. Duplicate edges are not planned away in front of the
+  * intake: a kernel drops them where a source's edges first meet
+  * ([[Csr.deduped]]) — the driver's one block, or an exchanged
+  * by-source block.
   *
   * A BFS level expands the frontier over the edge blocks, shuffles the
   * candidate (tag, vertex) pairs by vertex, and drops the visited ones
@@ -36,7 +40,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale geometry:
   *  - edges are CSR blocks (distinct sorted keys, offsets, values;
-  *    ≈ 16 B per edge), built once per call from the intake;
+  *    ≈ 16 B per edge), built once per call from the intake; an
+  *    exchanged block holds each of its sources' edges once;
   *  - a loop's partition count is the session's shuffle partitions,
   *    raised so an exchanged edge partition holds at most
   *    [[GraphOps.ContractTaskEdgeBound]] edges;
@@ -195,17 +200,24 @@ private[graft] object Supersteps {
     }
   }
 
+  /** Sorts `vs(from until to)` and writes its distinct values from
+    * `vs(at)` on (`at` ≤ `from`); returns the index past the last.
+    */
+  private def sortUnique(vs: Array[Long], from: Int, to: Int, at: Int): Int = {
+    Arrays.sort(vs, from, to)
+    var w = at
+    var j = from
+    while (j < to) {
+      if (w == at || vs(j) != vs(w - 1)) { vs(w) = vs(j); w += 1 }
+      j += 1
+    }
+    w
+  }
+
   /** The distinct values of `xs`, sorted. */
   private[graph] def sortedDistinct(xs: Array[Long]): Array[Long] = {
     val sorted = Arrays.copyOf(xs, xs.length)
-    Arrays.sort(sorted)
-    var d = 0
-    var i = 0
-    while (i < sorted.length) {
-      if (i == 0 || sorted(i) != sorted(d - 1)) { sorted(d) = sorted(i); d += 1 }
-      i += 1
-    }
-    Arrays.copyOf(sorted, d)
+    Arrays.copyOf(sorted, sortUnique(sorted, 0, sorted.length, 0))
   }
 
   /** Compressed adjacency: distinct sorted `keys`; the values of
@@ -229,6 +241,14 @@ private[graft] object Supersteps {
       val vs = new mutable.ArrayBuilder.ofLong
       foreachEdge((s, d) => if (Arrays.binarySearch(drop, s) < 0) { ks.addOne(s); vs.addOne(d) })
       Csr(ks.result(), vs.result())
+    }
+
+    /** This block with each key's values sorted and repeats dropped. */
+    def deduped: Csr = {
+      val vs = Arrays.copyOf(vals, vals.length)
+      val os = new Array[Int](keys.length + 1)
+      keys.indices.foreach(i => os(i + 1) = sortUnique(vs, offs(i), offs(i + 1), os(i)))
+      new Csr(keys, os, Arrays.copyOf(vs, os(keys.length)))
     }
 
     def foreachEdge(f: (Long, Long) => Unit): Unit = {
@@ -309,7 +329,10 @@ private[graft] object Supersteps {
 
   /** Exchanges `edges` by source into `part`'s partitioning, once, and
     * splits off the hubs: the BFS loop's exchanged layout and both push
-    * directions are built here. `edges` is unpersisted once exchanged.
+    * directions are built here. An exchanged block is the first place
+    * all of a source's edges meet, so it drops repeated edges there
+    * ([[Csr.deduped]]), before hubs are picked and degrees counted.
+    * `edges` is unpersisted once exchanged.
     * Every RDD it leaves persisted (at `level`) is registered through
     * `own`; the caller destroys `hubs`.
     */
@@ -324,7 +347,7 @@ private[graft] object Supersteps {
       c.foreachEdge { (s, d) => val p = partOf(s, parts); ss(p).addOne(s); ds(p).addOne(d) }
       (0 until parts).iterator.map(p => (p, Pairs(ss(p).result(), ds(p).result())))
         .filter(_._2.size > 0)
-    }, part).map(p => Csr(p.xs, p.ys)).persist(level), s"$name edges by src")
+    }, part).map(p => Csr(p.xs, p.ys).deduped).persist(level), s"$name edges by src")
     val threshold = GraphOps.hubThreshold(eCount, parts, hubOutDegree)
     val found = sc.runJob(bySrc, (it: Iterator[Csr]) => {
       val c = it.next()
@@ -461,20 +484,21 @@ private[graft] object Supersteps {
 
   /** A call's edges as [[intake]] read them: their `count`; at or below
     * the intake's bound every pair in `local` (`pairs` null, released);
-    * above it `local` null and the persisted `pairs`, which the caller
-    * releases.
+    * above it `local` null and the checkpointed `pairs`, which the
+    * caller releases.
     */
   final case class Intake(count: Long, local: Pairs, pairs: RDD[Pairs])
 
   /** Reads `e`'s (src, dst) edges exactly once: ONE job over
-    * [[edgePairs]] (a row with a null endpoint is dropped), persisted
-    * MEMORY_AND_DISK, returns their count and, when it is at most
+    * [[edgePairs]] (a row with a null endpoint is dropped; a repeated
+    * edge is kept), local-checkpointed MEMORY_AND_DISK so no later job's
+    * lineage reaches `e`, returns their count and, when it is at most
     * `bound`, every pair by [[collectBounded]]'s rule — a held-back
-    * partition comes from the cache, not from `e`. The driver receives
-    * ≈ 16 B per edge.
+    * partition comes from the checkpoint, not from `e`. The driver
+    * receives ≈ 16 B per edge.
     */
   def intake(e: DataFrame, bound: Long, name: String): Intake = {
-    val pairs = edgePairs(e).setName(s"$name edges").persist(StorageLevel.MEMORY_AND_DISK)
+    val pairs = edgePairs(e).setName(s"$name edges").localCheckpoint()
     try {
       val (count, local, _) = collectBounded[Pairs](pairs, pairs, bound, ship = true, _.size.toLong, p => p, null)
       if (local == null) Intake(count, null, pairs)
@@ -482,9 +506,13 @@ private[graft] object Supersteps {
     } catch { case t: Throwable => pairs.unpersist(blocking = true); throw t }
   }
 
+  /** The (tag, vertex, level) rows of a BFS, on either path. */
+  val BfsSchema: StructType = StructType(Seq(StructField("tag", LongType, nullable = false),
+    StructField("vertex", LongType, nullable = false), StructField("level", IntegerType, nullable = false)))
+
   /** (tag, vertex, level) min-hop rows of a tagged BFS over `edges`,
-    * the persisted pairs of an [[intake]] of `eCount` edges, which this
-    * call releases. `bound` is the broadcast-frontier row bound.
+    * the checkpointed pairs of an [[intake]] of `eCount` edges, which
+    * this call releases. `bound` is the broadcast-frontier row bound.
     */
   def bfs(edges: RDD[Pairs], eCount: Long, tagged: DataFrame, maxDepth: Int,
       hubOutDegree: Long, bound: Long): DataFrame = {
@@ -582,8 +610,6 @@ private[graft] object Supersteps {
         else { levels += next; recent += next; front = next }
       }
 
-      val schema = StructType(Seq(StructField("tag", LongType, nullable = false),
-        StructField("vertex", LongType, nullable = false), StructField("level", IntegerType, nullable = false)))
       val out = sc.union(levels.zipWithIndex.map { case (f, l) =>
         f.mapPartitions(_.map(s => (l, s)), preservesPartitioning = true) }.toSeq)
         .flatMap { case (l, s) =>
@@ -591,7 +617,7 @@ private[graft] object Supersteps {
           s.foreach((t, v) => rows += Row(t, v, l))
           rows
         }
-      spark.createDataFrame(out, schema)
+      spark.createDataFrame(out, BfsSchema)
     } catch {
       case t: Throwable => levels.foreach(release); throw t
     } finally {
@@ -692,14 +718,16 @@ private[graft] object Supersteps {
     ss.head.ids.indices.iterator.map(i => Row.fromSeq(ss.head.ids(i) +: ss.indices.map(c => ss(c).xs(i) / norms(c))))
 
   /** Runs `body` over the distinct (src, dst) `edges` with no null
-    * endpoint, read by one [[intake]]: on the driver over its pairs if
-    * there are at most `maxLocalEdges`, else as RDD supersteps over the
-    * persisted intake, which lay out the reverse direction if `reverse`.
+    * endpoint, read as given by one [[intake]]: on the driver over its
+    * pairs if there are at most `maxLocalEdges`, else as RDD supersteps
+    * over the checkpointed intake, which lay out the reverse direction
+    * if `reverse`. Each executor drops repeated edges in its blocks
+    * ([[Csr.deduped]]), so no DataFrame `distinct` runs in front.
     */
   def push(edges: DataFrame, maxLocalEdges: Long, name: String, reverse: Boolean,
       hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val in = intake(edges.na.drop().distinct(), maxLocalEdges, name)
+    val in = intake(edges, maxLocalEdges, name)
     if (in.local != null) body(new LocalPush(spark, in.local))
     else {
       val g = new RddPush(spark, in.pairs, in.count, name, reverse, hubOutDegree)
@@ -707,13 +735,13 @@ private[graft] object Supersteps {
     }
   }
 
-  /** The driver executor: one block of the intake's pairs `es`, no
-    * hubs, no job per round.
+  /** The driver executor: one deduplicated block of the intake's pairs
+    * `es`, no hubs, no job per round.
     */
   private final class LocalPush(spark: SparkSession, es: Pairs) extends PushGraph {
     private val ids = sortedDistinct(es.xs ++ es.ys)
-    private val fwd = pushBlock(ids, Csr(es.xs, es.ys), null, null)
-    private lazy val rev = pushBlock(ids, Csr(es.ys, es.xs), null, null)
+    private val fwd = pushBlock(ids, Csr(es.xs, es.ys).deduped, null, null)
+    private lazy val rev = pushBlock(ids, Csr(es.ys, es.xs).deduped, null, null)
     private def pushed(s: State) = new Pushed(s.xs.sum, s, null, null)
 
     def vertices: Long = ids.length

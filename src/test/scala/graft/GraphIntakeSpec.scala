@@ -2,18 +2,20 @@ package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 
+import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
-import graft.graph.{GraphOps, GraphStore}
+import graft.graph.{DerivedGraphs, GraphOps, GraphQueries, GraphStore}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.{col, min}
 
 /** The graph read path: `GraphStore.load` starts no job, a traversal
   * reads its edges in one intake job and caches no frame, a null
-  * endpoint is dropped on every path, and concurrent readers of one
-  * stored graph get the serial answers.
+  * endpoint is dropped and a repeated edge counts once on every path,
+  * and concurrent readers of one stored graph get the serial answers.
   */
 class GraphIntakeSpec extends SparkSpec {
   import GraphIntakeSpec.Job
@@ -32,7 +34,7 @@ class GraphIntakeSpec extends SparkSpec {
         // `shuffleDepId` is Spark-internal: set on a shuffle-map stage only
         val last = js.stageInfos.maxBy(_.stageId)
         val mapStage = last.getClass.getMethod("shuffleDepId").invoke(last).asInstanceOf[Option[_]].nonEmpty
-        seen.add(js.jobId -> Job(!mapStage,
+        seen.add(js.jobId -> Job(!mapStage, js.stageInfos.size,
           js.stageInfos.flatMap(_.rddInfos.map(_.name)), spark.sharedState.cacheManager.isEmpty))
       }
     }
@@ -85,6 +87,17 @@ class GraphIntakeSpec extends SparkSpec {
   private def ranks(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
+  private def vertices(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+
+  /** The vertices reachable from `src` over `es` that have no out-edge. */
+  private def reachableSinks(es: Seq[(Long, Long)], src: Long): Set[Long] = {
+    val adj = es.groupMap(_._1)(_._2)
+    val seen = mutable.Set(src)
+    val todo = mutable.Stack(src)
+    while (todo.nonEmpty) adj.getOrElse(todo.pop(), Nil).foreach(w => if (seen.add(w)) todo.push(w))
+    seen.toSet -- adj.keySet
+  }
+
   test("GraphStore.load starts no job, and a missing graph fails at load") {
     stored("loaded", randomEdges(1, 200, 800))
     val (e, jobs) = jobsOf(GraphStore.load(spark, store, "loaded"))
@@ -122,21 +135,34 @@ class GraphIntakeSpec extends SparkSpec {
     val e = stored("ranked", randomEdges(4, 300, 1200))
     for (iters <- Seq(2, 6)) {
       val (_, jobs) = jobsOf(GraphOps.pagerank(e, iters).collect())
-      // the distinct's exchange runs as AQE's own shuffle-map stage job
-      assert(jobs.count(_.action) === 1, s"iters=$iters jobs: $jobs")
-      assert(jobs.filter(_.action).head.rdds.contains("rank edges"))
+      // the intake is the call's only job
+      assert(jobs.size === 1 && jobs.head.action, s"iters=$iters jobs: $jobs")
+      assert(jobs.head.rdds.contains("rank edges"))
       assertNoCache(jobs, s"pagerank iters=$iters")
     }
   }
 
-  test("dfsPreorder reads its distinct edges in one action, with no separate count") {
+  test("a distributed pagerank starts no AQE map-stage job") {
     spark.catalog.clearCache()
-    val e = stored("walked", randomEdges(5, 300, 1200))
+    val e = stored("ranked-large", randomEdges(12, 300, 1200))
+    val (_, jobs) = jobsOf(GraphOps.pagerank(e, 3, maxLocalEdges = 0L).collect())
+    assert(jobs.nonEmpty && jobs.forall(_.action), s"jobs: $jobs")
+    assert(jobs.head.rdds.contains("rank edges"))
+    assertNoCache(jobs, "distributed pagerank")
+  }
+
+  test("dfsPreorder starts one job and no shuffle-map stage") {
+    spark.catalog.clearCache()
+    val es = randomEdges(5, 300, 1200)
+    val e = stored("walked", es)
     val (order, jobs) = jobsOf(preorder(GraphOps.dfsPreorder(e, 1L)))
-    assert(jobs.count(_.action) === 1, s"jobs: $jobs")
-    assert(jobs.filter(_.action).head.rdds.contains("dfsPreorder edges"))
+    assert(jobs.size === 1 && jobs.head.stages === 1, s"jobs: $jobs")
+    assert(jobs.head.rdds.contains("dfsPreorder edges"))
     assertNoCache(jobs, "dfsPreorder")
     assert(order.head === 1L && order.distinct === order)
+    val s = spark
+    import s.implicits._
+    assert(preorder(GraphOps.dfsPreorder(es.distinct.toDF("src", "dst"), 1L)) === order, "duplicates changed the order")
     val err = intercept[IllegalArgumentException](GraphOps.dfsPreorder(e, 1L, maxEdges = 10L))
     assert(err.getMessage.startsWith("requirement failed: dfsPreorder is a driver-side op; "))
     assert(spark.sparkContext.getPersistentRDDs.values.forall(_.name != "dfsPreorder edges"))
@@ -157,6 +183,76 @@ class GraphIntakeSpec extends SparkSpec {
       assert(ranks(GraphOps.pagerank(nulls, 3, maxLocalEdges = maxLocal)) === pr, s"pagerank maxLocalEdges=$maxLocal")
     }
     assert(preorder(GraphOps.dfsPreorder(nulls, 1L)) === preorder(GraphOps.dfsPreorder(clean, 1L)))
+  }
+
+  test("dfsLeaves of a stored graph is one job; distributed, one job scans it") {
+    spark.catalog.clearCache()
+    val es = randomEdges(7, 400, 900)
+    val e = stored("leafy", es)
+    val (local, jobs) = jobsOf(vertices(GraphOps.dfsLeaves(GraphStore.load(spark, store, "leafy"), source(1L))))
+    assert(jobs.size === 1, s"jobs: $jobs")
+    assert(jobs.head.rdds.contains("dfsLeaves edges"))
+    assertNoCache(jobs, "dfsLeaves")
+    val (dist, distJobs) = jobsOf(vertices(GraphOps.dfsLeaves(e, source(1L), maxLocalEdges = 0L)))
+    assert(distJobs.count(_.rdds.contains("FileScanRDD")) === 1, s"jobs: $distJobs")
+    assertNoCache(distJobs, "distributed dfsLeaves")
+    assert(local.nonEmpty && dist === local && local === reachableSinks(es, 1L))
+  }
+
+  test("dfsLeaves equals the reachable sinks on both paths") {
+    val s = spark
+    import s.implicits._
+    for (seed <- 20L until 26L) {
+      val rng = new scala.util.Random(seed)
+      val n = 30 + rng.nextInt(200)
+      val es = randomEdges(seed, n, n * (1 + rng.nextInt(3)))
+      val e = es.toDF("src", "dst")
+      val src = 1L + rng.nextInt(n)
+      for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+        val got = GraphOps.dfsLeaves(e, source(src), maxLocalEdges = maxLocal).collect().map(_.getLong(0))
+        assert(got.toSet === reachableSinks(es, src) && got.length === got.distinct.length,
+          s"seed=$seed source=$src maxLocalEdges=$maxLocal")
+      }
+    }
+  }
+
+  test("a (v, null) edge leaves v a leaf, on both paths") {
+    val s = spark
+    import s.implicits._
+    val es = randomEdges(8, 60, 150)
+    val nulls = (es.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Some(2L), None), (None, Some(1L)), (Some(1L), Some(900L)), (Some(900L), None))).toDF("src", "dst")
+    val want = reachableSinks(es :+ ((1L, 900L)), 1L)
+    assert(want.contains(900L))
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L))
+      assert(vertices(GraphOps.dfsLeaves(nulls, source(1L), maxLocalEdges = maxLocal)) === want,
+        s"maxLocalEdges=$maxLocal")
+  }
+
+  test("push ops over repeated edges equal their deduplicated answers") {
+    val s = spark
+    import s.implicits._
+    val es = randomEdges(9, 80, 300)
+    val (dup, clean) = ((es ++ es).toDF("src", "dst"), es.distinct.toDF("src", "dst"))
+    def close(a: Map[Long, Seq[Double]], b: Map[Long, Seq[Double]]): Boolean =
+      a.keySet == b.keySet && a.forall { case (v, xs) =>
+        xs.zip(b(v)).forall { case (x, y) => math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y)) }
+      }
+    def scores(df: DataFrame): Map[Long, Seq[Double]] =
+      df.collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getDouble)).toMap
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+      val runs = Seq[(String, DataFrame => DataFrame)](
+        "pagerank" -> (GraphOps.pagerank(_, 3, maxLocalEdges = maxLocal)),
+        "ppr" -> (GraphOps.ppr(_, Seq(1L, 5L), 3, maxLocalEdges = maxLocal)),
+        "hits" -> (GraphOps.hits(_, 3, maxLocalEdges = maxLocal)))
+      runs.foreach { case (op, f) => assert(close(scores(f(dup)), scores(f(clean))), s"$op maxLocalEdges=$maxLocal") }
+    }
+  }
+
+  test("graph_dfs_leaves' gate rows equal dfsLeaves on the superstep path") {
+    val e = DerivedGraphs.supplyEdges(spark, sfDir)
+    val dist = rowsOf(GraphOps.dfsLeaves(e, e.agg(min(col("src")).as("vertex")), maxLocalEdges = 0L))
+    assert(dist.nonEmpty && dist === rowsOf(GraphQueries.graphDfsLeaves(spark, sfDir)))
   }
 
   test("three concurrent readers on one session get the serial answers") {
@@ -187,9 +283,9 @@ class GraphIntakeSpec extends SparkSpec {
 object GraphIntakeSpec {
 
   /** A started job: whether it is an action (its final stage is not a
-    * shuffle-map stage, as AQE's own stage jobs are), the names of the
-    * RDDs its stages run, and whether the session's `CacheManager` was
-    * empty when the listener saw it start.
+    * shuffle-map stage, as AQE's own stage jobs are), its stage count,
+    * the names of the RDDs its stages run, and whether the session's
+    * `CacheManager` was empty when the listener saw it start.
     */
-  final case class Job(action: Boolean, rdds: Seq[String], cacheEmpty: Boolean)
+  final case class Job(action: Boolean, stages: Int, rdds: Seq[String], cacheEmpty: Boolean)
 }
