@@ -148,21 +148,25 @@ object GraphOps {
   /** Edge count below which iterative traversals run on the driver —
     * the same adaptive call AQE makes when it converts a shuffle join
     * to a local broadcast: 4M edge pairs ≈ 64 MB, matching the
-    * session's autoBroadcastJoinThreshold. [[bfs]] and the push ops
-    * receive those edges from their [[Supersteps.intake]] job as
-    * primitive (src, dst) arrays, ≈ 16 B per edge, not as Rows. A graph
-    * this small costs more in per-level scheduler latency than the
-    * whole traversal does locally, and the reference itself
-    * materializes the full adjacency matrix per query
-    * (secondary_server.c:126-137). Above the threshold the
-    * level-synchronous frontier loop — the only shape that works at
-    * 100 TB — is used unconditionally; specs pin both paths to
-    * identical output by forcing maxLocalEdges = 0. Measured at the
-    * sf1-equivalent supply graph (5.87M edges), when the twins still
-    * collected Rows: collecting a 4M-row frame cost MORE than one
-    * distributed star round over it, so raising this bought nothing
-    * even where driver heap would allow it — the crossover was
-    * row-collect-bound, not memory-bound.
+    * session's autoBroadcastJoinThreshold. Every unweighted op with a
+    * driver twin compares it with the row count of its one
+    * [[Supersteps.intake]] job (repeats included) and, at or below it,
+    * receives those rows as primitive (src, dst) arrays, ≈ 16 B per
+    * edge: [[bfs]] and its callers, [[dfsLeaves]], the push ops, and
+    * the distinct-edge ops of [[simpleEdges]] (self-loops excluded):
+    * kCore, coreness, densestSubgraph, kTruss, triangleCounts,
+    * labelPropagation, scc and betweenness. msf and sssp, which carry a
+    * weight, count their own frames. A graph this small costs more in
+    * per-level scheduler latency than the whole traversal does locally,
+    * and the reference itself materializes the full adjacency matrix
+    * per query (secondary_server.c:126-137). Above the threshold the
+    * level-synchronous loops — the only shape that works at 100 TB —
+    * are used unconditionally; specs pin both paths to identical
+    * output by forcing maxLocalEdges = 0. Measured at the sf1-equivalent
+    * supply graph (5.87M edges), when the twins still collected Rows:
+    * collecting a 4M-row frame cost MORE than one distributed star
+    * round over it — the crossover was row-collect-bound, not
+    * memory-bound.
     * [[connectedComponents]] collects nothing: for it this is the
     * forest size at or below which it finishes in one task, and so
     * that task's memory bound. Measured on 4 cores: faster than the
@@ -330,18 +334,67 @@ object GraphOps {
   private def longCols(names: String*): StructType =
     StructType(names.map(StructField(_, LongType, nullable = false)))
 
-  /** Collect a 2-long-column frame as pairs (the local twins' input). */
-  private def collectPairs(df: DataFrame): Array[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1)))
+  /** `edges` as undirected (src, dst) pairs, src ≤ dst. */
+  private def undirected(edges: DataFrame): DataFrame =
+    canonEdges(edges).select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
 
-  /** Driver-side adjacency list from collected edge pairs. */
-  private def adjacencyOf(pairs: Array[(Long, Long)])
-      : java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]] = {
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-    pairs.foreach { case (a, b) =>
-      adj.computeIfAbsent(a, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += b
+  /** The distinct (src, dst) edges of `e` with no self-loop or null
+    * endpoint, read once by one [[Supersteps.intake]] job of its
+    * non-loop rows. If at most `maxLocalEdges` rows were read (repeats
+    * included), their deduplicated [[Csr]], and no further job; else the
+    * distinct pairs as a local-checkpointed frame built from the intake,
+    * which is released, and the frame's row count.
+    */
+  private def simpleEdges(e: DataFrame, maxLocalEdges: Long, name: String): Either[Csr, (DataFrame, Long)] = {
+    val in = Supersteps.intake(e.where(col("src") =!= col("dst")), maxLocalEdges, name)
+    if (in.local != null) return Left(Csr(in.local.xs, in.local.ys).deduped)
+    try {
+      val rows = in.pairs.flatMap(p => p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))))
+      val d = e.sparkSession.createDataFrame(rows, longCols("src", "dst")).distinct().localCheckpoint()
+      Right((d, d.count()))
+    } finally in.pairs.unpersist(blocking = true)
+  }
+
+  /** The symmetric closure of the pairs `p`, each key's values sorted and distinct. */
+  private def symmetric(p: Pairs): Csr = Csr(p.xs ++ p.ys, p.ys ++ p.xs).deduped
+
+  /** Calls `f` on each value the sorted slot ranges `a` and `b` of `g` share. */
+  private def common(g: Csr, a: Range, b: Range)(f: Long => Unit): Unit = {
+    var (i, j) = (a.start, b.start)
+    while (i < a.end && j < b.end) {
+      val x = g.vals(i); val y = g.vals(j)
+      if (x < y) i += 1 else if (y < x) j += 1 else { f(x); i += 1; j += 1 }
     }
-    adj
+  }
+
+  /** Spark's `round(x, 6)` of a double, on the driver. */
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** A peel of the undirected graph of the intake's `adj`: vertex i is
+    * `g.keys(i)`, `nb` the vertex of each value of `g`, and `deg(i)`
+    * counts i's neighbors not yet peeled (`gone`).
+    */
+  private final class Peel(adj: Csr) {
+    val g: Csr = symmetric(adj.pairs)
+    val nb: Array[Int] = g.vals.map(java.util.Arrays.binarySearch(g.keys, _))
+    val deg: Array[Int] = Array.tabulate(g.keys.length)(g.degree)
+    val gone = new Array[Boolean](deg.length)
+
+    /** Removes vertex i, lowering its live neighbors' degrees. */
+    def remove(i: Int)(lowered: Int => Unit): Unit = {
+      gone(i) = true
+      (g.offs(i) until g.offs(i + 1)).map(nb).foreach(w => if (!gone(w)) { deg(w) -= 1; lowered(w) })
+    }
+
+    /** Peels each live vertex of degree ≤ k, cascading; `f` sees each. */
+    def upTo(k: Int)(f: Int => Unit): Unit = {
+      val todo = mutable.Stack(deg.indices.filter(i => !gone(i) && deg(i) <= k): _*)
+      while (todo.nonEmpty) {
+        val i = todo.pop()
+        if (!gone(i)) { f(i); remove(i)(w => if (deg(w) <= k) todo.push(w)) }
+      }
+    }
   }
 
   /** Multi-source, tagged BFS. `sources` has columns (vertex[, tag]);
@@ -787,22 +840,19 @@ object GraphOps {
     * one degree aggregation + two semi-joins (shuffle on vertex id);
     * round count is bounded by the longest peel chain, and edges only
     * shrink — the standard distributed formulation. Convergence is
-    * detected on the edge count (pruning is monotone).
+    * detected on the edge count (pruning is monotone), with no round
+    * cap. Driver twin at or below `maxLocalEdges` ([[simpleEdges]]).
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = Int.MaxValue,
-      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    var e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    var n = e.count()
-    if (n <= maxLocalEdges) return localKCore(edges.sparkSession, e, k)
+  def kCore(edges: DataFrame, k: Int, maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
+    var (e, n) = simpleEdges(undirected(edges), maxLocalEdges, "kCore") match {
+      case Left(adj) => return localKCore(edges.sparkSession, adj, k)
+      case Right((d, c)) => (d.toDF("u", "v"), c)
+    }
     var prev = -1L
-    var rounds = 0
     // linear prune chain: round N reads only round N-1's edge frame,
     // so superseded edge checkpoints free inline (RoundCheckpoints)
     val hy = new RoundCheckpoints(edges.sparkSession.sparkContext)
-    while (n != prev && n > 0 && rounds < maxRounds) {
-      rounds += 1
+    while (n != prev && n > 0) {
       prev = n
       val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
         .groupBy("x").agg(count(lit(1)).as("d"))
@@ -846,18 +896,15 @@ object GraphOps {
     * as [[corenessPeel]] — a second, independently-shaped
     * implementation the spec cross-checks the fixpoint against. Every
     * vertex incident to an edge is emitted (coreness ≥ 1); driver twin
-    * under the edge threshold (spec pins all three paths identical on
-    * planted graphs).
+    * at or below `maxLocalEdges` ([[simpleEdges]]; spec pins all three
+    * paths identical on planted graphs).
     */
   def coreness(edges: DataFrame,
-      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val spark = edges.sparkSession
-    val e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    if (e.count() <= maxLocalEdges) return localCoreness(spark, e)
-    corenessHIndex(e)
-  }
+      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
+    simpleEdges(undirected(edges), maxLocalEdges, "coreness") match {
+      case Left(adj) => localCoreness(edges.sparkSession, adj)
+      case Right((e, _)) => corenessHIndex(e.toDF("u", "v"))
+    }
 
   /** Distributed h-index fixpoint core for [[coreness]] on a canonical
     * checkpointed `(u, v)` frame. Estimates start at the degree; each
@@ -968,9 +1015,7 @@ object GraphOps {
   private[graft] def corenessPeel(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
+    var e = undirected(edges).toDF("u", "v").where(col("u") =!= col("v")).distinct().localCheckpoint()
     var n = e.count()
     val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 0L
@@ -1009,29 +1054,20 @@ object GraphOps {
     peeled.foldLeft(Seq.empty[(Long, Long)].toDF("vertex", "coreness"))(_ unionAll _)
   }
 
-  /** Driver-side coreness twin: the same incremental peel on a
-    * collected edge array.
+  /** Driver-side coreness twin over the intake's `adj`: for k = 1, 2, …
+    * the vertices the k-core peel removes from the (k−1)-core have
+    * coreness k.
     */
-  private def localCoreness(spark: SparkSession, undirected: DataFrame): DataFrame = {
+  private def localCoreness(spark: SparkSession, adj: Csr): DataFrame = {
     import spark.implicits._
-    var es = collectPairs(undirected)
-    val core = new java.util.HashMap[Long, Long]()
-    es.foreach { case (u, v) => core.put(u, 1L); core.put(v, 1L) }
-    var k = 2L
-    while (es.nonEmpty) {
-      var changed = true
-      while (changed && es.nonEmpty) {
-        val deg = new java.util.HashMap[Long, Long]()
-        es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
-        val next = es.filter { case (u, v) => deg.get(u) >= k && deg.get(v) >= k }
-        changed = next.length != es.length
-        es = next
-      }
-      es.foreach { case (u, v) => core.put(u, k); core.put(v, k) }
+    val p = new Peel(adj)
+    val core = new Array[Long](p.deg.length)
+    var (k, left) = (1, core.length)
+    while (left > 0) {
+      p.upTo(k) { i => core(i) = k; left -= 1 }
       k += 1
     }
-    import scala.jdk.CollectionConverters._
-    core.asScala.toSeq.map { case (v, c) => (v, c) }.toDF("vertex", "coreness")
+    p.g.keys.toSeq.zip(core).toDF("vertex", "coreness")
   }
 
   /** Densest subgraph, 2.2-approx (Charikar 2000's greedy peel in the
@@ -1058,26 +1094,22 @@ object GraphOps {
     * tagged exactly once, the round it disappears), so membership in
     * the best round's snapshot is exactly `removal_round ≥ best`, and
     * no growing re-union is ever checkpointed (the same delta-frame
-    * discipline as [[coreness]]'s peel). Driver twin under the edge
-    * threshold; spec pins both paths identical on a planted
-    * clique+tail graph and pins the partition property of the deltas.
+    * discipline as [[coreness]]'s peel). Driver twin at or below
+    * `maxLocalEdges` ([[simpleEdges]]); spec pins both paths identical
+    * on a planted clique+tail graph and pins the partition property of
+    * the deltas.
     */
   def densestSubgraph(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    val m0 = e.count()
-    if (m0 <= maxLocalEdges) return localDensest(spark, e)
+    val (e, m0) = simpleEdges(undirected(edges), maxLocalEdges, "densestSubgraph") match {
+      case Left(adj) => return localDensest(spark, adj)
+      case Right((d, c)) => (d.toDF("u", "v"), c)
+    }
     val (removedAt, stats) = densestPeelRounds(e, m0)
     if (stats.isEmpty) return Seq.empty[(Long, Double)].toDF("vertex", "density")
-    // exact-rational argmax of m/n across rounds; earliest on ties
-    var best = 0
-    for (i <- 1 until stats.length)
-      if (BigInt(stats(i)._2) * BigInt(stats(best)._1) >
-          BigInt(stats(best)._2) * BigInt(stats(i)._1)) best = i
+    val best = densestRound(stats)
     val (bn, bm) = stats(best)
     removedAt
       .foldLeft(Seq.empty[(Long, Int)].toDF("vertex", "removal_round"))(_ unionAll _)
@@ -1085,6 +1117,13 @@ object GraphOps {
       .select(col("vertex"))
       .withColumn("density",
         round(lit(bm).cast("double") / lit(bn).cast("double"), 6))
+  }
+
+  /** The index of the densest (n, m) round: the exact-rational argmax
+    * of m/n, earliest on ties.
+    */
+  private def densestRound(stats: Seq[(Long, Long)]): Int = stats.indices.reduceLeft { (a, b) =>
+    if (BigInt(stats(b)._2) * stats(a)._1 > BigInt(stats(a)._2) * stats(b)._1) b else a
   }
 
   /** Distributed threshold-peel core for [[densestSubgraph]]: runs the
@@ -1131,52 +1170,41 @@ object GraphOps {
     (removedAt.toSeq, stats.toSeq)
   }
 
-  /** Driver-side densest-subgraph twin: the identical threshold peel
-    * and exact-rational best-round pick on a collected edge array.
+  /** Driver-side densest-subgraph twin over the intake's `adj`: the
+    * identical threshold peel, each vertex tagged with the round it
+    * leaves (as the distributed deltas are), and the same round pick.
     */
-  private def localDensest(spark: SparkSession, undirected: DataFrame): DataFrame = {
+  private def localDensest(spark: SparkSession, adj: Csr): DataFrame = {
     import spark.implicits._
-    var es = collectPairs(undirected)
-    val snaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Array[Long])]
-    while (es.nonEmpty) {
-      val deg = new java.util.HashMap[Long, Long]()
-      es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
-      val n = deg.size.toLong
-      val m = es.length.toLong
-      import scala.jdk.CollectionConverters._
-      snaps += ((n, m, deg.keySet().asScala.map(x => x: Long).toArray))
-      val keep = deg.asScala.collect {
-        case (x, d) if BigInt(d) * 10 * n > BigInt(22) * m => x
-      }.toSet
-      es = es.filter { case (u, v) => keep(u) && keep(v) }
+    val p = new Peel(adj)
+    val leftAt = Array.fill(p.deg.length)(Int.MaxValue)
+    var live = p.deg.indices.toArray
+    var (n, m) = (live.length.toLong, adj.vals.length.toLong)
+    val stats = mutable.ArrayBuffer.empty[(Long, Long)]
+    while (m > 0) {
+      stats += ((n, m))
+      val out = live.filter(i => BigInt(p.deg(i)) * 10 * n <= BigInt(22) * m)
+      out.foreach(i => p.remove(i)(_ => ()))
+      // a kept vertex whose every neighbor left leaves in this round too
+      live.foreach(i => if (p.gone(i) || p.deg(i) == 0) { p.gone(i) = true; leftAt(i) = stats.length })
+      live = live.filterNot(p.gone)
+      n = live.length
+      m = live.map(p.deg(_).toLong).sum / 2
     }
-    if (snaps.isEmpty) return Seq.empty[(Long, Double)].toDF("vertex", "density")
-    val (bn, bm, bverts) = snaps.reduceLeft { (a, b) =>
-      if (BigInt(b._2) * BigInt(a._1) > BigInt(a._2) * BigInt(b._1)) b else a
-    }
-    val density = BigDecimal(bm.toDouble / bn.toDouble)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    bverts.sorted.toSeq.map(v => (v, density)).toDF("vertex", "density")
+    if (stats.isEmpty) return Seq.empty[(Long, Double)].toDF("vertex", "density")
+    val best = densestRound(stats.toSeq)
+    val density = round6(stats(best)._2.toDouble / stats(best)._1.toDouble)
+    p.g.keys.indices.filter(leftAt(_) > best).map(i => (p.g.keys(i), density)).toDF("vertex", "density")
   }
 
-  /** Driver-side k-core twin for sub-threshold graphs: identical
-    * monotone-prune fixpoint, exact integer degrees.
+  /** Driver-side k-core twin over the intake's `adj`: peels every vertex
+    * of degree < k, cascading, and keeps the rest with their degrees.
     */
-  private def localKCore(spark: SparkSession, undirected: DataFrame, k: Int): DataFrame = {
+  private def localKCore(spark: SparkSession, adj: Csr, k: Int): DataFrame = {
     import spark.implicits._
-    var es = collectPairs(undirected)
-    var changed = true
-    while (changed && es.nonEmpty) {
-      val deg = new java.util.HashMap[Long, Long]()
-      es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
-      val next = es.filter { case (u, v) => deg.get(u) >= k && deg.get(v) >= k }
-      changed = next.length != es.length
-      es = next
-    }
-    val deg = new java.util.HashMap[Long, Long]()
-    es.foreach { case (u, v) => deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _) }
-    import scala.jdk.CollectionConverters._
-    deg.asScala.toSeq.map { case (v, c) => (v, c) }.toDF("vertex", "core_deg")
+    val p = new Peel(adj)
+    p.upTo(k - 1)(_ => ())
+    p.g.keys.indices.filterNot(p.gone).map(i => (p.g.keys(i), p.deg(i).toLong)).toDF("vertex", "core_deg")
   }
 
   /** k-truss decomposition of the undirected simple graph: the maximal
@@ -1191,18 +1219,18 @@ object GraphOps {
     * triangle a<b<c enumerated once, crediting its three edges),
     * never an all-pairs product. The edge set only shrinks, so rounds
     * ≤ |E| with one checkpointed wedge join + semi-join per round;
-    * driver twin below the edge threshold (spec pins both paths
-    * identical). Requires k ≥ 3 (at k ≥ 3 every surviving edge closes
-    * a triangle, so the final support join is inner).
+    * driver twin at or below `maxLocalEdges` ([[simpleEdges]]; spec
+    * pins both paths identical). Requires k ≥ 3 (at k ≥ 3 every
+    * surviving edge closes a triangle, so the final support join is
+    * inner).
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     require(k >= 3, s"kTruss needs k >= 3, got $k")
-    var e = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    var n = e.count()
-    if (n <= maxLocalEdges) return localKTruss(edges.sparkSession, e, k)
+    var (e, n) = simpleEdges(undirected(edges), maxLocalEdges, "kTruss") match {
+      case Left(adj) => return localKTruss(edges.sparkSession, adj, k)
+      case Right((d, c)) => (d.toDF("u", "v"), c)
+    }
     def support(ed: DataFrame): DataFrame = {
       val tri = ed.as("x")
         .join(ed.as("y"), col("y.u") === col("x.v"))
@@ -1227,43 +1255,36 @@ object GraphOps {
     e.join(support(e), Seq("u", "v")).select(col("u"), col("v"), col("support"))
   }
 
-  /** Driver-side k-truss twin for sub-threshold graphs: identical
-    * monotone prune fixpoint via neighbor-set intersections.
+  /** Driver-side k-truss twin over the intake's `adj`: the identical
+    * monotone prune fixpoint, an edge's support being the sorted
+    * intersection of its endpoints' neighbors.
     */
-  private def localKTruss(spark: SparkSession, undirected: DataFrame, k: Int): DataFrame = {
+  private def localKTruss(spark: SparkSession, adj: Csr, k: Int): DataFrame = {
     import spark.implicits._
-    def supportOf(es: Seq[(Long, Long)]): Map[(Long, Long), Long] = {
-      val adj = es.flatMap { case (u, v) => Seq(u -> v, v -> u) }
-        .groupBy(_._1).map { case (x, ps) => x -> ps.map(_._2).toSet }
-      es.map { case (u, v) => (u, v) -> (adj(u) & adj(v)).size.toLong }.toMap
-    }
-    var es: Seq[(Long, Long)] = collectPairs(undirected).toSeq
+    var es = adj.pairs
+    var sup = Array.empty[Long]
     var changed = true
-    while (changed && es.nonEmpty) {
-      val sup = supportOf(es)
-      val next = es.filter(p => sup(p) >= k - 2)
-      changed = next.length != es.length
-      es = next
+    while (changed) {
+      val g = symmetric(es)
+      sup = es.xs.indices.map { i => var c = 0L; common(g, g.slots(es.xs(i)), g.slots(es.ys(i)))(_ => c += 1); c }.toArray
+      val keep = es.xs.indices.filter(sup(_) >= k - 2)
+      changed = keep.length != es.size
+      es = Pairs(keep.map(es.xs).toArray, keep.map(es.ys).toArray)
     }
-    val sup = supportOf(es)
-    es.map { case (u, v) => (u, v, sup((u, v))) }.toDF("u", "v", "support")
+    es.xs.indices.map(i => (es.xs(i), es.ys(i), sup(i))).toDF("u", "v", "support")
   }
 
   /** Per-vertex triangle participation counts over the undirected
     * simple graph. Edges are oriented low→high so each triangle is
     * enumerated exactly once (a<b<c) — the standard shuffle-minimal
-    * formulation; the wedge join is the only heavy stage.
+    * formulation; the wedge join is the only heavy stage. Driver twin
+    * at or below `maxLocalEdges` ([[simpleEdges]]).
     */
   def triangleCounts(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val u = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (u.count() <= maxLocalEdges) {
-      val out = localTriangles(edges.sparkSession, u)
-      u.unpersist()
-      return out
+    val u = simpleEdges(undirected(edges), maxLocalEdges, "triangleCounts") match {
+      case Left(adj) => return localTriangles(edges.sparkSession, adj)
+      case Right((d, _)) => d.toDF("a", "b")
     }
     val tri = u.as("x")
       .join(u.as("y"), col("y.a") === col("x.b"))
@@ -1275,7 +1296,8 @@ object GraphOps {
       .unionAll(tri.select(col("c")))
       .groupBy("vertex").agg(count(lit(1)).as("n_tri"))
     val out = counts.localCheckpoint()
-    tri.unpersist(); u.unpersist()
+    tri.unpersist(blocking = true)
+    releaseReads(u)
     out
   }
 
@@ -1288,9 +1310,7 @@ object GraphOps {
     * integer counts, so values are engine-exact at 6 dp.
     */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val u = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
+    val u = undirected(edges).toDF("a", "b").where(col("a") =!= col("b")).distinct().localCheckpoint()
     val deg = u.select(col("a").as("vertex")).unionAll(u.select(col("b")))
       .groupBy("vertex").agg(count(lit(1)).as("deg"))
     val tri = triangleCounts(u.select(col("a").as("src"), col("b").as("dst")))
@@ -1386,9 +1406,7 @@ object GraphOps {
     * folded into the plan as a literal.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val u = canonEdges(edges)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
+    val u = undirected(edges).toDF("a", "b").where(col("a") =!= col("b")).distinct().localCheckpoint()
     val m = u.count()
     val lab = labels.select(col("vertex"), col("community")).localCheckpoint()
     val deg = u.select(col("a").as("vertex")).unionAll(u.select(col("b")))
@@ -1422,22 +1440,23 @@ object GraphOps {
     * a chain of K small SCCs with ascending ids peels ONE component
     * per round naively (fwd = global min everywhere), but refines into
     * K singleton-class SCCs in one round here — the planted
-    * chain-of-cycles spec pins this. Sub-threshold graphs run Kosaraju
-    * on the driver.
+    * chain-of-cycles spec pins this. At or below `maxLocalEdges`
+    * ([[simpleEdges]]) Kosaraju runs on the driver.
     *
     * `maxRounds` bounds the refinement generations; a remainder that
     * resists that many refinements (each round strictly refines, so
     * this needs an adversarial nesting ≥ maxRounds deep) falls back to
-    * driver Kosaraju, guarded by [[LocalEdgeThreshold]] — past both,
-    * the op fails loudly rather than grinding.
+    * driver Kosaraju over its own intake, guarded by `maxLocalEdges` —
+    * past both, the op fails loudly rather than grinding.
     */
   def scc(edges: DataFrame, maxLocalEdges: Long = LocalEdgeThreshold,
       maxRounds: Int = 64): DataFrame = {
-    val ce = canonEdges(edges).where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint()
+    val ce = simpleEdges(canonEdges(edges), maxLocalEdges, "scc") match {
+      case Left(adj) => return localScc(edges.sparkSession, adj, Supersteps.sortedDistinct(adj.keys ++ adj.vals))
+      case Right((d, _)) => d
+    }
     val verts = ce.select(col("src").as("v")).unionAll(ce.select(col("dst").as("v")))
       .distinct().localCheckpoint()
-    if (ce.count() <= maxLocalEdges) return localScc(edges.sparkSession, ce, verts)
 
     // label(v) ← min id with a directed path to v (following `dir`)
     def minReach(e: DataFrame, vs: DataFrame, srcCol: String, dstCol: String): DataFrame = {
@@ -1487,28 +1506,25 @@ object GraphOps {
     if (remaining > 0) {
       // adversarial-depth fallback: the remainder is a strict
       // refinement maxRounds deep — run it on the driver if it fits
-      val remEdges = e
+      val rem = Supersteps.intake(e
         .join(cls.select(col("v").as("src")), Seq("src"), "left_semi")
-        .join(cls.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint()
-      require(remEdges.count() <= maxLocalEdges,
+        .join(cls.select(col("v").as("dst")), Seq("dst"), "left_semi"), maxLocalEdges, "scc remainder")
+      if (rem.local == null) rem.pairs.unpersist(blocking = true)
+      require(rem.local != null,
         s"scc: $remaining vertices unresolved after $maxRounds refinement rounds " +
           "and the remainder exceeds the driver fallback threshold")
-      out += localScc(edges.sparkSession, remEdges, cls.select(col("v")))
+      out += localScc(edges.sparkSession, Csr(rem.local.xs, rem.local.ys), cls.collect().map(_.getLong(0)).sorted)
     }
     out.reduce(_ unionAll _)
   }
 
-  /** Driver-side Kosaraju twin for sub-threshold graphs: two iterative
-    * DFS passes (finish order on G, assignment on Gᵀ), components
-    * relabeled by their minimum vertex id.
+  /** Driver-side Kosaraju twin over the distinct edges `adj` and the
+    * sorted vertices `vs`: two iterative DFS passes (finish order on G,
+    * assignment on Gᵀ), components relabeled by their minimum vertex id.
     */
-  private def localScc(spark: SparkSession, e: DataFrame, verts: DataFrame): DataFrame = {
+  private def localScc(spark: SparkSession, adj: Csr, vs: Array[Long]): DataFrame = {
     import spark.implicits._
-    val es = collectPairs(e)
-    val vs = verts.collect().map(_.getLong(0)).sorted
-    val adj = adjacencyOf(es)
-    val radj = adjacencyOf(es.map(_.swap))
+    val radj = { val p = adj.pairs; Csr(p.ys, p.xs) }
     // pass 1: iterative DFS finish order on G
     val seen = new java.util.HashSet[Long]()
     val finish = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1518,10 +1534,10 @@ object GraphOps {
         seen.add(start)
         while (stack.nonEmpty) {
           val (v, i) = stack.pop()
-          val ns = adj.getOrDefault(v, scala.collection.mutable.ArrayBuffer.empty)
+          val ns = adj.slots(v)
           if (i < ns.length) {
             stack.push((v, i + 1))
-            val w = ns(i)
+            val w = adj.vals(ns(i))
             if (!seen.contains(w)) { seen.add(w); stack.push((w, 0)) }
           } else finish += v
         }
@@ -1536,7 +1552,8 @@ object GraphOps {
         val members = scala.collection.mutable.ArrayBuffer[Long](root)
         while (stack.nonEmpty) {
           val v = stack.pop()
-          radj.getOrDefault(v, scala.collection.mutable.ArrayBuffer.empty).foreach { w =>
+          radj.slots(v).foreach { j =>
+            val w = radj.vals(j)
             if (!comp.containsKey(w)) { comp.put(w, root); members += w; stack.push(w) }
           }
         }
@@ -1777,17 +1794,16 @@ object GraphOps {
     * neighbors (ties → smallest label). Fixed iteration count — the
     * classic async LPA is run-order dependent, the sync+min-tie
     * variant is reproducible and oracle-able. One count aggregation +
-    * one top-1 reduction per round, edges cached across rounds.
+    * one top-1 reduction per round over both orientations of the
+    * distinct edges; driver twin at or below `maxLocalEdges`
+    * ([[simpleEdges]]).
     */
   def labelPropagation(edges: DataFrame, iters: Int,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val ce = canonEdges(edges).localCheckpoint() // one derivation, two branches
-    val und = ce
-      .select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(ce.select(col("dst"), col("src")))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
-    if (und.count() <= maxLocalEdges)
-      return localLpa(edges.sparkSession, und, iters)
+    val und = simpleEdges(undirected(edges), maxLocalEdges, "labelPropagation") match {
+      case Left(adj) => return localLpa(edges.sparkSession, adj, iters)
+      case Right((u, _)) => u.toDF("a", "b").unionAll(u.select(col("dst"), col("src")))
+    }
     val verts = und.select(col("a").as("v")).distinct().localCheckpoint()
     var labels = verts.withColumn("lab", col("v"))
     for (_ <- 1 to iters) {
@@ -1805,29 +1821,22 @@ object GraphOps {
     labels.select(col("v").as("vertex"), col("lab").as("community"))
   }
 
-  /** Driver-side sync-LPA twin for sub-threshold graphs. */
-  private def localLpa(spark: SparkSession, und: DataFrame, iters: Int): DataFrame = {
+  /** Driver-side sync-LPA twin over the symmetric closure of the
+    * intake's `adj`: a vertex takes its neighbors' most frequent label,
+    * the smallest on ties.
+    */
+  private def localLpa(spark: SparkSession, adj: Csr, iters: Int): DataFrame = {
     import spark.implicits._
-    val adj = adjacencyOf(collectPairs(und))
-    import scala.jdk.CollectionConverters._
-    val verts = adj.keySet().asScala.toArray.sorted
-    var lab = new java.util.HashMap[Long, Long]()
-    verts.foreach(v => lab.put(v, v))
+    val g = symmetric(adj.pairs)
+    val nb = g.vals.map(java.util.Arrays.binarySearch(g.keys, _))
+    var lab = g.keys
     for (_ <- 1 to iters) {
-      val next = new java.util.HashMap[Long, Long]()
-      verts.foreach { v =>
-        val freq = new java.util.HashMap[Long, Long]()
-        adj.get(v).foreach(n => freq.merge(lab.get(n), 1L, _ + _))
-        var bestLab = Long.MaxValue
-        var bestC = 0L
-        freq.forEach { (l, c) =>
-          if (c > bestC || (c == bestC && l < bestLab)) { bestC = c; bestLab = l }
-        }
-        next.put(v, bestLab)
+      val cur = lab
+      lab = Array.tabulate(g.keys.length) { i =>
+        (g.offs(i) until g.offs(i + 1)).groupBy(j => cur(nb(j))).minBy { case (l, js) => (-js.size, l) }._1
       }
-      lab = next
     }
-    verts.map(v => (v, lab.get(v))).toSeq.toDF("vertex", "community")
+    g.keys.toSeq.zip(lab).toDF("vertex", "community")
   }
 
   /** HITS hubs & authorities (Kleinberg 1999), fixed iteration count
@@ -1886,33 +1895,17 @@ object GraphOps {
         round(col("aa"), 6).as("adamic_adar"))
   }
 
-  /** Driver-side triangle-count twin for sub-threshold graphs: oriented
-    * higher-neighbor intersection, each triangle a<b<c counted once.
+  /** Driver-side triangle-count twin over the intake's `adj` (a → its
+    * higher neighbors, sorted): each triangle a<b<c is counted once, at
+    * edge (a, b), from the intersection of a's and b's higher neighbors.
     */
-  private def localTriangles(spark: SparkSession, u: DataFrame): DataFrame = {
+  private def localTriangles(spark: SparkSession, adj: Csr): DataFrame = {
     import spark.implicits._
-    val es = collectPairs(u)
-    val up = new java.util.HashMap[Long, scala.collection.mutable.TreeSet[Long]]()
-    es.foreach { case (a, b) =>
-      up.computeIfAbsent(a, _ => scala.collection.mutable.TreeSet.empty[Long]) += b
+    val counts = mutable.LongMap.empty[Long].withDefaultValue(0L)
+    adj.foreachEdge { (a, b) =>
+      common(adj, adj.slots(a), adj.slots(b)) { c => counts(a) += 1; counts(b) += 1; counts(c) += 1 }
     }
-    val counts = new java.util.HashMap[Long, Long]()
-    es.foreach { case (a, b) =>
-      val na = up.get(a)
-      val nb = up.get(b)
-      if (na != null && nb != null) {
-        val (small, large) = if (na.size <= nb.size) (na, nb) else (nb, na)
-        small.foreach { c =>
-          if (c != a && c != b && large.contains(c)) {
-            counts.merge(a, 1L, _ + _)
-            counts.merge(b, 1L, _ + _)
-            counts.merge(c, 1L, _ + _)
-          }
-        }
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    counts.asScala.toSeq.map { case (v, c) => (v, c) }.toDF("vertex", "n_tri")
+    counts.toSeq.toDF("vertex", "n_tri")
   }
 
   /** Deterministic seeded random walks — the corpus-sampling primitive
@@ -1987,9 +1980,10 @@ object GraphOps {
     *    graph, the id-prefix estimator's normalized error was 0.44
     *    where the hash draw's is 0.11 (GraphSpec pins ≤ 0.25 plus
     *    top-20 relative error and bridge recovery);
-    *  - execution: driver-local Brandes under [[LocalEdgeThreshold]]
-    *    edges (the reference's whole-matrix-per-query regime,
-    *    secondary_server.c:126-137), else the distributed
+    *  - execution: driver-local Brandes at or below `maxLocalEdges`
+    *    ([[simpleEdges]]; its vertices, exact sources and rows come
+    *    from the intake — the reference's whole-matrix-per-query
+    *    regime, secondary_server.c:126-137), else the distributed
     *    level-synchronous forward σ-BFS + backward dependency sweep
     *    ([[distBrandes]]) — 2·diameter shuffle rounds, frontier-sized
     *    state, nothing driver-side but the source list. Both paths
@@ -2009,22 +2003,28 @@ object GraphOps {
       sampleSources: Int = BetweennessSampleSources,
       hubOutDegree: Long = 0L): DataFrame = {
     val spark = edges.sparkSession
-    val e = canonEdges(edges).where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint()
+    import spark.implicits._
+    // source list is driver-state by design: ≤ maxExactVerts ids when
+    // exact, ≤ sampleSources when sampled — never corpus-sized
+    def pivots(verts: DataFrame): Array[Long] = verts
+      .orderBy(xxhash64(lit(BetweennessPivotSeed), col("v")), col("v"))
+      .limit(sampleSources).collect().map(_.getLong(0))
+    val (e, eCount) = simpleEdges(canonEdges(edges), maxLocalEdges, "betweenness") match {
+      case Left(adj) =>
+        val vs = Supersteps.sortedDistinct(adj.keys ++ adj.vals)
+        val srcArr = if (vs.length <= maxExactVerts) vs else pivots(vs.toSeq.toDF("v"))
+        val dep = localBrandes(adj, srcArr)
+        val scale = vs.length.toDouble / srcArr.length
+        return vs.toSeq.map(v => (v, round6(dep.getOrElse(v, 0.0) * scale), srcArr.length.toLong))
+          .toDF("vertex", "betweenness", "n_sources")
+      case Right(d) => d
+    }
     val verts = e.select(col("src").as("v"))
       .unionAll(e.select(col("dst").as("v"))).distinct().localCheckpoint()
     val nv = verts.count()
-    // source list is driver-state by design: ≤ maxExactVerts ids when
-    // exact, ≤ sampleSources when sampled — never corpus-sized
-    val srcArr: Array[Long] =
-      if (nv <= maxExactVerts) verts.collect().map(_.getLong(0)).sorted
-      else verts
-        .orderBy(xxhash64(lit(BetweennessPivotSeed), col("v")), col("v"))
-        .limit(sampleSources).collect().map(_.getLong(0))
+    val srcArr = if (nv <= maxExactVerts) verts.collect().map(_.getLong(0)).sorted else pivots(verts)
     val scale = nv.toDouble / srcArr.length
-    val dep =
-      if (e.count() <= maxLocalEdges) localBrandes(spark, collectPairs(e), srcArr)
-      else distBrandes(e, srcArr, hubOutDegree)
+    val dep = distBrandes(e, eCount, srcArr, hubOutDegree)
     verts.join(dep, verts("v") === dep("vertex"), "left")
       .select(verts("v").as("vertex"),
         round(coalesce(col("dep"), lit(0.0)) * lit(scale), 6).as("betweenness"),
@@ -2035,14 +2035,12 @@ object GraphOps {
     * sub-threshold graphs: per source, one σ-counting BFS, then the
     * backward accumulation δ(w) += σ_w/σ_v · (1+δ(v)) over
     * shortest-path-DAG out-edges (dist(v) = dist(w)+1 — no
-    * predecessor lists needed with out-adjacency at hand). Returns
-    * (vertex, dep) = Σ_sources δ, zero rows omitted.
+    * predecessor lists needed with out-adjacency at hand), over the
+    * distinct edges `adj`. Returns vertex → Σ_sources δ, zero entries
+    * omitted.
     */
-  private def localBrandes(spark: SparkSession, pairs: Array[(Long, Long)],
-      sources: Array[Long]): DataFrame = {
-    import spark.implicits._
-    val adj = adjacencyOf(pairs)
-    val total = new java.util.HashMap[Long, Double]()
+  private def localBrandes(adj: Csr, sources: Array[Long]): mutable.LongMap[Double] = {
+    val total = mutable.LongMap.empty[Double]
     sources.foreach { s =>
       val dist = new java.util.HashMap[Long, Int]()
       val sigma = new java.util.HashMap[Long, Double]()
@@ -2053,8 +2051,8 @@ object GraphOps {
         val v = q.dequeue()
         order += v
         val dv = dist.get(v)
-        val ns = adj.get(v)
-        if (ns != null) ns.foreach { w =>
+        adj.slots(v).foreach { j =>
+          val w = adj.vals(j)
           if (!dist.containsKey(w)) { dist.put(w, dv + 1); q += w }
           if (dist.get(w) == dv + 1)
             sigma.merge(w, sigma.get(v), _ + _)
@@ -2063,20 +2061,17 @@ object GraphOps {
       val dep = new java.util.HashMap[Long, Double]()
       order.reverseIterator.foreach { w =>
         val dw = dist.get(w)
-        val ns = adj.get(w)
-        if (ns != null) {
-          var acc = 0.0
-          ns.foreach { v =>
-            if (dist.containsKey(v) && dist.get(v) == dw + 1)
-              acc += (1.0 + dep.getOrDefault(v, 0.0)) / sigma.get(v)
-          }
-          if (acc != 0.0) dep.put(w, acc * sigma.get(w))
+        var acc = 0.0
+        adj.slots(w).foreach { j =>
+          val v = adj.vals(j)
+          if (dist.containsKey(v) && dist.get(v) == dw + 1)
+            acc += (1.0 + dep.getOrDefault(v, 0.0)) / sigma.get(v)
         }
+        if (acc != 0.0) dep.put(w, acc * sigma.get(w))
       }
-      dep.forEach((v, d) => if (v != s) total.merge(v, d, _ + _))
+      dep.forEach((v, d) => if (v != s) total(v) = total.getOrElse(v, 0.0) + d)
     }
-    import scala.jdk.CollectionConverters._
-    total.asScala.toSeq.map { case (v, d) => (v, d) }.toDF("vertex", "dep")
+    total
   }
 
   /** Distributed Brandes: forward level-synchronous σ-BFS (the [[bfs]]
@@ -2094,12 +2089,10 @@ object GraphOps {
     * trade), after which only frontier-sized frames move per level.
     * Driver state: nothing but loop counters.
     */
-  private def distBrandes(e0: DataFrame, sources: Array[Long],
-      hubOutDegree: Long = 0L): DataFrame = {
-    val spark = e0.sparkSession
+  private def distBrandes(e: DataFrame, eCount: Long, sources: Array[Long],
+      hubOutDegree: Long): DataFrame = {
+    val spark = e.sparkSession
     import spark.implicits._
-    val e = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
     var srcSplit: HubSplit = null
     var dstSplit: HubSplit = null
     def bySrc(): HubSplit = {
@@ -2107,8 +2100,7 @@ object GraphOps {
         val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
         eBySrc.count()
         val od = eBySrc.groupBy("src").agg(count(lit(1)).as("od"))
-        srcSplit = hubSplit(eBySrc, eCount, od, hubOutDegree,
-          releaseOnError = Seq(e))
+        srcSplit = hubSplit(eBySrc, eCount, od, hubOutDegree)
         audit("brandes:eBySrc:MEMORY_AND_DISK")
       }
       srcSplit
@@ -2124,8 +2116,7 @@ object GraphOps {
         eByDst.count()
         val ind = eByDst.groupBy("dst").agg(count(lit(1)).as("od"))
         dstSplit = hubSplit(eByDst, eCount, ind, hubOutDegree,
-          key = "dst", tailLevel = StorageLevel.DISK_ONLY,
-          releaseOnError = Seq(e))
+          key = "dst", tailLevel = StorageLevel.DISK_ONLY)
         audit("brandes:eByDst:DISK_ONLY")
       }
       dstSplit
@@ -2221,7 +2212,6 @@ object GraphOps {
       deltaFrames += delta
       l -= 1
     }
-    e.unpersist()
     if (srcSplit != null) srcSplit.unpersistAll()
     if (dstSplit != null) dstSplit.unpersistAll()
     deltaFrames.reduce(_ unionAll _)

@@ -251,6 +251,9 @@ private[graft] object Supersteps {
       new Csr(keys, os, Arrays.copyOf(vs, os(keys.length)))
     }
 
+    /** Its edges as (key, value) arrays, in slot order. */
+    def pairs: Pairs = Pairs(keys.indices.toArray.flatMap(i => Array.fill(degree(i))(keys(i))), vals)
+
     def foreachEdge(f: (Long, Long) => Unit): Unit = {
       var i = 0
       while (i < keys.length) {
@@ -489,7 +492,8 @@ private[graft] object Supersteps {
     */
   final case class Intake(count: Long, local: Pairs, pairs: RDD[Pairs])
 
-  /** Reads `e`'s (src, dst) edges exactly once: ONE job over
+  /** Reads `e`'s (src, dst) edges exactly once, for every unweighted
+    * graph op (listed at [[GraphOps.LocalEdgeThreshold]]): ONE job over
     * [[edgePairs]] (a row with a null endpoint is dropped; a repeated
     * edge is kept), local-checkpointed MEMORY_AND_DISK so no later job's
     * lineage reaches `e`, returns their count and, when it is at most

@@ -13,9 +13,10 @@ import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.{col, min}
 
 /** The graph read path: `GraphStore.load` starts no job, a traversal
-  * reads its edges in one intake job and caches no frame, a null
-  * endpoint is dropped and a repeated edge counts once on every path,
-  * and concurrent readers of one stored graph get the serial answers.
+  * or a distinct-edge op reads its edges in one intake job and caches
+  * no frame, a null endpoint is dropped and a repeated edge counts once
+  * on every path, and concurrent readers of one stored graph get the
+  * serial answers.
   */
 class GraphIntakeSpec extends SparkSpec {
   import GraphIntakeSpec.Job
@@ -253,6 +254,31 @@ class GraphIntakeSpec extends SparkSpec {
     val e = DerivedGraphs.supplyEdges(spark, sfDir)
     val dist = rowsOf(GraphOps.dfsLeaves(e, e.agg(min(col("src")).as("vertex")), maxLocalEdges = 0L))
     assert(dist.nonEmpty && dist === rowsOf(GraphQueries.graphDfsLeaves(spark, sfDir)))
+  }
+
+  test("each distinct-edge op of a stored graph is one job; distributed, one job scans it and no intake stays") {
+    spark.catalog.clearCache()
+    val nation = DerivedGraphs.nationEdges(spark, sfDir).collect().map(r => (r.getLong(0), r.getLong(1)))
+    stored("nation", nation.toSeq)
+    def load() = GraphStore.load(spark, store, "nation")
+    val ops = Seq[(String, (DataFrame, Long) => DataFrame)](
+      "kCore" -> ((e, m) => GraphOps.kCore(e, 3, maxLocalEdges = m)),
+      "coreness" -> ((e, m) => GraphOps.coreness(e, maxLocalEdges = m)),
+      "densestSubgraph" -> ((e, m) => GraphOps.densestSubgraph(e, maxLocalEdges = m)),
+      "kTruss" -> ((e, m) => GraphOps.kTruss(e, 3, maxLocalEdges = m)),
+      "triangleCounts" -> ((e, m) => GraphOps.triangleCounts(e, maxLocalEdges = m)),
+      "labelPropagation" -> ((e, m) => GraphOps.labelPropagation(e, 3, maxLocalEdges = m)),
+      "scc" -> ((e, m) => GraphOps.scc(e, maxLocalEdges = m)),
+      "betweenness" -> ((e, m) => GraphOps.betweenness(e, maxLocalEdges = m)))
+    for ((name, op) <- ops) {
+      val (local, jobs) = jobsOf(rowsOf(op(load(), GraphOps.LocalEdgeThreshold)))
+      assert(jobs.size === 1 && jobs.head.rdds.contains(s"$name edges"), s"$name jobs: $jobs")
+      assertNoCache(jobs, name)
+      val (dist, distJobs) = jobsOf(rowsOf(op(load(), 0L)))
+      assert(distJobs.count(_.rdds.contains("FileScanRDD")) === 1, s"$name jobs: $distJobs")
+      assert(spark.sparkContext.getPersistentRDDs.values.forall(_.name != s"$name edges"), name)
+      assert(local.nonEmpty && dist === local, name)
+    }
   }
 
   test("three concurrent readers on one session get the serial answers") {

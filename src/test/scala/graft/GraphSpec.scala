@@ -860,4 +860,42 @@ class GraphSpec extends SparkSpec {
     assert(spk.sparkContext.getPersistentRDDs.contains(id.get),
       "the captured id must be the persisted checkpoint RDD")
   }
+
+  test("the distinct-edge ops ignore repeats, orientation, self-loops and nulls on both paths") {
+    val spk = spark
+    import spk.implicits._
+    import org.apache.spark.sql.DataFrame
+    def bag(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val undirectedOps = Seq[(String, (DataFrame, Long) => DataFrame)](
+      "kCore" -> ((e, m) => GraphOps.kCore(e, k = 3, maxLocalEdges = m)),
+      "coreness" -> ((e, m) => GraphOps.coreness(e, maxLocalEdges = m)),
+      "densestSubgraph" -> ((e, m) => GraphOps.densestSubgraph(e, maxLocalEdges = m)),
+      "kTruss" -> ((e, m) => GraphOps.kTruss(e, k = 3, maxLocalEdges = m)),
+      "triangleCounts" -> ((e, m) => GraphOps.triangleCounts(e, maxLocalEdges = m)),
+      "labelPropagation" -> ((e, m) => GraphOps.labelPropagation(e, iters = 3, maxLocalEdges = m)))
+    val directedOps = Seq[(String, (DataFrame, Long) => DataFrame)](
+      "scc" -> ((e, m) => GraphOps.scc(e, maxLocalEdges = m)),
+      "betweenness" -> ((e, m) => GraphOps.betweenness(e, maxLocalEdges = m)))
+    for (seed <- Seq(41L, 42L)) {
+      val rng = new scala.util.Random(seed)
+      // a simple digraph on ids -12..11: no repeats, no self-loops
+      val base = Seq.fill(80)(((rng.nextInt(24) - 12).toLong, (rng.nextInt(24) - 12).toLong))
+        .filter { case (a, b) => a != b }.distinct
+      val noise = base.take(15) ++ Seq((3L, 3L), (-5L, -5L))
+      def withNull(es: Seq[(Long, Long)]) =
+        (es.map { case (a, b) => (Option(a), Option(b)) } :+ ((Option(base.head._1), Option.empty[Long])))
+          .toDF("src", "dst")
+      val cases = Seq(
+        (undirectedOps, withNull(base ++ base.take(30).map(_.swap) ++ noise.map(_.swap) ++ noise),
+          base.map { case (a, b) => (a min b, a max b) }.distinct.toDF("src", "dst")),
+        (directedOps, withNull(base ++ noise), base.toDF("src", "dst")))
+      for ((ops, dirty, clean) <- cases; (name, op) <- ops) {
+        val want = bag(op(clean, GraphOps.LocalEdgeThreshold))
+        assert(want.nonEmpty, s"$name seed=$seed")
+        for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L))
+          assert(bag(op(dirty, maxLocal)) === want, s"$name seed=$seed maxLocalEdges=$maxLocal")
+      }
+    }
+  }
 }
