@@ -56,9 +56,9 @@ object GraphOps {
     * was measured landing on whatever ops run next — the r18
     * dfs-family attribution, PROBES_r18.json). Only safe where no
     * frame from two rounds back is ever read again: connected
-    * components' star rounds, the k-core prune chain, the h-index
-    * estimate chain, msf's Borůvka cross edges and labels — NOT the
-    * peel loops that union their per-round emissions at the end. New persistent RDD ids are discovered by
+    * components' star rounds, the k-core prune chain, msf's Borůvka
+    * cross edges and labels — NOT the peel loops that union their
+    * per-round emissions at the end. New persistent RDD ids are discovered by
     * diffing getPersistentRDDs around the eager checkpoint; the loops
     * are single-threaded per op, so the diff is exactly the
     * checkpoint's blocks.
@@ -153,13 +153,15 @@ object GraphOps {
     * [[Supersteps.intake]] job (repeats included) and, at or below it,
     * receives those rows as primitive (src, dst) arrays, ≈ 16 B per
     * edge: [[bfs]] and its callers, [[dfsLeaves]], the push ops, and
-    * the distinct-edge ops of [[simpleEdges]] (self-loops excluded):
-    * kCore, coreness, densestSubgraph, kTruss, triangleCounts,
-    * labelPropagation, scc and betweenness. msf and sssp, which carry a
-    * weight, count their own frames. A graph this small costs more in
-    * per-level scheduler latency than the whole traversal does locally,
-    * and the reference itself materializes the full adjacency matrix
-    * per query (secondary_server.c:126-137). Above the threshold the
+    * the distinct-edge ops of [[loopFree]] (self-loops excluded):
+    * coreness, whose push rounds take the intake itself above the
+    * bound, and through [[simpleEdges]] kCore, densestSubgraph, kTruss,
+    * triangleCounts, labelPropagation, scc and betweenness. msf and
+    * sssp, which carry a weight, count their own frames. A graph this
+    * small costs more in per-level scheduler latency than the whole
+    * traversal does locally, and the reference itself materializes the
+    * full adjacency matrix per query (secondary_server.c:126-137).
+    * Above the threshold the
     * level-synchronous loops — the only shape that works at 100 TB —
     * are used unconditionally; specs pin both paths to identical
     * output by forcing maxLocalEdges = 0. Measured at the sf1-equivalent
@@ -338,22 +340,29 @@ object GraphOps {
   private def undirected(edges: DataFrame): DataFrame =
     canonEdges(edges).select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
 
-  /** The distinct (src, dst) edges of `e` with no self-loop or null
-    * endpoint, read once by one [[Supersteps.intake]] job of its
-    * non-loop rows. If at most `maxLocalEdges` rows were read (repeats
-    * included), their deduplicated [[Csr]], and no further job; else the
-    * distinct pairs as a local-checkpointed frame built from the intake,
-    * which is released, and the frame's row count.
+  /** The (src, dst) edges of `e` with no self-loop or null endpoint,
+    * read once by one [[Supersteps.intake]] job of its non-loop rows. If
+    * at most `maxLocalEdges` rows were read (repeats included), their
+    * deduplicated [[Csr]], and no further job; else the intake, whose
+    * checkpointed pairs the caller releases.
     */
-  private def simpleEdges(e: DataFrame, maxLocalEdges: Long, name: String): Either[Csr, (DataFrame, Long)] = {
+  private def loopFree(e: DataFrame, maxLocalEdges: Long, name: String): Either[Csr, Supersteps.Intake] = {
     val in = Supersteps.intake(e.where(col("src") =!= col("dst")), maxLocalEdges, name)
-    if (in.local != null) return Left(Csr(in.local.xs, in.local.ys).deduped)
-    try {
-      val rows = in.pairs.flatMap(p => p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))))
-      val d = e.sparkSession.createDataFrame(rows, longCols("src", "dst")).distinct().localCheckpoint()
-      Right((d, d.count()))
-    } finally in.pairs.unpersist(blocking = true)
+    if (in.local != null) Left(Csr(in.local.xs, in.local.ys).deduped) else Right(in)
   }
+
+  /** [[loopFree]]'s edges; above the bound, the distinct pairs as a
+    * local-checkpointed frame built from the intake, which is released,
+    * and the frame's row count.
+    */
+  private def simpleEdges(e: DataFrame, maxLocalEdges: Long, name: String): Either[Csr, (DataFrame, Long)] =
+    loopFree(e, maxLocalEdges, name).map { in =>
+      try {
+        val rows = in.pairs.flatMap(p => p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))))
+        val d = e.sparkSession.createDataFrame(rows, longCols("src", "dst")).distinct().localCheckpoint()
+        (d, d.count())
+      } finally in.pairs.unpersist(blocking = true)
+    }
 
   /** The symmetric closure of the pairs `p`, each key's values sorted and distinct. */
   private def symmetric(p: Pairs): Csr = Csr(p.xs ++ p.ys, p.ys ++ p.xs).deduped
@@ -813,7 +822,7 @@ object GraphOps {
     */
   private def rankPush(edges: DataFrame, seeds: Option[Seq[Long]], iters: Int,
       d: Double, maxLocalEdges: Long, hubOutDegree: Long): DataFrame = {
-    Supersteps.push(canonEdges(edges), maxLocalEdges, "rank", reverse = false, hubOutDegree) { g =>
+    Supersteps.push(canonEdges(edges), maxLocalEdges, "rank", Seq(Supersteps.Forward), hubOutDegree) { g =>
       val (base, start): (Long => Double, Long => Double) = seeds match {
         case None =>
           val (b, s) = ((1.0 - d) / g.vertices, 1.0 / g.vertices)
@@ -829,7 +838,7 @@ object GraphOps {
         def update(v: Long, in: Double): Double = base(v) + d * in
       }
       var r = g.start(start)
-      for (_ <- 1 to iters) r = g.round(step, forward = true, r)
+      for (_ <- 1 to iters) r = g.round(step, Supersteps.Forward, r)
       g.result(("rank", r, 1.0))
     }
   }
@@ -866,192 +875,73 @@ object GraphOps {
       .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
   }
 
-  /** Round count of the last DISTRIBUTED [[coreness]] run on this
-    * driver (h-index fixpoint rounds should track influence-chain
-    * depth, far below the bucket-peel's degeneracy-bound round count;
-    * GraphSpec bounds it on a hub-skewed graph).
-    */
-  @volatile private[graft] var lastCorenessRounds: Int = 0
-
   /** Full core decomposition (coreness per vertex — Batagelj &
     * Zaveršnik 2003): coreness(v) = max k such that v survives the
-    * k-core prune. Distributed shape is the vertex-local H-INDEX
-    * FIXPOINT (Montresor, De Pellegrini & Miorandi 2011, "Distributed
-    * k-core decomposition"): every vertex starts at its degree and
-    * repeatedly lowers its estimate to the h-index of its neighbors'
-    * estimates (the largest h with ≥ h neighbors estimating ≥ h);
-    * the estimates decrease monotonically and the unique fixpoint is
-    * exactly the coreness. Unlike the bucket-peel — whose global
-    * rounds serialize on the graph's DEGENERACY (67 sequential rounds
-    * ≈ 650 s on the sf10 supply graph) — every vertex refines in the
-    * SAME round, so convergence takes only as many rounds as the
-    * longest chain of influence, an order of magnitude fewer on real
-    * graphs. Each round is frontier-delta: only vertices with a
-    * changed neighbor recompute (their own estimate never feeds their
-    * own h-index), so per-round work collapses with the dirty set —
-    * one semi-join to find the recompute set, one gather join against
-    * the estimate frame, one partitioned row_number window for the
-    * h-index, one merge join; all hash-partitioned on vertex id, no
-    * growing re-union, lineage cut per round. The bucket-peel is kept
-    * as [[corenessPeel]] — a second, independently-shaped
-    * implementation the spec cross-checks the fixpoint against. Every
-    * vertex incident to an edge is emitted (coreness ≥ 1); driver twin
-    * at or below `maxLocalEdges` ([[simpleEdges]]; spec pins all three
-    * paths identical on planted graphs).
+    * k-core prune. Every vertex incident to a non-loop edge is emitted
+    * (coreness ≥ 1). The edges are read once, by one intake job of the
+    * non-loop undirected rows ([[loopFree]]); at or below
+    * `maxLocalEdges` the driver twin peels them ([[localCoreness]]).
+    *
+    * Above it, coreness is the vertex-local h-index program (Montresor,
+    * De Pellegrini & Miorandi 2011, "Distributed k-core decomposition")
+    * on the push kernel ([[Supersteps.push]]), over the symmetric
+    * closure its blocks build. A sum round gives each vertex its degree
+    * as its first estimate. Then each round every vertex sends its
+    * estimate to its neighbors, receives their histogram (combined
+    * map-side, so a hub's equal leaf estimates arrive as one entry per
+    * task) and lowers its estimate to that histogram's h-index: the
+    * largest h with at least h neighbors estimating ≥ h. Estimates only
+    * fall, are integers, and settle exactly at the coreness, so the
+    * loop stops at the first round whose total — the sum its job
+    * returns — does not change. Every vertex recomputes every round (no
+    * frontier delta): a round is one job and no query planning, and the
+    * rounds follow the longest chain of influence, not the degeneracy a
+    * bucket peel serializes on. Each round is audited as
+    * `coreness:round N`.
     */
   def coreness(edges: DataFrame,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
-    simpleEdges(undirected(edges), maxLocalEdges, "coreness") match {
+    loopFree(undirected(edges), maxLocalEdges, "coreness") match {
       case Left(adj) => localCoreness(edges.sparkSession, adj)
-      case Right((e, _)) => corenessHIndex(e.toDF("u", "v"))
+      case Right(in) =>
+        import Supersteps.Undirected
+        Supersteps.push(edges.sparkSession, in, "coreness", Seq(Undirected), hubOutDegree = 0L) { g =>
+          var est = g.round(Degree, Undirected, g.start(_ => 1.0))
+          var before = -1.0
+          var rounds = 0
+          while (est.total != before) {
+            before = est.total
+            rounds += 1
+            audit(s"coreness:round $rounds")
+            est = g.round(HIndex, Undirected, est)
+          }
+          g.result(("coreness", est, 1.0)).select(col("vertex"), col("coreness").cast(LongType).as("coreness"))
+        }
     }
 
-  /** Distributed h-index fixpoint core for [[coreness]] on a canonical
-    * checkpointed `(u, v)` frame. Estimates start at the degree; each
-    * round recomputes ONLY vertices adjacent to a vertex whose
-    * estimate changed last round (round 1: everyone), takes the
-    * h-index of the neighbors' current estimates, and clamps
-    * monotonically. Terminates when no estimate moves. The two
-    * adjacency orientations are each persisted pre-partitioned (by
-    * recompute key and by neighbor key) so every per-round join is
-    * exchange-free on the 2m-row side; everything shuffled per round
-    * is proportional to the dirty frontier.
-    *
-    * r19: the h-index is computed from the COUNT HISTOGRAM, not a
-    * per-vertex sort — h = max over distinct clipped estimate values c
-    * of min(c, |neighbors with est ≥ c|). One map-side-combined hash
-    * aggregation collapses the gathered rows to (v, est, count), the
-    * values clip at the vertex's own estimate (the monotone clamp
-    * bound, so a hub's whole high tail merges into one bucket), and
-    * the cumulative count runs over the per-vertex DISTINCT-value
-    * histogram. r18's row_number window sorted every gathered neighbor
-    * row per key — on a 10M-degree hub that per-key sort is a
-    * straggler; the histogram form is skew-immune and provably
-    * output-identical (clipping at est(v) commutes with the final
-    * least(h, est) clamp).
-    */
-  private[graft] def corenessHIndex(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // symmetric adjacency, once per run, partitioned both ways.
-    // DISK_ONLY: each copy is scanned exactly once per round, so
-    // pinning 2×2m rows in the unified region would only starve the
-    // per-round aggregation/sort of execution memory (measured: the
-    // sf10 probe's first degree agg OOMs at default driver heap with
-    // MEMORY_AND_DISK here; DISK_ONLY streams at disk bandwidth and
-    // leaves execution the whole region)
-    val adjV = e.select(col("u").as("v"), col("v").as("w"))
-      .unionAll(e.select(col("v").as("v"), col("u").as("w")))
-      .repartition(col("v")).persist(StorageLevel.DISK_ONLY)
-    val adjW = adjV.repartition(col("w"))
-      .persist(StorageLevel.DISK_ONLY)
-    // linear chain: round N reads only round N-1's merged frame, so
-    // the superseded estimate checkpoints free inline (RoundCheckpoints)
-    // — est_0 included (it feeds only round 1's merge)
-    val hy = new RoundCheckpoints(e.sparkSession.sparkContext)
-    // est_0 = degree — exchange-free on the pre-partitioned adjacency
-    var est = hy.ckpt(adjV.groupBy("v").agg(count(lit(1)).as("est")))
-    var dirty = est.select("v")
-    var nDirty = est.count()
-    var rounds = 0
-    while (nDirty > 0) {
-      rounds += 1
-      require(rounds <= (1 << 20), "coreness: h-index round guard tripped")
-      // vertices owning a dirty neighbor; their own estimate never
-      // feeds their own h-index, so nobody else can change this round
-      val recompute =
-        if (rounds == 1) dirty
-        else adjW.join(dirty.select(col("v").as("w")), Seq("w"), "left_semi")
-          .select("v").distinct()
-      // neighbor-estimate histogram: one map-side-combined hash agg
-      // (no per-key sort anywhere), then clip each value at the
-      // vertex's own estimate — h can never exceed it (the clamp
-      // below), so a hub's whole high tail merges into one bucket
-      val hist = adjV.join(recompute, Seq("v"), "left_semi")
-        .join(est.select(col("v").as("w"), col("est").as("ew")), Seq("w"))
-        .groupBy(col("v"), col("ew")).agg(count(lit(1)).as("cnt"))
-        .join(est.select(col("v"), col("est").as("cap")), Seq("v"))
-        .select(col("v"), least(col("ew"), col("cap")).as("cw"), col("cnt"))
-        .groupBy(col("v"), col("cw")).agg(sum(col("cnt")).as("cnt"))
-      // h = max over distinct clipped values c of min(c, |est ≥ c|) —
-      // the h-index from cumulative counts; the window orders the
-      // per-vertex DISTINCT-value histogram, not raw neighbor rows
-      val win = Window.partitionBy("v").orderBy(col("cw").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val newEst = hist.withColumn("cum", sum(col("cnt")).over(win))
-        .groupBy("v").agg(max(least(col("cw"), col("cum"))).as("h"))
-      // monotone clamp (the operator is provably non-increasing from
-      // est_0 = degree; the clamp also makes termination unconditional)
-      val merged = hy.ckpt(est.join(newEst, Seq("v"), "left")
-        .select(col("v"),
-          least(coalesce(col("h"), col("est")), col("est")).as("est2"),
-          (coalesce(col("h"), col("est")) < col("est")).as("chg")))
-      dirty = merged.where(col("chg")).select("v")
-      nDirty = dirty.count()
-      est = merged.select(col("v"), col("est2").as("est"))
-      hy.endRound()
-    }
-    lastCorenessRounds = rounds
-    // re-materialize the caller-facing result, then free the final
-    // round's merged checkpoint too — nothing of the loop's 2x|V|-row
-    // block sets outlives the function except the result itself
-    val out = hy.ckpt(est.select(col("v").as("vertex"), col("est").as("coreness")))
-    // blocking end-of-loop release (r19 verdict #2): the final round's
-    // superseded estimate chain and the two 2×|E| DISK_ONLY adjacency
-    // copies drop inside this op's wall, not as an async cleaner wave
-    // on the next op
-    hy.drain(keep = Seq(out))
-    adjV.unpersist(blocking = true); adjW.unpersist(blocking = true)
-    out
+  /** A vertex's neighbor count, summed over an undirected layout. */
+  private val Degree = new Supersteps.Push {
+    def send(x: Double, deg: Int): Double = 1.0
+    def update(v: Long, in: Double): Double = in
   }
 
-  /** The previous distributed shape — the degeneracy-serialized
-    * BUCKET-PEEL (each round jumps k to the remaining min degree,
-    * peels every vertex of degree ≤ k, prunes, and emits
-    * prune-isolated survivors at k) — retained as the independent
-    * cross-check for [[corenessHIndex]]: two different algorithms
-    * agreeing on the same output is the strongest oracle available
-    * for an op DuckDB cannot express directly. Not on any query path.
+  /** [[coreness]]'s round: an estimate falls to the h-index of the
+    * neighbors' estimates, if that is lower.
     */
-  private[graft] def corenessPeel(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var e = undirected(edges).toDF("u", "v").where(col("u") =!= col("v")).distinct().localCheckpoint()
-    var n = e.count()
-    val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var k = 0L
-    var guard = 0
-    while (n > 0) {
-      guard += 1
-      require(guard <= (1 << 20), "coreness: peel-round guard tripped")
-      // one degree frame per round, checkpointed: feeds the min-degree
-      // probe, the peel emit, and the prune — never recomputed
-      val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-        .groupBy("x").agg(count(lit(1)).as("d")).localCheckpoint()
-      val kmin = deg.agg(min(col("d"))).head().getLong(0)
-      if (kmin > k) k = kmin
-      peeled += deg.where(col("d") <= k)
-        .select(col("x").as("vertex"), lit(k).as("coreness")).localCheckpoint()
-      val keep = deg.where(col("d") > k).select("x")
-      e = e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("x").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint()
-      n = e.count()
-      // A kept vertex (degree > k) whose neighbors were ALL peeled this
-      // round loses every incident edge in the prune, so it never
-      // appears in a later degree frame — yet its sequential-peel level
-      // is exactly k (its degree falls to ≤ k as the neighbors leave:
-      // it is in the k-core but cannot be in the (k+1)-core, whose
-      // whole component just vanished). Emit those prune-isolated
-      // vertices now at coreness k — e.g. a star hub, whose leaves get
-      // coreness 1 while the hub would otherwise silently vanish.
-      val isolated = keep.join(
-        e.select(col("u").as("x")).unionAll(e.select(col("v").as("x"))).distinct(),
-        Seq("x"), "left_anti")
-      peeled += isolated
-        .select(col("x").as("vertex"), lit(k).as("coreness")).localCheckpoint()
+  private val HIndex = new Supersteps.Tally {
+    def send(x: Double, deg: Int): Double = x
+    def update(old: Double, h: Supersteps.Histogram): Double = {
+      // down the values; once a value is at most `best`, none below can raise it
+      var i = h.size - 1
+      var atLeast = 0L
+      var best = 0L
+      while (i >= 0 && h.value(i) > best) {
+        atLeast += h.count(i)
+        best = math.max(best, math.min(h.value(i), atLeast))
+        i -= 1
+      }
+      math.min(old, best.toDouble)
     }
-    lastCorenessRounds = guard
-    peeled.foldLeft(Seq.empty[(Long, Long)].toDF("vertex", "coreness"))(_ unionAll _)
   }
 
   /** Driver-side coreness twin over the intake's `adj`: for k = 1, 2, …
@@ -1093,8 +983,7 @@ object GraphOps {
     * per round. The deltas partition the vertex set (each vertex is
     * tagged exactly once, the round it disappears), so membership in
     * the best round's snapshot is exactly `removal_round ≥ best`, and
-    * no growing re-union is ever checkpointed (the same delta-frame
-    * discipline as [[coreness]]'s peel). Driver twin at or below
+    * no growing re-union is ever checkpointed. Driver twin at or below
     * `maxLocalEdges` ([[simpleEdges]]); spec pins both paths identical
     * on a planted clique+tail graph and pins the partition property of
     * the deltas.
@@ -1850,18 +1739,19 @@ object GraphOps {
     */
   def hits(edges: DataFrame, iters: Int,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
-    Supersteps.push(canonEdges(edges), maxLocalEdges, "hits", reverse = true, hubOutDegree) { g =>
-      def half(forward: Boolean, s: Supersteps.Pushed, norm: Double) = g.round(new Supersteps.Push {
+    import Supersteps.{Forward, Reverse}
+    Supersteps.push(canonEdges(edges), maxLocalEdges, "hits", Seq(Forward, Reverse), hubOutDegree) { g =>
+      def half(along: Supersteps.Dir, s: Supersteps.Pushed, norm: Double) = g.round(new Supersteps.Push {
         def send(x: Double, deg: Int): Double = x / norm
         def update(v: Long, in: Double): Double = in
-      }, forward, s)
+      }, along, s)
       var h = g.start(_ => 1.0)
       var a = h
       var hNorm = 1.0 // h = 1 starts unnormalized
       var aNorm = 1.0
       for (_ <- 1 to iters) {
-        a = half(forward = true, h, hNorm); aNorm = a.total  // authority ← in-edge hub mass
-        h = half(forward = false, a, aNorm); hNorm = h.total // hub ← out-edge authority mass
+        a = half(Forward, h, hNorm); aNorm = a.total // authority ← in-edge hub mass
+        h = half(Reverse, a, aNorm); hNorm = h.total // hub ← out-edge authority mass
       }
       g.result(("authority", a, aNorm), ("hub", h, hNorm))
     }

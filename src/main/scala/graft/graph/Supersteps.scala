@@ -14,8 +14,10 @@ import org.apache.spark.storage.StorageLevel
 /** Graft's level-synchronous graph loops as RDD supersteps over
   * primitive per-partition blocks, the way GraphX runs Pregel
   * (PAPERS.md: GraphX, OSDI'14): the BFS frontier loop behind
-  * [[GraphOps.bfs]] and the sum-push rounds behind PageRank, PPR and
-  * HITS. Each level or round is ONE Spark job and no Catalyst planning.
+  * [[GraphOps.bfs]], and the push rounds of a vertex [[Program]] —
+  * the sums behind PageRank, PPR and HITS, and the histogram tallies
+  * behind distributed coreness. Each level or round is ONE Spark job
+  * and no Catalyst planning.
   *
   * A call reads its edges exactly once, in one [[intake]] job: the
   * (src, dst) pairs local-checkpointed as primitive arrays, their
@@ -31,9 +33,10 @@ import org.apache.spark.storage.StorageLevel
   * A BFS level expands the frontier over the edge blocks, shuffles the
   * candidate (tag, vertex) pairs by vertex, and drops the visited ones
   * in a co-partitioned `zipPartitions` against `visited`. A push round
-  * ([[push]]) sends each vertex's message along its out-edges, sums
-  * them per destination inside the map task, and updates each vertex
-  * from its sums in the reduce task that owns it. The job materializes
+  * ([[push]]) sends each vertex's message along its out-edges, merges
+  * them per destination inside the map task (a sum, or a histogram of
+  * (value, count) entries), and updates each vertex from what it
+  * received in the reduce task that owns it. The job materializes
   * the next frontier or state (lineage cut by `localCheckpoint`) and
   * returns its size — plus the BFS frontier's rows while it is under the
   * broadcast bound, or the push state's total.
@@ -47,10 +50,11 @@ import org.apache.spark.storage.StorageLevel
   *    [[GraphOps.ContractTaskEdgeBound]] edges;
   *  - while a BFS frontier is under `graft.bfs.broadcastFrontier` it is
   *    broadcast and the edge blocks keep their input layout;
-  *  - the first larger frontier, and each push direction, exchanges
-  *    the edges once by source ([[bySource]]) into the partitioning of
-  *    the frontier, `visited` or the vertex state, so only candidates
-  *    or per-destination sums shuffle;
+  *  - the first larger frontier, and each push direction ([[Dir]]:
+  *    along the edges, against them, or both as their symmetric
+  *    closure), exchanges the edges once by source ([[bySource]]) into
+  *    the partitioning of the frontier, `visited` or the vertex state,
+  *    so only candidates or per-destination messages shuffle;
   *  - sources above the hub out-degree ([[GraphOps.hubThreshold]]) move
   *    to round-robin hub blocks, fed by broadcast of the frontier's hub
   *    slice or the hubs' messages, so no task holds a whole hub alone;
@@ -65,14 +69,16 @@ import org.apache.spark.storage.StorageLevel
   *  - every block a call built is released before return; only the
   *    returned level frontiers or result states stay persisted.
   * At or below `maxLocalEdges` the push rounds run the same block
-  * functions on the driver, over one block of the intake's pairs.
+  * functions on the driver, over one block of the intake's pairs per
+  * direction.
   *
   * Memory: every per-partition structure is a heap object that cannot
   * spill — an edge block (≈ 16 B per edge; at most
   * ContractTaskEdgeBound edges once exchanged, ≈ 256 MB), a visited set
   * and a map task's deduplicated candidates (16 B per slot, 23-46 B per
   * (tag, vertex) pair), a push state or a map task's sums (16 B per
-  * vertex; a round holds its input and output state). A task's heap
+  * vertex; a round holds its input and output state), a map task's
+  * tallies (16 B per entry, at most one per edge). A task's heap
   * must hold its partition's share of the reachable (tag, vertex) pairs
   * or of the vertices; a set past 2^30 slots (≈ 750M pairs) fails
   * rather than grow. Unlike a DataFrame anti-join or aggregation,
@@ -86,8 +92,9 @@ private[graft] object Supersteps {
 
   private val Empty = Long.MinValue
 
-  /** Parallel primitive arrays: (tag, vertex) frontier rows, or
-    * (src, dst) edges on their way through an exchange.
+  /** Parallel primitive arrays: (tag, vertex) frontier rows, (src, dst)
+    * edges on their way through an exchange, or a push round's
+    * (vertex, [[Histogram]] entry) tallies on their way to its state.
     */
   final case class Pairs(xs: Array[Long], ys: Array[Long]) {
     def size: Int = xs.length
@@ -223,7 +230,7 @@ private[graft] object Supersteps {
   /** Compressed adjacency: distinct sorted `keys`; the values of
     * `keys(i)` are `vals(offs(i) until offs(i + 1))`, in input order.
     * An edge block maps src → dst; a frontier index maps vertex → tag;
-    * a push block maps dst → sender.
+    * a push block maps dst → sender; a round's tallies vertex → entry.
     */
   final class Csr(val keys: Array[Long], val offs: Array[Int], val vals: Array[Long])
       extends Serializable {
@@ -632,19 +639,59 @@ private[graft] object Supersteps {
     }
   }
 
-  /** A sum-push vertex program: each round, a vertex with state `x` and
-    * out-degree `deg` sends `send(x, deg)` along each out-edge, and `v`
-    * takes `update(v, in)`, `in` being the sum of what it received.
+  /** A vertex program of push rounds: each round a vertex with state `x`
+    * and out-degree `deg` sends `send(x, deg)` along each out-edge, and
+    * takes its next state from what it received, merged as the
+    * program's kind says: [[Push]] sums, [[Tally]] counts.
     */
-  trait Push extends Serializable {
+  sealed trait Program extends Serializable {
     def send(x: Double, deg: Int): Double
+  }
+
+  /** Sum merge: `v` takes `update(v, in)`, `in` the sum of what it received. */
+  trait Push extends Program {
     def update(v: Long, in: Double): Double
+  }
+
+  /** Histogram merge, for messages that are integers in [0, 2^31): a map
+    * task sends each destination one (value, count) entry per distinct
+    * value it sent there, so a hub's equal messages from one task arrive
+    * as one entry. A vertex with state `old` takes `update(old, h)`, `h`
+    * the histogram of what it received.
+    */
+  trait Tally extends Program {
+    def update(old: Double, h: Histogram): Double
+  }
+
+  /** One vertex's received (value, count) entries, values ascending; a
+    * value sent from several map tasks has an entry from each. An entry
+    * is packed as value << 32 | count.
+    */
+  final class Histogram private[Supersteps] (es: Array[Long], from: Int, until: Int) {
+    def size: Int = until - from
+    def value(i: Int): Long = es(from + i) >>> 32
+    def count(i: Int): Long = es(from + i) & 0xFFFFFFFFL
   }
 
   /** Per-vertex values, `xs(i)` of `ids(i)`: a partition's push state,
     * or a map task's sums on their way to one.
     */
   private final class State(val ids: Array[Long], val xs: Array[Double]) extends Serializable
+
+  /** An edge direction push rounds run along: `block` lays out a pair
+    * partition's edges of it, `copies` per pair, persisted at `level`.
+    */
+  sealed abstract class Dir(val name: String, val copies: Int, val level: StorageLevel,
+      val block: Pairs => Csr) extends Serializable
+
+  case object Forward extends Dir("forward", 1, StorageLevel.MEMORY_AND_DISK, p => Csr(p.xs, p.ys))
+
+  /** Against the edges: read once a round, so on disk, one scan. */
+  case object Reverse extends Dir("reverse", 1, StorageLevel.DISK_ONLY, p => Csr(p.ys, p.xs))
+
+  /** Along and against the edges at once: their symmetric closure. */
+  case object Undirected extends Dir("undirected", 2, StorageLevel.MEMORY_AND_DISK,
+    p => Csr(p.xs ++ p.ys, p.ys ++ p.xs))
 
   /** A partition of one push direction: its vertices `ids` (sorted),
     * their out-degrees `deg` over its own edges, and its in-edges `in`,
@@ -665,35 +712,72 @@ private[graft] object Supersteps {
     new PushBlock(ids, deg, Csr(ds.result(), from.result()))
   }
 
+  /** The message from in-edge sender `from` (see [[PushBlock]]). */
+  @inline private def sent(from: Long, msg: Array[Double], hubMsg: Array[Double]): Double =
+    if (from >= 0) msg(from.toInt) else hubMsg((-1L - from).toInt)
+
   /** A block's round from its vertices' states `xs` and the hubs'
-    * messages `hubMsg`: one sum per destination, keyed by its partition.
+    * messages `hubMsg`: what each destination receives, merged map-side
+    * by `p`'s kind — one [[State]] sum or [[Pairs]] of (destination,
+    * histogram entry) — keyed by its partition.
     */
-  private def sums(b: PushBlock, xs: Array[Double], hubMsg: Array[Double], p: Push, parts: Int): Iterator[(Int, State)] = {
+  private def messages(b: PushBlock, xs: Array[Double], hubMsg: Array[Double], p: Program,
+      parts: Int): Iterator[(Int, AnyRef)] = {
     val msg = Array.tabulate(b.ids.length)(i => if (b.deg(i) > 0) p.send(xs(i), b.deg(i)) else 0.0)
-    val ks = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
-    val vs = Array.fill(parts)(new mutable.ArrayBuilder.ofDouble)
     val c = b.in
-    var k = 0
-    while (k < c.keys.length) {
-      var s = 0.0
-      var j = c.offs(k)
-      while (j < c.offs(k + 1)) {
-        val from = c.vals(j)
-        s += (if (from >= 0) msg(from.toInt) else hubMsg((-1L - from).toInt))
-        j += 1
-      }
-      val q = partOf(c.keys(k), parts)
-      ks(q).addOne(c.keys(k)); vs(q).addOne(s)
-      k += 1
+    val ks = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+    val out: Int => AnyRef = p match {
+      case _: Push =>
+        val vs = Array.fill(parts)(new mutable.ArrayBuilder.ofDouble)
+        var k = 0
+        while (k < c.keys.length) {
+          var s = 0.0
+          var j = c.offs(k)
+          while (j < c.offs(k + 1)) { s += sent(c.vals(j), msg, hubMsg); j += 1 }
+          val q = partOf(c.keys(k), parts)
+          ks(q).addOne(c.keys(k)); vs(q).addOne(s)
+          k += 1
+        }
+        q => new State(ks(q).result(), vs(q).result())
+      case _: Tally =>
+        val es = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+        val buf = new Array[Long](if (c.keys.isEmpty) 0 else c.keys.indices.map(c.degree).max)
+        var k = 0
+        while (k < c.keys.length) {
+          val n = c.degree(k)
+          var j = 0
+          while (j < n) { buf(j) = sent(c.vals(c.offs(k) + j), msg, hubMsg).toLong; j += 1 }
+          Arrays.sort(buf, 0, n)
+          val q = partOf(c.keys(k), parts)
+          j = 0
+          while (j < n) {
+            var e = j + 1
+            while (e < n && buf(e) == buf(j)) e += 1
+            require(buf(j) >= 0 && buf(j) < (1L << 31), s"a tally message must be an integer in [0, 2^31): ${buf(j)}")
+            ks(q).addOne(c.keys(k)); es(q).addOne((buf(j) << 32) | (e - j))
+            j = e
+          }
+          k += 1
+        }
+        q => Pairs(ks(q).result(), es(q).result())
     }
-    (0 until parts).iterator.map(q => (q, new State(ks(q).result(), vs(q).result()))).filter(_._2.ids.nonEmpty)
+    (0 until parts).iterator.filter(ks(_).length > 0).map(q => (q, out(q)))
   }
 
-  /** The next state of `ids` from the sums routed to them. */
-  private def gather(ids: Array[Long], in: Iterator[State], p: Push): State = {
-    val acc = new Array[Double](ids.length)
-    in.foreach(s => s.ids.indices.foreach(j => acc(Arrays.binarySearch(ids, s.ids(j))) += s.xs(j)))
-    new State(ids, Array.tabulate(ids.length)(i => p.update(ids(i), acc(i))))
+  /** The next state of `s`'s vertices from the messages routed to them. */
+  private def gather(s: State, in: Iterator[AnyRef], p: Program): State = p match {
+    case p: Push =>
+      val acc = new Array[Double](s.ids.length)
+      in.map(_.asInstanceOf[State]).foreach(m => m.ids.indices.foreach(j => acc(Arrays.binarySearch(s.ids, m.ids(j))) += m.xs(j)))
+      new State(s.ids, Array.tabulate(s.ids.length)(i => p.update(s.ids(i), acc(i))))
+    case p: Tally =>
+      val got = concat(in.map(_.asInstanceOf[Pairs]))
+      val byDst = Csr(got.xs, got.ys)
+      new State(s.ids, Array.tabulate(s.ids.length) { i =>
+        val r = byDst.slots(s.ids(i))
+        Arrays.sort(byDst.vals, r.start, r.end)
+        p.update(s.xs(i), new Histogram(byDst.vals, r.start, r.end))
+      })
   }
 
   /** A state after a round, with its total: on the driver, `state`;
@@ -702,15 +786,16 @@ private[graft] object Supersteps {
   final class Pushed private[Supersteps] (val total: Double, private[Supersteps] val state: State,
       private[Supersteps] val blocks: RDD[State], private[Supersteps] val hubs: Map[Long, Double])
 
-  /** A graph laid out for sum-push rounds along its edges and, if asked,
-    * against them: [[start]] gives every vertex `v` the state `f(v)`,
-    * [[round]] runs `p` from `s`, and [[result]], the last step, gives
-    * (vertex, one column per state divided by its norm) rows.
+  /** A graph laid out for push rounds along each of its call's
+    * directions: [[start]] gives every vertex `v` the state `f(v)`,
+    * [[round]] runs `p` from `s` along one of them, and [[result]], the
+    * last step, gives (vertex, one column per state divided by its norm)
+    * rows.
     */
   sealed abstract class PushGraph {
     def vertices: Long
     def start(f: Long => Double): Pushed
-    def round(p: Push, forward: Boolean, s: Pushed): Pushed
+    def round(p: Program, along: Dir, s: Pushed): Pushed
     def result(cols: (String, Pushed, Double)*): DataFrame
   }
 
@@ -722,36 +807,42 @@ private[graft] object Supersteps {
     ss.head.ids.indices.iterator.map(i => Row.fromSeq(ss.head.ids(i) +: ss.indices.map(c => ss(c).xs(i) / norms(c))))
 
   /** Runs `body` over the distinct (src, dst) `edges` with no null
-    * endpoint, read as given by one [[intake]]: on the driver over its
-    * pairs if there are at most `maxLocalEdges`, else as RDD supersteps
-    * over the checkpointed intake, which lay out the reverse direction
-    * if `reverse`. Each executor drops repeated edges in its blocks
-    * ([[Csr.deduped]]), so no DataFrame `distinct` runs in front.
+    * endpoint, read as given by one [[intake]], laid out along `dirs`:
+    * see the other [[push]].
     */
-  def push(edges: DataFrame, maxLocalEdges: Long, name: String, reverse: Boolean,
-      hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val in = intake(edges, maxLocalEdges, name)
+  def push(edges: DataFrame, maxLocalEdges: Long, name: String, dirs: Seq[Dir],
+      hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame =
+    push(edges.sparkSession, intake(edges, maxLocalEdges, name), name, dirs, hubOutDegree)(body)
+
+  /** Runs `body` over the distinct edges of `in`: on the driver over its
+    * pairs if it shipped them, else as RDD supersteps over its
+    * checkpointed pairs, which this call releases. Each executor drops
+    * repeated edges in its blocks ([[Csr.deduped]]), so no DataFrame
+    * `distinct` runs in front.
+    */
+  def push(spark: SparkSession, in: Intake, name: String, dirs: Seq[Dir],
+      hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame =
     if (in.local != null) body(new LocalPush(spark, in.local))
     else {
-      val g = new RddPush(spark, in.pairs, in.count, name, reverse, hubOutDegree)
+      val g = new RddPush(spark, in.pairs, in.count, name, dirs, hubOutDegree)
       try { g.build(); body(g) } finally g.close()
     }
-  }
 
   /** The driver executor: one deduplicated block of the intake's pairs
-    * `es`, no hubs, no job per round.
+    * `es` per direction, built when first run along; no hubs, no job per
+    * round.
     */
   private final class LocalPush(spark: SparkSession, es: Pairs) extends PushGraph {
     private val ids = sortedDistinct(es.xs ++ es.ys)
-    private val fwd = pushBlock(ids, Csr(es.xs, es.ys).deduped, null, null)
-    private lazy val rev = pushBlock(ids, Csr(es.ys, es.xs).deduped, null, null)
+    private val blocks = mutable.Map.empty[Dir, PushBlock]
     private def pushed(s: State) = new Pushed(s.xs.sum, s, null, null)
 
     def vertices: Long = ids.length
     def start(f: Long => Double): Pushed = pushed(new State(ids, ids.map(f)))
-    def round(p: Push, forward: Boolean, s: Pushed): Pushed =
-      pushed(gather(ids, sums(if (forward) fwd else rev, s.state.xs, null, p, 1).map(_._2), p))
+    def round(p: Program, along: Dir, s: Pushed): Pushed = {
+      val b = blocks.getOrElseUpdate(along, pushBlock(ids, along.block(es).deduped, null, null))
+      pushed(gather(s.state, messages(b, s.state.xs, null, p, 1).map(_._2), p))
+    }
     def result(cols: (String, Pushed, Double)*): DataFrame = spark.createDataFrame(
       java.util.Arrays.asList(resultRows(cols.map(_._2.state), cols.map(_._3)).toSeq: _*), resultSchema(cols))
   }
@@ -761,16 +852,16 @@ private[graft] object Supersteps {
     * materializes the next state and returns its total and hub entries.
     */
   private final class RddPush(spark: SparkSession, pairs: RDD[Pairs], eCount: Long, name: String,
-      reverse: Boolean, hubOutDegree: Long) extends PushGraph {
+      dirs: Seq[Dir], hubOutDegree: Long) extends PushGraph {
     private val sc = spark.sparkContext
-    private val part = partitioner(spark, eCount)
+    private val part = partitioner(spark, eCount * dirs.map(_.copies).max)
     private val owned = mutable.ArrayBuffer.empty[RDD[_]]
     private val hubCasts = mutable.ArrayBuffer.empty[Broadcast[Array[Long]]]
     // states not yet released; a round reads only the one it is given
     private val live = mutable.ArrayBuffer.empty[RDD[State]]
     private var kept = Seq.empty[RDD[State]]
     // per direction: its blocks, hub keys (sorted) and hub out-degrees
-    private var dirs = Seq.empty[(RDD[PushBlock], Array[Long], Array[Int])]
+    private var laid = Map.empty[Dir, (RDD[PushBlock], Array[Long], Array[Int])]
     private var hubKeys: Broadcast[Array[Long]] = null
     private var rounds = 0
     var vertices = 0L
@@ -785,38 +876,35 @@ private[graft] object Supersteps {
         ps.xs.indices.foreach { i => r.add(0L, ps.xs(i)); r.add(0L, ps.ys(i)) }
         r.records
       }, part).map(p => sortedDistinct(p.ys))
-      // the reverse direction is read once a round: on disk, one scan
-      val levels = Seq("forward" -> StorageLevel.MEMORY_AND_DISK, "reverse" -> StorageLevel.DISK_ONLY)
-      dirs = levels.take(if (reverse) 2 else 1).map { case (dir, level) =>
-        val l = bySource(pairs.map(p => if (dir == "forward") Csr(p.xs, p.ys) else Csr(p.ys, p.xs)),
-          eCount, part, hubOutDegree, level, s"$name $dir", own[Csr])
+      laid = dirs.map { d =>
+        val l = bySource(pairs.map(d.block), eCount * d.copies, part, hubOutDegree, d.level, s"$name ${d.name}", own[Csr])
         val hk = l.hubs
         if (hk != null) hubCasts += hk
         val blocks = own((
           if (hk == null) ids.zipPartitions(l.tail)((i, t) => Iterator(pushBlock(i.next(), t.next(), null, null)))
           else ids.zipPartitions(l.tail, l.hub)((i, t, h) => Iterator(pushBlock(i.next(), t.next(), h.next(), hk.value)))
-        ).persist(level), s"$name $dir blocks")
-        if (level == StorageLevel.DISK_ONLY) GraphOps.audit(s"$name:eByDst:DISK_ONLY")
+        ).persist(d.level), s"$name ${d.name} blocks")
+        if (d.level == StorageLevel.DISK_ONLY) GraphOps.audit(s"$name:eByDst:DISK_ONLY")
         vertices = sc.runJob(blocks, (it: Iterator[PushBlock]) => it.next().ids.length.toLong).sum
         (Seq(l.tail) ++ Option(l.hub)).foreach(_.unpersist(blocking = true))
-        (blocks, if (hk == null) Array.empty[Long] else hk.value, l.hubDeg)
-      }
-      val keys = dirs.flatMap(_._2).distinct.sorted.toArray
+        d -> (blocks, if (hk == null) Array.empty[Long] else hk.value, l.hubDeg)
+      }.toMap
+      val keys = laid.values.flatMap(_._2).toSeq.distinct.sorted.toArray
       if (keys.nonEmpty) { hubKeys = sc.broadcast(keys); hubCasts += hubKeys }
       pairs.unpersist(blocking = true)
     }
 
-    def start(f: Long => Double): Pushed = materialize(dirs.head._1.map(b => new State(b.ids, b.ids.map(f))))
+    def start(f: Long => Double): Pushed = materialize(laid(dirs.head)._1.map(b => new State(b.ids, b.ids.map(f))))
 
-    def round(p: Push, forward: Boolean, s: Pushed): Pushed = {
-      val (blocks, keys, degs) = dirs(if (forward) 0 else 1)
+    def round(p: Program, along: Dir, s: Pushed): Pushed = {
+      val (blocks, keys, degs) = laid(along)
       val hubMsg = if (keys.isEmpty) null else sc.broadcast(keys.indices.map(j => p.send(s.hubs(keys(j)), degs(j))).toArray)
       val parts = part.numPartitions
       val sent = blocks.zipPartitions(s.blocks) { (bs, ss) =>
-        sums(bs.next(), ss.next().xs, if (hubMsg == null) null else hubMsg.value, p, parts)
+        messages(bs.next(), ss.next().xs, if (hubMsg == null) null else hubMsg.value, p, parts)
       }
-      val next = try materialize(new ShuffledRDD[Int, State, State](sent, part)
-        .zipPartitions(s.blocks, preservesPartitioning = true)((in, ss) => Iterator(gather(ss.next().ids, in.map(_._2), p))))
+      val next = try materialize(new ShuffledRDD[Int, AnyRef, AnyRef](sent, part)
+        .zipPartitions(s.blocks, preservesPartitioning = true)((in, ss) => Iterator(gather(ss.next(), in.map(_._2), p))))
         finally if (hubMsg != null) hubMsg.destroy()
       val old = live.filter(r => (r ne s.blocks) && (r ne next.blocks))
       old.foreach(_.unpersist(blocking = true)); live --= old

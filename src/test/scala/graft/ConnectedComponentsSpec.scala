@@ -84,12 +84,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     (spark.sparkContext.parallelize(ts, 8).flatMap(identity).toDF("src", "dst").localCheckpoint(), ts.flatten)
   }
 
-  private def audited[A](body: => A): (A, Seq[String]) = {
-    val buf = scala.collection.mutable.Buffer.empty[String]
-    GraphOps.cacheAudit.set(buf)
-    try (body, buf.toSeq) finally GraphOps.cacheAudit.remove()
-  }
-
   test("seeded random graphs: every path equals the reference") {
     for (seed <- Seq(1L, 2L); parts <- Seq(1, 4, 16)) {
       val (df, es) = randomCase(seed * 31 + parts)

@@ -773,7 +773,7 @@ class GraphSpec extends SparkSpec {
     assert(dist === expect)
     // the retained bucket-peel is the independent algorithmic
     // cross-check for the h-index fixpoint
-    val peel = GraphOps.corenessPeel(edges).collect()
+    val peel = CorenessPeel(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(peel === expect)
     // star graph: the hub (degree 5 > k=1) loses ALL its edges when the
@@ -808,7 +808,7 @@ class GraphSpec extends SparkSpec {
     val nEdges = DerivedGraphs.nationEdges(spark, sfDir)
     assert(GraphOps.coreness(nEdges, maxLocalEdges = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === cg)
-    assert(GraphOps.corenessPeel(nEdges).collect()
+    assert(CorenessPeel(nEdges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === cg)
     val k3 = GraphOps.kCore(DerivedGraphs.nationEdges(spark, sfDir), 3)
       .collect().map(_.getLong(0)).toSet
@@ -821,11 +821,10 @@ class GraphSpec extends SparkSpec {
     // One vertex with 100k leaves plus a 4-clique the hub also joins:
     // {hub, 1..4} is a 5-vertex min-degree-4 subgraph, so the hub and
     // the clique sit in the 4-core while every leaf is coreness 1.
-    // r18's per-vertex row_number window sorted all 100k gathered hub
-    // rows per round; the r19 histogram form sees TWO rows for the hub
-    // (est 1 x100k clipped, est-cap bucket) — this spec pins the
-    // skew-immune path to the exact output and to the independent
-    // bucket-peel.
+    // The push rounds' histogram merge sends the hub one (1, count)
+    // entry per map task for its leaves, and the hub's own edges are
+    // dealt out as hub blocks — this spec pins the skewed path to the
+    // exact output and to the independent bucket-peel.
     val spk = spark
     import spk.implicits._
     val leaves = (0 until 100000).map(i => (0L, (100L + i)))
@@ -835,12 +834,12 @@ class GraphSpec extends SparkSpec {
       .localCheckpoint()
     val expect = ((100L until 100100L).map(_ -> 1L) ++
       (1L to 4L).map(_ -> 4L) :+ (0L -> 4L)).toMap
-    val dist = GraphOps.coreness(g, maxLocalEdges = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (dist, marks) = audited(GraphOps.coreness(g, maxLocalEdges = 0L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(dist === expect)
-    assert(GraphOps.lastCorenessRounds <= 4,
-      s"hub-skew fixpoint should converge in a few rounds, took ${GraphOps.lastCorenessRounds}")
-    val peel = GraphOps.corenessPeel(g).collect()
+    val rounds = marks.count(_.startsWith("coreness:round "))
+    assert(rounds >= 1 && rounds <= 4, s"hub-skew fixpoint should converge in a few rounds, took $rounds")
+    val peel = CorenessPeel(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(peel === expect)
   }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** PageRank, PPR and HITS on both push executors — the driver block
   * and the RDD supersteps — against a plain-Scala reference; the gate's
-  * three push ops on the RDD executor; and what a call leaves behind.
+  * three push ops on the RDD executor; and what a call, coreness's
+  * included, leaves behind.
   */
 class PushSuperstepsSpec extends SparkSpec {
 
@@ -193,12 +194,17 @@ class PushSuperstepsSpec extends SparkSpec {
       GraphOps.pagerank(e, iters = 3, maxLocalEdges = 0L, hubOutDegree = 10L),
       GraphOps.ppr(e, Seq(0L), iters = 3, maxLocalEdges = 0L, hubOutDegree = 10L),
       GraphOps.hits(e, iters = 2, maxLocalEdges = 0L, hubOutDegree = 10L))
-    outs.foreach(df => assert(df.collect().length === 241))
+    val (core, marks) = audited(GraphOps.coreness(e, maxLocalEdges = 0L))
+    (outs :+ core).foreach(df => assert(df.collect().length === 241))
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
       .map(r => Option(r.name).getOrElse(r.toString)).toSeq.sorted
     // pagerank and ppr keep their last rank state (3 rounds after the
-    // start); hits its last authority and hub states (rounds 3 and 4)
-    assert(left === Seq("hits state 3", "hits state 4", "rank state 3", "rank state 3"))
-    assert(outs.map(_.count()) === Seq(241L, 241L, 241L))
+    // start); hits its last authority and hub states (rounds 3 and 4);
+    // coreness its last estimate, after the degree round and its
+    // h-index rounds
+    val rounds = marks.count(_.startsWith("coreness:round "))
+    assert(rounds > 0 && left === Seq(s"coreness state ${rounds + 1}", "hits state 3", "hits state 4",
+      "rank state 3", "rank state 3"))
+    assert((outs :+ core).map(_.count()) === Seq(241L, 241L, 241L, 241L))
   }
 }

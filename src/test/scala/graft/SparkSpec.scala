@@ -27,6 +27,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
+  /** `body`'s result and the markers the graph ops audited while it
+    * ran on this thread (`GraphOps.audit`).
+    */
+  def audited[A](body: => A): (A, Seq[String]) = {
+    val buf = scala.collection.mutable.Buffer.empty[String]
+    graph.GraphOps.cacheAudit.set(buf)
+    try (body, buf.toSeq) finally graph.GraphOps.cacheAudit.remove()
+  }
+
   private var tempRoot: Option[java.nio.file.Path] = None
 
   /** A fresh directory under this suite's temp root; the root, with
