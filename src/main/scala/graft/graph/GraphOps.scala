@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.Supersteps.{Csr, Pairs}
+import graft.graph.Supersteps.{Csr, Pairs, Undirected}
 
 /** Distributed graph algorithms over edge-list DataFrames.
   *
@@ -56,12 +56,10 @@ object GraphOps {
     * was measured landing on whatever ops run next — the r18
     * dfs-family attribution, PROBES_r18.json). Only safe where no
     * frame from two rounds back is ever read again: connected
-    * components' star rounds, the k-core prune chain, msf's Borůvka
-    * cross edges and labels — NOT the peel loops that union their
-    * per-round emissions at the end. New persistent RDD ids are discovered by
-    * diffing getPersistentRDDs around the eager checkpoint; the loops
-    * are single-threaded per op, so the diff is exactly the
-    * checkpoint's blocks.
+    * components' star rounds, msf's Borůvka cross edges and labels.
+    * New persistent RDD ids are discovered by diffing getPersistentRDDs
+    * around the eager checkpoint; the loops are single-threaded per op,
+    * so the diff is exactly the checkpoint's blocks.
     */
   private final class RoundCheckpoints(sc: org.apache.spark.SparkContext) {
     private var prev: Set[Int] = Set.empty
@@ -154,8 +152,8 @@ object GraphOps {
     * receives those rows as primitive (src, dst) arrays, ≈ 16 B per
     * edge: [[bfs]] and its callers, [[dfsLeaves]], the push ops, and
     * the distinct-edge ops of [[loopFree]] (self-loops excluded):
-    * coreness, whose push rounds take the intake itself above the
-    * bound, and through [[simpleEdges]] kCore, densestSubgraph, kTruss,
+    * kCore, coreness and densestSubgraph, whose push rounds take the
+    * intake itself above the bound, and through [[simpleEdges]] kTruss,
     * triangleCounts, labelPropagation, scc and betweenness. msf and
     * sssp, which carry a weight, count their own frames. A graph this
     * small costs more in per-level scheduler latency than the whole
@@ -843,37 +841,30 @@ object GraphOps {
     }
   }
 
-  /** k-core decomposition membership: iteratively strip vertices of
-    * undirected degree < k until fixpoint; returns each surviving
-    * vertex with its degree inside the core subgraph. Each round is
-    * one degree aggregation + two semi-joins (shuffle on vertex id);
-    * round count is bounded by the longest peel chain, and edges only
-    * shrink — the standard distributed formulation. Convergence is
-    * detected on the edge count (pruning is monotone), with no round
-    * cap. Driver twin at or below `maxLocalEdges` ([[simpleEdges]]).
+  /** k-core decomposition membership: the maximal subgraph in which
+    * every vertex has undirected degree ≥ k, as (vertex, core_deg)
+    * rows, core_deg its degree inside it; at k ≤ 1, every vertex of a
+    * non-loop edge. The edges are read once ([[loopFree]]); at or below
+    * `maxLocalEdges` the driver twin peels them ([[localKCore]]).
+    * Above it, a sum program on the push kernel ([[Supersteps.push]],
+    * symmetric closure): a vertex's state is its live degree; each
+    * round it sends 1 while that is ≥ k and takes the sum it receives.
+    * Live degrees only fall, so the rounds stop when the total does
+    * not change ([[settle]], audited as `kCore:round N`).
     */
-  def kCore(edges: DataFrame, k: Int, maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    var (e, n) = simpleEdges(undirected(edges), maxLocalEdges, "kCore") match {
-      case Left(adj) => return localKCore(edges.sparkSession, adj, k)
-      case Right((d, c)) => (d.toDF("u", "v"), c)
+  def kCore(edges: DataFrame, k: Int, maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
+    loopFree(undirected(edges), maxLocalEdges, "kCore") match {
+      case Left(adj) => localKCore(edges.sparkSession, adj, k)
+      case Right(in) =>
+        val inCore = new Supersteps.Push {
+          def send(x: Double, deg: Int): Double = if (x >= k) 1.0 else 0.0
+          def update(v: Long, in: Double): Double = in
+        }
+        Supersteps.push(edges.sparkSession, in, "kCore", Seq(Undirected), hubOutDegree = 0L) { g =>
+          g.result(("core_deg", settle(g, inCore, "kCore"), 1.0)).where(col("core_deg") >= k)
+            .select(col("vertex"), col("core_deg").cast(LongType).as("core_deg"))
+        }
     }
-    var prev = -1L
-    // linear prune chain: round N reads only round N-1's edge frame,
-    // so superseded edge checkpoints free inline (RoundCheckpoints)
-    val hy = new RoundCheckpoints(edges.sparkSession.sparkContext)
-    while (n != prev && n > 0) {
-      prev = n
-      val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-        .groupBy("x").agg(count(lit(1)).as("d"))
-      val keep = deg.where(col("d") >= k).select("x")
-      e = hy.ckpt(e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("x").as("v")), Seq("v"), "left_semi"))
-      n = e.count()
-      hy.endRound()
-    }
-    e.select(col("u").as("vertex")).unionAll(e.select(col("v").as("vertex")))
-      .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
-  }
 
   /** Full core decomposition (coreness per vertex — Batagelj &
     * Zaveršnik 2003): coreness(v) = max k such that v survives the
@@ -904,18 +895,9 @@ object GraphOps {
     loopFree(undirected(edges), maxLocalEdges, "coreness") match {
       case Left(adj) => localCoreness(edges.sparkSession, adj)
       case Right(in) =>
-        import Supersteps.Undirected
         Supersteps.push(edges.sparkSession, in, "coreness", Seq(Undirected), hubOutDegree = 0L) { g =>
-          var est = g.round(Degree, Undirected, g.start(_ => 1.0))
-          var before = -1.0
-          var rounds = 0
-          while (est.total != before) {
-            before = est.total
-            rounds += 1
-            audit(s"coreness:round $rounds")
-            est = g.round(HIndex, Undirected, est)
-          }
-          g.result(("coreness", est, 1.0)).select(col("vertex"), col("coreness").cast(LongType).as("coreness"))
+          g.result(("coreness", settle(g, HIndex, "coreness"), 1.0))
+            .select(col("vertex"), col("coreness").cast(LongType).as("coreness"))
         }
     }
 
@@ -923,6 +905,24 @@ object GraphOps {
   private val Degree = new Supersteps.Push {
     def send(x: Double, deg: Int): Double = 1.0
     def update(v: Long, in: Double): Double = in
+  }
+
+  /** Rounds of `p` over `g`'s undirected layout from each vertex's
+    * degree, until one leaves the total unchanged: for states that only
+    * fall, the first round that changes none. Each round is audited as
+    * `name:round N`.
+    */
+  private def settle(g: Supersteps.PushGraph, p: Supersteps.Program, name: String): Supersteps.Pushed = {
+    var s = g.round(Degree, Undirected, g.start(_ => 1.0))
+    var before = -1.0
+    var rounds = 0
+    while (s.total != before) {
+      before = s.total
+      rounds += 1
+      audit(s"$name:round $rounds")
+      s = g.round(p, Undirected, s)
+    }
+    s
   }
 
   /** [[coreness]]'s round: an estimate falls to the h-index of the
@@ -963,105 +963,77 @@ object GraphOps {
   /** Densest subgraph, 2.2-approx (Charikar 2000's greedy peel in the
     * parallel threshold form of Bahmani, Kumar & Vassilvitskii 2012):
     * each round removes EVERY vertex whose degree is ≤ 2(1+ε)·(m/n)
-    * with ε = 0.1, remembers the round's (n, m, vertex set), and the
-    * answer is the vertex set of the densest snapshot (max m/n;
-    * earliest round on ties), each vertex carrying the rounded
-    * density. The threshold compare is INTEGER — keep iff
-    * 10·deg·n > 22·m, evaluated in decimal so it cannot overflow at
-    * any scale — and the best-round pick is an exact cross-multiply,
-    * so both engines peel and pick identically with zero FP until the
-    * single final ROUND(m/n, 6). Rounds are O(log n): at most n/1.1
-    * vertices can exceed 1.1× the average degree, so the vertex set
-    * shrinks geometrically — the property that makes the peel viable
-    * as a fixed driver loop at 100 TB (vs the sequential
-    * one-vertex-per-step classic). Retention is O(|V|) TOTAL: instead
-    * of holding every round's full checkpointed degree frame alive
-    * until the best-round pick (O(V·rounds) ≈ 30× vertex-set storage
-    * at scale), each round contributes one small removal-tag delta —
-    * only the vertices that LEFT the degree frame this round, tagged
-    * with the round index — and only the (n, m) pair is snapshotted
-    * per round. The deltas partition the vertex set (each vertex is
-    * tagged exactly once, the round it disappears), so membership in
-    * the best round's snapshot is exactly `removal_round ≥ best`, and
-    * no growing re-union is ever checkpointed. Driver twin at or below
-    * `maxLocalEdges` ([[simpleEdges]]); spec pins both paths identical
-    * on a planted clique+tail graph and pins the partition property of
-    * the deltas.
+    * with ε = 0.1, and with it any vertex left with no neighbor; the
+    * answer is the vertex set of the densest round's graph (max m/n;
+    * earliest round on ties), each vertex carrying the rounded density.
+    * The threshold compare is INTEGER — keep iff 10·deg·n > 22·m — and
+    * the best-round pick an exact cross-multiply, so both executors
+    * peel and pick identically with zero FP until the single final
+    * round(m/n, 6). Rounds are O(log n): at most n/1.1 vertices can
+    * exceed 1.1× the average degree, so the vertex set shrinks
+    * geometrically. Only each round's (n, m) and each vertex's removal
+    * round are kept: the best round's graph is the vertices removed
+    * after it. The edges are read once ([[loopFree]]); at or below
+    * `maxLocalEdges` the driver twin peels them ([[localDensest]]).
+    * Above it, a tally program on the push kernel ([[Supersteps.push]],
+    * symmetric closure): a vertex's state is its live degree, and once
+    * removed, minus its removal round ([[densestPeel]]); a round's job
+    * returns the next round's n (live count) and 2m (total). Each round
+    * is audited as `densest:round N`.
     */
   def densestSubgraph(edges: DataFrame,
-      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (e, m0) = simpleEdges(undirected(edges), maxLocalEdges, "densestSubgraph") match {
-      case Left(adj) => return localDensest(spark, adj)
-      case Right((d, c)) => (d.toDF("u", "v"), c)
+      maxLocalEdges: Long = LocalEdgeThreshold): DataFrame =
+    loopFree(undirected(edges), maxLocalEdges, "densestSubgraph") match {
+      case Left(adj) => localDensest(edges.sparkSession, adj)
+      case Right(in) =>
+        Supersteps.push(edges.sparkSession, in, "densest", Seq(Undirected), hubOutDegree = 0L) { g =>
+          var s = g.round(Degree, Undirected, g.start(_ => 1.0))
+          val stats = mutable.ArrayBuffer.empty[(Long, Long)]
+          while (s.total > 0) {
+            val (n, m) = (s.live, s.total.toLong / 2)
+            stats += ((n, m))
+            audit(s"densest:round ${stats.length}")
+            s = g.round(densestPeel(n, m, stats.length), Undirected, s)
+          }
+          val (best, density) = densestRound(stats.toSeq)
+          g.result(("removed", s, 1.0)).where(col("removed") < -best)
+            .select(col("vertex"), lit(density).as("density"))
+        }
     }
-    val (removedAt, stats) = densestPeelRounds(e, m0)
-    if (stats.isEmpty) return Seq.empty[(Long, Double)].toDF("vertex", "density")
-    val best = densestRound(stats)
-    val (bn, bm) = stats(best)
-    removedAt
-      .foldLeft(Seq.empty[(Long, Int)].toDF("vertex", "removal_round"))(_ unionAll _)
-      .where(col("removal_round") >= best + 1)
-      .select(col("vertex"))
-      .withColumn("density",
-        round(lit(bm).cast("double") / lit(bn).cast("double"), 6))
+
+  /** [[densestSubgraph]]'s round `r` over n live vertices and m live
+    * edges: a vertex is kept iff 10·deg·n > 22·m, i.e. deg > ⌊22m/10n⌋,
+    * and sends 1 if kept. A kept vertex that receives 1s takes their
+    * count; any other live vertex takes −r; a removed one keeps its
+    * state.
+    */
+  private def densestPeel(n: Long, m: Long, r: Int): Supersteps.Tally = {
+    val cut = (BigInt(22) * m / (BigInt(10) * n)).toDouble
+    new Supersteps.Tally {
+      def send(x: Double, deg: Int): Double = if (x > cut) 1.0 else 0.0
+      def update(old: Double, h: Supersteps.Histogram): Double = {
+        val kept = (0 until h.size).filter(h.value(_) == 1L).map(h.count).sum
+        if (old <= 0) old else if (old > cut && kept > 0) kept.toDouble else -r.toDouble
+      }
+    }
   }
 
-  /** The index of the densest (n, m) round: the exact-rational argmax
-    * of m/n, earliest on ties.
+  /** The densest of a peel's (n, m) rounds — the exact-rational argmax
+    * of m/n, earliest on ties — and its m/n as Spark's round(x, 6);
+    * (0, 0.0) if there were none.
     */
-  private def densestRound(stats: Seq[(Long, Long)]): Int = stats.indices.reduceLeft { (a, b) =>
-    if (BigInt(stats(b)._2) * stats(a)._1 > BigInt(stats(a)._2) * stats(b)._1) b else a
-  }
-
-  /** Distributed threshold-peel core for [[densestSubgraph]]: runs the
-    * Bahmani rounds on a canonical checkpointed edge frame and returns
-    * (per-round removal-tag deltas, per-round (n, m) stats). The deltas
-    * are vertex-disjoint `(vertex, removal_round)` frames summing to
-    * |V| rows across the whole run — a vertex is tagged in the round it
-    * leaves the degree frame, whether threshold-peeled or kept-but-
-    * isolated by the prune. Package-private so the spec can assert the
-    * partition property (= the O(V) retention contract) directly.
-    */
-  private[graft] def densestPeelRounds(e0: DataFrame, m0: Long)
-      : (Seq[DataFrame], Seq[(Long, Long)]) = {
-    var e = e0
-    var m = m0
-    val removedAt = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var r = 0
-    while (m > 0) {
-      r += 1
-      require(r <= 10000, "densestSubgraph: round guard tripped")
-      val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-        .groupBy("x").agg(count(lit(1)).as("d")).localCheckpoint()
-      val n = deg.count()
-      stats += ((n, m))
-      // min degree ≤ avg = 2m/n ≤ 2.2·m/n, so every round removes at
-      // least the min-degree vertex: n and m strictly shrink
-      val keep = deg.where(
-        col("d").cast("decimal(38,0)") * lit(10L) * lit(n) > lit(22L) * lit(m))
-        .select("x")
-      e = e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("x").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint()
-      m = e.count()
-      // everything in this round's degree frame that is absent from the
-      // surviving edge endpoints left THIS round (threshold peel +
-      // prune-isolated kept vertices alike); checkpointing the delta
-      // cuts its lineage to this round's deg/e so neither stays live
-      removedAt += deg.select("x").join(
-        e.select(col("u").as("x")).unionAll(e.select(col("v").as("x"))).distinct(),
-        Seq("x"), "left_anti")
-        .select(col("x").as("vertex"), lit(r).as("removal_round")).localCheckpoint()
+  private def densestRound(stats: Seq[(Long, Long)]): (Int, Double) =
+    if (stats.isEmpty) (0, 0.0)
+    else {
+      val best = stats.indices.reduceLeft { (a, b) =>
+        if (BigInt(stats(b)._2) * stats(a)._1 > BigInt(stats(a)._2) * stats(b)._1) b else a
+      }
+      (best, round6(stats(best)._2.toDouble / stats(best)._1.toDouble))
     }
-    (removedAt.toSeq, stats.toSeq)
-  }
 
   /** Driver-side densest-subgraph twin over the intake's `adj`: the
     * identical threshold peel, each vertex tagged with the round it
-    * leaves (as the distributed deltas are), and the same round pick.
+    * leaves, and the same round pick.
     */
   private def localDensest(spark: SparkSession, adj: Csr): DataFrame = {
     import spark.implicits._
@@ -1080,9 +1052,7 @@ object GraphOps {
       n = live.length
       m = live.map(p.deg(_).toLong).sum / 2
     }
-    if (stats.isEmpty) return Seq.empty[(Long, Double)].toDF("vertex", "density")
-    val best = densestRound(stats.toSeq)
-    val density = round6(stats(best)._2.toDouble / stats(best)._1.toDouble)
+    val (best, density) = densestRound(stats.toSeq)
     p.g.keys.indices.filter(leftAt(_) > best).map(i => (p.g.keys(i), density)).toDF("vertex", "density")
   }
 
@@ -1102,9 +1072,9 @@ object GraphOps {
     * k-core (Cohen's definition). Returns the surviving edges with
     * their final in-truss support.
     *
-    * Distributed shape: the same monotone prune-to-fixpoint loop as
-    * [[kCore]], but each round's metric is per-EDGE triangle support —
-    * the low→high oriented wedge join of [[triangleCounts]] (each
+    * Distributed shape: a monotone prune-to-fixpoint loop, as
+    * [[kCore]]'s peel is, but each round's metric is per-EDGE triangle
+    * support — the low→high oriented wedge join of [[triangleCounts]] (each
     * triangle a<b<c enumerated once, crediting its three edges),
     * never an all-pairs product. The edge set only shrinks, so rounds
     * ≤ |E| with one checkpointed wedge join + semi-join per round;

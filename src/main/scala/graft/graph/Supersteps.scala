@@ -15,9 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * primitive per-partition blocks, the way GraphX runs Pregel
   * (PAPERS.md: GraphX, OSDI'14): the BFS frontier loop behind
   * [[GraphOps.bfs]], and the push rounds of a vertex [[Program]] —
-  * the sums behind PageRank, PPR and HITS, and the histogram tallies
-  * behind distributed coreness. Each level or round is ONE Spark job
-  * and no Catalyst planning.
+  * the sums behind PageRank, PPR, HITS and the k-core peel, and the
+  * histogram tallies behind coreness and the densest-subgraph peel.
+  * Each level or round is ONE Spark job and no Catalyst planning.
   *
   * A call reads its edges exactly once, in one [[intake]] job: the
   * (src, dst) pairs local-checkpointed as primitive arrays, their
@@ -39,7 +39,7 @@ import org.apache.spark.storage.StorageLevel
   * received in the reduce task that owns it. The job materializes
   * the next frontier or state (lineage cut by `localCheckpoint`) and
   * returns its size — plus the BFS frontier's rows while it is under the
-  * broadcast bound, or the push state's total.
+  * broadcast bound, or the push state's count and total of states > 0.
   *
   * Scale geometry:
   *  - edges are CSR blocks (distinct sorted keys, offsets, values;
@@ -642,7 +642,9 @@ private[graft] object Supersteps {
   /** A vertex program of push rounds: each round a vertex with state `x`
     * and out-degree `deg` sends `send(x, deg)` along each out-edge, and
     * takes its next state from what it received, merged as the
-    * program's kind says: [[Push]] sums, [[Tally]] counts.
+    * program's kind says: [[Push]] sums, [[Tally]] counts. A round
+    * reports how many states are > 0 and their sum ([[Pushed]]), so a
+    * program can mark a vertex it is done with by a state ≤ 0.
     */
   sealed trait Program extends Serializable {
     def send(x: Double, deg: Int): Double
@@ -780,11 +782,19 @@ private[graft] object Supersteps {
       })
   }
 
-  /** A state after a round, with its total: on the driver, `state`;
-    * distributed, its materialized `blocks` and the hubs' entries.
+  /** A state after a round: the count `live` of its states > 0 and
+    * their `total`; on the driver, `state`; distributed, its
+    * materialized `blocks` and the hubs' entries.
     */
-  final class Pushed private[Supersteps] (val total: Double, private[Supersteps] val state: State,
+  final class Pushed private[Supersteps] (val total: Double, val live: Long, private[Supersteps] val state: State,
       private[Supersteps] val blocks: RDD[State], private[Supersteps] val hubs: Map[Long, Double])
+
+  /** The sum and the count of the states > 0 in `xs`. */
+  private def positive(xs: Array[Double]): (Double, Long) = {
+    var (total, live) = (0.0, 0L)
+    xs.foreach(x => if (x > 0) { total += x; live += 1 })
+    (total, live)
+  }
 
   /** A graph laid out for push rounds along each of its call's
     * directions: [[start]] gives every vertex `v` the state `f(v)`,
@@ -835,7 +845,7 @@ private[graft] object Supersteps {
   private final class LocalPush(spark: SparkSession, es: Pairs) extends PushGraph {
     private val ids = sortedDistinct(es.xs ++ es.ys)
     private val blocks = mutable.Map.empty[Dir, PushBlock]
-    private def pushed(s: State) = new Pushed(s.xs.sum, s, null, null)
+    private def pushed(s: State) = { val (total, live) = positive(s.xs); new Pushed(total, live, s, null, null) }
 
     def vertices: Long = ids.length
     def start(f: Long => Double): Pushed = pushed(new State(ids, ids.map(f)))
@@ -849,7 +859,8 @@ private[graft] object Supersteps {
 
   /** The RDD-superstep executor. Vertex state is co-partitioned with each
     * direction's blocks by [[partOf]]; a round is one job, which
-    * materializes the next state and returns its total and hub entries.
+    * materializes the next state and returns its live count, total and
+    * hub entries.
     */
   private final class RddPush(spark: SparkSession, pairs: RDD[Pairs], eCount: Long, name: String,
       dirs: Seq[Dir], hubOutDegree: Long) extends PushGraph {
@@ -911,7 +922,9 @@ private[graft] object Supersteps {
       next
     }
 
-    /** Lineage-cuts `states` in a job returning their total and hub entries. */
+    /** Lineage-cuts `states` in a job returning their [[positive]] sum
+      * and count, and their hub entries.
+      */
     private def materialize(states: RDD[State]): Pushed = {
       val next = states.setName(s"$name state $rounds").localCheckpoint()
       rounds += 1
@@ -920,9 +933,9 @@ private[graft] object Supersteps {
       val got = sc.runJob(next, (it: Iterator[State]) => {
         val s = it.next()
         val at = if (hk == null) Array.empty[Int] else hk.value.map(Arrays.binarySearch(s.ids, _)).filter(_ >= 0)
-        (s.xs.sum, at.map(i => s.ids(i) -> s.xs(i)))
+        (positive(s.xs), at.map(i => s.ids(i) -> s.xs(i)))
       })
-      new Pushed(got.map(_._1).sum, null, next, got.flatMap(_._2).toMap)
+      new Pushed(got.map(_._1._1).sum, got.map(_._1._2).sum, null, next, got.flatMap(_._2).toMap)
     }
 
     def result(cols: (String, Pushed, Double)*): DataFrame = {

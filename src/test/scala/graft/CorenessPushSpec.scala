@@ -9,9 +9,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Distributed coreness as push rounds on the RDD executor: a round is
-  * one job and plans no query, and a graph that needs many rounds
-  * settles at the driver twin's and the bucket peel's answer.
+/** Distributed coreness, k-core and densest-subgraph peels as push
+  * rounds on the RDD executor: a round is one job and plans no query,
+  * and a graph that needs many rounds settles at the driver twin's (and
+  * for coreness the bucket peel's) answer.
   */
 class CorenessPushSpec extends SparkSpec {
 
@@ -64,7 +65,7 @@ class CorenessPushSpec extends SparkSpec {
   private def cores(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def roundsOf(marks: Seq[String]): Int = marks.count(_.startsWith("coreness:round "))
+  private def roundsOf(marks: Seq[String], op: String = "coreness"): Int = marks.count(_.startsWith(s"$op:round "))
 
   test("a distributed coreness round is one job and plans no query") {
     val (e, want) = cliquesWithTails(10)
@@ -85,5 +86,22 @@ class CorenessPushSpec extends SparkSpec {
     assert(dist === want)
     assert(cores(GraphOps.coreness(e)) === want)
     assert(cores(CorenessPeel(e)) === want)
+  }
+
+  test("a distributed kCore or densestSubgraph round is one job and plans no query") {
+    val (e, _) = cliquesWithTails(10)
+    // (op, its fewest rounds, a run at maxLocalEdges): kCore's 2-core
+    // peel takes a tail one vertex per round from its free end
+    val ops = Seq[(String, Int, Long => DataFrame)](
+      ("kCore", 10, m => GraphOps.kCore(e, k = 2, maxLocalEdges = m)),
+      ("densest", 1, m => GraphOps.densestSubgraph(e, maxLocalEdges = m)))
+    for ((op, fewest, run) <- ops) {
+      val ((got, marks), jobs, sqls) = started(audited(rowsOf(run(0L))))
+      val rounds = roundsOf(marks, op)
+      info(s"$op: $rounds rounds, $jobs jobs, $sqls SQL executions")
+      assert(sqls <= 1, s"$op: $sqls SQL executions over $rounds rounds")
+      assert(rounds >= fewest && jobs <= rounds + 8, s"$op: $jobs jobs over $rounds rounds")
+      assert(got.nonEmpty && got === rowsOf(run(GraphOps.LocalEdgeThreshold)), op)
+    }
   }
 }

@@ -97,11 +97,16 @@ class GraphSpec extends SparkSpec {
     // 4-clique {1,2,3,4} plus a tail 4-5-6: 3-core is exactly the clique.
     val e = edgeDf((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L))
-    val core = GraphOps.kCore(e, k = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(core === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
-    // k above the max degree empties the graph
-    assert(GraphOps.kCore(e, k = 5).count() === 0L)
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+      def core(k: Int) = GraphOps.kCore(e, k, maxLocalEdges = maxLocal)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(core(3) === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L), s"maxLocalEdges=$maxLocal")
+      // k ≤ 1 keeps every vertex with its degree
+      val degrees = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 4L, 5L -> 2L, 6L -> 1L)
+      for (k <- Seq(-1, 0, 1)) assert(core(k) === degrees, s"k=$k maxLocalEdges=$maxLocal")
+      // k above the max degree empties the graph
+      assert(core(5).isEmpty, s"maxLocalEdges=$maxLocal")
+    }
   }
 
   test("kTruss keeps the clique, cascades away the triangle chain; paths agree") {
@@ -722,20 +727,6 @@ class GraphSpec extends SparkSpec {
     val dist = GraphOps.densestSubgraph(edges, maxLocalEdges = 0L)
       .orderBy("vertex").collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(dist.toSeq === local.toSeq)
-    // O(V) retention contract: the per-round removal-tag deltas are a
-    // PARTITION of the vertex set — every vertex tagged exactly once,
-    // total retained rows == |V| (not |V| × rounds as the old
-    // snapshot-retaining path held live until the best-round pick)
-    val canon = edges.select(
-      org.apache.spark.sql.functions.least($"src", $"dst").as("u"),
-      org.apache.spark.sql.functions.greatest($"src", $"dst").as("v"))
-      .where($"u" =!= $"v").distinct().localCheckpoint()
-    val (deltas, stats) = GraphOps.densestPeelRounds(canon, canon.count())
-    assert(stats.nonEmpty)
-    val tagged = deltas.flatMap(_.collect().map(_.getLong(0)))
-    val allVerts = (1L to 6L).toSet ++ (100L to 111L).toSet
-    assert(tagged.length === allVerts.size, "removal tags must sum to |V| rows")
-    assert(tagged.toSet === allVerts, "every vertex tagged exactly once")
     // gate graph: every snapshot's edge set is the induced subgraph on
     // its vertex set, so the reported density must EQUAL m/n of the
     // returned vertices' induced subgraph (self-consistency on real data)

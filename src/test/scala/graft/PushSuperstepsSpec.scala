@@ -1,14 +1,14 @@
 package graft
 
-import graft.graph.{DerivedGraphs, GraphOps, GraphQueries}
+import graft.graph.{DerivedGraphs, GraphOps, GraphQueries, Supersteps}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PageRank, PPR and HITS on both push executors — the driver block
-  * and the RDD supersteps — against a plain-Scala reference; the gate's
-  * three push ops on the RDD executor; and what a call, coreness's
-  * included, leaves behind.
+  * and the RDD supersteps — against a plain-Scala reference; a tally
+  * round over hub blocks on both; the gate's three push ops on the RDD
+  * executor; and what a call, the peels' included, leaves behind.
   */
 class PushSuperstepsSpec extends SparkSpec {
 
@@ -179,32 +179,94 @@ class PushSuperstepsSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("collected distributed calls leave only their results' states persisted") {
+  /** A chain with an out-hub (0) and an in-hub (1): with hubOutDegree
+    * 10 both push directions, and the undirected layout, build hub
+    * blocks.
+    */
+  private def hubbed(): DataFrame = {
     val s = spark
     import s.implicits._
-    val sc = spark.sparkContext
-    // a chain with an out-hub (0) and an in-hub (1): with hubOutDegree
-    // 10 both push directions build hub blocks
     val chain = (0L until 40L).map(v => (v, v + 1))
     val fanOut = (100L until 200L).map(v => (0L, v))
     val fanIn = (200L until 300L).map(v => (v, 1L))
-    val e = (chain ++ fanOut ++ fanIn).toDF("src", "dst").localCheckpoint()
+    (chain ++ fanOut ++ fanIn).toDF("src", "dst").localCheckpoint()
+  }
+
+  test("a tally round over hub blocks equals the driver executor, forward and undirected") {
+    import Supersteps.{Forward, Undirected}
+    val sc = spark.sparkContext
+    val e = hubbed()
+    val step = PushSuperstepsSpec.Mixing
+    def run(maxLocal: Long): Set[Seq[Any]] = rowsOf(
+      Supersteps.push(e, maxLocal, "tally", Seq(Forward, Undirected), hubOutDegree = 10L) { g =>
+        // a round reads only the state it is given: one chain of rounds
+        // that alternates the directions
+        var x = g.start(v => (v % 5).toDouble)
+        for (along <- Seq(Forward, Undirected, Forward, Undirected, Undirected, Forward)) x = g.round(step, along, x)
+        g.result(("x", x, 1.0))
+      })
+    val hubEdges = Seq("tally forward hub edges", "tally undirected hub edges")
+    val jobRdds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(start: SparkListenerJobStart): Unit =
+        start.stageInfos.foreach(_.rddInfos.foreach(r => jobRdds.add(r.name)))
+    }
+    sc.addSparkListener(listener)
+    val dist = try {
+      val rows = run(0L)
+      // the listener bus is asynchronous
+      var tries = 0
+      while (!hubEdges.forall(jobRdds.contains) && tries < 100) { Thread.sleep(50); tries += 1 }
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(hubEdges.forall(jobRdds.contains), jobRdds)
+    val local = run(GraphOps.LocalEdgeThreshold)
+    assert(local.size === 241 && dist === local)
+  }
+
+  test("collected distributed calls leave only their results' states persisted") {
+    val sc = spark.sparkContext
+    val e = hubbed()
     val before = sc.getPersistentRDDs.keySet
     val outs = Seq(
       GraphOps.pagerank(e, iters = 3, maxLocalEdges = 0L, hubOutDegree = 10L),
       GraphOps.ppr(e, Seq(0L), iters = 3, maxLocalEdges = 0L, hubOutDegree = 10L),
       GraphOps.hits(e, iters = 2, maxLocalEdges = 0L, hubOutDegree = 10L))
-    val (core, marks) = audited(GraphOps.coreness(e, maxLocalEdges = 0L))
-    (outs :+ core).foreach(df => assert(df.collect().length === 241))
+    // a peel keeps its last state: after the start, the degree round
+    // and its own rounds
+    def peel(op: String, run: => DataFrame): (DataFrame, String) = {
+      val (df, marks) = audited(run)
+      val rounds = marks.count(_.startsWith(s"$op:round "))
+      assert(rounds > 0, op)
+      (df, s"$op state ${rounds + 1}")
+    }
+    val peels = Seq(
+      peel("coreness", GraphOps.coreness(e, maxLocalEdges = 0L)),
+      peel("kCore", GraphOps.kCore(e, 2, maxLocalEdges = 0L)),
+      peel("densest", GraphOps.densestSubgraph(e, maxLocalEdges = 0L)))
+    val all = outs ++ peels.map(_._1)
+    // the graph is a tree, so its 2-core is empty
+    val sizes = Seq(241L, 241L, 241L, 241L, 0L, 241L)
+    all.zip(sizes).foreach { case (df, n) => assert(df.collect().length === n) }
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
       .map(r => Option(r.name).getOrElse(r.toString)).toSeq.sorted
     // pagerank and ppr keep their last rank state (3 rounds after the
-    // start); hits its last authority and hub states (rounds 3 and 4);
-    // coreness its last estimate, after the degree round and its
-    // h-index rounds
-    val rounds = marks.count(_.startsWith("coreness:round "))
-    assert(rounds > 0 && left === Seq(s"coreness state ${rounds + 1}", "hits state 3", "hits state 4",
-      "rank state 3", "rank state 3"))
-    assert((outs :+ core).map(_.count()) === Seq(241L, 241L, 241L, 241L))
+    // start); hits its last authority and hub states (rounds 3 and 4)
+    assert(left === (peels.map(_._2) ++ Seq("hits state 3", "hits state 4", "rank state 3", "rank state 3")).sorted)
+    assert(all.map(_.count()) === sizes)
+  }
+}
+
+object PushSuperstepsSpec {
+
+  /** A tally program whose state stays in [0, 1009), so its messages
+    * are small integers; the update reads values and counts only
+    * through sums, so it does not depend on how map tasks split a
+    * value's entries.
+    */
+  val Mixing: Supersteps.Tally = new Supersteps.Tally {
+    def send(x: Double, deg: Int): Double = x % 7 + deg % 3
+    def update(old: Double, h: Supersteps.Histogram): Double =
+      ((old.toLong * 3 + (0 until h.size).map(i => (h.value(i) + 1) * (h.value(i) + 1) * h.count(i)).sum) % 1009).toDouble
   }
 }

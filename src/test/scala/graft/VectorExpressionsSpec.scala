@@ -61,4 +61,17 @@ class VectorExpressionsSpec extends SparkSpec {
       .head
     assert(e.getLong(0) === 0L && e.getLong(1) === 0L && e.getLong(2) === 3L)
   }
+
+  test("graft_argmin_cell fails loudly on an empty candidate array and at analysis on a mistyped one") {
+    val empty = spark.sql(
+      """SELECT graft_argmin_cell(cs, array(1.0D), 1.0D)
+        |FROM VALUES (CAST(array() AS ARRAY<STRUCT<cluster: INT, cv: ARRAY<DOUBLE>, c2: DOUBLE>>)) AS t(cs)""".stripMargin)
+    val err = intercept[Exception](empty.collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(messages.exists(_.contains("empty candidate array")), err)
+    // the registration casts the candidates to their struct layout, and
+    // an integer array cannot be cast to it
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_argmin_cell(array(1, 2), array(1.0D), 1.0D)"))
+  }
 }
