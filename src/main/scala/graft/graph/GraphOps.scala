@@ -26,7 +26,7 @@ import graft.graph.Supersteps.{Csr, Pairs, Undirected}
 object GraphOps {
 
   /** Frontiers below this row count are broadcast to the edges (bfs's
-    * expansion, the Brandes and sssp joins). Overridable (system property) so specs can force the
+    * expansion, the Brandes joins). Overridable (system property) so specs can force the
     * shuffled-join path on small graphs; production default 4M rows.
     */
   private def broadcastFrontier: Long =
@@ -50,16 +50,11 @@ object GraphOps {
     * derives only from the previous round's checkpoints): localCheckpoint
     * through [[ckpt]], call [[endRound]] once per round, and the
     * PREVIOUS round's checkpoint blocks are unpersisted as soon as the
-    * current round has materialized — peak checkpoint storage drops
-    * from O(rounds · |E|) to O(|E|), and the superseded 59M-row sets
-    * stop queueing on the ASYNC ContextCleaner (whose reclamation wave
-    * was measured landing on whatever ops run next — the r18
-    * dfs-family attribution, PROBES_r18.json). Only safe where no
-    * frame from two rounds back is ever read again: connected
-    * components' star rounds, msf's Borůvka cross edges and labels.
-    * New persistent RDD ids are discovered by diffing getPersistentRDDs
-    * around the eager checkpoint; the loops are single-threaded per op,
-    * so the diff is exactly the checkpoint's blocks.
+    * current round has materialized, so peak checkpoint storage is
+    * O(|E|) and superseded sets do not wait for the async
+    * ContextCleaner. Only safe where no frame from two rounds back is
+    * read again: connected components' star rounds, msf's Borůvka
+    * cross edges and labels.
     */
   private final class RoundCheckpoints(sc: org.apache.spark.SparkContext) {
     private var prev: Set[Int] = Set.empty
@@ -67,13 +62,9 @@ object GraphOps {
     def ckpt(df: DataFrame): DataFrame = {
       val before = sc.getPersistentRDDs.keySet
       val out = df.localCheckpoint()
-      // r19: capture the checkpoint's OWN RDD id from the returned
-      // plan's LogicalRDD leaf — exact under concurrency (a foreign
-      // persist landing in the window can no longer be captured and
-      // later fatally unpersisted; localCheckpoint lineage is
-      // non-recomputable). The keyset diff stays only as the fallback
-      // if the leaf shape ever changes, and the spec pins the primary
-      // path so a silent fallback cannot go unnoticed.
+      // the checkpoint's OWN RDD id, from the returned plan's LogicalRDD
+      // leaf, so a foreign persist in the window is never captured; the
+      // keyset diff is the fallback, and a spec pins the primary path
       cur = cur ++ (RoundCheckpoints.ownRddId(out) match {
         case Some(id) => Set(id)
         case None     => sc.getPersistentRDDs.keySet diff before
@@ -85,14 +76,10 @@ object GraphOps {
       prev = cur; cur = Set.empty
     }
 
-    /** End-of-loop hygiene (r20, verdict r19 #2): release EVERYTHING
-      * still tracked — except the frames in `keep` (the op's result
-      * lineage) — with BLOCKING unpersists, so the multi-GB block
-      * drops are paid inside the op that owns them instead of landing
-      * as an async ContextCleaner wave on whatever the bench runs
-      * next (the r17-r19 dfs-family median pollution). Mid-loop
-      * frees stay async ([[endRound]]); blocking is cheap here
-      * because the loop is already over.
+    /** End-of-loop hygiene: release everything still tracked but the
+      * frames in `keep` (the op's result lineage) with blocking
+      * unpersists, so the block drops are paid inside the op that owns
+      * them. Mid-loop frees stay async ([[endRound]]).
       */
     def drain(keep: Seq[DataFrame] = Nil): Unit = {
       val keepIds = keep.flatMap(RoundCheckpoints.ownRddId).toSet
@@ -144,47 +131,36 @@ object GraphOps {
   }
 
   /** Edge count below which iterative traversals run on the driver —
-    * the same adaptive call AQE makes when it converts a shuffle join
-    * to a local broadcast: 4M edge pairs ≈ 64 MB, matching the
-    * session's autoBroadcastJoinThreshold. Every unweighted op with a
-    * driver twin compares it with the row count of its one
-    * [[Supersteps.intake]] job (repeats included) and, at or below it,
-    * receives those rows as primitive (src, dst) arrays, ≈ 16 B per
-    * edge: [[bfs]] and its callers, [[dfsLeaves]], the push ops, and
-    * the distinct-edge ops of [[loopFree]] (self-loops excluded):
-    * kCore, coreness and densestSubgraph, whose push rounds take the
-    * intake itself above the bound, and through [[simpleEdges]] kTruss,
-    * triangleCounts, labelPropagation, scc and betweenness. msf and
-    * sssp, which carry a weight, count their own frames. A graph this
-    * small costs more in per-level scheduler latency than the whole
-    * traversal does locally, and the reference itself materializes the
-    * full adjacency matrix per query (secondary_server.c:126-137).
-    * Above the threshold the
-    * level-synchronous loops — the only shape that works at 100 TB —
-    * are used unconditionally; specs pin both paths to identical
-    * output by forcing maxLocalEdges = 0. Measured at the sf1-equivalent
-    * supply graph (5.87M edges), when the twins still collected Rows:
-    * collecting a 4M-row frame cost MORE than one distributed star
-    * round over it — the crossover was row-collect-bound, not
-    * memory-bound.
-    * [[connectedComponents]] collects nothing: for it this is the
-    * forest size at or below which it finishes in one task, and so
-    * that task's memory bound. Measured on 4 cores: faster than the
-    * driver collect it replaced up to 1.03M edges, and 2.6 s against
-    * 34-42 s for the star rounds on a 3.2M-4M-edge stalled forest.
+    * the adaptive call AQE makes when it turns a shuffle join into a
+    * broadcast: 4M edge pairs ≈ 64 MB, the session's
+    * autoBroadcastJoinThreshold. Every op with a driver twin compares it
+    * with the row count of its one [[Supersteps.intake]] job (repeats
+    * included) and, at or below it, receives those rows as primitive
+    * arrays, ≈ 16 B per edge and 24 B with a toll: [[bfs]] and its
+    * callers, [[dfsLeaves]], the push ops, [[sssp]], and the
+    * distinct-edge ops of [[loopFree]] (self-loops excluded) — kCore,
+    * coreness and densestSubgraph, whose push rounds take the intake
+    * itself above the bound, and through [[simpleEdges]] kTruss,
+    * triangleCounts, labelPropagation, scc, betweenness and [[msf]]. A
+    * graph this small costs more in per-level scheduler latency than the
+    * whole traversal does locally (the reference materializes the full
+    * adjacency matrix per query, secondary_server.c:126-137). Above it
+    * the level-synchronous loops run unconditionally; specs pin both
+    * paths equal by forcing maxLocalEdges = 0. [[connectedComponents]]
+    * collects nothing: for it this is the forest size at or below which
+    * it finishes in one task, that task's memory bound (measured on 4
+    * cores: 2.6 s against 34-42 s of star rounds on a 3.2M-4M-edge
+    * stalled forest).
     */
   val LocalEdgeThreshold: Long = 4000000L
 
   /** Per-task edge-share cap for the iterated contraction passes in
     * [[connectedComponents]]: a pass whose coalesced tasks would each
     * union-find more edges than this is not run, and the forest goes to
-    * the star rounds. The per-task open-addressing map is
-    * O(min(task endpoints, |V|)) entries (16 B each), so 16M
-    * edges/task bounds a task's map near 512 MB — safe at local[32]
-    * heaps and a deliberate executor-memory-shaped knob at scale. (The
-    * one-task finish below `maxLocalEdges` is bounded by that instead.)
-    * The BFS supersteps size their partition count by it too, so an
-    * exchanged edge block stays under ≈ 256 MB.
+    * the star rounds. A task's open-addressing map holds
+    * O(min(task endpoints, |V|)) entries of 16 B, so near 512 MB. The
+    * supersteps size their partition count by it too, so an exchanged
+    * edge block stays under ≈ 256 MB.
     */
   val ContractTaskEdgeBound: Long = 16000000L
 
@@ -314,10 +290,9 @@ object GraphOps {
       }
     }
     val marks = Supersteps.sortedDistinct(loops.result())
-    val rs = new mutable.ArrayBuilder.ofLong
-    val vs = new mutable.ArrayBuilder.ofLong
-    uf.foreachNonRoot { (r, v) => rs.addOne(r); vs.addOne(v) }
-    val (roots, leaves) = (rs.result(), vs.result())
+    val forest = new Supersteps.PairsBuilder(weighted = false)
+    uf.foreachNonRoot((r, v) => forest.add(r, v, 0L))
+    val Pairs(roots, leaves, _) = forest.result()
     val out =
       if (!last) Pairs(roots ++ marks, leaves ++ marks)
       else {
@@ -338,26 +313,30 @@ object GraphOps {
   private def undirected(edges: DataFrame): DataFrame =
     canonEdges(edges).select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
 
-  /** The (src, dst) edges of `e` with no self-loop or null endpoint,
-    * read once by one [[Supersteps.intake]] job of its non-loop rows. If
-    * at most `maxLocalEdges` rows were read (repeats included), their
-    * deduplicated [[Csr]], and no further job; else the intake, whose
-    * checkpointed pairs the caller releases.
+  /** The (src, dst[, w]) edges of `e` with no self-loop or null, read
+    * once by one [[Supersteps.intake]] job of its non-loop rows. If at
+    * most `maxLocalEdges` rows were read (repeats included), their
+    * deduplicated [[Csr]] (a repeated edge keeps its least toll), and no
+    * further job; else the intake, whose checkpointed pairs the caller
+    * releases.
     */
   private def loopFree(e: DataFrame, maxLocalEdges: Long, name: String): Either[Csr, Supersteps.Intake] = {
     val in = Supersteps.intake(e.where(col("src") =!= col("dst")), maxLocalEdges, name)
-    if (in.local != null) Left(Csr(in.local.xs, in.local.ys).deduped) else Right(in)
+    if (in.local != null) Left(in.local.csr.deduped) else Right(in)
   }
 
-  /** [[loopFree]]'s edges; above the bound, the distinct pairs as a
+  /** [[loopFree]]'s edges; above the bound, the distinct rows as a
     * local-checkpointed frame built from the intake, which is released,
     * and the frame's row count.
     */
   private def simpleEdges(e: DataFrame, maxLocalEdges: Long, name: String): Either[Csr, (DataFrame, Long)] =
     loopFree(e, maxLocalEdges, name).map { in =>
       try {
-        val rows = in.pairs.flatMap(p => p.xs.indices.iterator.map(i => Row(p.xs(i), p.ys(i))))
-        val d = e.sparkSession.createDataFrame(rows, longCols("src", "dst")).distinct().localCheckpoint()
+        val rows = in.pairs.flatMap(p => p.xs.indices.iterator.map { i =>
+          if (p.ws == null) Row(p.xs(i), p.ys(i)) else Row(p.xs(i), p.ys(i), p.ws(i))
+        })
+        val cols = if (e.columns.contains("w")) longCols("src", "dst", "w") else longCols("src", "dst")
+        val d = e.sparkSession.createDataFrame(rows, cols).distinct().localCheckpoint()
         (d, d.count())
       } finally in.pairs.unpersist(blocking = true)
     }
@@ -713,34 +692,26 @@ object GraphOps {
       .distinct())
   }
 
-  /** Hub floor for the two-frame split: a source only counts as a hub
-    * when its out-edge list both exceeds an ideal partition's share
-    * (edges / shuffle partitions) AND this absolute floor — below it
-    * the "straggler" fits any executor and the split's extra frames
-    * would cost more than they save.
+  /** Hub floor: a source is a hub only past both an ideal partition's
+    * share (edges / partitions) AND this floor, below which the
+    * straggler fits any executor and a split would cost more than it saves.
     */
   val HubMinOutDegree: Long = 1L << 16
 
-  /** Two-frame hub split of a src-partitioned edge cache for the sssp
-    * relaxation loop and the Brandes sweeps (the BFS and push
-    * supersteps split their RDD layouts in [[Supersteps.bySource]]).
-    * It is the r12-documented answer to power-law hub skew — salting
-    * the shared frame is NOT it, because the per-iteration join
-    * requires ClusteredDistribution(src) and a (src, salt)
-    * partitioning would re-exchange the full edge set every round:
-    *  - `tail` keeps HashPartitioning(src) (the broadcast anti-join
-    *    preserves the cached partitioning, so the loop's exchange-free
-    *    edge side survives), with every hub source's edges REMOVED —
-    *    its max partition is bounded by the tail degree distribution;
-    *  - `hub` holds the hub sources' edges spread round-robin across
-    *    all partitions (no per-src clustering to preserve — hub values
-    *    ride in by broadcast, so any layout joins without a shuffle);
-    *  - `hubDeg` is the (src, od) hub catalog — by construction at
-    *    most edges/threshold rows (auto threshold ⇒ ≤ #partitions),
-    *    small enough to broadcast each iteration.
-    * `hubOutDegree` 0 = auto: max([[HubMinOutDegree]], edges/parts) —
-    * on every shipped graph that yields zero hubs and the layout (and
-    * plan) is bit-identical to the pre-split code.
+  /** Two-frame hub split of a key-partitioned edge cache for the
+    * Brandes sweeps, its only caller (the BFS and push supersteps, sssp's
+    * included, split their RDD layouts in [[Supersteps.bySource]]).
+    * Salting would not do: the per-level join requires
+    * ClusteredDistribution(key), so a (key, salt) partitioning would
+    * re-exchange the edges every level. Instead:
+    *  - `tail` keeps the cached partitioning minus every hub's edges,
+    *    so its max partition is bounded by the tail degrees;
+    *  - `hub` holds the hubs' edges round-robin over all partitions
+    *    (hub values ride in by broadcast, so any layout joins);
+    *  - `hubDeg` is the (key, od) hub catalog, at most edges/threshold
+    *    rows, broadcast each level.
+    * `hubOutDegree` 0 = auto: max([[HubMinOutDegree]], edges/parts),
+    * which on every shipped graph yields zero hubs.
     */
   private[graft] final case class HubSplit(tail: DataFrame, hub: Option[DataFrame],
       hubDeg: Option[DataFrame]) {
@@ -761,8 +732,7 @@ object GraphOps {
 
   private[graft] def hubSplit(e: DataFrame, eCount: Long, deg: DataFrame,
       hubOutDegree: Long, key: String = "src",
-      tailLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      releaseOnError: Seq[DataFrame] = Nil): HubSplit = {
+      tailLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): HubSplit = {
     val spark = e.sparkSession
     val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     val threshold = hubThreshold(eCount, parts, hubOutDegree)
@@ -774,7 +744,6 @@ object GraphOps {
     // blocks (the success paths hand ownership of `e` to the HubSplit).
     if (nHubs > MaxHubs) {
       e.unpersist()
-      releaseOnError.foreach(_.unpersist())
       throw tooManyHubs(nHubs, key, threshold)
     }
     if (nHubs == 0) HubSplit(e, None, None)
@@ -1762,7 +1731,8 @@ object GraphOps {
   private def localTriangles(spark: SparkSession, adj: Csr): DataFrame = {
     import spark.implicits._
     val counts = mutable.LongMap.empty[Long].withDefaultValue(0L)
-    adj.foreachEdge { (a, b) =>
+    adj.foreachSlot { (a, j) =>
+      val b = adj.vals(j)
       common(adj, adj.slots(a), adj.slots(b)) { c => counts(a) += 1; counts(b) += 1; counts(c) += 1 }
     }
     counts.toSeq.toDF("vertex", "n_tri")
@@ -2080,175 +2050,126 @@ object GraphOps {
   }
 
   /** Weighted single-source shortest paths over a (src, dst, w) edge
-    * list with non-negative integer tolls. Contract: (vertex, dist)
-    * with dist = minimum total toll from `source`; unreachable vertices
-    * absent. The reference's traversals are unweighted (dfs_bfs.h); the
-    * weighted variant is the natural extension every road/trade-network
-    * user asks of a graph engine.
-    *
-    * Execution is frontier relaxation — Bellman-Ford restricted to the
-    * vertices whose distance improved last round (delta-stepping's
-    * one-bucket degenerate form, the shape that distributes):
-    *  - per round, the improved frontier joins the cached edge frame
-    *    (broadcast while small; past the broadcast bound the edges are
-    *    re-persisted hash-partitioned by src once, the BFS-loop trade),
-    *  - candidate distances min-combine per dst (map-side partial),
-    *  - the vertex-partitioned dist frame full-outer-merges the
-    *    candidates exchange-free (both sides already hash(vertex)), and
-    *    the rows that improved become the next frontier.
-    *  - Rounds are bounded by [[ssspRoundCap]]: `maxRounds` 0 (the
-    *    default) auto-scales the cap to max(256, |E|). Label-correcting
-    *    relaxation can legitimately need up to the weighted
-    *    shortest-path hop depth (≤ |V|−1 ≤ |E|+1 per component)
-    *    rounds, so the auto cap can NEVER reject a valid input — it
-    *    only stops a genuinely non-terminating loop (which, with
-    *    non-negative integer tolls, cannot occur; the cap is a
-    *    backstop, and hitting it still fails loudly).
-    * Driver Dijkstra below `maxLocalEdges` (the same adaptive split as
-    * every other traversal; specs force 0 to pin both paths equal).
+    * list with non-negative integer tolls (the reference's traversals,
+    * dfs_bfs.h, are unweighted). Contract: (vertex, dist) with dist =
+    * minimum total toll from `source`; unreachable vertices absent;
+    * `source` at 0, also when it has no edge. A row with a null is
+    * dropped; a negative toll, or a distance of 2^53 or more (past what
+    * a Double holds exactly), fails the call on every path with one
+    * message. The edges are read once, by one weighted
+    * [[Supersteps.intake]] job; at or below `maxLocalEdges` rows, driver
+    * Dijkstra walks their [[Csr]] ([[localDijkstra]]) with no further
+    * job. Above it runs GraphX's Pregel SSSP on the push kernel
+    * ([[Supersteps.push]]): a min-merge program ([[Relaxed]]) in which a
+    * vertex sends its distance only in the round after it fell, until no
+    * distance falls; a round is one Spark job and plans no query
+    * (audited as `sssp:round N`). At most [[ssspRoundCap]] rounds lower
+    * a distance; hitting an explicit cap fails loudly.
     */
   def sssp(edges: DataFrame, source: Long, maxRounds: Int = 0,
       maxLocalEdges: Long = LocalEdgeThreshold, hubOutDegree: Long = 0L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e.count()
-    if (eCount <= maxLocalEdges) {
-      val out = localDijkstra(spark, e, source)
-      e.unpersist()
-      return out
+    val in = Supersteps.intake(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("w").cast("long").as("w")), maxLocalEdges, "sssp")
+    val negative = if (in.local != null) in.local.ws != null && in.local.ws.exists(_ < 0)
+      else in.pairs.sparkContext.runJob(in.pairs, (it: Iterator[Pairs]) => it.exists(_.ws.exists(_ < 0))).contains(true)
+    if (negative) {
+      if (in.pairs != null) in.pairs.unpersist(blocking = true)
+      throw new IllegalArgumentException("sssp needs non-negative tolls: an edge has w < 0")
     }
-    var dist = Seq((source, 0L)).toDF("vertex", "dist")
-      .repartition(col("vertex")).localCheckpoint()
-    var frontier = dist
-    var frontierRows = 1L
-    // Same lazily-built partitioned layout as the BFS loop, with the
-    // same [[hubSplit]] hub peel: past the broadcast bound only the
-    // frontier shuffles per round, and a power-law source's edges are
-    // relaxed by every partition (broadcast of the frontier's hub
-    // slice) instead of one straggler task.
-    var eSplit: HubSplit = null
-    def partitionedSplit(): HubSplit = {
-      if (eSplit == null) {
-        val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-        eBySrc.count()
-        val od = eBySrc.groupBy("src").agg(count(lit(1)).as("od"))
-        eSplit = hubSplit(eBySrc, eCount, od, hubOutDegree,
-          releaseOnError = Seq(e))
-        e.unpersist()
-      }
-      eSplit
-    }
-    // frontier×edges candidate rows for one round over whichever
-    // layout exists (mirrors the BFS expand)
-    def relaxed(f: DataFrame, broadcastSide: Boolean): DataFrame = {
-      if (eSplit == null && broadcastSide)
-        return e.join(broadcast(f), e("src") === f("vertex"))
-          .select(col("dst").as("vertex"), (f("dist") + col("w")).as("nd"))
-      val hs = partitionedSplit()
-      val fb = if (broadcastSide) broadcast(f) else f
-      val tailRows = hs.tail.join(fb, hs.tail("src") === fb("vertex"))
-        .select(col("dst").as("vertex"), (fb("dist") + col("w")).as("nd"))
-      hs.hub match {
-        case None => tailRows
-        case Some(hubE) =>
-          val hubF = broadcast(f.join(
-            broadcast(hs.hubDeg.get.select(col("src").as("vertex"))),
-            Seq("vertex"), "left_semi"))
-          tailRows.unionAll(
-            hubE.join(hubF, hubE("src") === hubF("vertex"))
-              .select(col("dst").as("vertex"), (hubF("dist") + col("w")).as("nd")))
+    if (in.local != null) return localDijkstra(spark, in.local.csr, source)
+    Supersteps.push(spark, in, "sssp", Seq(Supersteps.Forward), hubOutDegree) { g =>
+      var s = g.start(v => if (v == source) 1.0 else Unreached)
+      // a source with no edge has no state
+      if (s.live == 0) Seq((source, 0L)).toDF("vertex", "dist")
+      else {
+        val roundCap = ssspRoundCap(maxRounds, in.count) + 1 // and one in which none fell
+        var rounds = 0L
+        while (s.live > 0 && rounds < roundCap) {
+          rounds += 1
+          audit(s"sssp:round $rounds")
+          s = g.round(Relaxed, Supersteps.Forward, s)
+        }
+        require(s.live == 0,
+          s"sssp: ${s.live} distances fell in round $rounds — distances not converged; raise maxRounds")
+        require(s.least > TooFar, TooFarMessage)
+        g.result(("dist", s, 1.0)).where(col("dist") >= -DistanceLimit)
+          .select(col("vertex"), (-col("dist") - 1).cast(LongType).as("dist"))
       }
     }
-    val roundCap = ssspRoundCap(maxRounds, eCount)
-    var round = 0L
-    while (frontierRows > 0 && round < roundCap) {
-      round += 1
-      val small = frontierRows <= broadcastFrontier
-      val cand = relaxed(frontier, small)
-        .groupBy("vertex").agg(min("nd").as("nd"))
-      // dist is hash(vertex)-partitioned (repartition at birth, then
-      // each round's merge retains the join partitioning through the
-      // checkpoint), and cand leaves its aggregate hash(vertex)-
-      // partitioned too — the full-outer merge plans exchange-free.
-      val merged = dist.join(cand, Seq("vertex"), "full_outer")
-        .select(col("vertex"),
-          least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"),
-          (col("nd").isNotNull &&
-            (col("dist").isNull || col("nd") < col("dist"))).as("improved"))
-        .localCheckpoint()
-      // The frontier is a filter over the merged checkpoint's cached
-      // blocks — no second job.
-      frontier = merged.where(col("improved")).select("vertex", "dist")
-      frontierRows = frontier.count()
-      dist = merged.select("vertex", "dist")
-    }
-    e.unpersist()
-    if (eSplit != null) eSplit.unpersistAll()
-    // Mirror scc's contract: an exhausted round budget with a live
-    // frontier means the returned distances are NOT final — fail loudly
-    // rather than emit silently-wrong output (bfs's precedent is an
-    // unbounded default; sssp's bound exists only to cap a pathological
-    // toll chain, so hitting it is an error, not a result).
-    require(frontierRows == 0,
-      s"sssp: frontier still has $frontierRows improvable vertices after " +
-        s"$roundCap rounds — distances not converged; raise maxRounds")
-    dist
   }
 
-  /** The sssp round budget as a pure function of (caller request,
-    * edge count) — spec-pinned in all three regimes. `maxRounds` > 0
-    * is an explicit caller cap, taken verbatim; 0 auto-scales to
-    * max(256, |E|), an upper bound on the hop depth of any weighted
-    * shortest path (≤ |V|−1 ≤ |E|+1 within a component), so the
-    * default can never reject a valid deep-chain graph.
+  private val TooFarMessage = "sssp: a shortest distance reaches 2^53, past what a distance holds exactly"
+
+  /** 2^53, where a Double, the push kernel's state, starts to skip integers. */
+  private val DistanceLimit: Double = (1L << 53).toDouble
+
+  /** [[sssp]]'s min-merge program. A distance d that fell in the last
+    * round is the state d + 1 (> 0, so `Pushed.live` counts the
+    * frontier) and is sent; a settled one is −(d + 1), in [−2^53, −1],
+    * and is not. A vertex takes the least distance + toll it receives
+    * if that is lower than its own. A vertex with no distance is
+    * [[Unreached]]; one whose least distance so far is ≥ 2^53 is
+    * [[TooFar]], the least state, so `Pushed.least` shows it until a
+    * shorter path replaces it.
+    */
+  private val Unreached = -2 * DistanceLimit
+  private val TooFar = Double.NegativeInfinity
+  private val Relaxed = new Supersteps.Relax {
+    def send(x: Double, deg: Int): Double = if (x > 0) x - 1 else Double.PositiveInfinity
+    def update(old: Double, in: Double): Double = {
+      val d = if (old > 0) old - 1 else if (old >= -DistanceLimit) -old - 1 else Double.PositiveInfinity
+      if (in < d) { if (in >= DistanceLimit) TooFar else in + 1 }
+      else if (old > 0) -old
+      else old
+    }
+  }
+
+  /** The most sssp rounds that may lower a distance: `maxRounds` if
+    * > 0, else max(256, |E|), which bounds every shortest path's hop
+    * depth (≤ |V|−1 ≤ |E| within a component), so the default can never
+    * reject a valid deep-chain graph.
     */
   private[graft] def ssspRoundCap(maxRounds: Int, eCount: Long): Long =
     if (maxRounds > 0) maxRounds.toLong else math.max(256L, eCount)
 
   /** Minimum spanning forest over a (src, dst, w) edge list, treated
-    * undirected (per unordered pair the minimum toll wins). The
-    * composite order (w, a, b) totally orders the edge set, so the MSF
-    * is UNIQUE — every correct algorithm returns the same forest,
-    * which is what lets the driver Kruskal twin, the distributed
+    * undirected (per unordered pair the minimum toll wins; a row with a
+    * null src, dst or w is dropped; any toll, negative included, is
+    * accepted). The composite order (w, a, b) totally orders the edge
+    * set, so the MSF is UNIQUE — every correct algorithm returns the same
+    * forest, which is what lets the driver Kruskal twin, the distributed
     * Borůvka loop, and the oracle's cycle-property formulation all be
     * hash-compared. Output: (src, dst, w) canonical (src < dst).
     *
-    * Distributed execution is Borůvka — the textbook MSF that
-    * distributes: per round every component nominates its (w, a, b)-
-    * minimum outgoing edge (one min(struct) aggregate = map-side
-    * partial), nominated edges join the forest, and components
-    * contract by running [[connectedComponents]] on the nomination
-    * graph (component-count-sized, itself adaptive). Components at
-    * least halve per round → ≤ log₂(V) rounds; each round's network
-    * is two label joins + one aggregate over surviving cross edges,
-    * and the surviving edge set only shrinks. Driver Kruskal under
-    * `maxLocalEdges` (same adaptive split as every traversal).
+    * The non-loop undirected edges are read once, by one weighted
+    * intake job ([[simpleEdges]]); at or below `maxLocalEdges` rows,
+    * driver Kruskal sorts them ([[localKruskal]]) with no further job.
+    * Above it, over the distinct (a, b, w) rows, runs Borůvka, the MSF
+    * that distributes: per round every component nominates its
+    * (w, a, b)-minimum outgoing edge (one min(struct) aggregate; a
+    * repeated pair's larger toll is never a minimum), nominated edges
+    * join the forest, and components contract by [[connectedComponents]]
+    * on the nomination graph. Components at least halve per round, so
+    * ≤ log₂(V) rounds, and the surviving edge set only shrinks.
     */
   def msf(edges: DataFrame, maxRounds: Int = 64,
       maxLocalEdges: Long = LocalEdgeThreshold): DataFrame = {
     val spark = edges.sparkSession
-    val ue = edges.select(
-      least(col("src"), col("dst")).cast("long").as("a"),
-      greatest(col("src"), col("dst")).cast("long").as("b"),
+    val undirectedTolls = edges.select(
+      least(col("src"), col("dst")).cast("long").as("src"),
+      greatest(col("src"), col("dst")).cast("long").as("dst"),
       col("w").cast("long").as("w"))
-      .where(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(min("w").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ueCount = ue.count()
-    if (ueCount <= maxLocalEdges) {
-      val out = localKruskal(spark, ue)
-      ue.unpersist()
-      return out
+    val (ue, ueCount) = simpleEdges(undirectedTolls, maxLocalEdges, "msf") match {
+      case Left(g) => return localKruskal(spark, g)
+      case Right((d, n)) => (d.toDF("a", "b", "w"), n)
     }
     // A round reads only the previous round's cross edges and labels,
     // so those are round checkpoints; the nominations stay, because
     // the returned forest reads them.
     val hy = new RoundCheckpoints(spark.sparkContext)
-    // comp: (vertex, comp) — every vertex starts as its own component.
+    // comp: (vertex, comp), every vertex its own component at first
     var comp = hy.ckpt(ue.select(col("a").as("vertex"))
       .unionAll(ue.select(col("b").as("vertex"))).distinct()
       .select(col("vertex"), col("vertex").as("comp"))
@@ -2295,7 +2216,7 @@ object GraphOps {
       hy.endRound()
     }
     hy.drain()
-    ue.unpersist()
+    releaseReads(ue)
     // Component halving bounds convergence at log₂(V) ≤ 64 for any
     // real V, so live cross edges here can only mean a contraction bug
     // — fail loudly instead of returning a partial forest that would
@@ -2311,43 +2232,44 @@ object GraphOps {
         .select(col("a").as("src"), col("b").as("dst"), col("w"))
   }
 
-  /** Driver Kruskal twin: sort by (w, a, b), union-find. */
-  private def localKruskal(spark: SparkSession, ue: DataFrame): DataFrame = {
+  /** Driver Kruskal twin over the intake's deduplicated `g` (a → b,
+    * a < b, least toll per pair): its edges in (w, a, b) order — a
+    * stable sort by toll of g's (a, b) slot order — joined by union-find.
+    */
+  private def localKruskal(spark: SparkSession, g: Csr): DataFrame = {
     import spark.implicits._
-    val es = ue.collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
+    val p = g.pairs
     val uf = new UnionFind()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    es.foreach { case (w, a, b) => if (uf.union(a, b)) out += ((a, b, w)) }
-    out.toSeq.toDF("src", "dst", "w")
+    p.xs.indices.sortBy(p.ws(_)).filter(j => uf.union(p.xs(j), p.ys(j)))
+      .map(j => (p.xs(j), p.ys(j), p.ws(j))).toDF("src", "dst", "w")
   }
 
-  /** Driver-side Dijkstra twin of the relaxation loop: same
-    * (vertex, dist) min-toll contract, identical output.
+  /** Driver-side Dijkstra twin of the relaxation rounds over the
+    * intake's weighted `g`: same (vertex, dist) min-toll contract and
+    * the same 2^53 limit, identical output. Vertices are indices into
+    * their sorted ids; a stale queue entry is skipped when polled.
     */
-  private def localDijkstra(spark: SparkSession, e: DataFrame, source: Long): DataFrame = {
+  private def localDijkstra(spark: SparkSession, g: Csr, source: Long): DataFrame = {
     import spark.implicits._
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-    e.collect().foreach { r =>
-      adj.computeIfAbsent(r.getLong(0),
-        _ => scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]) +=
-        ((r.getLong(1), r.getLong(2)))
-    }
-    val dist = new java.util.HashMap[Long, Long]()
-    val pq = new java.util.PriorityQueue[(Long, Long)](
-      (a: (Long, Long), b: (Long, Long)) => java.lang.Long.compare(a._1, b._1))
-    pq.add((0L, source))
+    val ids = Supersteps.sortedDistinct(g.keys ++ g.vals :+ source)
+    val limit = 1L << 53
+    val dist = Array.fill(ids.length)(Long.MaxValue)
+    val done = new Array[Boolean](ids.length)
+    val pq = new java.util.PriorityQueue[(Long, Int)](Ordering.by[(Long, Int), Long](_._1))
+    pq.add((0L, java.util.Arrays.binarySearch(ids, source)))
     while (!pq.isEmpty) {
-      val (d, v) = pq.poll()
-      if (!dist.containsKey(v)) {
-        dist.put(v, d)
-        val ns = adj.get(v)
-        if (ns != null) ns.foreach { case (u, w) =>
-          if (!dist.containsKey(u)) pq.add((d + w, u))
+      val (d, i) = pq.poll()
+      if (!done(i)) {
+        require(d < limit, TooFarMessage)
+        done(i) = true
+        dist(i) = d
+        g.slots(ids(i)).foreach { j =>
+          val u = java.util.Arrays.binarySearch(ids, g.vals(j))
+          val nd = if (g.ws(j) >= limit - d) limit else d + g.ws(j)
+          if (nd < dist(u)) { dist(u) = nd; pq.add((nd, u)) }
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    dist.asScala.toSeq.map { case (v, d) => (v, d) }.toDF("vertex", "dist")
+    ids.indices.filter(done).map(i => (ids(i), dist(i))).toDF("vertex", "dist")
   }
 }

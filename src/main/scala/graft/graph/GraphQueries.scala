@@ -924,8 +924,8 @@ object GraphQueries {
 
   /** Weighted shortest-path distances from the smallest vertex of the
     * tolled nation graph (integer tolls 1..7, [[DerivedGraphs
-    * .nationWeightedEdges]]): frontier-relaxation Bellman-Ford
-    * distributed, Dijkstra locally — see [[GraphOps.sssp]].
+    * .nationWeightedEdges]]): min-merge push rounds distributed,
+    * Dijkstra locally — see [[GraphOps.sssp]].
     */
   def graphSsspWeighted(spark: SparkSession, dir: String): DataFrame = {
     val e = DerivedGraphs.nationWeightedEdges(spark, dir)

@@ -15,36 +15,42 @@ import org.apache.spark.storage.StorageLevel
   * primitive per-partition blocks, the way GraphX runs Pregel
   * (PAPERS.md: GraphX, OSDI'14): the BFS frontier loop behind
   * [[GraphOps.bfs]], and the push rounds of a vertex [[Program]] —
-  * the sums behind PageRank, PPR, HITS and the k-core peel, and the
-  * histogram tallies behind coreness and the densest-subgraph peel.
+  * the sums behind PageRank, PPR, HITS and the k-core peel, the
+  * histogram tallies behind coreness and the densest-subgraph peel, and
+  * the min merge behind weighted sssp.
   * Each level or round is ONE Spark job and no Catalyst planning.
   *
   * A call reads its edges exactly once, in one [[intake]] job: the
-  * (src, dst) pairs local-checkpointed as primitive arrays, their
-  * count, and — at or below the call's driver bound — every pair, on
-  * which the driver twin runs with no further job. Above the bound the
-  * loop builds its blocks from the checkpointed intake, so no later job
-  * reads, counts or caches the input, and no frame enters Spark's
-  * `CacheManager`. Duplicate edges are not planned away in front of the
-  * intake: a kernel drops them where a source's edges first meet
-  * ([[Csr.deduped]]) — the driver's one block, or an exchanged
-  * by-source block.
+  * (src, dst) pairs — with their tolls `w` on a weighted graph —
+  * local-checkpointed as primitive arrays, their count, and — at or
+  * below the call's driver bound — every pair, on which the driver twin
+  * runs with no further job. Above the bound the loop builds its blocks
+  * from the checkpointed intake, so no later job reads, counts or
+  * caches the input, and no frame enters Spark's `CacheManager`.
+  * Duplicate edges are not planned away in front of the intake: a
+  * kernel drops them where a source's edges first meet
+  * ([[Csr.deduped]]; a repeated weighted edge keeps its least toll) —
+  * the driver's one block, or an exchanged by-source block. Tolls ride
+  * the same exchange, hub deal and push blocks as the pairs; an
+  * unweighted call builds no weight array.
   *
   * A BFS level expands the frontier over the edge blocks, shuffles the
   * candidate (tag, vertex) pairs by vertex, and drops the visited ones
   * in a co-partitioned `zipPartitions` against `visited`. A push round
   * ([[push]]) sends each vertex's message along its out-edges, merges
-  * them per destination inside the map task (a sum, or a histogram of
-  * (value, count) entries), and updates each vertex from what it
-  * received in the reduce task that owns it. The job materializes
-  * the next frontier or state (lineage cut by `localCheckpoint`) and
-  * returns its size — plus the BFS frontier's rows while it is under the
-  * broadcast bound, or the push state's count and total of states > 0.
+  * them per destination inside the map task (a sum, a histogram of
+  * (value, count) entries, or the least message + toll, where a
+  * destination that gets only +∞ gets no message), and updates each
+  * vertex from what it received in the reduce task that owns it. The
+  * job materializes the next frontier or state (lineage cut by
+  * `localCheckpoint`) and returns its size — plus the BFS frontier's
+  * rows while it is under the broadcast bound, or the push state's
+  * count and total of states > 0 and its least state.
   *
   * Scale geometry:
   *  - edges are CSR blocks (distinct sorted keys, offsets, values;
-  *    ≈ 16 B per edge), built once per call from the intake; an
-  *    exchanged block holds each of its sources' edges once;
+  *    ≈ 16 B per edge, 24 B with tolls), built once per call from the
+  *    intake; an exchanged block holds each of its sources' edges once;
   *  - a loop's partition count is the session's shuffle partitions,
   *    raised so an exchanged edge partition holds at most
   *    [[GraphOps.ContractTaskEdgeBound]] edges;
@@ -73,17 +79,14 @@ import org.apache.spark.storage.StorageLevel
   * direction.
   *
   * Memory: every per-partition structure is a heap object that cannot
-  * spill — an edge block (≈ 16 B per edge; at most
-  * ContractTaskEdgeBound edges once exchanged, ≈ 256 MB), a visited set
-  * and a map task's deduplicated candidates (16 B per slot, 23-46 B per
-  * (tag, vertex) pair), a push state or a map task's sums (16 B per
-  * vertex; a round holds its input and output state), a map task's
-  * tallies (16 B per entry, at most one per edge). A task's heap
-  * must hold its partition's share of the reachable (tag, vertex) pairs
-  * or of the vertices; a set past 2^30 slots (≈ 750M pairs) fails
-  * rather than grow. Unlike a DataFrame anti-join or aggregation,
-  * nothing here spills to disk, and AQE does not coalesce or split
-  * these RDD shuffles.
+  * spill — an edge block (≈ 16-24 B per edge; at most
+  * ContractTaskEdgeBound edges once exchanged), a visited set and a map
+  * task's deduplicated candidates (23-46 B per (tag, vertex) pair), a
+  * push state or a map task's sums or minima (16 B per vertex; a round
+  * holds its input and output state), a map task's tallies (16 B per
+  * entry, at most one per edge). A set past 2^30 slots (≈ 750M pairs)
+  * fails rather than grow. Nothing here spills to disk, and AQE does
+  * not coalesce or split these RDD shuffles.
   */
 private[graft] object Supersteps {
 
@@ -93,18 +96,31 @@ private[graft] object Supersteps {
   private val Empty = Long.MinValue
 
   /** Parallel primitive arrays: (tag, vertex) frontier rows, (src, dst)
-    * edges on their way through an exchange, or a push round's
+    * edges on their way through an exchange, with their tolls `ws` if
+    * the graph is weighted (else null), or a push round's
     * (vertex, [[Histogram]] entry) tallies on their way to its state.
     */
-  final case class Pairs(xs: Array[Long], ys: Array[Long]) {
+  final case class Pairs(xs: Array[Long], ys: Array[Long], ws: Array[Long] = null) {
     def size: Int = xs.length
+    def slice(from: Int, until: Int): Pairs =
+      Pairs(xs.slice(from, until), ys.slice(from, until), if (ws == null) null else ws.slice(from, until))
+    def csr: Csr = Csr(xs, ys, ws)
   }
 
+  /** Grows a [[Pairs]], keeping each pair's weight if `weighted`. */
+  final class PairsBuilder(weighted: Boolean) {
+    private val xs = new mutable.ArrayBuilder.ofLong
+    private val ys = new mutable.ArrayBuilder.ofLong
+    private val ws = if (weighted) new mutable.ArrayBuilder.ofLong else null
+    def add(x: Long, y: Long, w: Long): Unit = { xs.addOne(x); ys.addOne(y); if (ws != null) ws.addOne(w) }
+    def result(): Pairs = Pairs(xs.result(), ys.result(), if (ws == null) null else ws.result())
+  }
+
+  /** The pairs of `ps` in order; weighted if any of them is. */
   private def concat(ps: Iterator[Pairs]): Pairs = {
-    val xs = new mutable.ArrayBuilder.ofLong
-    val ys = new mutable.ArrayBuilder.ofLong
-    ps.foreach { p => xs.addAll(p.xs); ys.addAll(p.ys) }
-    Pairs(xs.result(), ys.result())
+    val all = ps.toSeq
+    def cat(f: Pairs => Array[Long]) = all.foldLeft(new mutable.ArrayBuilder.ofLong)((b, p) => b.addAll(f(p))).result()
+    Pairs(cat(_.xs), cat(_.ys), if (all.exists(_.ws != null)) cat(_.ws) else null)
   }
 
   /** Slots past which a [[PairSet]] fails instead of growing. */
@@ -200,10 +216,9 @@ private[graft] object Supersteps {
 
     /** The pairs whose vertex passes `keep`, as (tags, vertices). */
     def pairs(keep: Long => Boolean = _ => true): Pairs = {
-      val xs = new mutable.ArrayBuilder.ofLong
-      val ys = new mutable.ArrayBuilder.ofLong
-      foreach((t, v) => if (keep(v)) { xs.addOne(t); ys.addOne(v) })
-      Pairs(xs.result(), ys.result())
+      val b = new PairsBuilder(weighted = false)
+      foreach((t, v) => if (keep(v)) b.add(t, v, 0L))
+      b.result()
     }
   }
 
@@ -228,13 +243,17 @@ private[graft] object Supersteps {
   }
 
   /** Compressed adjacency: distinct sorted `keys`; the values of
-    * `keys(i)` are `vals(offs(i) until offs(i + 1))`, in input order.
+    * `keys(i)` are `vals(offs(i) until offs(i + 1))`, in input order,
+    * and on a weighted graph `ws` holds each value's toll (else null).
     * An edge block maps src → dst; a frontier index maps vertex → tag;
     * a push block maps dst → sender; a round's tallies vertex → entry.
     */
-  final class Csr(val keys: Array[Long], val offs: Array[Int], val vals: Array[Long])
-      extends Serializable {
+  final class Csr(val keys: Array[Long], val offs: Array[Int], val vals: Array[Long],
+      val ws: Array[Long] = null) extends Serializable {
     def degree(i: Int): Int = offs(i + 1) - offs(i)
+
+    /** The toll of slot `j`; 0 on an unweighted graph. */
+    def weight(j: Int): Long = if (ws == null) 0L else ws(j)
 
     /** The slots in `vals` of key `k`'s values; empty if `k` is absent. */
     def slots(k: Long): Range = {
@@ -244,35 +263,43 @@ private[graft] object Supersteps {
 
     /** This block minus the sources in sorted `drop`. */
     def without(drop: Array[Long]): Csr = {
-      val ks = new mutable.ArrayBuilder.ofLong
-      val vs = new mutable.ArrayBuilder.ofLong
-      foreachEdge((s, d) => if (Arrays.binarySearch(drop, s) < 0) { ks.addOne(s); vs.addOne(d) })
-      Csr(ks.result(), vs.result())
+      val b = new PairsBuilder(ws != null)
+      foreachSlot((s, j) => if (Arrays.binarySearch(drop, s) < 0) b.add(s, vals(j), weight(j)))
+      b.result().csr
     }
 
-    /** This block with each key's values sorted and repeats dropped. */
+    /** This block with each key's values sorted and repeats dropped; a
+      * repeated weighted edge keeps its least toll.
+      */
     def deduped: Csr = {
       val vs = Arrays.copyOf(vals, vals.length)
       val os = new Array[Int](keys.length + 1)
-      keys.indices.foreach(i => os(i + 1) = sortUnique(vs, offs(i), offs(i + 1), os(i)))
-      new Csr(keys, os, Arrays.copyOf(vs, os(keys.length)))
+      val least = if (ws == null) null else Array.fill(vals.length)(Long.MaxValue)
+      keys.indices.foreach { i =>
+        os(i + 1) = sortUnique(vs, offs(i), offs(i + 1), os(i))
+        if (least != null) (offs(i) until offs(i + 1)).foreach { j =>
+          val at = Arrays.binarySearch(vs, os(i), os(i + 1), vals(j)); least(at) = math.min(least(at), ws(j)) }
+      }
+      val n = os(keys.length)
+      new Csr(keys, os, Arrays.copyOf(vs, n), if (least == null) null else Arrays.copyOf(least, n))
     }
 
-    /** Its edges as (key, value) arrays, in slot order. */
-    def pairs: Pairs = Pairs(keys.indices.toArray.flatMap(i => Array.fill(degree(i))(keys(i))), vals)
+    /** Its edges as (key, value[, toll]) arrays, in slot order. */
+    def pairs: Pairs = Pairs(keys.indices.toArray.flatMap(i => Array.fill(degree(i))(keys(i))), vals, ws)
 
-    def foreachEdge(f: (Long, Long) => Unit): Unit = {
+    /** Calls `f(key, slot)` on each edge, in slot order. */
+    def foreachSlot(f: (Long, Int) => Unit): Unit = {
       var i = 0
       while (i < keys.length) {
         var j = offs(i)
-        while (j < offs(i + 1)) { f(keys(i), vals(j)); j += 1 }
+        while (j < offs(i + 1)) { f(keys(i), j); j += 1 }
         i += 1
       }
     }
   }
 
   object Csr {
-    def apply(ks: Array[Long], vs: Array[Long]): Csr = {
+    def apply(ks: Array[Long], vs: Array[Long], ws: Array[Long] = null): Csr = {
       val n = ks.length
       val keys = sortedDistinct(ks)
       val d = keys.length
@@ -284,9 +311,10 @@ private[graft] object Supersteps {
       while (i < d) { offs(i + 1) += offs(i); i += 1 }
       val fill = Arrays.copyOf(offs, d)
       val vals = new Array[Long](n)
+      val tolls = if (ws == null) null else new Array[Long](n)
       i = 0
-      while (i < n) { vals(fill(at(i))) = vs(i); fill(at(i)) += 1; i += 1 }
-      new Csr(keys, offs, vals)
+      while (i < n) { val f = fill(at(i)); vals(f) = vs(i); if (tolls != null) tolls(f) = ws(i); fill(at(i)) += 1; i += 1 }
+      new Csr(keys, offs, vals, tolls)
     }
 
     /** vertex → tags index of frontier rows. */
@@ -312,16 +340,19 @@ private[graft] object Supersteps {
     BlockPartitioner(math.max(spark.sessionState.conf.numShufflePartitions,
       ((eCount + GraphOps.ContractTaskEdgeBound - 1) / GraphOps.ContractTaskEdgeBound).toInt))
 
-  /** Each partition of `e`'s (src, dst) rows as one [[Pairs]]; a row
-    * with a null endpoint is dropped.
+  /** Each partition of `e`'s (src, dst) rows as one [[Pairs]], with
+    * their tolls if `e` has a long `w` column; a row with a null in any
+    * of them is dropped.
     */
-  private[graph] def edgePairs(e: DataFrame): RDD[Pairs] =
-    e.select("src", "dst").queryExecution.toRdd.mapPartitions { rows =>
-      val ss = new mutable.ArrayBuilder.ofLong
-      val ds = new mutable.ArrayBuilder.ofLong
-      rows.foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1)) { ss.addOne(r.getLong(0)); ds.addOne(r.getLong(1)) })
-      Iterator(Pairs(ss.result(), ds.result()))
+  private[graph] def edgePairs(e: DataFrame): RDD[Pairs] = {
+    val weighted = e.columns.contains("w")
+    e.select("src", "dst" +: (if (weighted) Seq("w") else Nil): _*).queryExecution.toRdd.mapPartitions { rows =>
+      val b = new PairsBuilder(weighted)
+      rows.foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1) && !(weighted && r.isNullAt(2)))
+        b.add(r.getLong(0), r.getLong(1), if (weighted) r.getLong(2) else 0L))
+      Iterator(b.result())
     }
+  }
 
   /** Routed records gathered into one [[Pairs]] per target partition. */
   private def exchange(recs: RDD[(Int, Pairs)], part: BlockPartitioner): RDD[Pairs] =
@@ -352,12 +383,10 @@ private[graft] object Supersteps {
     val parts = part.numPartitions
     val bySrc = own(exchange(edges.mapPartitions { it =>
       val c = it.next()
-      val ss = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
-      val ds = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
-      c.foreachEdge { (s, d) => val p = partOf(s, parts); ss(p).addOne(s); ds(p).addOne(d) }
-      (0 until parts).iterator.map(p => (p, Pairs(ss(p).result(), ds(p).result())))
-        .filter(_._2.size > 0)
-    }, part).map(p => Csr(p.xs, p.ys).deduped).persist(level), s"$name edges by src")
+      val out = Array.fill(parts)(new PairsBuilder(c.ws != null))
+      c.foreachSlot((s, j) => out(partOf(s, parts)).add(s, c.vals(j), c.weight(j)))
+      (0 until parts).iterator.map(p => (p, out(p).result())).filter(_._2.size > 0)
+    }, part).map(_.csr.deduped).persist(level), s"$name edges by src")
     val threshold = GraphOps.hubThreshold(eCount, parts, hubOutDegree)
     val found = sc.runJob(bySrc, (it: Iterator[Csr]) => {
       val c = it.next()
@@ -375,18 +404,17 @@ private[graft] object Supersteps {
     // The hub sources' edges, dealt round-robin over all partitions.
     val hub = own(exchange(bySrc.mapPartitions { it =>
       val c = it.next()
-      val ss = new mutable.ArrayBuilder.ofLong
-      val ds = new mutable.ArrayBuilder.ofLong
+      val b = new PairsBuilder(c.ws != null)
       hubs.value.foreach { k =>
         val i = Arrays.binarySearch(c.keys, k)
-        if (i >= 0) (c.offs(i) until c.offs(i + 1)).foreach { j => ss.addOne(k); ds.addOne(c.vals(j)) }
+        if (i >= 0) (c.offs(i) until c.offs(i + 1)).foreach(j => b.add(k, c.vals(j), c.weight(j)))
       }
-      val (s, d) = (ss.result(), ds.result())
+      val all = b.result()
       (0 until parts).iterator.map { p =>
-        val (lo, hi) = (s.length.toLong * p / parts, s.length.toLong * (p + 1) / parts)
-        (p, Pairs(s.slice(lo.toInt, hi.toInt), d.slice(lo.toInt, hi.toInt)))
+        val (lo, hi) = (all.size.toLong * p / parts, all.size.toLong * (p + 1) / parts)
+        (p, all.slice(lo.toInt, hi.toInt))
       }.filter(_._2.size > 0)
-    }, part).map(p => Csr(p.xs, p.ys)).persist(level), s"$name hub edges")
+    }, part).map(_.csr).persist(level), s"$name hub edges")
     sc.runJob(tail.zipPartitions(hub)((a, b) => Iterator(a.size + b.size)), (it: Iterator[Int]) => it.size)
     bySrc.unpersist(blocking = true)
     SourceLayout(tail, hub, hubs, degs)
@@ -499,14 +527,15 @@ private[graft] object Supersteps {
     */
   final case class Intake(count: Long, local: Pairs, pairs: RDD[Pairs])
 
-  /** Reads `e`'s (src, dst) edges exactly once, for every unweighted
-    * graph op (listed at [[GraphOps.LocalEdgeThreshold]]): ONE job over
-    * [[edgePairs]] (a row with a null endpoint is dropped; a repeated
-    * edge is kept), local-checkpointed MEMORY_AND_DISK so no later job's
-    * lineage reaches `e`, returns their count and, when it is at most
-    * `bound`, every pair by [[collectBounded]]'s rule — a held-back
-    * partition comes from the checkpoint, not from `e`. The driver
-    * receives ≈ 16 B per edge.
+  /** Reads `e`'s (src, dst) edges exactly once, and their tolls if `e`
+    * has a `w` column, for every graph op with a driver twin (listed at
+    * [[GraphOps.LocalEdgeThreshold]]): ONE job over [[edgePairs]] (a row
+    * with a null in any column read is dropped; a repeated edge is
+    * kept), local-checkpointed MEMORY_AND_DISK so no later job's lineage
+    * reaches `e`, returns their count and, when it is at most `bound`,
+    * every pair by [[collectBounded]]'s rule — a held-back partition
+    * comes from the checkpoint, not from `e`. The driver receives
+    * ≈ 16 B per edge, 24 B with tolls.
     */
   def intake(e: DataFrame, bound: Long, name: String): Intake = {
     val pairs = edgePairs(e).setName(s"$name edges").localCheckpoint()
@@ -642,9 +671,10 @@ private[graft] object Supersteps {
   /** A vertex program of push rounds: each round a vertex with state `x`
     * and out-degree `deg` sends `send(x, deg)` along each out-edge, and
     * takes its next state from what it received, merged as the
-    * program's kind says: [[Push]] sums, [[Tally]] counts. A round
-    * reports how many states are > 0 and their sum ([[Pushed]]), so a
-    * program can mark a vertex it is done with by a state ≤ 0.
+    * program's kind says: [[Push]] sums, [[Tally]] counts, [[Relax]]
+    * keeps the least. A round reports how many states are > 0, their
+    * sum and the least state ([[Pushed]]), so a program can mark a
+    * vertex it is done with by a state ≤ 0, and flag one by the least.
     */
   sealed trait Program extends Serializable {
     def send(x: Double, deg: Int): Double
@@ -665,6 +695,14 @@ private[graft] object Supersteps {
     def update(old: Double, h: Histogram): Double
   }
 
+  /** Min merge over a weighted graph: an in-edge of toll w delivers
+    * `send(x, deg) + w`, a destination that gets only +∞ gets no message,
+    * and `old` takes `update(old, in)`, `in` the least it received (+∞ if none).
+    */
+  trait Relax extends Program {
+    def update(old: Double, in: Double): Double
+  }
+
   /** One vertex's received (value, count) entries, values ascending; a
     * value sent from several map tasks has an entry from each. An entry
     * is packed as value << 32 | count.
@@ -676,29 +714,30 @@ private[graft] object Supersteps {
   }
 
   /** Per-vertex values, `xs(i)` of `ids(i)`: a partition's push state,
-    * or a map task's sums on their way to one.
+    * or a map task's sums or minima on their way to one.
     */
   private final class State(val ids: Array[Long], val xs: Array[Double]) extends Serializable
 
   /** An edge direction push rounds run along: `block` lays out a pair
-    * partition's edges of it, `copies` per pair, persisted at `level`.
+    * partition's edges of it, tolls included, `copies` per pair,
+    * persisted at `level`.
     */
   sealed abstract class Dir(val name: String, val copies: Int, val level: StorageLevel,
       val block: Pairs => Csr) extends Serializable
 
-  case object Forward extends Dir("forward", 1, StorageLevel.MEMORY_AND_DISK, p => Csr(p.xs, p.ys))
+  case object Forward extends Dir("forward", 1, StorageLevel.MEMORY_AND_DISK, _.csr)
 
   /** Against the edges: read once a round, so on disk, one scan. */
-  case object Reverse extends Dir("reverse", 1, StorageLevel.DISK_ONLY, p => Csr(p.ys, p.xs))
+  case object Reverse extends Dir("reverse", 1, StorageLevel.DISK_ONLY, p => Csr(p.ys, p.xs, p.ws))
 
   /** Along and against the edges at once: their symmetric closure. */
   case object Undirected extends Dir("undirected", 2, StorageLevel.MEMORY_AND_DISK,
-    p => Csr(p.xs ++ p.ys, p.ys ++ p.xs))
+    p => Csr(p.xs ++ p.ys, p.ys ++ p.xs, if (p.ws == null) null else p.ws ++ p.ws))
 
   /** A partition of one push direction: its vertices `ids` (sorted),
     * their out-degrees `deg` over its own edges, and its in-edges `in`,
-    * dst → sender: `ids(s)` for s ≥ 0, else hub −1 − s, whose edges were
-    * dealt here round-robin.
+    * dst → sender, with their tolls on a weighted graph: `ids(s)` for
+    * s ≥ 0, else hub −1 − s, whose edges were dealt here round-robin.
     */
   private final class PushBlock(val ids: Array[Long], val deg: Array[Int], val in: Csr) extends Serializable
 
@@ -707,11 +746,10 @@ private[graft] object Supersteps {
     */
   private def pushBlock(ids: Array[Long], tail: Csr, hub: Csr, hubKeys: Array[Long]): PushBlock = {
     val deg = new Array[Int](ids.length)
-    val ds = new mutable.ArrayBuilder.ofLong
-    val from = new mutable.ArrayBuilder.ofLong
-    tail.foreachEdge { (s, d) => val at = Arrays.binarySearch(ids, s); deg(at) += 1; ds.addOne(d); from.addOne(at) }
-    if (hub != null) hub.foreachEdge { (h, d) => ds.addOne(d); from.addOne(-1L - Arrays.binarySearch(hubKeys, h)) }
-    new PushBlock(ids, deg, Csr(ds.result(), from.result()))
+    val in = new PairsBuilder(tail.ws != null || (hub != null && hub.ws != null))
+    tail.foreachSlot { (s, j) => val at = Arrays.binarySearch(ids, s); deg(at) += 1; in.add(tail.vals(j), at, tail.weight(j)) }
+    if (hub != null) hub.foreachSlot((h, j) => in.add(hub.vals(j), -1L - Arrays.binarySearch(hubKeys, h), hub.weight(j)))
+    new PushBlock(ids, deg, in.result().csr)
   }
 
   /** The message from in-edge sender `from` (see [[PushBlock]]). */
@@ -720,8 +758,8 @@ private[graft] object Supersteps {
 
   /** A block's round from its vertices' states `xs` and the hubs'
     * messages `hubMsg`: what each destination receives, merged map-side
-    * by `p`'s kind — one [[State]] sum or [[Pairs]] of (destination,
-    * histogram entry) — keyed by its partition.
+    * by `p`'s kind — one [[State]] of sums or minima, or [[Pairs]] of
+    * (destination, histogram entry) — keyed by its partition.
     */
   private def messages(b: PushBlock, xs: Array[Double], hubMsg: Array[Double], p: Program,
       parts: Int): Iterator[(Int, AnyRef)] = {
@@ -729,15 +767,21 @@ private[graft] object Supersteps {
     val c = b.in
     val ks = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
     val out: Int => AnyRef = p match {
-      case _: Push =>
+      case _: Push | _: Relax =>
+        val least = p.isInstanceOf[Relax]
         val vs = Array.fill(parts)(new mutable.ArrayBuilder.ofDouble)
         var k = 0
         while (k < c.keys.length) {
-          var s = 0.0
+          var s = if (least) Double.PositiveInfinity else 0.0
           var j = c.offs(k)
-          while (j < c.offs(k + 1)) { s += sent(c.vals(j), msg, hubMsg); j += 1 }
-          val q = partOf(c.keys(k), parts)
-          ks(q).addOne(c.keys(k)); vs(q).addOne(s)
+          while (j < c.offs(k + 1)) {
+            if (least) s = math.min(s, sent(c.vals(j), msg, hubMsg) + c.ws(j)) else s += sent(c.vals(j), msg, hubMsg)
+            j += 1
+          }
+          if (!least || s < Double.PositiveInfinity) {
+            val q = partOf(c.keys(k), parts)
+            ks(q).addOne(c.keys(k)); vs(q).addOne(s)
+          }
           k += 1
         }
         q => new State(ks(q).result(), vs(q).result())
@@ -766,12 +810,23 @@ private[graft] object Supersteps {
     (0 until parts).iterator.filter(ks(_).length > 0).map(q => (q, out(q)))
   }
 
+  /** The [[State]] messages in `in` merged per vertex of `s` by `op`, from `zero`. */
+  private def merged(s: State, in: Iterator[AnyRef], zero: Double, op: (Double, Double) => Double): Array[Double] = {
+    val acc = Array.fill(s.ids.length)(zero)
+    in.map(_.asInstanceOf[State]).foreach { m =>
+      m.ids.indices.foreach { j => val i = Arrays.binarySearch(s.ids, m.ids(j)); acc(i) = op(acc(i), m.xs(j)) }
+    }
+    acc
+  }
+
   /** The next state of `s`'s vertices from the messages routed to them. */
   private def gather(s: State, in: Iterator[AnyRef], p: Program): State = p match {
     case p: Push =>
-      val acc = new Array[Double](s.ids.length)
-      in.map(_.asInstanceOf[State]).foreach(m => m.ids.indices.foreach(j => acc(Arrays.binarySearch(s.ids, m.ids(j))) += m.xs(j)))
+      val acc = merged(s, in, 0.0, _ + _)
       new State(s.ids, Array.tabulate(s.ids.length)(i => p.update(s.ids(i), acc(i))))
+    case p: Relax =>
+      val acc = merged(s, in, Double.PositiveInfinity, math.min)
+      new State(s.ids, Array.tabulate(s.ids.length)(i => p.update(s.xs(i), acc(i))))
     case p: Tally =>
       val got = concat(in.map(_.asInstanceOf[Pairs]))
       val byDst = Csr(got.xs, got.ys)
@@ -782,31 +837,54 @@ private[graft] object Supersteps {
       })
   }
 
-  /** A state after a round: the count `live` of its states > 0 and
-    * their `total`; on the driver, `state`; distributed, its
-    * materialized `blocks` and the hubs' entries.
+  /** A state after a round: the count `live` of its states > 0, their
+    * `total`, and the `least` state; on the driver, `state`;
+    * distributed, its materialized `blocks` and the hubs' entries.
     */
-  final class Pushed private[Supersteps] (val total: Double, val live: Long, private[Supersteps] val state: State,
-      private[Supersteps] val blocks: RDD[State], private[Supersteps] val hubs: Map[Long, Double])
+  final class Pushed private[Supersteps] (val total: Double, val live: Long, val least: Double,
+      private[Supersteps] val state: State, private[Supersteps] val blocks: RDD[State],
+      private[Supersteps] val hubs: Map[Long, Double])
 
-  /** The sum and the count of the states > 0 in `xs`. */
-  private def positive(xs: Array[Double]): (Double, Long) = {
-    var (total, live) = (0.0, 0L)
-    xs.foreach(x => if (x > 0) { total += x; live += 1 })
-    (total, live)
+  /** The sum and the count of the states > 0 in `xs`, and the least. */
+  private def stats(xs: Array[Double]): (Double, Long, Double) = {
+    var (total, live, least) = (0.0, 0L, Double.PositiveInfinity)
+    xs.foreach { x => if (x > 0) { total += x; live += 1 }; least = math.min(least, x) }
+    (total, live, least)
   }
+
+  /** What a round given a state its graph released fails with. */
+  val Released = "a push round read a state its graph already released: a round keeps only its input and output states"
 
   /** A graph laid out for push rounds along each of its call's
     * directions: [[start]] gives every vertex `v` the state `f(v)`,
     * [[round]] runs `p` from `s` along one of them, and [[result]], the
     * last step, gives (vertex, one column per state divided by its norm)
     * rows.
+    *
+    * A round releases every state but its input and its output, so a
+    * body keeps one chain of states; a round or result given a released
+    * state fails at once, with [[Released]], on both executors.
     */
   sealed abstract class PushGraph {
+    protected val held = mutable.ArrayBuffer.empty[Pushed] // the states not yet released
+    private def hold(s: Pushed): Pushed = { held += s; s }
+    private def check(s: Pushed): Unit = require(held.exists(_ eq s), Released)
+
     def vertices: Long
-    def start(f: Long => Double): Pushed
-    def round(p: Program, along: Dir, s: Pushed): Pushed
-    def result(cols: (String, Pushed, Double)*): DataFrame
+    def start(f: Long => Double): Pushed = hold(begin(f))
+    def round(p: Program, along: Dir, s: Pushed): Pushed = {
+      check(s)
+      val next = hold(step(p, along, s))
+      val old = held.filter(x => (x ne s) && (x ne next))
+      old.foreach(free); held --= old
+      next
+    }
+    def result(cols: (String, Pushed, Double)*): DataFrame = { cols.foreach(c => check(c._2)); rows(cols) }
+
+    protected def begin(f: Long => Double): Pushed
+    protected def step(p: Program, along: Dir, s: Pushed): Pushed
+    protected def free(s: Pushed): Unit
+    protected def rows(cols: Seq[(String, Pushed, Double)]): DataFrame
   }
 
   private def resultSchema(cols: Seq[(String, Pushed, Double)]): StructType =
@@ -827,8 +905,8 @@ private[graft] object Supersteps {
   /** Runs `body` over the distinct edges of `in`: on the driver over its
     * pairs if it shipped them, else as RDD supersteps over its
     * checkpointed pairs, which this call releases. Each executor drops
-    * repeated edges in its blocks ([[Csr.deduped]]), so no DataFrame
-    * `distinct` runs in front.
+    * repeated edges in its blocks ([[Csr.deduped]]; a weighted one keeps
+    * its least toll), so no DataFrame `distinct` runs in front.
     */
   def push(spark: SparkSession, in: Intake, name: String, dirs: Seq[Dir],
       hubOutDegree: Long)(body: PushGraph => DataFrame): DataFrame =
@@ -845,22 +923,23 @@ private[graft] object Supersteps {
   private final class LocalPush(spark: SparkSession, es: Pairs) extends PushGraph {
     private val ids = sortedDistinct(es.xs ++ es.ys)
     private val blocks = mutable.Map.empty[Dir, PushBlock]
-    private def pushed(s: State) = { val (total, live) = positive(s.xs); new Pushed(total, live, s, null, null) }
+    private def pushed(s: State) = { val (total, live, least) = stats(s.xs); new Pushed(total, live, least, s, null, null) }
 
     def vertices: Long = ids.length
-    def start(f: Long => Double): Pushed = pushed(new State(ids, ids.map(f)))
-    def round(p: Program, along: Dir, s: Pushed): Pushed = {
+    protected def begin(f: Long => Double): Pushed = pushed(new State(ids, ids.map(f)))
+    protected def step(p: Program, along: Dir, s: Pushed): Pushed = {
       val b = blocks.getOrElseUpdate(along, pushBlock(ids, along.block(es).deduped, null, null))
       pushed(gather(s.state, messages(b, s.state.xs, null, p, 1).map(_._2), p))
     }
-    def result(cols: (String, Pushed, Double)*): DataFrame = spark.createDataFrame(
+    protected def free(s: Pushed): Unit = ()
+    protected def rows(cols: Seq[(String, Pushed, Double)]): DataFrame = spark.createDataFrame(
       java.util.Arrays.asList(resultRows(cols.map(_._2.state), cols.map(_._3)).toSeq: _*), resultSchema(cols))
   }
 
   /** The RDD-superstep executor. Vertex state is co-partitioned with each
     * direction's blocks by [[partOf]]; a round is one job, which
-    * materializes the next state and returns its live count, total and
-    * hub entries.
+    * materializes the next state and returns its live count, total,
+    * least state and hub entries.
     */
   private final class RddPush(spark: SparkSession, pairs: RDD[Pairs], eCount: Long, name: String,
       dirs: Seq[Dir], hubOutDegree: Long) extends PushGraph {
@@ -868,8 +947,6 @@ private[graft] object Supersteps {
     private val part = partitioner(spark, eCount * dirs.map(_.copies).max)
     private val owned = mutable.ArrayBuffer.empty[RDD[_]]
     private val hubCasts = mutable.ArrayBuffer.empty[Broadcast[Array[Long]]]
-    // states not yet released; a round reads only the one it is given
-    private val live = mutable.ArrayBuffer.empty[RDD[State]]
     private var kept = Seq.empty[RDD[State]]
     // per direction: its blocks, hub keys (sorted) and hub out-degrees
     private var laid = Map.empty[Dir, (RDD[PushBlock], Array[Long], Array[Int])]
@@ -905,40 +982,38 @@ private[graft] object Supersteps {
       pairs.unpersist(blocking = true)
     }
 
-    def start(f: Long => Double): Pushed = materialize(laid(dirs.head)._1.map(b => new State(b.ids, b.ids.map(f))))
+    protected def begin(f: Long => Double): Pushed =
+      materialize(laid(dirs.head)._1.map(b => new State(b.ids, b.ids.map(f))))
 
-    def round(p: Program, along: Dir, s: Pushed): Pushed = {
+    protected def step(p: Program, along: Dir, s: Pushed): Pushed = {
       val (blocks, keys, degs) = laid(along)
       val hubMsg = if (keys.isEmpty) null else sc.broadcast(keys.indices.map(j => p.send(s.hubs(keys(j)), degs(j))).toArray)
       val parts = part.numPartitions
       val sent = blocks.zipPartitions(s.blocks) { (bs, ss) =>
         messages(bs.next(), ss.next().xs, if (hubMsg == null) null else hubMsg.value, p, parts)
       }
-      val next = try materialize(new ShuffledRDD[Int, AnyRef, AnyRef](sent, part)
+      try materialize(new ShuffledRDD[Int, AnyRef, AnyRef](sent, part)
         .zipPartitions(s.blocks, preservesPartitioning = true)((in, ss) => Iterator(gather(ss.next(), in.map(_._2), p))))
-        finally if (hubMsg != null) hubMsg.destroy()
-      val old = live.filter(r => (r ne s.blocks) && (r ne next.blocks))
-      old.foreach(_.unpersist(blocking = true)); live --= old
-      next
+      finally if (hubMsg != null) hubMsg.destroy()
     }
 
-    /** Lineage-cuts `states` in a job returning their [[positive]] sum
-      * and count, and their hub entries.
-      */
+    protected def free(s: Pushed): Unit = s.blocks.unpersist(blocking = true)
+
+    /** Lineage-cuts `states` in a job returning their [[stats]] and hub entries. */
     private def materialize(states: RDD[State]): Pushed = {
       val next = states.setName(s"$name state $rounds").localCheckpoint()
       rounds += 1
-      live += next
       val hk = hubKeys
-      val got = sc.runJob(next, (it: Iterator[State]) => {
+      val got = try sc.runJob(next, (it: Iterator[State]) => {
         val s = it.next()
         val at = if (hk == null) Array.empty[Int] else hk.value.map(Arrays.binarySearch(s.ids, _)).filter(_ >= 0)
-        (positive(s.xs), at.map(i => s.ids(i) -> s.xs(i)))
-      })
-      new Pushed(got.map(_._1._1).sum, got.map(_._1._2).sum, null, next, got.flatMap(_._2).toMap)
+        (stats(s.xs), at.map(i => s.ids(i) -> s.xs(i)))
+      }) catch { case t: Throwable => next.unpersist(blocking = true); throw t }
+      new Pushed(got.map(_._1._1).sum, got.map(_._1._2).sum, got.map(_._1._3).foldLeft(Double.PositiveInfinity)(math.min),
+        null, next, got.flatMap(_._2).toMap)
     }
 
-    def result(cols: (String, Pushed, Double)*): DataFrame = {
+    protected def rows(cols: Seq[(String, Pushed, Double)]): DataFrame = {
       kept = cols.map(_._2.blocks)
       val norms = cols.map(_._3)
       val zipped = kept.tail.foldLeft(kept.head.map(Vector(_))) { (acc, r) =>
@@ -950,7 +1025,7 @@ private[graft] object Supersteps {
     /** Releases every block the call built but the result's states. */
     def close(): Unit = {
       hubCasts.foreach(_.destroy())
-      (owned ++ live.filterNot(r => kept.exists(_ eq r))).foreach(_.unpersist(blocking = true))
+      (owned ++ held.map(_.blocks).filterNot(r => kept.exists(_ eq r))).foreach(_.unpersist(blocking = true))
       pairs.unpersist(blocking = true)
     }
   }

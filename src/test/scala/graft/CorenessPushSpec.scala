@@ -104,4 +104,19 @@ class CorenessPushSpec extends SparkSpec {
       assert(got.nonEmpty && got === rowsOf(run(GraphOps.LocalEdgeThreshold)), op)
     }
   }
+
+  test("a distributed sssp round is one job and plans no query") {
+    val s = spark
+    import s.implicits._
+    // a 40-hop unit-toll chain whose 5-hop shortcuts (toll 7) a later round beats
+    val tolls = (0L until 40L).map(v => (v, v + 1, 1L)) ++ (0L until 40L by 5).map(v => (v, v + 5, 7L))
+    val e = tolls.toDF("src", "dst", "w").repartition(4).localCheckpoint()
+    val ((got, marks), jobs, sqls) = started(audited(rowsOf(GraphOps.sssp(e, 0L, maxLocalEdges = 0L))))
+    val rounds = roundsOf(marks, "sssp")
+    info(s"sssp: $rounds rounds, $jobs jobs, $sqls SQL executions")
+    assert(sqls <= 1, s"$sqls SQL executions over $rounds rounds")
+    assert(rounds >= 40 && jobs <= rounds + 8, s"$jobs jobs over $rounds rounds")
+    assert(got === (0L to 40L).map(v => Seq(v, v)).toSet)
+    assert(got === rowsOf(GraphOps.sssp(e, 0L)))
+  }
 }

@@ -281,6 +281,27 @@ class GraphIntakeSpec extends SparkSpec {
     }
   }
 
+  test("driver-path sssp and msf of a stored weighted graph are one job each and cache no frame") {
+    spark.catalog.clearCache()
+    val s = spark
+    import s.implicits._
+    val dir = tempDir("weighted").resolve("tolls").toString
+    randomEdges(13, 300, 1200).zipWithIndex.map { case ((a, b), i) => (a, b, 1L + i % 7) }
+      .toDF("src", "dst", "w").write.parquet(dir)
+    def load() = spark.read.schema("src BIGINT, dst BIGINT, w BIGINT").parquet(dir)
+    val ops = Seq[(String, (DataFrame, Long) => DataFrame)](
+      "sssp" -> ((e, m) => GraphOps.sssp(e, 1L, maxLocalEdges = m)),
+      "msf" -> ((e, m) => GraphOps.msf(e, maxLocalEdges = m)))
+    for ((name, op) <- ops) {
+      val (local, jobs) = jobsOf(rowsOf(op(load(), GraphOps.LocalEdgeThreshold)))
+      assert(jobs.size === 1 && jobs.head.rdds.contains(s"$name edges"), s"$name jobs: $jobs")
+      assertNoCache(jobs, name)
+      val (dist, distJobs) = jobsOf(rowsOf(op(load(), 0L)))
+      assertNoCache(distJobs, s"distributed $name")
+      assert(local.size > 1 && dist === local, name)
+    }
+  }
+
   test("three concurrent readers on one session get the serial answers") {
     val graphs = (0 until 3).map(i => s"shared$i")
     graphs.zipWithIndex.foreach { case (g, i) => stored(g, randomEdges(10L + i, 150 + 50 * i, 600)) }

@@ -146,10 +146,10 @@ class GraphShuffleGeometrySpec extends SparkSpec {
     import spark2.implicits._
     // Same topology as the BFS byte-bound test (depth-N chain + K
     // backward edges per vertex) with deterministic 1..7 tolls: the
-    // relaxation wave advances one chain hop per round (~N rounds,
-    // frontier size 1) while the edge set is (K+1)·N rows — a
-    // regression to re-exchanging edges per round blows the bound by
-    // an order of magnitude.
+    // relaxation rounds advance one chain hop per round (~N rounds,
+    // a frontier of about one vertex) while the edge set is (K+1)·N
+    // rows — a regression to re-exchanging edges per round blows the
+    // bound by an order of magnitude.
     val N = 60L
     val K = 50
     val chain = spark.range(0L, N - 1).select(col("id").as("src"), (col("id") + 1).as("dst"))
@@ -168,14 +168,12 @@ class GraphShuffleGeometrySpec extends SparkSpec {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         shuffleWrite += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
     }
-    System.setProperty("graft.bfs.broadcastFrontier", "0")
     val prevAbt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.addSparkListener(listener)
     val shuffledPath =
       try rowsOf(GraphOps.sssp(edges, 0L, maxLocalEdges = 0L))
       finally {
-        System.clearProperty("graft.bfs.broadcastFrontier")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAbt)
         var prev = -1L; var stable = 0; var tries = 0
         while (stable < 3 && tries < 50) {
@@ -189,8 +187,8 @@ class GraphShuffleGeometrySpec extends SparkSpec {
 
     assert(shuffledPath === localPath)
     // Same bands as the BFS bound (see the compression note above):
-    // healthy = one edge-sized exchange + per-round frontier/dist
-    // traffic; regressed = ~rounds × compressed edge set.
+    // healthy = one edge-sized exchange by source + per-round messages
+    // from the frontier; regressed = ~rounds × compressed edge set.
     info(s"sssp shuffleWrite=$shuffleWrite edgeBytes=$edgeBytes " +
       s"(bound=${6 * edgeBytes})")
     assert(shuffleWrite < 6 * edgeBytes,
@@ -380,12 +378,13 @@ class GraphShuffleGeometrySpec extends SparkSpec {
       val bfsSplit = rowsOf(GraphOps.bfs(edges, sources, maxLocalEdges = 0L,
         hubOutDegree = 1000L))
       assert(bfsSplit === bfsBase)
-      // weighted sssp relaxation loop: integer-exact equality
+      // weighted sssp rounds over hub blocks: integer-exact equality, and
+      // equal to driver Dijkstra
       val we = edges.withColumn("w", (col("src") + col("dst")) % 7 + 1)
       val ssspBase = rowsOf(GraphOps.sssp(we, source = 1L, maxLocalEdges = 0L))
       val ssspSplit = rowsOf(GraphOps.sssp(we, source = 1L, maxLocalEdges = 0L,
         hubOutDegree = 1000L))
-      assert(ssspSplit === ssspBase)
+      assert(ssspSplit === ssspBase && ssspBase === rowsOf(GraphOps.sssp(we, source = 1L)))
       // betweenness (sampled pivots, forced-distributed σ-BFS + sweep):
       // both directions' splits engage — the hub has out-degree 40k
       // here and in-degree 40k on the reversed SP-DAG sweep

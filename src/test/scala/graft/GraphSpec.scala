@@ -171,6 +171,7 @@ class GraphSpec extends SparkSpec {
     val chain = s.range(0L, 300L).selectExpr("id as src", "id + 1 as dst", "1L as w")
     val far = GraphOps.sssp(chain, 0L).where(col("vertex") === 300L).head()
     assert(far.getLong(1) === 300L)
+    assert(rowsOf(GraphOps.sssp(chain, 0L, maxLocalEdges = 0L)) === rowsOf(GraphOps.sssp(chain, 0L)))
     val tiny = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L)).toDF("src", "dst", "w")
     val ex = intercept[IllegalArgumentException] {
       GraphOps.sssp(tiny, 1L, maxRounds = 1, maxLocalEdges = 0L).collect()
@@ -187,6 +188,46 @@ class GraphSpec extends SparkSpec {
     val local = rows(GraphOps.LocalEdgeThreshold)
     assert(local === rows(0L))
     assert(local.nonEmpty)
+  }
+
+  test("sssp and msf drop a row with a null on both paths; sssp rejects a negative toll on both") {
+    val s = spark
+    import s.implicits._
+    val clean = Seq((1L, 2L, 5L), (1L, 3L, 1L), (3L, 2L, 1L), (2L, 4L, 2L), (3L, 4L, 10L), (8L, 9L, 1L))
+    // a null in each column: each would add vertex 4 at 0 or the (1, 4) pair
+    val nulls = (clean.map { case (a, b, w) => (Option(a), Option(b), Option(w)) } ++
+      Seq((None, Some(4L), Some(0L)), (Some(1L), None, Some(0L)), (Some(1L), Some(4L), None))).toDF("src", "dst", "w")
+    val negative = (clean :+ ((9L, 1L, -3L))).toDF("src", "dst", "w")
+    val dists = rowsOf(GraphOps.sssp(clean.toDF("src", "dst", "w"), 1L))
+    val forest = rowsOf(GraphOps.msf(clean.toDF("src", "dst", "w")))
+    assert(dists === Set(Seq(1L, 0L), Seq(3L, 1L), Seq(2L, 2L), Seq(4L, 4L)))
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+      val clue = s"maxLocalEdges=$maxLocal"
+      assert(rowsOf(GraphOps.sssp(nulls, 1L, maxLocalEdges = maxLocal)) === dists, clue)
+      assert(rowsOf(GraphOps.msf(nulls, maxLocalEdges = maxLocal)) === forest, clue)
+      val err = intercept[IllegalArgumentException](GraphOps.sssp(negative, 1L, maxLocalEdges = maxLocal).collect())
+      assert(err.getMessage === "sssp needs non-negative tolls: an edge has w < 0", clue)
+      // msf takes any toll: the negative edge joins the forest
+      assert(rowsOf(GraphOps.msf(negative, maxLocalEdges = maxLocal)).contains(Seq(1L, 9L, -3L)), clue)
+    }
+  }
+
+  test("sssp: a source with no edge is at 0, and a distance of 2^53 fails alike on both paths") {
+    val s = spark
+    import s.implicits._
+    val big = 1L << 52
+    val e = Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 3 * big), (3L, 4L, big), (4L, 5L, big)).toDF("src", "dst", "w")
+    // 3's first distance is past 2^53, then falls to 2; 5 stays past it
+    val near = e.where(col("dst") =!= 5L)
+    val messages = for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) yield {
+      val clue = s"maxLocalEdges=$maxLocal"
+      assert(rowsOf(GraphOps.sssp(e, 77L, maxLocalEdges = maxLocal)) === Set(Seq(77L, 0L)), clue)
+      assert(rowsOf(GraphOps.sssp(e, 5L, maxLocalEdges = maxLocal)) === Set(Seq(5L, 0L)), clue)
+      assert(rowsOf(GraphOps.sssp(near, 1L, maxLocalEdges = maxLocal)) ===
+        Set(Seq(1L, 0L), Seq(2L, 1L), Seq(3L, 2L), Seq(4L, big + 2)), clue)
+      intercept[IllegalArgumentException](GraphOps.sssp(e, 1L, maxLocalEdges = maxLocal).collect()).getMessage
+    }
+    assert(messages.distinct === Seq("requirement failed: sssp: a shortest distance reaches 2^53, past what a distance holds exactly"))
   }
 
   test("msf: planted graph yields the unique forest; Kruskal and Borůvka agree") {

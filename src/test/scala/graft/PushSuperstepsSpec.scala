@@ -224,6 +224,29 @@ class PushSuperstepsSpec extends SparkSpec {
     assert(local.size === 241 && dist === local)
   }
 
+  test("a round given a state its graph released fails at once, on both executors") {
+    import Supersteps.{Forward, Undirected}
+    val sc = spark.sparkContext
+    val e = hubbed()
+    val step = PushSuperstepsSpec.Mixing
+    val before = sc.getPersistentRDDs.keySet
+    for (maxLocal <- Seq(GraphOps.LocalEdgeThreshold, 0L)) {
+      var rounds = 0
+      val err = intercept[IllegalArgumentException](
+        Supersteps.push(e, maxLocal, "interleaved", Seq(Forward, Undirected), hubOutDegree = 10L) { g =>
+          // two chains: the forward round releases y
+          val x = g.start(v => (v % 5).toDouble)
+          val y = g.start(_ => 1.0)
+          val x1 = g.round(step, Forward, x); rounds += 1
+          val y1 = g.round(step, Undirected, y); rounds += 1
+          g.result(("x", x1, 1.0), ("y", y1, 1.0))
+        })
+      assert(err.getMessage === s"requirement failed: ${Supersteps.Released}", s"maxLocalEdges=$maxLocal")
+      assert(rounds === 1, s"maxLocalEdges=$maxLocal")
+    }
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
+
   test("collected distributed calls leave only their results' states persisted") {
     val sc = spark.sparkContext
     val e = hubbed()
@@ -240,13 +263,18 @@ class PushSuperstepsSpec extends SparkSpec {
       assert(rounds > 0, op)
       (df, s"$op state ${rounds + 1}")
     }
+    val (sssp, marks) = audited(GraphOps.sssp(e.withColumn("w", col("src") % 3 + 1), 0L,
+      maxLocalEdges = 0L, hubOutDegree = 10L))
     val peels = Seq(
       peel("coreness", GraphOps.coreness(e, maxLocalEdges = 0L)),
       peel("kCore", GraphOps.kCore(e, 2, maxLocalEdges = 0L)),
-      peel("densest", GraphOps.densestSubgraph(e, maxLocalEdges = 0L)))
+      peel("densest", GraphOps.densestSubgraph(e, maxLocalEdges = 0L)),
+      // sssp keeps its last state: after the start and its rounds
+      (sssp, s"sssp state ${marks.count(_.startsWith("sssp:round "))}"))
     val all = outs ++ peels.map(_._1)
-    // the graph is a tree, so its 2-core is empty
-    val sizes = Seq(241L, 241L, 241L, 241L, 0L, 241L)
+    // the graph is a tree, so its 2-core is empty; 0 reaches its chain
+    // and fan-out
+    val sizes = Seq(241L, 241L, 241L, 241L, 0L, 241L, 141L)
     all.zip(sizes).foreach { case (df, n) => assert(df.collect().length === n) }
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
       .map(r => Option(r.name).getOrElse(r.toString)).toSeq.sorted
